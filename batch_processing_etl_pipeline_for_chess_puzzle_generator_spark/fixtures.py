@@ -1,62 +1,110 @@
-"""Fixture-cost attribution for the benchmark harness.
+"""Session memos: build a shared intermediate once per session and input.
 
-Several registry entries (snapshot_*, doc_incr_*, emb_*) build
-session-cached fixtures — versioned tables with DML histories, trained
-codebooks — ONCE per (session, sf_dir), inside whichever query happens
-to run first. Without attribution, BENCH per-query numbers mix that
-one-time build cost into operator cost (snapshot_dv_read reads as
-~8 s when the operator itself is ~0.3 s), and round-over-round
-regression triage can't separate host weather from real drift.
+Many registry entries start from the same expensive intermediate:
+versioned tables with DML histories (snapshot_*), committed ANN and
+dedup indexes (doc_incr_*, emb_incr_*), persisted frames such as
+MinHash signatures or synthesized media. Each such builder is a
+function of ``(spark, *args)`` decorated with :func:`session_memo`:
 
-Every session-cached builder wraps its cache-MISS path in
-``with timed("<fixture>")``; cache hits never enter the block, so the
-accumulated seconds are exactly the build cost. ``bench.py`` snapshots
-:func:`total` around each timed query to attribute per-entry
-``fixture_s`` and emits the per-fixture breakdown in the BENCH JSON.
+- The key is ``(applicationId, *args)``, the arguments normalized
+  through the builder's signature so positional, keyword and default
+  forms share one entry. The key is not weak on the session: a cached
+  DataFrame holds its session strongly, so a weak key would never
+  fire. ``cap`` is what bounds memory.
+- A missing key is built under a lock of its own: concurrent callers
+  of one key build once, callers of other keys are not blocked. A
+  build that raises is not remembered; the next call builds again.
+- Each build's own seconds (nested memo builds excluded) accumulate in
+  :data:`SECONDS` under the memo's name. ``bench.py`` snapshots
+  :func:`total` around each timed query to separate one-time build
+  cost from operator cost.
+- The value is stored through ``functions.caching.bounded_cache_put``:
+  past ``cap`` entries the oldest frame is unpersisted, the oldest path
+  value only forgotten (:func:`scratch_dir` removes it at exit).
+
+:data:`MEMOS` registers every memo by name; ``bench.py --streams``
+prebuilds the ones declared ``prebuild=True`` before its clock starts.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
+import inspect
+import shutil
+import tempfile
 import threading
 import time
-from contextlib import contextmanager
+
+from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.functions import caching
 
 _LOCK = threading.Lock()
 
-#: serializes session-fixture BUILDS across concurrent query streams
-#: (bench.py --streams N): without it, every stream that misses a
-#: cache builds its own copy of the fixture — wasted wall and, for
-#: builders that commit versioned tables, racing DML against shared
-#: global state. Builders double-check their cache inside this lock.
-#: RLock: a builder may invoke another cached builder (signatures →
-#: band index) on the same thread.
-BUILD_LOCK = threading.RLock()
-
-#: accumulated build seconds per fixture name (cache misses only)
+#: accumulated build seconds per memo name (cache misses only)
 SECONDS: dict[str, float] = {}
 
+#: every session memo by name, in definition order
+MEMOS: dict[str, object] = {}
 
-@contextmanager
-def timed(name: str):
+# seconds spent in memo builds nested inside the current thread's build
+_nested = threading.local()
+
+
+def _timed_build(name: str, fn, *args, **kwargs):
+    outer = getattr(_nested, "s", None)
+    _nested.s = 0.0
     t0 = time.perf_counter()
     try:
-        yield
+        return fn(*args, **kwargs)
     finally:
         dt = time.perf_counter() - t0
+        own = dt - _nested.s
+        _nested.s = None if outer is None else outer + dt
         with _LOCK:
-            SECONDS[name] = SECONDS.get(name, 0.0) + dt
+            SECONDS[name] = SECONDS.get(name, 0.0) + own
 
 
-def start() -> float:
-    """Mark a cache-miss build's start (pair with :func:`done`) — the
-    two-call form keeps builder bodies un-reindented."""
-    return time.perf_counter()
+def session_memo(name: str, cap: int = caching.DEFAULT_CACHE_CAP,
+                 prebuild: bool = False):
+    """Memoize ``fn(spark, *args)`` per session and arguments (see the
+    module docstring)."""
+    def wrap(fn):
+        sig = inspect.signature(fn)
+        cache: dict = {}
+        building: dict = {}  # key -> the lock its builders take
+        guard = threading.Lock()
+
+        @functools.wraps(fn)
+        def memo(spark, *args, **kwargs):
+            bound = sig.bind(spark, *args, **kwargs)
+            bound.apply_defaults()
+            key = (spark.sparkContext.applicationId,
+                   *list(bound.arguments.values())[1:])
+            with guard:
+                if key in cache:
+                    return cache[key]
+                lock = building.setdefault(key, threading.Lock())
+            with lock:
+                with guard:
+                    if key in cache:
+                        return cache[key]
+                value = _timed_build(name, fn, spark, *args, **kwargs)
+                with guard:
+                    building.pop(key, None)
+                    return caching.bounded_cache_put(cache, key, value, cap=cap)
+
+        memo.cache = cache
+        memo.prebuild = prebuild
+        MEMOS[name] = memo
+        return memo
+    return wrap
 
 
-def done(name: str, t0: float) -> None:
-    dt = time.perf_counter() - t0
-    with _LOCK:
-        SECONDS[name] = SECONDS.get(name, 0.0) + dt
+def scratch_dir(prefix: str) -> str:
+    """A new temporary directory, removed when the process exits."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def total() -> float:

@@ -102,19 +102,3 @@ def hilbert_oracle_sql(x: str, y: str, bits: int, source_sql: str,
                  f"{ny} AS hy, {nd} AS hd FROM ({inner})")
     return (f"SELECT * EXCLUDE (hx, hy, hd), hd AS {key_col} "
             f"FROM ({inner})")
-
-
-def write_hilbert(df: DataFrame, path: str, x: str, y: str,
-                  bits: int = 8, mode: str = "overwrite") -> None:
-    """Sort-write on the Hilbert key (the write_zordered twin):
-    range-partition for contiguous balanced key ranges per file,
-    sort within files so row-group min/max stats on the ORIGINAL
-    columns stay selective on either dimension."""
-    keyed = with_hilbert_key(df, x, y, bits)
-    (
-        keyed.repartitionByRange("h_key")
-        .sortWithinPartitions("h_key")
-        .drop("h_key")
-        .write.mode(mode)
-        .parquet(path)
-    )

@@ -437,15 +437,6 @@ def _merge_row_construction(spark: SparkSession, m: re.Match,
     )
 
 
-def read_versioned_sql(spark: SparkSession, path: str,
-                       version: int | None = None) -> DataFrame:
-    """Convenience twin for the SQL surface: resolve a versioned table
-    path the way ``merge_into`` addresses it."""
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
-
-    return versioned.read_version(spark, path, version)
-
-
 # --------------------------------------------------------------------
 # Table-maintenance statements: the Delta-canonical RESTORE / VACUUM /
 # OPTIMIZE / DESCRIBE HISTORY, path-addressed like MERGE INTO above.

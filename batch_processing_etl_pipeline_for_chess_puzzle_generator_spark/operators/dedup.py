@@ -30,6 +30,7 @@ from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
 from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.catalog import table
+from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.fixtures import scratch_dir, session_memo
 from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.functions.hashing import (
     SPARK_HASH_SQL,
     STABLE_HASH_SQL,
@@ -105,31 +106,17 @@ def _family(i: int, base: str) -> str:
     return f"(({2 * i + 1} * {base} + {1000003 * i}) % {MH_PRIME})"
 
 
-# Signature / pair / cluster tables are memoized per (session, sf_dir):
-# the minhash-pairs, cluster, and corpus operators all derive from
-# them, and a production pipeline materializes the signature table once
-# and reuses it. Keyed by applicationId (stable per live session,
-# unlike id()). EVERY cache is BOUNDED: persisted / localCheckpoint'd
+# Signature / pair / cluster tables are session memos
+# (fixtures.session_memo, keyed on the session and every argument): the
+# minhash-pairs, cluster, and corpus operators all derive from them,
+# and a production pipeline materializes the signature table once and
+# reuses it. Every memo is BOUNDED: persisted / localCheckpoint'd
 # frames (both pin executor block storage) for old keys are released
 # FIFO past the cap, so a session that touches many datasets can't pin
-# unbounded executor storage (the r1 caveat, extended to the pair and
-# CC caches per the r2 advice).
-from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.functions.caching import (
-    bounded_cache_put as _cache_put,
-    cache_get_or_put as _cache_get_or_put,
-)
-
-_SIG_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_CC_CACHE: dict[tuple[str, str], DataFrame] = {}
-_NGRAM_POSTINGS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# unbounded executor storage.
+@session_memo("minhash_signatures")
 def _signatures(spark: SparkSession, sf_dir: str,
                 n_hashes: int = N_HASHES) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, n_hashes)
-    if key in _SIG_CACHE:
-        return _SIG_CACHE[key]
     # spread(): the shingle explode + per-shingle md5 is the expensive
     # stage of the signature pass and it runs INSIDE the scan task —
     # a single-row-group file serializes it on one core (guide §2.5).
@@ -161,7 +148,7 @@ def _signatures(spark: SparkSession, sf_dir: str,
 
     if needs_spread(spark, sf_dir, "documents"):
         sig = sig.repartition(4, F.col("doc_id"))
-    return _cache_put(_SIG_CACHE, key, sig.persist())
+    return sig.persist()
 
 
 def _band_hash_expr(b: int, rows_per_band: int = ROWS_PER_BAND) -> str:
@@ -235,6 +222,7 @@ def _band_pairs(bands: DataFrame, n_salts: int = 1,
     )
 
 
+@session_memo("minhash_pairs")
 def doc_minhash_pairs(spark: SparkSession, sf_dir: str,
                       n_salts: int = 1) -> DataFrame:
     """MinHash/LSH near-duplicate candidate pairs with estimated
@@ -243,17 +231,11 @@ def doc_minhash_pairs(spark: SparkSession, sf_dir: str,
     16 hash families, 4 bands × 4 rows: pairs with true Jaccard ≥ ~0.9
     are found with probability ~1-(1-0.9⁴)⁴ ≈ 0.95; the band equality
     join replaces the O(n²) pairing entirely. The scored pair table is
-    memoized+persisted per (session, sf_dir): clusters and the dedup
-    report reuse it instead of replaying the band join.
+    memoized+persisted per (session, sf_dir, n_salts): clusters and the
+    dedup report reuse it instead of replaying the band join.
     ``n_salts>1`` turns on the hot-bucket salt (see ``_band_pairs``) —
     the knob to set on a corpus whose band buckets skew.
     """
-    # Memo key ignores n_salts: the salt is a physical rewrite with a
-    # property-tested identical result, so one cached pair table serves
-    # every salt setting (first caller's plan computes it).
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PAIRS_CACHE:
-        return _PAIRS_CACHE[key]
     sig = _signatures(spark, sf_dir)
     bands = sig.select(
         "doc_id",
@@ -279,15 +261,13 @@ def doc_minhash_pairs(spark: SparkSession, sf_dir: str,
     # (checkpoint storage is CacheManager-invisible — see
     # functions/caching.py); the lineage here is one join deep, so
     # truncation buys nothing.
-    return _cache_put(
-        _PAIRS_CACHE,
-        key,
+    return (
         pairs.join(sa, "doc_a")
         .join(sb, "doc_b")
         .select("doc_a", "doc_b",
                 F.expr(f"({agree}) / CAST({N_HASHES} AS DOUBLE)")
                 .alias("est_jaccard"))
-        .persist(),
+        .persist()
     )
 
 
@@ -456,17 +436,16 @@ def _ngram_postings(docs: DataFrame, cap: int = NGRAM_DF_CAP) -> DataFrame:
     )
 
 
-def _cached_postings(spark: SparkSession, sf_dir: str,
-                     docs: DataFrame) -> DataFrame:
-    """Shared df-capped postings, persisted once per (session, sf_dir)
-    and reused by every entry that joins on shingles (Jaccard,
-    containment). Thread-safe: the --streams bench runs registry
-    entries concurrently."""
-    pkey = (spark.sparkContext.applicationId, sf_dir)
-    return _cache_get_or_put(
-        _NGRAM_POSTINGS_CACHE, pkey,
-        lambda: _ngram_postings(docs).persist(),
-    )
+@session_memo("ngram_postings")
+def _cached_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shared df-capped postings over the spread corpus, persisted once
+    per (session, sf_dir) and reused by every entry that joins on
+    shingles (Jaccard, containment)."""
+    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.catalog import spread
+
+    docs = spread(spark, sf_dir, "documents").withColumn(
+        "ws", F.split("text", " "))
+    return _ngram_postings(docs).persist()
 
 
 def doc_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -482,18 +461,14 @@ def doc_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     emit-two-buckets, since an interval of length 10 spans at most two
     width-20 buckets.
     """
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.catalog import spread
-
-    docs = spread(spark, sf_dir, "documents").withColumn(
-        "ws", F.split("text", " "))
     # Persist the exploded postings: both join sides read it, and the
     # persist boundary stops Catalyst from pushing null-filters through
     # the Generate and re-evaluating the shingle transform per row (a
-    # measured ~10× blowup without it). Memoized through the bounded
-    # cache so repeated calls reuse one persisted frame instead of
-    # pinning a fresh copy each time. At production scale this is the
-    # materialized postings/signature table.
-    ex = _cached_postings(spark, sf_dir, docs)
+    # measured ~10× blowup without it). Memoized so repeated calls
+    # reuse one persisted frame instead of pinning a fresh copy each
+    # time. At production scale this is the materialized
+    # postings/signature table.
+    ex = _cached_postings(spark, sf_dir)
     a = ex.select(
         F.col("doc_id").alias("doc_a"),
         F.col("n_chars").alias("na"),
@@ -527,6 +502,7 @@ def doc_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 CLUSTER_MIN_JACCARD = 0.5
 
 
+@session_memo("cc_labels")
 def doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the MinHash candidate graph: every doc
     that shares a band-bucket pair with est_jaccard ≥ 0.5 is clustered;
@@ -542,9 +518,6 @@ def doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup components are tiny (dup clusters), so diameter is small
     in practice.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _CC_CACHE:
-        return _CC_CACHE[key]
     pairs = (
         doc_minhash_pairs(spark, sf_dir)
         .filter(F.col("est_jaccard") >= CLUSTER_MIN_JACCARD)
@@ -585,7 +558,7 @@ def doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         labels = new_labels
         if changed == 0:
-            return _cache_put(_CC_CACHE, key, labels)
+            return labels
 
 
 # ---------------------------------------------- end-to-end dedup corpus
@@ -1379,46 +1352,20 @@ ORACLES["doc_dup_triangles"] = f"""
 # back from the committed table). The recurring queries' only
 # documents.parquet scan is the new batch's (doc_id, source) rows for
 # attribution — plan-asserted in tests/test_dedup.py.
-_DEDUP_IDX_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
-
+@session_memo("dedup_index", prebuild=True)
 def _dedup_index_paths(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import fixtures, versioned
+    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.sources.versioned_ds import (
         ensure_registered,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _DEDUP_IDX_CACHE:
-        return _DEDUP_IDX_CACHE[key]
-    with fixtures.BUILD_LOCK:
-        return _build_dedup_index(spark, sf_dir, key)
-
-
-def _build_dedup_index(spark, sf_dir, key):
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import fixtures, versioned
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.sources.versioned_ds import (
-        ensure_registered,
-    )
-
-    if key in _DEDUP_IDX_CACHE:  # double-check under BUILD_LOCK
-        return _DEDUP_IDX_CACHE[key]
-    _t0 = fixtures.start()
-    import atexit
-    import shutil
-    import tempfile
-
-    hash_path = tempfile.mkdtemp(prefix="dedup_hashes_")
-    band_path = tempfile.mkdtemp(prefix="dedup_bands_")
-    for p in (hash_path, band_path):
-        atexit.register(shutil.rmtree, p, ignore_errors=True)
+    hash_path = scratch_dir("dedup_hashes_")
+    band_path = scratch_dir("dedup_bands_")
 
     hashes = table(spark, sf_dir, "documents").select(
         "doc_id", stable_hash64(F.col("text")).alias("h"))
 
-    # force the signature cache BEFORE the threads fork: _signatures
-    # memoizes a persisted frame, and two threads racing its first
-    # build would do the shingle pass twice
+    # the band table derives from the persisted signature memo
     bands = _signatures(spark, sf_dir).select(
         F.explode(F.array(*[
             F.struct(
@@ -1477,8 +1424,6 @@ def _build_dedup_index(spark, sf_dir, key):
         t.join()
     if errs:
         raise errs[0]
-    _DEDUP_IDX_CACHE[key] = (hash_path, band_path)
-    fixtures.done("dedup_index", _t0)
     return hash_path, band_path
 
 
@@ -1649,7 +1594,7 @@ ORACLES["doc_incr_minhash"] = f"""
 # the symmetric Jaccard pass (doc_ngram_jaccard), and the reason it
 # drops that entry's length-similarity blocking entirely: length
 # disparity is exactly the signal here. Same df-capped inverted-index
-# postings (shared through the bounded cache — the join cost story in
+# postings (shared through the session memo — the join cost story in
 # doc_ngram_jaccard's docstring carries over: Σ df² bounded by the
 # cap); the per-pair intersection IS the groupBy count. Both ratios
 # are non-negative ppm grids (DIV↔// safe).
@@ -1657,12 +1602,7 @@ CONTAINMENT_PPM = 800000
 
 
 def doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.catalog import spread
-
-    docs = spread(spark, sf_dir, "documents").withColumn(
-        "ws", F.split("text", " ")
-    )
-    ex = _cached_postings(spark, sf_dir, docs)
+    ex = _cached_postings(spark, sf_dir)
     a = ex.select(F.col("doc_id").alias("doc_a"),
                   F.col("sz").alias("sa_sz"), "s")
     b = ex.select(F.col("doc_id").alias("doc_b"),

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import fixtures
+from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.fixtures import scratch_dir, session_memo
 from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.catalog import spread, table
 
 # The change batch is derived deterministically from orders itself so the
@@ -358,7 +358,6 @@ QUERIES["snapshot_diff_orders"] = snapshot_diff_orders
 # DECIMAL(18,4) for the same reason.
 _NEW_PRICE2 = ("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * "
                "CAST(1.05 AS DECIMAL(3,2)) AS DOUBLE)")
-_VERSIONS_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _changes_v2(o: DataFrame) -> DataFrame:
@@ -369,20 +368,11 @@ def _changes_v2(o: DataFrame) -> DataFrame:
     )
 
 
+@session_memo("versioned_orders", prebuild=True)
 def _versioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
-    import tempfile
-
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _VERSIONS_CACHE:
-        return _VERSIONS_CACHE[key]
-    _t0 = fixtures.start()
-    import atexit
-    import shutil
-
-    path = tempfile.mkdtemp(prefix="orders_versions_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_dir("orders_versions_")
     o = table(spark, sf_dir, "orders").select(*_ORDER_COLS)
     v1 = cdc_merge_orders(spark, sf_dir)
     ch2 = _changes_v2(table(spark, sf_dir, "orders"))
@@ -396,8 +386,6 @@ def _versioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
     versioned.write_version(o, path, 0)
     versioned.write_version(v1, path, 1)
     versioned.write_version(v2, path, 2)
-    _VERSIONS_CACHE[key] = path
-    fixtures.done("versioned_orders", _t0)
     return path
 
 
@@ -529,7 +517,6 @@ ORACLES["snapshot_diff_orders"] = f"""
 # reconstructs exactly the declared merged state. File-sharing /
 # stat-pruning counts are asserted in tests/test_versioned.py (they
 # depend on partition layout, not data values, so they're test-side).
-_COW_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _cow_changes(o: DataFrame) -> DataFrame:
@@ -543,26 +530,16 @@ def _cow_changes(o: DataFrame) -> DataFrame:
     )
 
 
+@session_memo("cow_orders", prebuild=True)
 def _cow_orders_path(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _COW_CACHE:
-        return _COW_CACHE[key]
-    _t0 = fixtures.start()
-    path = tempfile.mkdtemp(prefix="orders_cow_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_dir("orders_cow_")
     o = table(spark, sf_dir, "orders").select(*_ORDER_COLS)
     versioned.write_version(
         o.repartitionByRange(8, "o_orderkey"), path, 0, stats_col="o_orderkey"
     )
     versioned.merge_version_cow(spark, path, _cow_changes(o), "o_orderkey")
-    _COW_CACHE[key] = path
-    fixtures.done("cow_orders", _t0)
     return path
 
 
@@ -706,22 +683,11 @@ ORACLES["profile_ndv"] = " UNION ALL ".join(
 # must equal the plain filtered scan the oracle runs on the raw
 # parquet. Aggregation discipline: exact decimal sum, one final double
 # cast (lint-audited).
-_HIDDEN_CACHE: dict[tuple[str, str], str] = {}
-
-
+@session_memo("hidden_events", prebuild=True)
 def _hidden_events_path(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.sinks import write_hidden_partitioned
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _HIDDEN_CACHE:
-        return _HIDDEN_CACHE[key]
-    _t0 = fixtures.start()
-    path = tempfile.mkdtemp(prefix="events_hidden_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_dir("events_hidden_")
     ev = table(spark, sf_dir, "events")
     # The two eras must land as spec=0 / spec=1 in order (the spec file
     # append is ordered), but each era's WRITE JOB is independent — so
@@ -751,8 +717,6 @@ def _hidden_events_path(spark: SparkSession, sf_dir: str) -> str:
         t.join()
     if errs:
         raise errs[0]
-    _HIDDEN_CACHE[key] = path
-    fixtures.done("hidden_events", _t0)
     return path
 
 
@@ -1124,24 +1088,12 @@ ORACLES["dq_fd_discovery"] = "\nUNION ALL\n".join(
 # for BOTH. Generalizes the reference's rewrite-the-world refresh
 # (reference etl/transform.py:24-34 tracks whole files; a warehouse
 # needs row-level DML that does not rewrite a 1 GB file per row).
-_DV_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
-
+@session_memo("dv_orders", prebuild=True)
 def _dv_orders_paths(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    import atexit
-    import shutil
-    import tempfile
-
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _DV_CACHE:
-        return _DV_CACHE[key]
-    _t0 = fixtures.start()
-    mor = tempfile.mkdtemp(prefix="orders_dv_mor_")
-    cow = tempfile.mkdtemp(prefix="orders_dv_cow_")
-    for p in (mor, cow):
-        atexit.register(shutil.rmtree, p, ignore_errors=True)
+    mor = scratch_dir("orders_dv_mor_")
+    cow = scratch_dir("orders_dv_cow_")
     o = table(spark, sf_dir, "orders").select(*_ORDER_COLS)
     # 4 range-clustered files, NO stats column: predicate DML discovers
     # touched files by pushing the predicate into the scan, so manifest
@@ -1195,8 +1147,6 @@ def _dv_orders_paths(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         t.join()
     if errs:
         raise errs[0]
-    _DV_CACHE[key] = (mor, cow)
-    fixtures.done("dv_orders", _t0)
     return mor, cow
 
 
@@ -1263,22 +1213,11 @@ ORACLES["snapshot_dv_read"] = f"""
 # surviving rows. This is the "drop yesterday's partition for free"
 # capability (versioned.py::write_version/_predicate_cow) proven on
 # real query data, not synthetic test rows.
-_PART_CACHE: dict[tuple[str, str], str] = {}
-
-
+@session_memo("partitioned_orders", prebuild=True)
 def _partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PART_CACHE:
-        return _PART_CACHE[key]
-    _t0 = fixtures.start()
-    path = tempfile.mkdtemp(prefix="orders_partitioned_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_dir("orders_partitioned_")
     o = table(spark, sf_dir, "orders").select(*_ORDER_COLS)
     versioned.write_version(o, path, 0, partition_by=["o_orderpriority"])
     stats = versioned.delete_where(
@@ -1286,8 +1225,6 @@ def _partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
     assert stats["files_rewritten"] == 0 and stats["files_dropped"] >= 1, (
         "partition delete must be metadata-only on an aligned table"
     )
-    _PART_CACHE[key] = path
-    fixtures.done("partitioned_orders", _t0)
     return path
 
 
@@ -1464,24 +1401,14 @@ ORACLES["agg_incremental_cdf"] = f"""
 # build — the r8 gap where one UPDATE broke retention until OPTIMIZE).
 # The surviving read must equal DuckDB's direct rebuild (update
 # applied, first month removed).
-_GEN_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
 _GEN_MONTH = "CAST(date_trunc('month', o_orderdate) AS DATE)"
 
 
+@session_memo("generated_orders", prebuild=True)
 def _generated_orders_path(spark: SparkSession, sf_dir: str) -> tuple:
-    import atexit
-    import shutil
-    import tempfile
-
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _GEN_CACHE:
-        return _GEN_CACHE[key]
-    _t0 = fixtures.start()
-    path = tempfile.mkdtemp(prefix="orders_generated_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_dir("orders_generated_")
     o = table(spark, sf_dir, "orders").select(*_ORDER_COLS)
     versioned.write_version(
         o, path, 0,
@@ -1498,9 +1425,7 @@ def _generated_orders_path(spark: SparkSession, sf_dir: str) -> tuple:
     assert stats["files_rewritten"] == 0 and stats["files_dropped"] >= 1, (
         "month drop must stay metadata-only after the aligned UPDATE"
     )
-    _GEN_CACHE[key] = (path, first)
-    fixtures.done("generated_orders", _t0)
-    return _GEN_CACHE[key]
+    return path, first
 
 
 def snapshot_generated_retention(spark: SparkSession,
@@ -1553,22 +1478,11 @@ ORACLES["snapshot_generated_retention"] = f"""
 # only. The oracle rebuilds the final state relationally; a hash match
 # proves the region swap was exact — no leaked old rows, no
 # out-of-region damage.
-_RW_CACHE: dict[tuple[str, str], str] = {}
-
-
+@session_memo("replace_where_orders", prebuild=True)
 def _replace_where_path(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _RW_CACHE:
-        return _RW_CACHE[key]
-    _t0 = fixtures.start()
-    path = tempfile.mkdtemp(prefix="orders_replace_where_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_dir("orders_replace_where_")
     o = table(spark, sf_dir, "orders").select(*_ORDER_COLS)
     versioned.write_version(o, path, 0, partition_by=["o_orderpriority"])
     repl = (
@@ -1581,8 +1495,6 @@ def _replace_where_path(spark: SparkSession, sf_dir: str) -> str:
         "REPLACE WHERE on an aligned table must be a metadata-only "
         "drop plus an aligned insert"
     )
-    _RW_CACHE[key] = path
-    fixtures.done("replace_where_orders", _t0)
     return path
 
 
@@ -1624,9 +1536,7 @@ ORACLES["snapshot_replace_where"] = """
 """
 
 
-_DEFAULTS_CACHE: dict[tuple[str, str], str] = {}
-
-
+@session_memo("defaults_orders", prebuild=True)
 def _default_columns_path(spark: SparkSession, sf_dir: str) -> str:
     """Fixture for the column-DEFAULT oracle row: a versioned orders
     table where v0 holds every third order with its REAL status, a
@@ -1637,37 +1547,12 @@ def _default_columns_path(spark: SparkSession, sf_dir: str) -> str:
     paths: no SparkSession exists where the value lands). Built once
     per session; the driver's oracle gate then replays the final
     state relationally."""
-    import atexit
-    import shutil
-    import tempfile
-
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.sources.versioned_ds import (
         ensure_registered,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _DEFAULTS_CACHE:
-        return _DEFAULTS_CACHE[key]
-    with fixtures.BUILD_LOCK:
-        if key in _DEFAULTS_CACHE:  # double-check under BUILD_LOCK
-            return _DEFAULTS_CACHE[key]
-        return _build_defaults_fixture(spark, sf_dir, key)
-
-
-def _build_defaults_fixture(spark, sf_dir, key):
-    import atexit
-    import shutil
-    import tempfile
-
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.sources.versioned_ds import (
-        ensure_registered,
-    )
-
-    _t0 = fixtures.start()
-    path = tempfile.mkdtemp(prefix="orders_defaults_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_dir("orders_defaults_")
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
     versioned.write_version(o.filter("o_orderkey % 3 = 0"), path, 0)
@@ -1679,8 +1564,6 @@ def _build_defaults_fixture(spark, sf_dir, key):
      .option("path", path).save())
     assert versioned._table_defaults(path)["o_orderstatus"]["value"] \
         == "D"
-    _DEFAULTS_CACHE[key] = path
-    fixtures.done("defaults_orders", _t0)
     return path
 
 

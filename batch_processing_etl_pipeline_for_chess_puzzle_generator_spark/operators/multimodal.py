@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import table
+from ..fixtures import session_memo
 
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
@@ -876,40 +877,32 @@ def synth_media(docs: DataFrame, kind: str) -> DataFrame:
 # mapInPandas (payload encode per document — the single most expensive
 # step of the block, and the r2 driver bench priced the first mm_*
 # query at 9.6 s largely re-paying it). Bounded FIFO like dedup's
-# signature cache so many (sf_dir, kind) combos can't pin unbounded
+# signature memo so many (sf_dir, kind) combos can't pin unbounded
 # executor storage. In production this IS the materialized bronze
 # media table — written once, scanned by every feature job.
-_MEDIA_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 _MEDIA_CACHE_MAX = 6
 
 
+@session_memo("media", cap=_MEDIA_CACHE_MAX)
 def media_table(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.functions.caching import (
-        bounded_cache_put,
-    )
+    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.catalog import spread
 
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    if key not in _MEDIA_CACHE:
-        from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.catalog import spread
-
-        # spread(): the encode mapInPandas (and every decode kernel
-        # downstream, which inherits this partitioning through the
-        # persist) is pure Python CPU — on a single-row-group scan it
-        # all runs in ONE Arrow task (guide §2.5 / §4). One 8-byte-per-
-        # row doc_id repartition fans the codec work out to every core.
-        # A bytes-derived narrower width (spread's ``width=``) was
-        # MEASURED here in r14 and reverted: it helped the cheap BMP
-        # decode (~0.49 → 0.37 s isolated) but regressed the heavy
-        # LZW/PNG kernels (0.56/0.62 → 0.87/0.82 s) — per-row decode
-        # cost differs ~10× by kind, so one byte target cannot fit
-        # all seven consumers of this shared frame, and the r13
-        # 8-vs-32-core "inversion" is floor noise at isolated scale
-        # (mins 0.4-0.7 s at BOTH core counts).
-        docs = spread(spark, sf_dir, "documents",
-                      table(spark, sf_dir, "documents").select("doc_id"))
-        bounded_cache_put(_MEDIA_CACHE, key, synth_media(docs, kind).persist(),
-                          cap=_MEDIA_CACHE_MAX)
-    return _MEDIA_CACHE[key]
+    # spread(): the encode mapInPandas (and every decode kernel
+    # downstream, which inherits this partitioning through the
+    # persist) is pure Python CPU — on a single-row-group scan it all
+    # runs in ONE Arrow task (guide §2.5 / §4). One 8-byte-per-row
+    # doc_id repartition fans the codec work out to every core. A
+    # bytes-derived narrower width (spread's ``width=``) was MEASURED
+    # here in r14 and reverted: it helped the cheap BMP decode
+    # (~0.49 → 0.37 s isolated) but regressed the heavy LZW/PNG
+    # kernels (0.56/0.62 → 0.87/0.82 s) — per-row decode cost differs
+    # ~10× by kind, so one byte target cannot fit all seven consumers
+    # of this shared frame, and the r13 8-vs-32-core "inversion" is
+    # floor noise at isolated scale (mins 0.4-0.7 s at BOTH core
+    # counts).
+    docs = spread(spark, sf_dir, "documents",
+                  table(spark, sf_dir, "documents").select("doc_id"))
+    return synth_media(docs, kind).persist()
 
 
 def mm_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -35,6 +35,7 @@ from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
 from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.catalog import spread, table
+from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.fixtures import session_memo
 
 # SQL expression fragments valid in BOTH Spark SQL and DuckDB — the
 # Spark plans use them via F.expr, the oracles inline them verbatim.
@@ -1754,37 +1755,31 @@ ORACLES["customer_recency_cohorts"] = """
 # serialize through one task at 100 TB. All revenue lives on an exact
 # scale-4 integer grid and class boundaries are integer
 # cross-multiplications, so the classification is bit-identical to
-# the oracle's ordinary window formulation. The ranked frame is
-# memoized through the bounded cache (both the offsets branch and the
-# data branch must observe ONE physical partitioning).
+# the oracle's ordinary window formulation. The ranked frame is a
+# session memo (both the offsets branch and the data branch must
+# observe ONE physical partitioning).
 _REV_INT = ("CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) "
             "* (1 - CAST(l_discount AS DECIMAL(8,2)))) * 10000 AS BIGINT)")
-_ABC_RANKED_CACHE: dict[tuple[str, str], DataFrame] = {}
+
+
+@session_memo("abc_ranked")
+def _abc_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = spread(spark, sf_dir, "lineitem",
+                table(spark, sf_dir, "lineitem").select(
+                    "l_partkey", "l_extendedprice", "l_discount"),
+                keys=("l_partkey",))
+    rev = li.groupBy("l_partkey").agg(F.expr(_REV_INT).alias("r"))
+    return (
+        rev.repartitionByRange(F.col("r").desc(), F.col("l_partkey"))
+        .withColumn("_pid", F.spark_partition_id())
+        .persist()
+    )
 
 
 def abc_parts_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.functions.caching import (
-        bounded_cache_put,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _ABC_RANKED_CACHE:
-        ranked = _ABC_RANKED_CACHE[key]
-    else:
-        li = spread(spark, sf_dir, "lineitem",
-                    table(spark, sf_dir, "lineitem").select(
-                        "l_partkey", "l_extendedprice", "l_discount"),
-                    keys=("l_partkey",))
-        rev = li.groupBy("l_partkey").agg(F.expr(_REV_INT).alias("r"))
-        ranked = bounded_cache_put(
-            _ABC_RANKED_CACHE,
-            key,
-            rev.repartitionByRange(F.col("r").desc(), F.col("l_partkey"))
-            .withColumn("_pid", F.spark_partition_id())
-            .persist(),
-        )
+    ranked = _abc_ranked(spark, sf_dir)
     wo = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = (
         ranked.groupBy("_pid")

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.catalog import table
+from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.fixtures import scratch_dir, session_memo
 from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.functions.hashing import (
     SPARK_HASH_SQL,
     STABLE_HASH_SQL,
@@ -1059,18 +1060,13 @@ IVFPQ_NPROBE = 2
 _BIG = "CAST(8000000000000000000 AS BIGINT)"
 
 
-_DD_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_memo("pq_dd")
 def _pq_dd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared dd pipeline: per vector, the 4×16 integer L2² matrix
     against the seed codebook (see the reshaping rationale below).
     Memoized per (session, sf_dir) like the MinHash signatures — the
     encode, ADC, and IVF-PQ operators all derive from this one table,
     exactly as a production store materializes codes once."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _DD_CACHE:
-        return _DD_CACHE[key]
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.catalog import spread
 
     # spread(): the per-vector 4×16 L2² HOF matrix below is interpreted
@@ -1094,7 +1090,7 @@ def _pq_dd(spark: SparkSession, sf_dir: str) -> DataFrame:
         "aggregate(zip_with(q, s, (x, y) -> (x - y) * (x - y)), "
         "CAST(0 AS BIGINT), (a, v) -> a + v)))"
     )
-    out = (
+    return (
         emb.join(F.broadcast(codebook))
         .select(
             "vec_id",
@@ -1115,8 +1111,6 @@ def _pq_dd(spark: SparkSession, sf_dir: str) -> DataFrame:
         # dd/codes ARE a stored table.
         .persist()
     )
-    _DD_CACHE[key] = out
-    return out
 
 
 _TOTALS = (
@@ -3184,39 +3178,15 @@ ORACLES["emb_incr_ann"] = f"""
 # embeddings: its only embeddings.parquet scan is the new batch —
 # recurring cost O(new * K + new * probes * bucket), corpus-free
 # (plan-asserted in tests/test_similarity.py).
-_IVF_IDX_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
-
+@session_memo("ivf_index", prebuild=True)
 def _ivf_index_paths(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import fixtures, versioned
+    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.sources.versioned_ds import (
         ensure_registered,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _IVF_IDX_CACHE:
-        return _IVF_IDX_CACHE[key]
-    with fixtures.BUILD_LOCK:
-        return _build_ivf_index(spark, sf_dir, key)
-
-
-def _build_ivf_index(spark, sf_dir, key):
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import fixtures, versioned
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.sources.versioned_ds import (
-        ensure_registered,
-    )
-
-    if key in _IVF_IDX_CACHE:  # double-check under BUILD_LOCK
-        return _IVF_IDX_CACHE[key]
-    _t0 = fixtures.start()
-    import atexit
-    import shutil
-    import tempfile
-
-    cent_path = tempfile.mkdtemp(prefix="ivf_centroids_")
-    asg_path = tempfile.mkdtemp(prefix="ivf_assign_")
-    for p in (cent_path, asg_path):
-        atexit.register(shutil.rmtree, p, ignore_errors=True)
+    cent_path = scratch_dir("ivf_centroids_")
+    asg_path = scratch_dir("ivf_assign_")
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.catalog import spread
 
     # spread(): quantize + every Lloyd-round HOF scoring pass runs over
@@ -3258,12 +3228,10 @@ def _build_ivf_index(spark, sf_dir, key):
         )
     # repartition(1) before the DS append — one part file per input
     # partition otherwise turns the spread batch into 32 near-empty
-    # committed files (see _build_dedup_index)
+    # committed files (see dedup._dedup_index_paths)
     (newa.repartition(1).write.format("versioned").mode("append")
      .option("path", asg_path).save())
     corpus.unpersist()
-    _IVF_IDX_CACHE[key] = (cent_path, asg_path)
-    fixtures.done("ivf_index", _t0)
     return cent_path, asg_path
 
 
@@ -4055,19 +4023,11 @@ ORACLES["emb_silhouette"] = f"""
 #: sf_dir) so emb_pca_top1 and emb_pca_topk share one pass (production
 #: materializes the moment table once; the bench fixture ledger books
 #: the build under "pca_moments")
-_PCA_COV_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_memo("pca_moments", prebuild=True)
 def _pca_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ppm-grid covariance moment table (d² rows,
     localCheckpoint-pinned) — shared by emb_pca_top1 and the
     deflation-based emb_pca_topk."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PCA_COV_CACHE:
-        return _PCA_COV_CACHE[key]
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import fixtures
-
-    _t0 = fixtures.start()
     _, c = _split(spark, sf_dir)
     # n = COUNT(DISTINCT corpus id) — computed from the RAW vec_id
     # projection, not the quantized frame: the quantize transform is
@@ -4169,14 +4129,11 @@ def _pca_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pass — the executed plan ballooned to ~300 scans of the corpus
     # (the doc_pagerank r4 lesson; persist() leaves Catalyst
     # re-optimizing the duplicated subtree per reference per action)
-    cov = craw.crossJoin(broadcast(cmax)).selectExpr(
+    return craw.crossJoin(broadcast(cmax)).selectExpr(
         "i", "j",
         "CASE WHEN cr >= 0 THEN CAST(cr * 1000000 DIV cm AS BIGINT) "
         "ELSE -CAST((-cr) * 1000000 DIV cm AS BIGINT) END AS cv",
     ).localCheckpoint(eager=True)
-    _PCA_COV_CACHE[key] = cov
-    fixtures.done("pca_moments", _t0)
-    return cov
 
 
 def _pca_v0(cov: DataFrame) -> DataFrame:

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.catalog import table
+from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.fixtures import session_memo
 from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.functions.hashing import (
     SPARK_HASH_SQL,
     STABLE_HASH_SQL,
@@ -1285,35 +1286,24 @@ ORACLES["doc_langid_ngram"] = f"""
 # the gram hash) left-joined to the test side's exploded grams on the
 # same key — co-partitioned, no broadcast, no collect. Three shuffles
 # total at any corpus size; shuffle rows are (hash, id) pairs only.
-_LEAK_POSTINGS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_memo("leakage_postings")
 def _leakage_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted (doc_id, split, gram-hash) postings, memoized per
-    (session, sf_dir) through the shared bounded cache: the
-    train-distinct branch and the test branch both read them (one
-    tokenize + 5-gram md5 pass instead of two), and repeated calls
-    reuse one persisted frame instead of pinning a fresh copy each
-    time. At production scale this is the materialized gram-postings
-    table."""
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.functions.caching import (
-        bounded_cache_put,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _LEAK_POSTINGS_CACHE:
-        return _LEAK_POSTINGS_CACHE[key]
+    (session, sf_dir): the train-distinct branch and the test branch
+    both read them (one tokenize + 5-gram md5 pass instead of two), and
+    repeated calls reuse one persisted frame instead of pinning a fresh
+    copy each time. At production scale this is the materialized
+    gram-postings table."""
     docs = _docs_spread(spark, sf_dir, "doc_id", "text")
     h = SPARK_HASH_SQL("concat_ws(' ', slice(ws, i, 5))")
     grams = f"array_distinct(transform(sequence(1, size(ws) - 4), i -> {h}))"
-    ex = (
+    return (
         docs.select("doc_id", F.expr(_WORDS).alias("ws"))
         .filter(F.expr("size(ws) >= 5"))
         .select("doc_id", F.expr(_SPLIT_CASE).alias("split"),
                 F.explode(F.expr(grams)).alias("g"))
         .persist()
     )
-    return bounded_cache_put(_LEAK_POSTINGS_CACHE, key, ex)
 
 
 def doc_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,9 +1,10 @@
 """Plan inspection helpers: make physical-plan properties assertable.
 
 The 100 TB design invariants (§6 of SURVEY.md) are properties of the
-PHYSICAL plan, not the code — pushed filters, pruned read schemas,
-broadcast joins, no Python evaluation in hot paths. These helpers turn
-them into one-liners for tests and for interactive `.explain` review.
+PHYSICAL plan, not the code — no cartesian products, no Python
+evaluation in hot paths, the expected join strategy. These helpers
+return the plan text tests assert on, for tests and for interactive
+`.explain` review.
 """
 
 from __future__ import annotations
@@ -24,42 +25,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def pushed_filters(df: DataFrame) -> list[str]:
-    """The PushedFilters lists of every parquet scan in the plan."""
-    plan = formatted_plan(df)
-    return [
-        seg.splitlines()[0].strip()
-        for seg in plan.split("PushedFilters:")[1:]
-    ]
-
-
-def read_schemas(df: DataFrame) -> list[str]:
-    """The ReadSchema of every scan — verifies column pruning."""
-    plan = formatted_plan(df)
-    return [
-        seg.splitlines()[0].strip()
-        for seg in plan.split("ReadSchema:")[1:]
-    ]
-
-
-def assert_no_python_eval(df: DataFrame, name: str = "") -> None:
-    plan = physical_plan(df)
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, (
-        f"{name}: Python UDF in plan — hot path must stay JVM-side"
-    )
-
-
 def assert_no_cartesian(df: DataFrame, name: str = "") -> None:
     plan = physical_plan(df)
     assert "CartesianProduct" not in plan, f"{name}: cartesian product in plan"
-
-
-def assert_broadcast_join(df: DataFrame, name: str = "", at_least: int = 1) -> None:
-    plan = physical_plan(df)
-    n = plan.count("BroadcastHashJoin")
-    assert n >= at_least, f"{name}: expected ≥{at_least} broadcast joins, found {n}"
-
-
-def assert_shuffle_free(df: DataFrame, name: str = "") -> None:
-    plan = physical_plan(df)
-    assert "Exchange" not in plan, f"{name}: unexpected shuffle:\n{plan}"

@@ -391,10 +391,6 @@ def write_text(df: DataFrame, column: str, path: str, mode: str = "overwrite") -
     df.select(df[column].alias("value")).write.mode(mode).text(path)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("header", "true").csv(path)
-
-
 def write_xml(df: DataFrame, path: str, mode: str = "overwrite",
               row_tag: str = "row", root_tag: str = "rows") -> None:
     """XML sink (built into Spark since 4.0 — no external spark-xml

@@ -202,32 +202,19 @@ def _run_streams(n_streams: int) -> None:
 
     # Fixture PREBUILD (r12 verdict item 3): under N streams a cold
     # session fixture builds inside whichever stream reaches it first
-    # while the other N-1 serialize on fixtures.BUILD_LOCK — measured
-    # as the 2.8× (vs 3.2×) 4-stream scaling in r12. Building every
-    # session-cached fixture serially BEFORE the clock starts lets all
-    # streams run warm; the build wall is reported separately.
-    t_fix = time.perf_counter()
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.operators import (
-        dedup as _dd, etl as _etl, similarity as _sim,
-    )
-
-    for build in (
-        lambda: _dd._dedup_index_paths(spark, sf_dir),
-        lambda: _sim._ivf_index_paths(spark, sf_dir),
-        lambda: _sim._pca_cov(spark, sf_dir),
-        lambda: _etl._versioned_orders_path(spark, sf_dir),
-        lambda: _etl._cow_orders_path(spark, sf_dir),
-        lambda: _etl._hidden_events_path(spark, sf_dir),
-        lambda: _etl._dv_orders_paths(spark, sf_dir),
-        lambda: _etl._partitioned_orders_path(spark, sf_dir),
-        lambda: _etl._generated_orders_path(spark, sf_dir),
-        lambda: _etl._replace_where_path(spark, sf_dir),
-        lambda: _etl._default_columns_path(spark, sf_dir),
-    ):
-        build()
-    prebuild_s = round(time.perf_counter() - t_fix, 3)
+    # while the other N-1 wait on its build lock — measured as the 2.8×
+    # (vs 3.2×) 4-stream scaling in r12. Building every session memo
+    # declared ``prebuild=True`` serially BEFORE the clock starts lets
+    # all streams run warm; the build wall is reported separately.
+    # queries() imports every operator module, so the registry is full.
+    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import fixtures
 
     qs = list(entrymod.queries().items())
+    t_fix = time.perf_counter()
+    for memo in fixtures.MEMOS.values():
+        if memo.prebuild:
+            memo(spark, sf_dir)
+    prebuild_s = round(time.perf_counter() - t_fix, 3)
 
     def stream(i: int) -> tuple[float, int]:
         # per-stream rotation: stream i starts at query i·|Q|/N, so the

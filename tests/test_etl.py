@@ -8,6 +8,10 @@ shape invariants.
 
 from __future__ import annotations
 
+import concurrent.futures as cf
+import os
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -104,3 +108,26 @@ def test_catalog_normalizes_events_ts_variants(spark, tmp_path):
         assert dict(df.dtypes)["ts"] == "timestamp", name
         got = sorted(r[0] for r in df.select(F.expr("unix_micros(ts)")).collect())
         assert got == micros, name
+
+
+def test_concurrent_fixture_callers_build_once(spark, tmp_path, monkeypatch):
+    """Four threads asking for one cold fixture share one build and one
+    path: the memo builds a missing key under that key's lock, so the
+    recorded build seconds cannot exceed the wall."""
+    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import fixtures, versioned
+
+    alias = str(tmp_path / "sf")
+    os.symlink(SF, alias)  # a new input path: a cold fixture key
+    merges = []
+    merge = versioned.merge_version_cow
+    monkeypatch.setattr(versioned, "merge_version_cow",
+                        lambda *a, **kw: merges.append(1) or merge(*a, **kw))
+    built0 = fixtures.snapshot().get("cow_orders", 0.0)
+    t0 = time.perf_counter()
+    with cf.ThreadPoolExecutor(4) as pool:
+        paths = list(pool.map(
+            lambda _: etl._cow_orders_path(spark, alias), range(4)))
+    wall = time.perf_counter() - t0
+    assert len(set(paths)) == 1, paths
+    assert len(merges) == 1
+    assert fixtures.snapshot()["cow_orders"] - built0 <= wall

@@ -203,3 +203,32 @@ def test_registry_dedup_gate_catches_seeded_twin():
         for name in pair:
             assert name in oracles, f"stale ALLOW entry: {name}"
     assert 0.5 < THRESHOLD < 1.0
+
+
+def test_operators_keep_no_hand_rolled_memos():
+    """Operators memoize through fixtures.session_memo and make temp
+    dirs through fixtures.scratch_dir: no module-level ``_*_CACHE``,
+    no ``applicationId`` key, no direct ``tempfile.mkdtemp``."""
+    import ast
+    import re
+
+    from tests.conftest import REPO
+
+    ops = REPO / "batch_processing_etl_pipeline_for_chess_puzzle_generator_spark" / "operators"
+    found = []
+    for path in sorted(ops.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        for node in tree.body:
+            targets = (node.targets if isinstance(node, ast.Assign)
+                       else [node.target] if isinstance(node, ast.AnnAssign)
+                       else [])
+            found += [f"{path.name}:{node.lineno} {t.id}" for t in targets
+                      if isinstance(t, ast.Name)
+                      and re.fullmatch(r"_\w*_CACHE", t.id)]
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr == "applicationId":
+                found.append(f"{path.name}:{node.lineno} applicationId")
+            if isinstance(node, ast.Call) and "mkdtemp" in (
+                    getattr(node.func, "attr", None), getattr(node.func, "id", None)):
+                found.append(f"{path.name}:{node.lineno} mkdtemp")
+    assert found == [], found

@@ -87,12 +87,13 @@ def test_minhash_pairs_salted_identical_on_corpus(spark):
     identical scored pair set on the real test corpus."""
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.operators.dedup import doc_minhash_pairs
 
-    plain = _sorted(doc_minhash_pairs(spark, SF_DIR).collect())
+    plain_df = doc_minhash_pairs(spark, SF_DIR)
     # n_salts=4 routes through the sized/replicated join (buckets here
     # are all below the hot threshold, so g=1 — the degenerate path
     # must also be exact)
-    salted = _sorted(doc_minhash_pairs(spark, SF_DIR, n_salts=4).collect())
-    assert salted == plain
+    salted_df = doc_minhash_pairs(spark, SF_DIR, n_salts=4)
+    assert salted_df is not plain_df, "the salted pair table was not built"
+    assert _sorted(salted_df.collect()) == _sorted(plain_df.collect())
 
 
 def test_aqe_splits_skewed_join(spark):

@@ -28,17 +28,24 @@ def test_observed_default_rowcount(spark):
     assert obs.get == {"rows": 42}
 
 
-def test_fixture_attribution_accumulates():
-    """bench.py's fixture-cost attribution: cache-miss builds recorded
-    per fixture, totals snapshot/reset (r10 verdict: BENCH per-query
+def test_fixture_attribution_accumulates(monkeypatch):
+    """bench.py's fixture-cost attribution: memo builds recorded per
+    name, hits add nothing, totals snapshot/reset (BENCH per-query
     numbers must separate one-time fixture cost from operator cost)."""
+    from types import SimpleNamespace
+
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import fixtures
 
+    monkeypatch.setattr(fixtures, "MEMOS", {})
     fixtures.reset()
-    t0 = fixtures.start()
-    fixtures.done("demo", t0)
-    with fixtures.timed("demo"):
-        pass
+
+    @fixtures.session_memo("demo")
+    def demo(spark, sf_dir):
+        return sf_dir
+
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app"))
+    for sf_dir in ("a", "a", "b"):
+        demo(spark, sf_dir)
     snap = fixtures.snapshot()
     assert set(snap) == {"demo"} and snap["demo"] >= 0
     assert fixtures.total() == sum(snap.values())
