@@ -106,14 +106,20 @@ def _list_data_files(table_path: str, data_dir: str) -> list[str]:
 
 
 def _file_stats(spark: SparkSession, table_path: str, rel_files: list[str],
-                stats_col: str) -> dict[str, list]:
+                stats_col: str, schema=None) -> dict[str, list]:
     """Per-file [min, max] of ``stats_col`` — the data-skipping index.
     One column-pruned scan of exactly the new files; the result is
-    O(#files) manifest metadata (what Delta stores per AddFile)."""
-    from pyspark.sql import functions as F
+    O(#files) manifest metadata (what Delta stores per AddFile).
 
+    ``schema`` is the schema the files were written with; its
+    ``stats_col`` field spares the scan a footer-inference job."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    reader = (spark.read if schema is None
+              else spark.read.schema(T.StructType([schema[stats_col]])))
     rows = (
-        spark.read.parquet(*[_abs_file(table_path, f) for f in rel_files])
+        reader.parquet(*[_abs_file(table_path, f) for f in rel_files])
         .groupBy(F.input_file_name().alias("f"))
         .agg(F.min(stats_col).alias("lo"), F.max(stats_col).alias("hi"))
         .collect()
@@ -1671,7 +1677,7 @@ def write_version(df: DataFrame, table_path: str,
     if stats_col is not None:
         manifest["stats_col"] = stats_col
         manifest["stats"] = _file_stats(
-            df.sparkSession, table_path, files, stats_col
+            df.sparkSession, table_path, files, stats_col, df.schema
         )
     _set_col_stats(manifest, None, table_path, [], files)
     try:
@@ -2006,7 +2012,8 @@ def merge_version_cow(spark: SparkSession, table_path: str,
         manifest["dv"] = child_dv
     if parent.get("stats_col") == key_col and parent.get("stats") is not None:
         stats = {f: parent["stats"].get(f) for f in untouched}
-        stats.update(_file_stats(spark, table_path, new_files, key_col)
+        stats.update(_file_stats(spark, table_path, new_files, key_col,
+                                 out_struct)
                      if new_files else {})
         manifest["stats_col"] = key_col
         manifest["stats"] = stats
@@ -2261,9 +2268,8 @@ def _predicate_cow(spark: SparkSession, table_path: str,
         if stats_col is not None and base.get("stats") is not None:
             stats = {f: base["stats"].get(f) for f in unt}
             if new_files:
-                stats.update(
-                    _file_stats(spark, table_path, new_files, stats_col)
-                )
+                stats.update(_file_stats(spark, table_path, new_files,
+                                         stats_col, schema))
             m["stats_col"] = stats_col
             m["stats"] = stats
         _set_col_stats(m, base, table_path, unt, new_files)
@@ -2929,7 +2935,7 @@ def _mor_dml(spark: SparkSession, table_path: str, predicate_sql: str,
             stats = {f: base["stats"].get(f) for f in surv}
             if new_files:
                 stats.update(_file_stats(spark, table_path, new_files,
-                                         stats_col))
+                                         stats_col, schema))
             m["stats_col"] = stats_col
             m["stats"] = stats
         _set_col_stats(m, base, table_path, surv, new_files)
@@ -3284,7 +3290,7 @@ def merge_version_mor(spark: SparkSession, table_path: str,
         stats = {f: parent["stats"].get(f) for f in surviving}
         if new_files:
             stats.update(_file_stats(spark, table_path, new_files,
-                                     stats_col))
+                                     stats_col, schema))
         manifest["stats_col"] = stats_col
         manifest["stats"] = stats
     _set_col_stats(manifest, parent, table_path, surviving, new_files)
@@ -4523,7 +4529,7 @@ def optimize_incremental(spark: SparkSession, table_path: str,
             stats = {f: base["stats"].get(f) for f in kept}
             if new_files:
                 stats.update(_file_stats(spark, table_path, new_files,
-                                         stats_col))
+                                         stats_col, schema))
             m["stats_col"] = stats_col
             m["stats"] = stats
         _set_col_stats(m, base, table_path, kept, new_files)
@@ -5323,7 +5329,7 @@ def _deep_clone(spark: SparkSession, src_path: str, dst_path: str,
                  for e, r in zip(clean, copied_rel)}
         if new_files:
             stats.update(_file_stats(spark, dst_path, new_files,
-                                     src["stats_col"]))
+                                     src["stats_col"], schema))
         manifest["stats_col"] = src["stats_col"]
         manifest["stats"] = stats
     os.makedirs(_manifest_path(dst_path), exist_ok=True)

@@ -232,3 +232,30 @@ def test_operators_keep_no_hand_rolled_memos():
                     getattr(node.func, "attr", None), getattr(node.func, "id", None)):
                 found.append(f"{path.name}:{node.lineno} mkdtemp")
     assert found == [], found
+
+
+def _inferring_parquet_reads(source: str) -> list[int]:
+    """Lines of ``<x>.read.parquet(...)`` calls: parquet loads that
+    leave the schema to Spark's inference job."""
+    import ast
+
+    return [node.lineno for node in ast.walk(ast.parse(source))
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+            and isinstance(node.func.value, ast.Attribute)
+            and node.func.value.attr == "read"]
+
+
+def test_operators_make_no_inferring_parquet_reads():
+    """Operators get tables from catalog.table and versioned reads, so
+    no schema-inference job lands on the query path."""
+    from tests.conftest import REPO
+
+    assert _inferring_parquet_reads(
+        "df = spark.read.parquet(p)\n"
+        "ok = spark.read.schema(s).parquet(p)\n") == [1]
+    ops = REPO / "batch_processing_etl_pipeline_for_chess_puzzle_generator_spark" / "operators"
+    found = [f"{path.name}:{line}" for path in sorted(ops.glob("*.py"))
+             for line in _inferring_parquet_reads(path.read_text())]
+    assert found == [], found
