@@ -25,8 +25,10 @@ Determinism: bit positions come from the house md5 hash family
 from __future__ import annotations
 
 import hashlib
+import json
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
 
@@ -84,30 +86,16 @@ def backfill_bloom(spark: SparkSession, table_path: str, col: str,
         raise FileNotFoundError(f"no committed versions at {table_path}")
     base = avail[-1]
     parent = versioned._load_manifest(table_path, base)
-    rel_files = parent.get("files")
-    if rel_files is None:  # legacy dir-level manifest
-        rel_files = versioned._list_data_files(table_path, parent["dir"])
+    rel_files = parent["files"]
     # Enforce the indexable-type whitelist at BUILD time: an index on a
     # type whose str()/CAST renderings diverge would pass silently here
     # and miss rows at lookup time. The MANIFEST schema is the
     # authority — on a schema-evolved table the first file may predate
     # the column entirely (footer inference would wrongly KeyError a
-    # legitimate column); legacy dir-level manifests footer-infer.
+    # legitimate column).
+    struct = StructType.fromJson(json.loads(parent["schema"]))
     if rel_files:
-        if "schema" in parent:
-            import json as _json
-
-            from pyspark.sql.types import StructType
-
-            struct = StructType.fromJson(_json.loads(parent["schema"]))
-            dtypes = {f.name: f.dataType.simpleString()
-                      for f in struct.fields}
-        else:
-            dtypes = dict(
-                spark.read.parquet(
-                    versioned._abs_file(table_path, rel_files[0])
-                ).dtypes
-            )
+        dtypes = {f.name: f.dataType.simpleString() for f in struct.fields}
         if col not in dtypes:
             raise KeyError(f"column '{col}' not present in {table_path}")
         if dtypes[col] not in _INDEXABLE_SPARK_TYPES:
@@ -124,14 +112,12 @@ def backfill_bloom(spark: SparkSession, table_path: str, col: str,
             "1, 15), 16, 10) AS BIGINT) %% %d" % (i, col, n_bits)
             for i in range(n_hashes)
         )
-        # read with the manifest schema where available: a shared
-        # pre-evolution file lacking the column NULL-backfills (its
-        # bitmap stays empty = that file always prunes for point
-        # lookups, correctly — NULL never equals a probe value)
-        reader = (spark.read.schema(struct) if "schema" in parent
-                  else spark.read)
+        # read with the manifest schema: a shared pre-evolution file
+        # lacking the column NULL-backfills (its bitmap stays empty =
+        # that file always prunes for point lookups, correctly — NULL
+        # never equals a probe value)
         pos = (
-            reader.parquet(full)
+            spark.read.schema(struct).parquet(full)
             .selectExpr(f"explode(array({hashes})) AS p")
             .where("p IS NOT NULL")
             .distinct()
@@ -171,9 +157,7 @@ def prune_files(table_path: str, value,
     avail = versioned.versions(table_path)
     v = avail[-1] if version is None else version
     m = versioned._load_manifest(table_path, v)
-    rel_files = m.get("files")
-    if rel_files is None:
-        rel_files = versioned._list_data_files(table_path, m["dir"])
+    rel_files = m["files"]
     bloom = m.get("bloom")
     if not bloom or (col is not None and bloom.get("col") != col):
         return list(rel_files), list(rel_files)
@@ -197,26 +181,16 @@ def read_point_lookup(spark: SparkSession, table_path: str, col: str,
     false positives are filtered, never returned). Result is row-equal
     to ``read_version(...).filter(col = value)`` by the no-false-
     negative property."""
-    import json as _json
-
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
 
     _check_probe_value(value)
     kept, _ = prune_files(table_path, value, version, col=col)
     avail = versioned.versions(table_path)
     v = avail[-1] if version is None else version
     m = versioned._load_manifest(table_path, v)
-    schema = (StructType.fromJson(_json.loads(m["schema"]))
-              if "schema" in m else None)
+    schema = StructType.fromJson(json.loads(m["schema"]))
     if not kept:
-        if schema is not None:
-            return spark.createDataFrame([], schema)
-        # legacy dir-level manifest: no recorded schema — empty slice
-        # of the real read (plans the files, scans no rows)
-        return versioned.read_version(spark, table_path, v).filter(
-            F.lit(False)
-        )
+        return spark.createDataFrame([], schema)
     # Read with the MANIFEST schema, exactly like read_version: on a
     # schema-evolved table, inference over the kept subset could fail
     # or reorder/drop columns that pre-evolution files lack, breaking

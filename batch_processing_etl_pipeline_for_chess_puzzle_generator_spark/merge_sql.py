@@ -473,7 +473,7 @@ _DROP_COL_RE = re.compile(
 )
 _CONVERT_RE = re.compile(
     r"^\s*CONVERT\s+TO\s+VERSIONED\s+parquet\.`(?P<path>[^`]+)`"
-    r"(?:\s+STATS\s+BY\s+(?P<sc>\w+))?\s*;?\s*$",
+    r"\s*;?\s*$",
     re.IGNORECASE,
 )
 _TBLPROPERTIES_RE = re.compile(
@@ -681,8 +681,7 @@ def maintenance_sql(spark: SparkSession, statement: str):
         return versioned.drop_column(m["path"], m["col"])
     m = _CONVERT_RE.match(statement)
     if m:
-        return versioned.convert_to_versioned(
-            m["path"], stats_col=m["sc"], spark=spark)
+        return versioned.convert_to_versioned(m["path"], spark=spark)
     raise ValueError(
         "unsupported maintenance statement — expected RESTORE TABLE "
         "versioned.`/p` TO VERSION AS OF n | VACUUM versioned.`/p` "
@@ -693,7 +692,7 @@ def maintenance_sql(spark: SparkSession, statement: str):
         "versioned.`/p` SET TBLPROPERTIES ('k' = 'v') | ALTER TABLE "
         "versioned.`/p` RENAME COLUMN a TO b | ALTER TABLE "
         "versioned.`/p` DROP COLUMN a | CONVERT TO VERSIONED "
-        "parquet.`/p` [STATS BY col] | VACUUM versioned.`/p` … DRY "
+        "parquet.`/p` | VACUUM versioned.`/p` … DRY "
         "RUN | FSCK REPAIR TABLE versioned.`/p` [DRY RUN] | REORG "
         "TABLE versioned.`/p` APPLY (PURGE) | GENERATE "
         "symlink_format_manifest FOR TABLE versioned.`/p` | REGISTER "

@@ -536,9 +536,7 @@ def _cow_orders_path(spark: SparkSession, sf_dir: str) -> str:
 
     path = scratch_dir("orders_cow_")
     o = table(spark, sf_dir, "orders").select(*_ORDER_COLS)
-    versioned.write_version(
-        o.repartitionByRange(8, "o_orderkey"), path, 0, stats_col="o_orderkey"
-    )
+    versioned.write_version(o.repartitionByRange(8, "o_orderkey"), path, 0)
     versioned.merge_version_cow(spark, path, _cow_changes(o), "o_orderkey")
     return path
 
@@ -1095,12 +1093,9 @@ def _dv_orders_paths(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     mor = scratch_dir("orders_dv_mor_")
     cow = scratch_dir("orders_dv_cow_")
     o = table(spark, sf_dir, "orders").select(*_ORDER_COLS)
-    # 4 range-clustered files, NO stats column: predicate DML discovers
-    # touched files by pushing the predicate into the scan, so manifest
-    # stats only add a per-write _file_stats pass here (the stats path
-    # itself is exercised by snapshot_merge_cow and the test suite) —
-    # this fixture builds TWO tables + 4 DML commits once per session,
-    # and trimming the bookkeeping halves its bench price.
+    # 4 range-clustered files: predicate DML discovers touched files by
+    # pushing the predicate into the scan — this fixture builds TWO
+    # tables + 4 DML commits once per session.
     for p in (mor, cow):
         versioned.write_version(
             o.repartitionByRange(4, "o_orderkey"), p, 0,

@@ -78,27 +78,8 @@ def write_partitioned_evolving(df: DataFrame, path: str,
     keeps serving yesterday's data while today's queries prune on the
     new key for new data.
     """
-    import json as _json
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    spec_file = os.path.join(path, "_spec.json")
-    specs: list[list[str]] = []
-    if os.path.exists(spec_file):
-        with open(spec_file) as fh:
-            specs = _json.load(fh)
-    if specs and specs[-1] == list(partition_cols):
-        spec_id = len(specs) - 1
-    else:
-        specs.append(list(partition_cols))
-        spec_id = len(specs) - 1
-        tmp = spec_file + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(specs, fh)
-        os.replace(tmp, spec_file)
-    write_partitioned(df, os.path.join(path, f"spec={spec_id}"),
-                      list(partition_cols), fmt=fmt, mode="append")
-    return spec_id
+    cols = list(partition_cols)
+    return _append_under_spec(df, path, cols, cols, fmt)
 
 
 def read_partitioned_evolving(spark: SparkSession, path: str,

@@ -329,8 +329,7 @@ def _parse_filter_option(expr: str, schema: StructType):
     return disjuncts
 
 
-def _bounds_reject(lo, hi, op: str, value,
-                   is_decimal: bool | None = None) -> bool:
+def _bounds_reject(lo, hi, op: str, value, is_decimal: bool) -> bool:
     """True iff a file with [lo, hi] bounds CANNOT hold a row matching
     ``op value`` (encoded comparably). Conservative: incomparable or
     missing bounds never reject. DECIMAL-column bounds are stored in
@@ -338,12 +337,10 @@ def _bounds_reject(lo, hi, op: str, value,
     the same way so the lexicographic interval test stays exact.
     ``is_decimal`` is the manifest-schema verdict for the column
     (False blocks decimal probing of a STRING column whose stored
-    bounds merely LOOK like encodings; None = legacy shape-sniff)."""
+    bounds merely LOOK like encodings)."""
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
 
-    dec_bounds = (versioned._is_decimal_stat(lo)
-                  if is_decimal is None
-                  else (is_decimal and versioned._is_decimal_stat(lo)))
+    dec_bounds = is_decimal and versioned._is_decimal_stat(lo)
 
     def _enc(v):
         if dec_bounds and isinstance(v, (int, float, str)) \
@@ -391,21 +388,14 @@ def _file_survives(path: str, col: str, op: str, value,
                    skip_meta: dict) -> bool:
     """Manifest-stats / bloom-bitmap file skipping for one parsed
     conjunct — the same metadata-only pruning the library paths use.
-    Multi-column ``col_stats`` prune on ANY column; the legacy single
-    ``stats_col`` pair and bloom bitmaps still apply. Missing metadata
-    always keeps the file (conservative)."""
+    ``col_stats`` bounds prune on ANY indexed column; bloom bitmaps
+    prune point lookups on their column. Missing metadata always keeps
+    the file (conservative)."""
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.functions import bloomskip
 
-    bounds = None
-    per_file = (skip_meta.get("col_stats") or {}).get(path)
-    if per_file is not None and per_file.get(col) is not None:
-        bounds = per_file[col]
-    elif (skip_meta.get("stats_col") == col
-            and (skip_meta.get("stats") or {}).get(path) is not None):
-        bounds = skip_meta["stats"][path]
+    bounds = ((skip_meta.get("col_stats") or {}).get(path) or {}).get(col)
     if bounds is not None:
-        dec_cols = skip_meta.get("dec_cols")
-        is_dec = None if dec_cols is None else (col in dec_cols)
+        is_dec = col in skip_meta.get("dec_cols", ())
         if _bounds_reject(bounds[0], bounds[1], op, value,
                           is_decimal=is_dec):
             return False
@@ -493,7 +483,8 @@ class VersionedReader(DataSourceReader):
         self.name_map = name_map or {}  # logical -> physical (renames)
         self.dv = dv or {}  # data-file path -> [sidecar paths]
         # skipping metadata keyed by data-file path:
-        #   stats_col, stats {path: [lo, hi]|None},
+        #   dec_cols [decimal column names],
+        #   col_stats {path: {col: [lo, hi]|None}|None},
         #   bloom {col, bits, k, filters {path: hex}}
         self.skip_meta = skip_meta or {}
         # parsed DNF [[(col, op, value), …], …] or None; a file stays
@@ -660,9 +651,7 @@ class VersionedStreamReader(DataSourceStreamReader):
             if v > hi:
                 break
             m = versioned._load_manifest(self.table_path, v)
-            files = m.get("files")
-            if files is None:  # legacy dir-level manifest
-                files = versioned._list_data_files(self.table_path, m["dir"])
+            files = m["files"]
             dv = versioned._dv_map(m)
             if lo < v <= hi:
                 op = (m.get("operation") or "").upper()
@@ -785,9 +774,7 @@ class VersionedDataSource(DataSource):
             if version not in avail:
                 raise ValueError(f"version {version} not in {avail}")
             m = versioned._load_manifest(table_path, version)
-            files = m.get("files")
-            if files is None:  # legacy dir-level manifest
-                files = versioned._list_data_files(table_path, m["dir"])
+            files = m["files"]
             dv_rel = versioned._dv_map(m)
             # every planned path goes through _abs_file (absolutized +
             # normalized): deletion-vector sidecar rows key on ABSOLUTE
@@ -811,12 +798,6 @@ class VersionedDataSource(DataSource):
                     f.name for f in schema_struct.fields
                     if type(f.dataType).__name__ == "DecimalType"),
             }
-            if m.get("stats_col") and m.get("stats"):
-                skip_meta["stats_col"] = m["stats_col"]
-                skip_meta["stats"] = {
-                    versioned._abs_file(table_path, f): m["stats"].get(f)
-                    for f in files
-                }
             if m.get("col_stats"):
                 skip_meta["col_stats"] = {
                     versioned._abs_file(table_path, f):
@@ -1088,19 +1069,6 @@ class _WrotePart(WriterCommitMessage):
     n_rows: int
 
 
-def _footer_stats(path: str, stats_col: str):
-    """Exact [min, max] of ``stats_col`` from the parquet footer's
-    row-group statistics — no data scan. Returns None (= never pruned)
-    unless EVERY row group reports exact, non-null stats of a type the
-    manifest encoding preserves order for; NaN bounds also bail (NaN
-    sorts greatest into parquet double stats and defeats interval
-    comparison — same rule as merge_version_cow's _unpruneable).
-    Thin single-column view of versioned._footer_col_stats."""
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
-
-    return versioned._footer_col_stats(path, [stats_col])[stats_col]
-
-
 def _append_compatible(table_schema: dict, append_schema: dict) -> bool:
     """Append-time schema check: names, order, and types must match
     exactly; nullability may only NARROW (non-nullable data into a
@@ -1283,11 +1251,7 @@ class VersionedWriter(DataSourceArrowWriter):
                         "append schema does not match the table schema — "
                         "use merge_version_cow(evolve_schema=True) to evolve"
                     )
-                parent_files = parent.get("files")
-                if parent_files is None:  # legacy dir-level manifest
-                    parent_files = versioned._list_data_files(
-                        self.table_path, parent["dir"]
-                    )
+                parent_files = parent["files"]
             # The version number derives from the SAME versions() snapshot
             # the parent file list came from — in BOTH branches. Reading
             # state again (e.g. via _next_version) would re-open the race
@@ -1348,13 +1312,6 @@ class VersionedWriter(DataSourceArrowWriter):
             "operation": "OVERWRITE" if self.overwrite else "APPEND",
             **self.extra_manifest,
         }
-        # Carry the parent's data-skipping stats forward instead of
-        # dropping them: a DS save on a stats_col table used to publish
-        # a stats-less manifest, silently costing every subsequent
-        # merge_version_cow its file pruning. Parent entries are copied
-        # verbatim (the files are immutable); new part files get exact
-        # [min,max] from their parquet footers where the footer stats
-        # are trustworthy, else None (= unpruneable, always correct).
         # CHECK constraints carry forward in the manifest; the DS
         # writer does not ENFORCE them (no SparkSession at commit
         # time) — enforcement lives on the library write paths
@@ -1386,18 +1343,10 @@ class VersionedWriter(DataSourceArrowWriter):
         if (parent is not None and not self.overwrite
                 and versioned._dv_map(parent)):
             manifest["dv"] = versioned._dv_map(parent)
-        if parent is not None and parent.get("stats_col"):
-            stats_col = parent["stats_col"]
-            stats = ({f: parent.get("stats", {}).get(f)
-                      for f in parent_files} if not self.overwrite else {})
-            for f in new_files:
-                stats[f] = _footer_stats(
-                    os.path.join(self.table_path, f), stats_col
-                )
-            manifest["stats_col"] = stats_col
-            manifest["stats"] = stats
-        # multi-column skipping index: shared parent entries verbatim,
-        # one footer read per new part file (same shape as write_version)
+        # data-skipping index: shared parent entries copied verbatim
+        # (the files are immutable), one footer read per new part file
+        # (same shape as write_version) — a DS save never costs later
+        # merges their file pruning
         versioned._set_col_stats(manifest, parent, self.table_path,
                                  list(parent_files), new_files)
         return manifest

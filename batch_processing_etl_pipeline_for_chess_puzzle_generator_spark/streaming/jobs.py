@@ -1549,8 +1549,7 @@ def maintain_scd2_dimension(spark, src_path: str, scd2_path: str,
         )
         if not versioned.versions(scd2_path):
             versioned.write_version(
-                spark.createDataFrame([], new_rows.schema), scd2_path,
-                stats_col="row_key")
+                spark.createDataFrame([], new_rows.schema), scd2_path)
         closers = ch.select(key_col, "_first_v").distinct()
         closed = (
             versioned.read_version(spark, scd2_path, stats_hint=False)

@@ -23,8 +23,9 @@ metadata-only. The write path is a plain distributed
 metadata.
 
 Manifests are FILE-level: each records the parquet files making up the
-version (optionally with per-file min/max stats on a chosen column —
-the Delta data-skipping shape), so a version can SHARE unchanged files
+version, its schema, and per-file min/max ``col_stats`` on the leading
+columns read from the parquet footers (the Delta data-skipping shape,
+one stats record per file), so a version can SHARE unchanged files
 with its parent instead of rewriting the table. ``merge_version_cow``
 exploits that for copy-on-write MERGE: stat-prune parent files whose
 [min,max] can't contain a change key, scan only the candidates to find
@@ -103,38 +104,6 @@ def _list_data_files(table_path: str, data_dir: str) -> list[str]:
         else:
             out.append(f"{data_dir}/{f}")
     return out
-
-
-def _file_stats(spark: SparkSession, table_path: str, rel_files: list[str],
-                stats_col: str, schema=None) -> dict[str, list]:
-    """Per-file [min, max] of ``stats_col`` — the data-skipping index.
-    One column-pruned scan of exactly the new files; the result is
-    O(#files) manifest metadata (what Delta stores per AddFile).
-
-    ``schema`` is the schema the files were written with; its
-    ``stats_col`` field spares the scan a footer-inference job."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    reader = (spark.read if schema is None
-              else spark.read.schema(T.StructType([schema[stats_col]])))
-    rows = (
-        reader.parquet(*[_abs_file(table_path, f) for f in rel_files])
-        .groupBy(F.input_file_name().alias("f"))
-        .agg(F.min(stats_col).alias("lo"), F.max(stats_col).alias("hi"))
-        .collect()
-    )
-    # Keyed by full table-relative path, NOT basename (same rule as the
-    # merge touched-set): rel_files may span version dirs, and a
-    # basename collision would silently merge two files' stats —
-    # correctness-neutral (stats only prune) but pruning-pessimal and
-    # a trap for future callers.
-    by_abs = {}
-    for r in rows:
-        by_abs[os.path.normpath(_uri_to_path(r["f"]))] = [
-            _stat_encode(r["lo"]), _stat_encode(r["hi"])
-        ]
-    return {f: by_abs.get(_abs_file(table_path, f)) for f in rel_files}
 
 
 #: Delta collects data-skipping stats for the first 32 columns by
@@ -259,8 +228,8 @@ def _set_col_stats(manifest: dict, parent: dict | None, table_path: str,
     (data files are immutable; files the parent never indexed stay
     None until :func:`backfill_stats`), new files get one parquet
     footer read each. Called by every commit path that changes the
-    file list, so any column — not just the legacy single
-    ``stats_col`` — can prune merges and Data Source filter reads."""
+    file list, so any indexed column can prune merges and Data Source
+    filter reads."""
     from pyspark.sql import types as T
 
     pcs = (parent or {}).get("col_stats") or {}
@@ -301,18 +270,13 @@ def _set_col_stats(manifest: dict, parent: dict | None, table_path: str,
 
 
 def _bounds_for(manifest: dict, col: str) -> dict | None:
-    """Per-file [lo, hi] bounds of ``col`` for stat pruning, preferring
-    the multi-column ``col_stats`` index over the legacy single-column
-    ``stats``/``stats_col`` pair. None = no usable index for ``col``
+    """Per-file [lo, hi] bounds of ``col`` from the manifest's
+    ``col_stats`` index. None = no file has bounds for ``col``
     (callers must then treat every file as a candidate)."""
-    cs = manifest.get("col_stats")
-    if cs:
-        bounds = {f: (per or {}).get(col) for f, per in cs.items()}
-        if any(b is not None for b in bounds.values()):
-            return bounds
-    if (manifest.get("stats_col") == col
-            and manifest.get("stats") is not None):
-        return manifest["stats"]
+    cs = manifest.get("col_stats") or {}
+    bounds = {f: (per or {}).get(col) for f, per in cs.items()}
+    if any(b is not None for b in bounds.values()):
+        return bounds
     return None
 
 
@@ -377,28 +341,22 @@ def _schema_decimal_cols(manifest: dict) -> set:
     like an encoding (78 chars of digits around a dot)."""
     from pyspark.sql import types as T
 
-    try:
-        st = T.StructType.fromJson(json.loads(manifest["schema"]))
-    except Exception:  # noqa: BLE001 — legacy manifest without schema
-        return set()
+    st = T.StructType.fromJson(json.loads(manifest["schema"]))
     return {f.name for f in st.fields
             if isinstance(f.dataType, T.DecimalType)}
 
 
-def _stat_decode(v, is_decimal: bool | None = None):
+def _stat_decode(v, is_decimal: bool):
     """Inverse of the stat encoding where one exists: fixed-point
     DECIMAL strings come back as Decimal; everything else (numbers,
     strings, ISO date/timestamp strings) passes through unchanged.
     ``is_decimal`` is the manifest-schema verdict for the column:
     False suppresses decoding even for shape-matching strings (a
     STRING column's data may look like an encoding), True requires
-    the shape to validate, None falls back to shape-sniffing (legacy
-    manifests with no schema)."""
+    the shape to validate."""
     from decimal import Decimal
 
-    if is_decimal is False:
-        return v
-    if not _is_decimal_stat(v):
+    if not is_decimal or not _is_decimal_stat(v):
         return v
     body = v[1:]
     if v[0] == "0":
@@ -440,7 +398,7 @@ def _stat_encode(v):
     if isinstance(v, datetime.date):
         return v.isoformat()
     raise TypeError(
-        f"stats_col values of type {type(v).__name__} are not supported "
+        f"stat values of type {type(v).__name__} are not supported "
         "(string form is not order-preserving) — cast the column to a "
         "numeric, string, date, decimal, or timestamp type first"
     )
@@ -496,11 +454,6 @@ def add_column(table_path: str, name: str, type_sql: str) -> int:
     if not avail:
         raise FileNotFoundError(f"no committed versions at {table_path}")
     parent = _load_manifest(table_path, avail[-1])
-    if "schema" not in parent or "files" not in parent:
-        raise ValueError(
-            "ADD COLUMN needs a file-level manifest with a recorded "
-            "schema — legacy dir-level tables must be rewritten first"
-        )
     from pyspark.sql import types as T
 
     schema = T.StructType.fromJson(json.loads(parent["schema"]))
@@ -556,11 +509,6 @@ def rename_column(table_path: str, old: str, new: str) -> int:
     if not avail:
         raise FileNotFoundError(f"no committed versions at {table_path}")
     parent = _load_manifest(table_path, avail[-1])
-    if "schema" not in parent or "files" not in parent:
-        raise ValueError(
-            "RENAME COLUMN needs a file-level manifest with a recorded "
-            "schema — legacy dir-level tables must be rewritten first"
-        )
     from pyspark.sql import types as T
 
     schema = T.StructType.fromJson(json.loads(parent["schema"]))
@@ -596,8 +544,6 @@ def rename_column(table_path: str, old: str, new: str) -> int:
         manifest.pop("column_mapping", None)
     # skipping metadata follows the logical name (bounds are unchanged
     # — the data bytes did not move)
-    if manifest.get("stats_col") == old:
-        manifest["stats_col"] = new
     if manifest.get("col_stats"):
         manifest["col_stats"] = {
             f: (None if per is None else
@@ -621,11 +567,6 @@ def drop_column(table_path: str, name: str) -> int:
     if not avail:
         raise FileNotFoundError(f"no committed versions at {table_path}")
     parent = _load_manifest(table_path, avail[-1])
-    if "schema" not in parent or "files" not in parent:
-        raise ValueError(
-            "DROP COLUMN needs a file-level manifest with a recorded "
-            "schema — legacy dir-level tables must be rewritten first"
-        )
     from pyspark.sql import types as T
 
     schema = T.StructType.fromJson(json.loads(parent["schema"]))
@@ -649,9 +590,6 @@ def drop_column(table_path: str, name: str) -> int:
     else:
         manifest.pop("column_mapping", None)
     manifest["retired_physical"] = retired
-    if manifest.get("stats_col") == name:
-        manifest.pop("stats_col", None)
-        manifest.pop("stats", None)
     if manifest.get("col_stats"):
         manifest["col_stats"] = {
             f: (None if per is None else
@@ -1092,11 +1030,11 @@ def _identity_high_water(spark: SparkSession, table_path: str,
 
     res = (manifest.get("properties") or {}).get(f"identity.reserve.{col}")
     res_hw = int(res) if res is not None else None
-    files = manifest.get("files")
-    if files is not None and not files:
+    files = manifest["files"]
+    if not files:
         return res_hw
-    bounds = _bounds_for(manifest, col) if files is not None else None
-    if (files and bounds is not None
+    bounds = _bounds_for(manifest, col)
+    if (bounds is not None
             and all(bounds.get(f) is not None for f in files)):
         data_hw = max(int(bounds[f][1]) for f in files)
     elif spark is None:
@@ -1105,8 +1043,6 @@ def _identity_high_water(spark: SparkSession, table_path: str,
         # parquet footers. DVs are ignored here, which can only
         # OVERestimate the high-water (deleted rows lower the true
         # max): a gap in the id sequence, never a collision.
-        if files is None:
-            files = _list_data_files(table_path, manifest["dir"])
         import pyarrow.parquet as pq
 
         vals = []
@@ -1501,7 +1437,6 @@ def _write_rewrite(df: DataFrame, staged: str, parent: dict,
 
 def write_version(df: DataFrame, table_path: str,
                   version: int | None = None,
-                  stats_col: str | None = None,
                   partition_by: list[str] | None = None,
                   generated: dict[str, str] | None = None,
                   identity: dict[str, dict] | None = None,
@@ -1543,9 +1478,12 @@ def write_version(df: DataFrame, table_path: str,
     number at or below the high-water mark raises, even if vacuum has
     since dropped that version's manifest.
 
-    The manifest records the version's parquet FILES; with
-    ``stats_col`` it also records per-file [min, max] of that column,
-    enabling data-skipping during ``merge_version_cow``.
+    The manifest records the version's parquet FILES, its schema, and
+    per-file [min, max] ``col_stats`` of the first 32 columns whose
+    type has an order-preserving stat form (numeric, string, date,
+    timestamp, decimal, boolean), read from the parquet footers with
+    no Spark job. Those bounds drive data skipping in MERGE, DML and
+    filtered reads; other columns (binary, complex) are not indexed.
 
     ``partition_by`` writes hive-aligned files (one partition value
     never shares a file with another) by partitioning on a DUPLICATED
@@ -1561,25 +1499,6 @@ def write_version(df: DataFrame, table_path: str,
     arbitrary predicate UPDATE/DELETE/MERGE with no OPTIMIZE needed.
     """
     import shutil
-
-    if stats_col is not None:
-        # Validate BEFORE any data lands: a TypeError mid-publish would
-        # leave an orphaned (invisible but written) data dir.
-        from pyspark.sql import types as T
-
-        dt = df.schema[stats_col].dataType
-        ok = isinstance(
-            dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-                 T.FloatType, T.DoubleType, T.StringType, T.DateType,
-                 T.TimestampType, T.TimestampNTZType, T.BooleanType,
-                 T.DecimalType)
-        )
-        if not ok:
-            raise TypeError(
-                f"stats_col '{stats_col}' has type {dt.simpleString()}, "
-                "whose JSON form is not order-preserving — cast to a "
-                "numeric, string, date, or timestamp type first"
-            )
     import uuid
 
     # INHERIT generated/identity from the latest manifest when the
@@ -1605,9 +1524,7 @@ def write_version(df: DataFrame, table_path: str,
             from pyspark.sql import types as T
 
             _pm = _load_manifest(table_path, _prev[-1])
-            if _pm.get("schema"):
-                _pschema = T.StructType.fromJson(
-                    json.loads(_pm["schema"]))
+            _pschema = T.StructType.fromJson(json.loads(_pm["schema"]))
         df = _apply_defaults(df, defaults, _pschema)
     if generated:
         missing = [c for c, e in generated.items() if c not in df.columns]
@@ -1674,11 +1591,6 @@ def write_version(df: DataFrame, table_path: str,
     props = table_properties(table_path)
     if props:
         manifest["properties"] = props
-    if stats_col is not None:
-        manifest["stats_col"] = stats_col
-        manifest["stats"] = _file_stats(
-            df.sparkSession, table_path, files, stats_col, df.schema
-        )
     _set_col_stats(manifest, None, table_path, [], files)
     try:
         return _publish(table_path, manifest)
@@ -1699,17 +1611,18 @@ def merge_version_cow(spark: SparkSession, table_path: str,
 
     Steps, each scan bounded by the pruning before it:
 
-    1. Stat-prune: if the parent manifest carries [min, max] stats on
-       ``key_col``, drop files whose range can't intersect the change
-       keys' [min, max] (two-scalar agg — Delta's data-skipping step).
+    1. Stat-prune: if the parent manifest's ``col_stats`` carry
+       [min, max] bounds on ``key_col``, drop files whose range can't
+       intersect the change keys' [min, max] (two-scalar agg — Delta's
+       data-skipping step).
     2. Find-touched: scan ONLY candidate files with
        ``input_file_name()``, semi-join the (broadcast) change keys,
        and collect the distinct file names — O(#files) driver
        metadata, the same planning list Delta's driver holds.
     3. Rewrite: rows of touched files anti-joined on the change keys,
        unioned with the non-deleted changes, written to ``d_N/``.
-    4. Publish: manifest = untouched parent entries (stats carried
-       over unchanged — the files are immutable) + new files.
+    4. Publish: manifest = untouched parent entries (``col_stats``
+       carried over unchanged — the files are immutable) + new files.
 
     ``changes`` must have the parent's data columns plus a boolean
     ``delete_col`` (a NULL flag is treated as an upsert). Returns
@@ -1753,15 +1666,10 @@ def merge_version_cow(spark: SparkSession, table_path: str,
     # dv.enabled routes MERGE through the merge-on-read path (no file
     # rewrites) — except schema evolution, whose rewrite is what
     # materializes the widened schema
-    if _dv_enabled(parent) and not evolve_schema and "schema" in parent:
+    if _dv_enabled(parent) and not evolve_schema:
         return merge_version_mor(spark, table_path, changes, key_col,
                                  delete_col=delete_col, version=version)
-    if "schema" in parent:
-        parent_struct = T.StructType.fromJson(json.loads(parent["schema"]))
-    else:  # legacy dir-level manifest: footer-infer the schema
-        parent_struct = spark.read.parquet(
-            os.path.join(table_path, parent["dir"])
-        ).schema
+    parent_struct = T.StructType.fromJson(json.loads(parent["schema"]))
     data_cols = [f.name for f in parent_struct.fields]
     extra = [f for f in changes.schema.fields
              if f.name not in data_cols and f.name != delete_col]
@@ -1799,12 +1707,8 @@ def merge_version_cow(spark: SparkSession, table_path: str,
         + [T.StructField(f.name, f.dataType, True) for f in extra]
     )
     out_cols = [f.name for f in out_struct.fields]
-    if "files" in parent:
-        pfiles = parent["files"]
-    else:  # legacy dir-level manifest
-        pfiles = _list_data_files(table_path, parent["dir"])
-    # prune on ANY stats-indexed column (multi-column col_stats first,
-    # the legacy single stats_col as fallback)
+    pfiles = parent["files"]
+    # prune on the key's col_stats bounds (any indexed column)
     pstats = _bounds_for(parent, key_col)
 
     # The change source is evaluated by several independent jobs below
@@ -1973,15 +1877,14 @@ def merge_version_cow(spark: SparkSession, table_path: str,
         feed = _classify_feed(pre_matched, upserts, [key_col])
         cdf_files, final_cdf = _write_cdf(table_path, version, token, feed)
 
-    # 4. publish: untouched parent files keep their stats verbatim.
+    # 4. publish: untouched parent files keep their col_stats verbatim.
     # extra_manifest lets callers stamp an idempotency key on the SAME
     # commit that applies the change (Delta's txnAppId/txnVersion):
     # a re-driven foreachBatch checks the stamp and skips the replay.
     manifest = {
         "version": version,
         "files": untouched + new_files,
-        # out_struct == parent schema when no columns were added; always
-        # regenerating also covers legacy manifests with no schema key
+        # out_struct == parent schema when no columns were added
         "schema": out_struct.json(),
         "operation": "MERGE",
         **(extra_manifest or {}),
@@ -2010,13 +1913,6 @@ def merge_version_cow(spark: SparkSession, table_path: str,
     child_dv = {f: parent_dv[f] for f in untouched if f in parent_dv}
     if child_dv:
         manifest["dv"] = child_dv
-    if parent.get("stats_col") == key_col and parent.get("stats") is not None:
-        stats = {f: parent["stats"].get(f) for f in untouched}
-        stats.update(_file_stats(spark, table_path, new_files, key_col,
-                                 out_struct)
-                     if new_files else {})
-        manifest["stats_col"] = key_col
-        manifest["stats"] = stats
     _set_col_stats(manifest, parent, table_path, untouched, new_files)
     if final_cdf is not None:
         manifest["cdf"] = cdf_files
@@ -2065,9 +1961,8 @@ def _predicate_cow(spark: SparkSession, table_path: str,
        WriteSerializable file-level conflict rules — while one that
        removed/re-vectored this DML's own files, or changed schema /
        constraints / column mapping / partition spec, raises
-       ``CommitConflict``. Untouched files keep their stats verbatim;
-       new files get stats recomputed when the table carries a stats
-       column.
+       ``CommitConflict``. Untouched files keep their ``col_stats``
+       verbatim; new files get one footer read each.
 
     ``rewrite(df, schema)`` receives the SAME snapshot schema this
     function resolved (and ``validate(schema)``, when given, runs
@@ -2091,14 +1986,8 @@ def _predicate_cow(spark: SparkSession, table_path: str,
     # interleaved commit must collide on the CAS, never be skipped.
     version = avail[-1] + 1
     parent = _load_manifest(table_path, avail[-1])
-    if "schema" in parent:
-        schema = T.StructType.fromJson(json.loads(parent["schema"]))
-        pfiles = parent["files"]
-    else:  # legacy dir-level manifest
-        schema = spark.read.parquet(
-            os.path.join(table_path, parent["dir"])
-        ).schema
-        pfiles = _list_data_files(table_path, parent["dir"])
+    schema = T.StructType.fromJson(json.loads(parent["schema"]))
+    pfiles = parent["files"]
     if validate is not None:
         validate(schema)
     if not pfiles and insert_rows is None:
@@ -2234,7 +2123,7 @@ def _predicate_cow(spark: SparkSession, table_path: str,
         """Child manifest against ``base``: the DML's rewrite/drop set
         is fixed (it was computed against the parent snapshot); every
         OTHER base file is shared verbatim."""
-        unt = [f for f in (base.get("files") or []) if f not in own]
+        unt = [f for f in base["files"] if f not in own]
         m = {
             "version": v,
             "files": unt + new_files,
@@ -2264,14 +2153,6 @@ def _predicate_cow(spark: SparkSession, table_path: str,
         child_dv = {f: base_dv[f] for f in unt if f in base_dv}
         if child_dv:
             m["dv"] = child_dv
-        stats_col = base.get("stats_col")
-        if stats_col is not None and base.get("stats") is not None:
-            stats = {f: base["stats"].get(f) for f in unt}
-            if new_files:
-                stats.update(_file_stats(spark, table_path, new_files,
-                                         stats_col, schema))
-            m["stats_col"] = stats_col
-            m["stats"] = stats
         _set_col_stats(m, base, table_path, unt, new_files)
         if final_cdf is not None:
             m["cdf"] = cdf_files
@@ -2800,11 +2681,6 @@ def _mor_dml(spark: SparkSession, table_path: str, predicate_sql: str,
         raise FileNotFoundError(f"no committed versions at {table_path}")
     version = avail[-1] + 1
     parent = _load_manifest(table_path, avail[-1])
-    if "schema" not in parent:
-        raise ValueError(
-            "merge-on-read DML needs a file-level manifest with a "
-            "recorded schema — legacy dir-level tables are COW-only"
-        )
     schema = T.StructType.fromJson(json.loads(parent["schema"]))
     pfiles = parent["files"]
     if validate is not None:
@@ -2897,7 +2773,7 @@ def _mor_dml(spark: SparkSession, table_path: str, predicate_sql: str,
         """Child manifest against ``base``: the DML's drop/vector set
         is fixed (computed against the parent snapshot); every other
         base file and its vector are shared verbatim."""
-        surv = [f for f in (base.get("files") or [])
+        surv = [f for f in base["files"]
                 if f not in set(dropped)]
         m = {
             "version": v,
@@ -2930,14 +2806,6 @@ def _mor_dml(spark: SparkSession, table_path: str, predicate_sql: str,
             dv[f] = sidecar_files
         if dv:
             m["dv"] = dv
-        stats_col = base.get("stats_col")
-        if stats_col is not None and base.get("stats") is not None:
-            stats = {f: base["stats"].get(f) for f in surv}
-            if new_files:
-                stats.update(_file_stats(spark, table_path, new_files,
-                                         stats_col, schema))
-            m["stats_col"] = stats_col
-            m["stats"] = stats
         _set_col_stats(m, base, table_path, surv, new_files)
         if final_cdf is not None:
             m["cdf"] = cdf_files
@@ -3088,11 +2956,6 @@ def merge_version_mor(spark: SparkSession, table_path: str,
             "commit interleave without CommitConflict"
         )
     parent = _load_manifest(table_path, avail[-1])
-    if "schema" not in parent:
-        raise ValueError(
-            "merge-on-read MERGE needs a file-level manifest — legacy "
-            "dir-level tables go through merge_version_cow"
-        )
     schema = T.StructType.fromJson(json.loads(parent["schema"]))
     data_cols = [f.name for f in schema.fields]
     extra = [c for c in changes.columns
@@ -3285,14 +3148,6 @@ def merge_version_mor(spark: SparkSession, table_path: str,
         dv[f] = sidecar_files
     if dv:
         manifest["dv"] = dv
-    stats_col = parent.get("stats_col")
-    if stats_col is not None and parent.get("stats") is not None:
-        stats = {f: parent["stats"].get(f) for f in surviving}
-        if new_files:
-            stats.update(_file_stats(spark, table_path, new_files,
-                                     stats_col, schema))
-        manifest["stats_col"] = stats_col
-        manifest["stats"] = stats
     _set_col_stats(manifest, parent, table_path, surviving, new_files)
     if final_cdf is not None:
         manifest["cdf"] = cdf_files
@@ -3341,8 +3196,7 @@ def vacuum_dry_run(table_path: str, keep_last: int = 2,
     kept_refs: set[str] = set()
     dropped_refs: set[str] = set()
     for v, m in _iter_manifests(table_path):
-        refs = set(m["files"] if "files" in m
-                   else _list_data_files(table_path, m["dir"]))
+        refs = set(m["files"])
         for sidecars in _dv_map(m).values():
             refs.update(sidecars)
         refs.update(m.get("cdf") or [])
@@ -3373,8 +3227,6 @@ def fsck_repair(spark: SparkSession, table_path: str,
     if not avail:
         raise FileNotFoundError(f"no committed versions at {table_path}")
     parent = _load_manifest(table_path, avail[-1])
-    if "files" not in parent:
-        raise ValueError("FSCK needs a file-level manifest")
     missing = [f for f in parent["files"]
                if not os.path.exists(_abs_file(table_path, f))]
     dv = _dv_map(parent)
@@ -3398,9 +3250,6 @@ def fsck_repair(spark: SparkSession, table_path: str,
             manifest["dv"] = kept_dv
         else:
             manifest.pop("dv", None)
-    if manifest.get("stats") is not None:
-        manifest["stats"] = {f: manifest["stats"].get(f)
-                             for f in surviving}
     if manifest.get("col_stats") is not None:
         manifest["col_stats"] = {f: manifest["col_stats"].get(f)
                                  for f in surviving}
@@ -3476,10 +3325,7 @@ def vacuum(table_path: str, keep_last: int = 2,
     # manifest's dv map points at it)
     referenced: set[str] = set()
     for _v, m in _iter_manifests(table_path):
-        if "files" in m:
-            referenced.update(m["files"])
-        else:  # legacy dir-level manifest: the whole dir is live
-            referenced.update(_list_data_files(table_path, m["dir"]))
+        referenced.update(m["files"])
         for sidecars in _dv_map(m).values():
             referenced.update(sidecars)
         referenced.update(m.get("cdf") or [])  # change-feed files
@@ -3534,7 +3380,7 @@ def _encode_manifest_delta(parent: dict, child: dict, depth: int) -> dict:
     million-file table logs O(new files), not O(table files)).
 
     Three patch granularities, keyed under reserved ``~`` names so no
-    manifest key can collide: dict values (col_stats, dv, stats,
+    manifest key can collide: dict values (col_stats, dv,
     constraints, properties, column_mapping) diff per ENTRY
     (``~dpatch`` put/drop); string-list values (files, cdf,
     retired_physical) diff as ordered remove+append (``~lpatch``) when
@@ -3641,12 +3487,26 @@ def _check_features(manifest: dict, table_path: str) -> None:
         )
 
 
+def _check_materialized(m: dict, table_path: str, version: int) -> None:
+    """A materialized manifest must carry its file list and schema —
+    the one manifest shape every reader and commit path relies on."""
+    _check_features(m, table_path)
+    missing = [k for k in ("files", "schema") if k not in m]
+    if missing:
+        raise ValueError(
+            f"manifest of version {version} of {table_path} lacks "
+            f"{missing} — dir-level manifests are not supported; "
+            "rewrite the table through write_version"
+        )
+
+
 def _load_manifest(table_path: str, version: int) -> dict:
     """The materialized manifest of one version: a full snapshot reads
     as-is; a delta record replays its chain back to the nearest full
     snapshot (bounded by the checkpoint interval, so a read costs at
     most ~interval small JSON files). Raises on manifests stamped with
-    reader features this build does not implement."""
+    reader features this build does not implement, and on manifests
+    without a ``files`` list or ``schema``."""
     raw = _read_raw_manifest(table_path, version)
     _check_features(raw, table_path)
     chain = []
@@ -3656,7 +3516,7 @@ def _load_manifest(table_path: str, version: int) -> dict:
     m = raw
     for delta in reversed(chain):
         m = _apply_manifest_delta(m, delta)
-    _check_features(m, table_path)
+    _check_materialized(m, table_path, version)
     return m
 
 
@@ -3675,7 +3535,7 @@ def _iter_manifests(table_path: str, version_list: list[int] | None = None):
         _check_features(raw, table_path)
         if prev_m is not None and raw.get("~of") == prev_v:
             m = _apply_manifest_delta(prev_m, raw)
-            _check_features(m, table_path)
+            _check_materialized(m, table_path, v)
         else:
             m = _load_manifest(table_path, v)
         yield v, m
@@ -3860,8 +3720,6 @@ def register_snapshot_table(spark: SparkSession, table_path: str,
         blockers.append("deletion vectors")
     if m.get("column_mapping") or m.get("retired_physical"):
         blockers.append("column mapping")
-    if "files" not in m:
-        blockers.append("legacy dir-level manifest")
     if blockers:
         raise ValueError(
             f"snapshot v{v} of {table_path} cannot be served as a "
@@ -3998,10 +3856,10 @@ def table_statistics(table_path: str,
                      include_rows: bool = True) -> dict:
     """Optimizer-grade table statistics from manifest METADATA — no
     data scan, no SparkSession: exact ``row_count`` (per-file
-    row_counts minus deletion-vectored positions; None when a legacy
-    manifest lacks the index), ``size_in_bytes`` (per-file sizes
-    recorded at commit, os.stat fallback for legacy files), and the
-    live ``num_files``.
+    row_counts minus deletion-vectored positions; None when a file
+    has no recorded count), ``size_in_bytes`` (per-file sizes recorded
+    at commit, os.stat fallback for files without one), and the live
+    ``num_files``.
 
     ``include_rows=False`` skips the row count (returned as None):
     exact rows under deletion vectors must read each DV sidecar's
@@ -4023,17 +3881,7 @@ def table_statistics(table_path: str,
         raise FileNotFoundError(f"no committed versions at {table_path}")
     v = avail[-1] if version is None else version
     m = _load_manifest(table_path, v)
-    files = m.get("files")
-    if files is None:  # legacy dir-level manifest
-        files = _list_data_files(table_path, m["dir"])
-        size = 0
-        for f in files:
-            try:
-                size += os.path.getsize(_abs_file(table_path, f))
-            except OSError:
-                pass
-        return {"row_count": None, "size_in_bytes": size,
-                "num_files": len(files)}
+    files = m["files"]
     fb = m.get("file_bytes") or {}
     size = 0
     for f in files:
@@ -4142,8 +3990,8 @@ def min_max(spark: SparkSession, table_path: str, col: str,
         raise FileNotFoundError(f"no committed versions at {table_path}")
     v = avail[-1] if version is None else version
     m = _load_manifest(table_path, v)
-    files = m.get("files")
-    bounds = _bounds_for(m, col) if files is not None else None
+    files = m["files"]
+    bounds = _bounds_for(m, col)
     if (files and bounds is not None and not _dv_map(m)
             and all(bounds.get(f) is not None for f in files)):
         los = [bounds[f][0] for f in files]
@@ -4175,12 +4023,11 @@ def describe_detail(spark: SparkSession, table_path: str) -> DataFrame:
         raise FileNotFoundError(f"no committed versions at {table_path}")
     v = avail[-1]
     m = _load_manifest(table_path, v)
-    files = (m["files"] if "files" in m
-             else _list_data_files(table_path, m["dir"]))
+    files = m["files"]
     fb = m.get("file_bytes") or {}
     size = 0
     for f in files:
-        b = fb.get(f)  # recorded at commit; os.stat only for legacy
+        b = fb.get(f)  # recorded at commit; os.stat when missing
         if b is None:
             try:
                 b = os.path.getsize(_abs_file(table_path, f))
@@ -4308,32 +4155,29 @@ def read_version(spark: SparkSession, table_path: str,
     if version not in avail:
         raise ValueError(f"version {version} not in {avail} at {table_path}")
     manifest = _load_manifest(table_path, version)
-    if "files" in manifest:
-        from pyspark.sql.types import StructType
+    from pyspark.sql.types import StructType
 
-        schema = StructType.fromJson(json.loads(manifest["schema"]))
-        if not manifest["files"]:
-            return spark.createDataFrame([], schema)
-        # Read with the MANIFEST schema, not parquet inference: after a
-        # schema-evolving MERGE, shared pre-evolution files lack the
-        # new columns and this NULL-backfills them (Delta's read path);
-        # it also pins column order/nullability to what was committed.
-        # Deletion vectors (if the version carries any) are applied by
-        # the same scan — a DV-free version plans the identical plain
-        # parquet read as before.
-        df = _read_files_dv(
-            spark, table_path, manifest, manifest["files"], schema
-        )
-        if stats_hint:
-            df = _stats_broadcast_hint(spark, df, table_path, version)
-        return df
-    return spark.read.parquet(os.path.join(table_path, manifest["dir"]))
+    schema = StructType.fromJson(json.loads(manifest["schema"]))
+    if not manifest["files"]:
+        return spark.createDataFrame([], schema)
+    # Read with the MANIFEST schema, not parquet inference: after a
+    # schema-evolving MERGE, shared pre-evolution files lack the new
+    # columns and this NULL-backfills them (Delta's read path); it
+    # also pins column order/nullability to what was committed.
+    # Deletion vectors (if the version carries any) are applied by the
+    # same scan — a DV-free version plans the identical plain parquet
+    # read as before.
+    df = _read_files_dv(
+        spark, table_path, manifest, manifest["files"], schema
+    )
+    if stats_hint:
+        df = _stats_broadcast_hint(spark, df, table_path, version)
+    return df
 
 
 def optimize_version(spark: SparkSession, table_path: str,
                      target_files: int = 1,
                      sort_col: str | None = None,
-                     stats_col: str | None = None,
                      zorder_cols: tuple[str, str] | None = None,
                      zorder_bits: int = 8,
                      curve: str = "morton") -> dict:
@@ -4410,9 +4254,8 @@ def optimize_version(spark: SparkSession, table_path: str,
         df = df.repartitionByRange(target_files, sort_col)
     else:
         df = df.coalesce(target_files)
-    before = len(_load_manifest(table_path, latest[-1]).get("files", []))
-    v = write_version(df, table_path, stats_col=stats_col,
-                      _operation="OPTIMIZE")
+    before = len(_load_manifest(table_path, latest[-1])["files"])
+    v = write_version(df, table_path, _operation="OPTIMIZE")
     return {
         "version": v,
         "files_before": before,
@@ -4437,7 +4280,7 @@ def optimize_incremental(spark: SparkSession, table_path: str,
 
     DV-laden files are read through their vectors and re-emitted
     plain, so the commit also retires their sidecars. Healthy files
-    keep their stats verbatim. No-op (no commit) when nothing
+    keep their col_stats verbatim. No-op (no commit) when nothing
     qualifies. Returns commit stats."""
     import shutil
     import uuid
@@ -4447,11 +4290,6 @@ def optimize_incremental(spark: SparkSession, table_path: str,
         raise FileNotFoundError(f"no committed versions at {table_path}")
     version = avail[-1] + 1
     parent = _load_manifest(table_path, avail[-1])
-    if "schema" not in parent:
-        raise ValueError(
-            "incremental OPTIMIZE needs a file-level manifest — legacy "
-            "dir-level tables go through optimize_version"
-        )
     from pyspark.sql import types as T
 
     schema = T.StructType.fromJson(json.loads(parent["schema"]))
@@ -4524,14 +4362,6 @@ def optimize_incremental(spark: SparkSession, table_path: str,
                    if f in set(kept)}
         if kept_dv:
             m["dv"] = kept_dv
-        stats_col = base.get("stats_col")
-        if stats_col is not None and base.get("stats") is not None:
-            stats = {f: base["stats"].get(f) for f in kept}
-            if new_files:
-                stats.update(_file_stats(spark, table_path, new_files,
-                                         stats_col, schema))
-            m["stats_col"] = stats_col
-            m["stats"] = stats
         _set_col_stats(m, base, table_path, kept, new_files)
         return m, kept
 
@@ -4641,8 +4471,7 @@ def generate_symlink_manifest(table_path: str,
             "or inconsistently against the logical schema; Delta "
             "blocks manifest generation under column mapping too"
         )
-    entries = (m["files"] if "files" in m
-               else _list_data_files(table_path, m["dir"]))
+    entries = m["files"]
     groups: dict[str, list[str]] = {}
     for e in entries:
         parts = e.replace(os.sep, "/").split("/")
@@ -4675,10 +4504,7 @@ def history(spark: SparkSession, table_path: str) -> DataFrame:
     rows = []
     prev_files: set[str] = set()
     for v, m in _iter_manifests(table_path):
-        if "files" in m:
-            files = m["files"]
-        else:  # legacy dir-level manifest
-            files = _list_data_files(table_path, m["dir"])
+        files = m["files"]
         size = 0
         for f in files:
             try:
@@ -4687,14 +4513,12 @@ def history(spark: SparkSession, table_path: str) -> DataFrame:
                 pass
         rows.append((v, len(files), size,
                      len(set(files) & prev_files),
-                     m.get("stats_col"),
                      float(_commit_ts(table_path, v, m))))
         prev_files = set(files)
     return spark.createDataFrame(
         rows,
         "version INT, n_files INT, total_bytes LONG, "
-        "files_shared_with_prev INT, stats_col STRING, "
-        "committed_at DOUBLE",
+        "files_shared_with_prev INT, committed_at DOUBLE",
     )
 
 
@@ -4709,10 +4533,7 @@ def snapshots(spark: SparkSession, table_path: str) -> DataFrame:
     manifests committed before operations were stamped read as NULL."""
     rows = []
     for v, m in _iter_manifests(table_path):
-        if "files" in m:
-            file_list = m["files"]
-        else:  # legacy dir-level manifest
-            file_list = _list_data_files(table_path, m["dir"])
+        file_list = m["files"]
         size = 0
         for f in file_list:
             try:
@@ -4868,14 +4689,10 @@ def _change_entries(table_path: str, version: int, manifest: dict,
     if "OPTIMIZE" in op or "BACKFILL" in op or op in (
             "SET TBLPROPERTIES", "ADD CONSTRAINT", "DROP CONSTRAINT"):
         return "none", []  # data-neutral by construction
-    files = manifest.get("files")
-    if files is None:
-        files = _list_data_files(table_path, manifest["dir"])
+    files = manifest["files"]
     if prev is None:
         return "insert", list(files)  # first commit: all rows inserted
-    pfiles = prev.get("files")
-    if pfiles is None:
-        pfiles = _list_data_files(table_path, prev["dir"])
+    pfiles = prev["files"]
     removed = set(pfiles) - set(files)
     dv_changed = _dv_map(manifest) != _dv_map(prev)
     if removed or dv_changed:
@@ -4955,8 +4772,10 @@ def files(spark: SparkSession, table_path: str,
           version: int | None = None) -> DataFrame:
     """Iceberg ``table.files`` metadata-table analog: one row per data
     file in the given snapshot (default latest) with its byte size and
-    the manifest's per-file [min, max] stats when the table carries a
-    stats column — what an operator inspects to judge clustering
+    its ``col_stats`` bounds as Iceberg-style ``lower_bounds`` /
+    ``upper_bounds`` maps (column → bound, in the manifest's stat
+    encoding; a column without bounds is absent, a file never indexed
+    has NULL maps) — what an operator inspects to judge clustering
     quality and stat-pruning effectiveness before an OPTIMIZE. Pure
     manifest + os.stat metadata; no data file is opened, O(#files)."""
     from pyspark.sql import functions as F
@@ -4969,93 +4788,51 @@ def files(spark: SparkSession, table_path: str,
     if version not in avail:
         raise ValueError(f"version {version} not in {avail} at {table_path}")
     m = _load_manifest(table_path, version)
-    if "files" in m:
-        file_list = m["files"]
-    else:  # legacy dir-level manifest
-        file_list = _list_data_files(table_path, m["dir"])
-    stats = m.get("stats") or {}
+    col_stats = m.get("col_stats") or {}
     dv = _dv_map(m)
     rows = []
-    for f in file_list:
+    for f in m["files"]:
         try:
             size = os.path.getsize(_abs_file(table_path, f))
         except OSError:
             size = None
-        lo_hi = stats.get(f)
-        rows.append((
-            f, size,
-            str(lo_hi[0]) if lo_hi else None,
-            str(lo_hi[1]) if lo_hi else None,
-            f in dv,
-        ))
+        per = col_stats.get(f)
+        lower = upper = None
+        if per is not None:
+            lower = {c: str(b[0]) for c, b in per.items() if b is not None}
+            upper = {c: str(b[1]) for c, b in per.items() if b is not None}
+        rows.append((f, size, lower, upper, f in dv))
     return spark.createDataFrame(
         rows,
-        "file STRING, size_bytes LONG, stats_min STRING, "
-        "stats_max STRING, has_dv BOOLEAN",
-    ).withColumn("version", F.lit(version).cast("int")) \
-     .withColumn("stats_col", F.lit(m.get("stats_col")))
+        "file STRING, size_bytes LONG, lower_bounds MAP<STRING, STRING>, "
+        "upper_bounds MAP<STRING, STRING>, has_dv BOOLEAN",
+    ).withColumn("version", F.lit(version).cast("int"))
 
 
-def backfill_stats(table_path: str, stats_col: str) -> int:
+def backfill_stats(table_path: str) -> int:
     """Metadata-only stats backfill: publish a NEW version whose
-    manifest carries per-file [min, max] of ``stats_col`` for the SAME
-    data files as the LATEST version — read from the parquet FOOTERS'
-    row-group statistics (the shared ``_footer_stats`` reader the Data
-    Source writer uses: NaN/partial-stats files get ``None`` = scanned,
+    manifest rebuilds ``col_stats``, ``row_counts`` and ``file_bytes``
+    for the SAME data files as the LATEST version — read from the
+    parquet FOOTERS (NaN/partial-stats columns get ``None`` = scanned,
     never wrongly pruned), so no data row is ever scanned and no file
     is rewritten (Iceberg's replace-with-same-files shape). This
-    retro-enables data skipping (merge_version_cow stat pruning) on
-    tables written before anyone passed ``stats_col=``; legacy
-    dir-level manifests are supported and stay dir-shaped. Only the
-    latest version can be annotated — an older snapshot's file list
-    must never be republished as latest (that would be a silent
-    rollback; use ``restore_version`` when a rollback is the intent).
-    The commit goes through the normal manifest CAS, so it serializes
-    against concurrent writers like any other commit. Raises KeyError
-    if the column is absent from the current files."""
-    import pyarrow.parquet as pq
-
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.sources.versioned_ds import (
-        _footer_stats,
-    )
-
+    retro-enables data skipping and metadata-only ``count_rows`` on
+    tables committed before those indexes existed. Only the latest
+    version can be annotated — an older snapshot's file list must
+    never be republished as latest (that would be a silent rollback;
+    use ``restore_version`` when a rollback is the intent). The commit
+    goes through the normal manifest CAS, so it serializes against
+    concurrent writers like any other commit."""
     avail = versions(table_path)
     if not avail:
         raise FileNotFoundError(f"no committed versions at {table_path}")
     base = avail[-1]
     parent = _load_manifest(table_path, base)
-    legacy = "files" not in parent
-    rel_files = (
-        _list_data_files(table_path, parent["dir"]) if legacy
-        else parent["files"]
-    )
-    stats: dict[str, list | None] = {}
-    for rel in rel_files:
-        full = _abs_file(table_path, rel)
-        md = pq.ParquetFile(full).metadata
-        names = [md.schema.column(i).name for i in range(md.num_columns)]
-        if stats_col not in names:
-            raise KeyError(
-                f"stats_col '{stats_col}' not present in {rel}"
-            )
-        stats[rel] = _footer_stats(full, stats_col)
     manifest = dict(parent)
     for stamp in _PER_COMMIT_KEYS:
         manifest.pop(stamp, None)  # provenance/changes are per-commit
     manifest["version"] = base + 1
-    if not legacy:
-        manifest["files"] = list(rel_files)
-    manifest["stats_col"] = stats_col
-    manifest["stats"] = stats
-    # also (re)build the multi-column index for EVERY eligible column
-    # while we're touching each footer anyway — retro-enables skipping
-    # on any column for tables committed before col_stats existed
-    if parent.get("schema"):
-        from pyspark.sql import types as T
-
-        schema = T.StructType.fromJson(json.loads(parent["schema"]))
-        manifest["col_stats"] = _collect_col_stats(
-            table_path, list(rel_files), schema)
+    _set_col_stats(manifest, None, table_path, [], parent["files"])
     manifest["backfilled_from"] = base
     manifest["operation"] = "BACKFILL STATS"
     return _publish(table_path, manifest)
@@ -5143,38 +4920,18 @@ def clone_table(src_path: str, dst_path: str,
                 "+ DV materialization) — pass spark="
             )
         return _deep_clone(spark, src_path, dst_path, version, src)
-    if "files" in src:
-        entries = src["files"]
-    else:  # legacy dir-level manifest
-        entries = _list_data_files(src_path, src["dir"])
+    entries = src["files"]
     abs_files = [_abs_file(src_path, f) for f in entries]
     manifest = {
         "version": 0,
         "files": abs_files,
-        "schema": src["schema"] if "schema" in src else None,
+        "schema": src["schema"],
         "cloned_from": {
             "table": os.path.abspath(src_path),
             "version": version,
         },
         "operation": "CLONE",
     }
-    if manifest["schema"] is None:
-        # legacy source: infer the schema once at clone time so the
-        # clone is self-describing. Prefer the caller's session — the
-        # active-session fallback is None on worker threads (exactly
-        # the --streams execution shape).
-        sess = spark or SparkSession.getActiveSession()
-        if sess is None:
-            raise RuntimeError(
-                "cloning a legacy (schema-less) manifest needs a "
-                "SparkSession to infer the schema — pass spark="
-            )
-        manifest["schema"] = sess.read.parquet(*abs_files).schema.json()
-    if src.get("stats_col") is not None and src.get("stats") is not None:
-        manifest["stats_col"] = src["stats_col"]
-        manifest["stats"] = {
-            a: src["stats"].get(e) for a, e in zip(abs_files, entries)
-        }
     if src.get("col_stats"):
         # multi-column skipping stats ride the clone re-keyed to the
         # same absolute entries the clone's file list uses
@@ -5236,15 +4993,8 @@ def _deep_clone(spark: SparkSession, src_path: str, dst_path: str,
 
     from pyspark.sql import types as T
 
-    if "files" in src:
-        entries = src["files"]
-    else:  # legacy dir-level manifest
-        entries = _list_data_files(src_path, src["dir"])
-    if "schema" in src and src["schema"] is not None:
-        schema = T.StructType.fromJson(json.loads(src["schema"]))
-    else:
-        schema = spark.read.parquet(
-            *[_abs_file(src_path, e) for e in entries]).schema
+    entries = src["files"]
+    schema = T.StructType.fromJson(json.loads(src["schema"]))
     dv = _dv_map(src)
     clean = [e for e in entries if not dv.get(e)]
     vectored = [e for e in entries if dv.get(e)]
@@ -5324,14 +5074,6 @@ def _deep_clone(spark: SparkSession, src_path: str, dst_path: str,
     }
     _set_col_stats(manifest, pseudo_parent, dst_path, copied_rel,
                    new_files)
-    if src.get("stats_col") is not None and src.get("stats") is not None:
-        stats = {r: src["stats"].get(e)
-                 for e, r in zip(clean, copied_rel)}
-        if new_files:
-            stats.update(_file_stats(spark, dst_path, new_files,
-                                     src["stats_col"], schema))
-        manifest["stats_col"] = src["stats_col"]
-        manifest["stats"] = stats
     os.makedirs(_manifest_path(dst_path), exist_ok=True)
     try:
         return _publish(dst_path, manifest)
@@ -5344,14 +5086,15 @@ def _deep_clone(spark: SparkSession, src_path: str, dst_path: str,
         raise
 
 
-def convert_to_versioned(table_path: str, stats_col: str | None = None,
+def convert_to_versioned(table_path: str,
                          spark: SparkSession | None = None) -> int:
     """CONVERT an existing plain-parquet directory into a versioned
     table IN PLACE (Delta's ``CONVERT TO DELTA`` analog): commit
     version 0 referencing the directory's parquet files exactly where
     they are — zero data bytes move, so adopting a 100 TB dataset into
-    the transaction log costs one manifest write plus a parquet-FOOTER
-    pass for the data-skipping index (no row is scanned). From then on
+    the transaction log costs one schema read plus a parquet-FOOTER
+    pass for the ``col_stats`` data-skipping index (no row is
+    scanned). From then on
     the full lakehouse surface applies: time travel, DML (rewrites land
     in versioned dirs; the originals keep serving older snapshots),
     OPTIMIZE, CDF, constraints.
@@ -5393,28 +5136,16 @@ def convert_to_versioned(table_path: str, stats_col: str | None = None,
     if sess is None:
         raise RuntimeError("CONVERT needs a SparkSession to read the "
                            "schema — pass spark=")
-    from pyspark.sql import types as T  # noqa: F401
-
-    abs_files = [_abs_file(table_path, f) for f in rel_files]
-    schema = sess.read.parquet(*abs_files).schema
+    # the one inferring read in the versioned layer: an unmanaged
+    # directory has no recorded schema to read with
+    schema = sess.read.parquet(
+        *[_abs_file(table_path, f) for f in rel_files]).schema
     manifest: dict = {
         "version": 0,
         "files": rel_files,
         "schema": schema.json(),
         "operation": "CONVERT",
     }
-    if stats_col is not None:
-        from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.sources.versioned_ds import (  # noqa: E501
-            _footer_stats,
-        )
-
-        if stats_col not in {f.name for f in schema.fields}:
-            raise KeyError(f"stats_col '{stats_col}' not in schema")
-        manifest["stats_col"] = stats_col
-        manifest["stats"] = {
-            rel: _footer_stats(full, stats_col)
-            for rel, full in zip(rel_files, abs_files)
-        }
     # multi-column skipping index + per-file row counts from the same
     # footer pass (count_rows works immediately on an adopted table)
     _set_col_stats(manifest, None, table_path, [], rel_files)

@@ -20,7 +20,7 @@ from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versi
 def _mk(spark, path, n=200):
     df = spark.range(n).selectExpr(
         "CAST(id AS INT) AS k", "CONCAT('v', id) AS v")
-    versioned.write_version(df, path, stats_col="k")
+    versioned.write_version(df, path)
     return path
 
 

@@ -24,7 +24,7 @@ def _mk(spark, path, n=600, files=4, dv=False):
         "CAST(id AS INT) AS k", "CONCAT('v', id) AS v",
         "CAST(id % 7 AS INT) AS grp",
     ).repartitionByRange(files, "k")
-    versioned.write_version(df, path, stats_col="k")
+    versioned.write_version(df, path)
     if dv:
         versioned.set_table_property(path, "dv.enabled", "true")
     return path

@@ -2,7 +2,7 @@
 commit path indexes per-file [min, max] for ALL eligible top-level
 columns from the parquet footers (Delta's per-AddFile stats shape), so
 COW/MOR merge discovery and the Data Source `.option("filter", ...)`
-prune on ANY column — not just the legacy single `stats_col`."""
+prune on ANY column."""
 
 from __future__ import annotations
 
@@ -11,17 +11,16 @@ import pytest
 from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
 
 
-def _mk(spark, path, n=1000, files=8, stats_col=None):
+def _mk(spark, path, n=1000, files=8):
     # range-clustered on k; k2 rides along monotonic in k, so BOTH
-    # columns have disjoint per-file ranges while only k (optionally)
-    # carries legacy stats
+    # columns have disjoint per-file ranges
     df = spark.range(n).selectExpr(
         "CAST(id AS INT) AS k",
         "CAST(id * 10 AS BIGINT) AS k2",
         "CONCAT('v', id) AS v",
         "CAST(id % 7 AS INT) AS grp",
     ).repartitionByRange(files, "k")
-    versioned.write_version(df, path, stats_col=stats_col)
+    versioned.write_version(df, path)
     return path
 
 
@@ -46,10 +45,10 @@ def test_write_version_records_col_stats_for_all_columns(spark, tmp_path):
 
 
 def test_cow_merge_prunes_on_key_without_stats_col(spark, tmp_path):
-    """The r7 gap: a table with NO stats_col still stat-prunes its COW
-    merge discovery, because col_stats indexes the merge key."""
-    path = _mk(spark, str(tmp_path / "t"))   # no stats_col at all
-    assert versioned._load_manifest(path, 0).get("stats_col") is None
+    """The r7 gap: a table with no single stats column still
+    stat-prunes its COW merge discovery, because col_stats indexes the
+    merge key."""
+    path = _mk(spark, str(tmp_path / "t"))
 
     ch = spark.createDataFrame([(3, 30, "u", 3, False)],
                                "k INT, k2 BIGINT, v STRING, grp INT, "
@@ -80,14 +79,14 @@ def test_mor_merge_prunes_on_key_without_stats_col(spark, tmp_path):
 
 def test_ds_filter_prunes_on_non_stats_col(spark, tmp_path):
     """The verdict's done-criterion: `.option("filter", ...)` on a
-    column that is NOT the legacy stats_col plans strictly fewer
+    column other than the clustering key plans strictly fewer
     partitions and stays row-exact."""
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.sources.versioned_ds import (
         VersionedDataSource,
     )
 
     spark.dataSource.register(VersionedDataSource)
-    path = _mk(spark, str(tmp_path / "t"), stats_col="k")
+    path = _mk(spark, str(tmp_path / "t"))
     n_files = len(versioned._load_manifest(path, 0)["files"])
     assert n_files == 8
 
@@ -219,9 +218,8 @@ def test_backfill_stats_builds_col_stats(spark, tmp_path):
     m["version"] = 1
     versioned._publish(path, m)
 
-    versioned.backfill_stats(path, "k")
+    versioned.backfill_stats(path)
     m2 = versioned._load_manifest(path, 2)
-    assert m2["stats_col"] == "k"
     assert set(m2["col_stats"]) == set(m2["files"])
     assert all(set(per) == {"k", "k2", "v", "grp"}
                for per in m2["col_stats"].values())
@@ -310,7 +308,7 @@ def test_decimal_col_stats_prune_and_min_max(spark, tmp_path):
             Decimal("1.25"), Decimal("623.75")]
     encs = [V._encode_decimal(x) for x in vals]
     assert encs == sorted(encs)
-    assert [V._stat_decode(e) for e in encs] == vals
+    assert [V._stat_decode(e, True) for e in encs] == vals
 
     # DS filter prunes on the DECIMAL column (negatives and positives)
     def _read(flt):

@@ -20,8 +20,7 @@ def _mk(spark, path, n=100):
     df = spark.range(n).selectExpr("CAST(id AS INT) AS k",
                                    "CONCAT('v', id) AS v",
                                    "CAST(id % 5 AS INT) AS grp")
-    versioned.write_version(df.repartitionByRange(4, "k"), path,
-                            stats_col="k")
+    versioned.write_version(df.repartitionByRange(4, "k"), path)
     return path
 
 
@@ -125,9 +124,8 @@ def test_drop_column_and_resurrection_guard(spark, tmp_path):
 
 def test_drop_stats_col_and_only_column_guards(spark, tmp_path):
     p = _mk(spark, str(tmp_path / "t"))
-    versioned.drop_column(p, "k")   # k IS the stats_col
+    versioned.drop_column(p, "k")   # k IS the merge key
     m = versioned._load_manifest(p, 1)
-    assert "stats_col" not in m and "stats" not in m
     assert all(per is None or "k" not in per
                for per in m["col_stats"].values())
     versioned.drop_column(p, "v")

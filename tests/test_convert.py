@@ -37,7 +37,7 @@ def test_convert_in_place_zero_copy(spark, tmp_path):
     path = _plain(spark, str(tmp_path / "t"))
     inodes = {f: os.stat(os.path.join(path, f)).st_ino
               for f in os.listdir(path) if f.endswith(".parquet")}
-    v = versioned.convert_to_versioned(path, stats_col="k", spark=spark)
+    v = versioned.convert_to_versioned(path, spark=spark)
     assert v == 0
     got = versioned.read_version(spark, path)
     assert got.count() == 400
@@ -49,15 +49,13 @@ def test_convert_in_place_zero_copy(spark, tmp_path):
     assert set(m["files"]) == set(inodes)
     # footer stats landed without any data scan surface to check, but
     # they must be present and sane for pruning
-    assert m["stats_col"] == "k"
-    assert all(s is not None for s in m["stats"].values())
     assert m["col_stats"] and all(
         per and per.get("k") for per in m["col_stats"].values())
 
 
 def test_converted_table_runs_the_full_dml_surface(spark, tmp_path):
     path = _plain(spark, str(tmp_path / "t"))
-    versioned.convert_to_versioned(path, stats_col="k", spark=spark)
+    versioned.convert_to_versioned(path, spark=spark)
     stats = versioned.delete_where(spark, path, "k >= 300")
     assert stats["files_dropped"] == 1      # aligned: metadata-only
     assert versioned.read_version(spark, path).count() == 300
@@ -90,11 +88,13 @@ def test_convert_guards(spark, tmp_path):
 
 def test_convert_sql_route(spark, tmp_path):
     path = _plain(spark, str(tmp_path / "t"))
-    v = maintenance_sql(
-        spark, f"CONVERT TO VERSIONED parquet.`{path}` STATS BY k")
+    with pytest.raises(ValueError, match="unsupported maintenance"):
+        maintenance_sql(
+            spark, f"CONVERT TO VERSIONED parquet.`{path}` STATS BY k")
+    v = maintenance_sql(spark, f"CONVERT TO VERSIONED parquet.`{path}`")
     assert v == 0
     m = versioned._load_manifest(path, 0)
-    assert m["stats_col"] == "k"
+    assert versioned._bounds_for(m, "k") is not None
 
 
 def test_features_stamped_and_gated(spark, tmp_path):
@@ -102,7 +102,7 @@ def test_features_stamped_and_gated(spark, tmp_path):
     versioned.write_version(
         spark.range(100).selectExpr("CAST(id AS INT) AS k",
                                     "CONCAT('v', id) AS v")
-        .repartitionByRange(2, "k"), path, stats_col="k")
+        .repartitionByRange(2, "k"), path)
     assert "features" not in versioned._read_raw_manifest(path, 0)
     versioned.set_table_property(path, "dv.enabled", "true")
     versioned.delete_where(spark, path, "k = 7")
@@ -160,7 +160,7 @@ def test_fsck_repair_drops_dead_refs(spark, tmp_path):
     path = str(tmp_path / "t")
     versioned.write_version(
         spark.range(400).selectExpr("CAST(id AS INT) AS k")
-        .repartitionByRange(4, "k"), path, stats_col="k")
+        .repartitionByRange(4, "k"), path)
     m = versioned._load_manifest(path, 0)
     victim = m["files"][1]
     os.remove(versioned._abs_file(path, victim))
@@ -173,7 +173,7 @@ def test_fsck_repair_drops_dead_refs(spark, tmp_path):
     assert rep["version"] == 1
     m1 = versioned._load_manifest(path, 1)
     assert victim not in m1["files"]
-    assert set(m1["stats"]) == set(m1["files"])
+    assert set(m1["col_stats"]) == set(m1["files"])
     assert versioned.read_version(spark, path).count() == 300
     # clean table: FSCK is a no-op report
     rep = versioned.fsck_repair(spark, path, dry_run=False)
@@ -187,7 +187,7 @@ def test_fsck_never_repairs_missing_sidecars(spark, tmp_path):
     path = str(tmp_path / "t")
     versioned.write_version(
         spark.range(200).selectExpr("CAST(id AS INT) AS k")
-        .repartitionByRange(2, "k"), path, stats_col="k")
+        .repartitionByRange(2, "k"), path)
     versioned.set_table_property(path, "dv.enabled", "true")
     versioned.delete_where(spark, path, "k = 5")
     m = versioned._load_manifest(path, 2)
@@ -203,7 +203,7 @@ def test_describe_detail(spark, tmp_path):
     versioned.write_version(
         spark.range(700).selectExpr("CAST(id AS INT) AS k",
                                     "CAST(id % 7 AS INT) AS ds"),
-        path, partition_by=["ds"], stats_col="k")
+        path, partition_by=["ds"])
     versioned.set_table_property(path, "dv.enabled", "true")
     versioned.add_constraint(spark, path, "k_ok", "k >= 0")
     versioned.delete_where(spark, path, "k = 3")

@@ -14,12 +14,12 @@ from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versi
 from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.merge_sql import sql as vsql
 
 
-def _mk(spark, path, n=600, files=6, stats=True):
+def _mk(spark, path, n=600, files=6):
     df = spark.range(n).selectExpr(
         "CAST(id AS INT) AS k", "CONCAT('v', id) AS v",
         "CAST(id % 7 AS INT) AS grp",
     ).repartitionByRange(files, "k")
-    versioned.write_version(df, path, stats_col="k" if stats else None)
+    versioned.write_version(df, path)
     return path
 
 
@@ -190,7 +190,7 @@ def test_optimize_compacts_dvs_and_vacuum_refcounts_sidecars(spark, tmp_path):
     assert versioned._dv_map(versioned._load_manifest(path, 2))
 
     # OPTIMIZE reads through the DVs and rewrites plain files
-    versioned.optimize_version(spark, path, target_files=2, stats_col="k")
+    versioned.optimize_version(spark, path, target_files=2)
     m = versioned._load_manifest(path, 3)
     assert not versioned._dv_map(m)
     assert _rows(spark, path) == want

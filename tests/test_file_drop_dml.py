@@ -23,7 +23,7 @@ def _mk(spark, path, n=600, files=6, nulls=False):
         df = df.selectExpr(
             "IF(k % 100 = 50, CAST(NULL AS INT), k) AS k", "v", "grp")
     versioned.write_version(
-        df.repartitionByRange(files, "k"), path, stats_col="k")
+        df.repartitionByRange(files, "k"), path)
     return path
 
 
@@ -64,7 +64,7 @@ def test_cow_aligned_delete_writes_no_data_at_all(spark, tmp_path):
     assert set(m["files"]) < set(m0["files"])
     assert len(_rows(spark, path)) == 500
     # per-file stats follow the drop (no stale keys)
-    assert set(m["stats"]) == set(m["files"])
+    assert set(m["col_stats"]) == set(m["files"])
 
 
 def test_cow_delete_everything_leaves_empty_table(spark, tmp_path):
@@ -189,8 +189,7 @@ def test_partition_by_aligned_writes_and_metadata_delete(spark, tmp_path):
     df = spark.range(700).selectExpr(
         "CAST(id AS INT) AS k", "CAST(id % 7 AS INT) AS ds",
         "CONCAT('v', id) AS v")
-    versioned.write_version(df, path, partition_by=["ds"],
-                            stats_col="k")
+    versioned.write_version(df, path, partition_by=["ds"])
     m = versioned._load_manifest(path, 0)
     assert m["partition_by"] == ["ds"]
     assert all("__p_ds=" in f for f in m["files"])
@@ -479,7 +478,7 @@ def test_dml_rewrites_preserve_partition_alignment(spark, tmp_path):
     df = spark.range(700).selectExpr(
         "CAST(id AS INT) AS k", "CAST(id % 7 AS INT) AS ds",
         "CONCAT('v', id) AS v")
-    versioned.write_version(df, path, partition_by=["ds"], stats_col="k")
+    versioned.write_version(df, path, partition_by=["ds"])
 
     # UPDATE touches rows inside partitions 2 and 4 (k%7 in {2,4} when
     # k%14 selects them) — the rewrite must land hive-aligned

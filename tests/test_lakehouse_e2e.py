@@ -40,7 +40,7 @@ def test_lakehouse_pipeline_end_to_end(spark, tmp_path):
     # 3. first versioned commit, range-laid-out with key stats
     table = str(tmp_path / "table")
     v0 = versioned.write_version(
-        good.repartitionByRange(4, "k"), table, stats_col="k"
+        good.repartitionByRange(4, "k"), table
     )
     assert v0 == 0
 
@@ -59,7 +59,7 @@ def test_lakehouse_pipeline_end_to_end(spark, tmp_path):
 
     # 5. OPTIMIZE back to two tight files, history preserved
     ostats = versioned.optimize_version(spark, table, target_files=2,
-                                        sort_col="k", stats_col="k")
+                                        sort_col="k")
     assert ostats["files_after"] == 2
 
     # 6. time travel: all three states remain readable and correct
@@ -158,7 +158,7 @@ def test_lakehouse_sql_and_hidden_partition_composition(spark, tmp_path):
     dpath = str(tmp_path / "dim")
     dim = spark.range(5).selectExpr("CAST(id AS INT) AS dim_id",
                                     "CONCAT('seg', id) AS segment")
-    versioned.write_version(dim, dpath, stats_col="dim_id")
+    versioned.write_version(dim, dpath)
     spark.createDataFrame([(1, "gold", False), (4, None, True)],
                           "dim_id INT, segment STRING, dead BOOLEAN"
                           ).createOrReplaceTempView("dim_changes")

@@ -234,12 +234,15 @@ def test_operators_keep_no_hand_rolled_memos():
     assert found == [], found
 
 
-def _inferring_parquet_reads(source: str) -> list[int]:
-    """Lines of ``<x>.read.parquet(...)`` calls: parquet loads that
-    leave the schema to Spark's inference job."""
+def _inferring_parquet_reads(source: str) -> list[tuple[str, int]]:
+    """(top-level def, line) of each ``<x>.read.parquet(...)`` call:
+    parquet loads that leave the schema to Spark's inference job.
+    Module-level calls report ``<module>``."""
     import ast
 
-    return [node.lineno for node in ast.walk(ast.parse(source))
+    return [(getattr(top, "name", "<module>"), node.lineno)
+            for top in ast.parse(source).body
+            for node in ast.walk(top)
             if isinstance(node, ast.Call)
             and isinstance(node.func, ast.Attribute)
             and node.func.attr == "parquet"
@@ -248,14 +251,25 @@ def _inferring_parquet_reads(source: str) -> list[int]:
 
 
 def test_operators_make_no_inferring_parquet_reads():
-    """Operators get tables from catalog.table and versioned reads, so
-    no schema-inference job lands on the query path."""
+    """Operators get tables from catalog.table and versioned reads, and
+    the versioned layer reads every file with its manifest's recorded
+    schema, so no schema-inference job lands on the query or commit
+    path. The one exception is CONVERT: adopting an unmanaged
+    directory has no recorded schema to read with."""
     from tests.conftest import REPO
 
     assert _inferring_parquet_reads(
         "df = spark.read.parquet(p)\n"
-        "ok = spark.read.schema(s).parquet(p)\n") == [1]
-    ops = REPO / "batch_processing_etl_pipeline_for_chess_puzzle_generator_spark" / "operators"
-    found = [f"{path.name}:{line}" for path in sorted(ops.glob("*.py"))
-             for line in _inferring_parquet_reads(path.read_text())]
+        "ok = spark.read.schema(s).parquet(p)\n"
+        "def f():\n"
+        "    return spark.read.parquet(p)\n") == [("<module>", 1), ("f", 4)]
+    pkg = REPO / "batch_processing_etl_pipeline_for_chess_puzzle_generator_spark"
+    paths = [*sorted((pkg / "operators").glob("*.py")), pkg / "versioned.py",
+             *sorted((pkg / "functions").glob("*.py"))]
+    allowed = ("versioned.py", "convert_to_versioned")
+    hits = [(path.name, fn, line) for path in paths
+            for fn, line in _inferring_parquet_reads(path.read_text())]
+    assert [h[:2] for h in hits].count(allowed) == 1, hits
+    found = [f"{name}:{fn}:{line}" for name, fn, line in hits
+             if (name, fn) != allowed]
     assert found == [], found

@@ -96,7 +96,7 @@ def test_delta_chain_equals_full_snapshot_for_dml(spark, tmp_path):
         mb = versioned._load_manifest(b, v)
         # file-independent manifest keys are identical
         for k in ("schema", "operation", "constraints",
-                  "column_mapping", "retired_physical", "stats_col"):
+                  "column_mapping", "retired_physical"):
             assert ma.get(k) == mb.get(k), (v, k)
         assert len(ma.get("files", [])) == len(mb.get("files", [])), v
         ra = versioned.read_version(spark, a, v)
@@ -188,8 +188,7 @@ def test_optimize_rebases_over_concurrent_append(spark, tmp_path,
     path = str(tmp_path / "t")
     base = spark.range(300).selectExpr(
         "CAST(id AS INT) AS k", "CONCAT('v', id) AS v")
-    versioned.write_version(base.repartitionByRange(6, "k"), path,
-                            stats_col="k")
+    versioned.write_version(base.repartitionByRange(6, "k"), path)
     n0 = versioned.read_version(spark, path).count()
 
     orig = versioned._publish
@@ -223,7 +222,7 @@ def test_optimize_conflict_on_touched_inputs_raises(spark, tmp_path,
     versioned.write_version(
         spark.range(300).selectExpr("CAST(id AS INT) AS k",
                                     "CONCAT('v', id) AS v")
-        .repartitionByRange(6, "k"), path, stats_col="k")
+        .repartitionByRange(6, "k"), path)
 
     orig = versioned._publish
     fired = {"done": False}

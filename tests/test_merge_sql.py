@@ -16,7 +16,7 @@ def _base(spark, n=400, parts=4):
 
 def test_merge_into_upsert_and_delete(spark, tmp_path):
     path = str(tmp_path / "tbl")
-    versioned.write_version(_base(spark), path, stats_col="k")
+    versioned.write_version(_base(spark), path)
     spark.createDataFrame(
         [(5, "upd5", False), (7, "ignored", True), (9000, "new", False)],
         "k INT, v STRING, del BOOLEAN",
@@ -46,7 +46,7 @@ def test_merge_into_upsert_and_delete(spark, tmp_path):
 
 def test_merge_into_subquery_source_no_delete_clause(spark, tmp_path):
     path = str(tmp_path / "tbl")
-    versioned.write_version(_base(spark, 100, 2), path, stats_col="k")
+    versioned.write_version(_base(spark, 100, 2), path)
     spark.createDataFrame([(1, "one"), (101, "hundred-one")],
                           "k INT, v STRING").createOrReplaceTempView("raw_src")
     merge_into(spark, """
@@ -131,7 +131,7 @@ def test_merge_into_insert_only(spark, tmp_path):
     """Insert-only MERGE (append-if-absent dedup): matched source rows
     are IGNORED, not updated."""
     path = str(tmp_path / "tbl")
-    versioned.write_version(_base(spark, 50, 2), path, stats_col="k")
+    versioned.write_version(_base(spark, 50, 2), path)
     spark.createDataFrame([(3, "CLOBBER"), (500, "new")],
                           "k INT, v STRING").createOrReplaceTempView("ins_src")
     merge_into(spark, f"""
@@ -149,7 +149,7 @@ def test_merge_into_update_only(spark, tmp_path):
     """Update-only MERGE: unmatched source rows are IGNORED, not
     inserted."""
     path = str(tmp_path / "tbl")
-    versioned.write_version(_base(spark, 50, 2), path, stats_col="k")
+    versioned.write_version(_base(spark, 50, 2), path)
     spark.createDataFrame([(3, "upd3"), (500, "ghost")],
                           "k INT, v STRING").createOrReplaceTempView("upd_src")
     merge_into(spark, f"""
@@ -168,7 +168,7 @@ def test_merge_into_delete_only(spark, tmp_path):
     satisfying the condition are removed; everything else — including
     unmatched source rows — is ignored."""
     path = str(tmp_path / "tbl")
-    versioned.write_version(_base(spark, 50, 2), path, stats_col="k")
+    versioned.write_version(_base(spark, 50, 2), path)
     spark.createDataFrame(
         [(3, None, True), (7, None, False), (500, None, True)],
         "k INT, v STRING, purge BOOLEAN",
@@ -294,7 +294,7 @@ def test_delete_from_predicate_cow(spark, tmp_path):
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.merge_sql import delete_from
 
     path = str(tmp_path / "tbl")
-    versioned.write_version(_base(spark), path, stats_col="k")
+    versioned.write_version(_base(spark), path)
     stats = delete_from(
         spark, f"DELETE FROM versioned.`{path}` WHERE k >= 300"
     )
@@ -309,12 +309,13 @@ def test_delete_from_predicate_cow(spark, tmp_path):
     assert versioned.read_version(spark, path, 0).count() == 400
     m0 = versioned._load_manifest(path, 0)
     m1 = versioned._load_manifest(path, 1)
-    assert m1["stats_col"] == "k"
-    assert set(m1["stats"]) == set(m1["files"])
+    b0 = versioned._bounds_for(m0, "k")
+    b1 = versioned._bounds_for(m1, "k")
+    assert set(b1) == set(m1["files"])
     shared = set(m0["files"]) & set(m1["files"])
     assert len(shared) == 3
     for f in shared:  # untouched files keep their stats verbatim
-        assert m1["stats"][f] == m0["stats"][f] is not None
+        assert b1[f] == b0[f] is not None
 
 
 def test_delete_from_null_predicate_keeps_rows(spark, tmp_path):
@@ -373,7 +374,7 @@ def test_update_sql_statement_and_sharing(spark, tmp_path):
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.merge_sql import update_table
 
     path = str(tmp_path / "tbl")
-    versioned.write_version(_base(spark), path, stats_col="k")
+    versioned.write_version(_base(spark), path)
     stats = update_table(
         spark,
         f"UPDATE versioned.`{path}` "

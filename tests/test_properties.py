@@ -303,7 +303,7 @@ def test_cow_merge_equals_relational_merge(spark, tmp_path_factory,
     path = str(tmp_path_factory.mktemp("cowprop") / "tbl")
     bdf = spark.createDataFrame(base, "k INT, v STRING") \
         .repartitionByRange(parts, "k")
-    versioned.write_version(bdf, path, stats_col="k")
+    versioned.write_version(bdf, path)
     cdf = spark.createDataFrame(changes, "k INT, v STRING, is_delete BOOLEAN")
     versioned.merge_version_cow(spark, path, cdf, "k")
     got = sorted((r.k, r.v) for r in
@@ -537,7 +537,7 @@ def test_predicate_dml_equals_relational(spark, tmp_path_factory,
     path = str(tmp_path_factory.mktemp("dmlprop") / "tbl")
     bdf = spark.createDataFrame(base, "k INT, v INT") \
         .repartitionByRange(parts, "k")
-    versioned.write_version(bdf, path, stats_col="k")
+    versioned.write_version(bdf, path)
 
     stats = versioned.delete_where(spark, path, f"v < {threshold}")
     want_del = sorted((k, v) for k, v in base if not (v < threshold))
@@ -670,8 +670,8 @@ def test_mor_equals_cow_for_arbitrary_dml(spark, tmp_path_factory, steps):
         "CAST(id AS INT) AS k", "CONCAT('v', id) AS v"
     ).repartitionByRange(3, "k")
     cow, mor = str(tmp / "cow"), str(tmp / "mor")
-    versioned.write_version(base, cow, stats_col="k")
-    versioned.write_version(base, mor, stats_col="k")
+    versioned.write_version(base, cow)
+    versioned.write_version(base, mor)
     versioned.set_table_property(mor, "dv.enabled", "true")
     for op, m, r, cap in steps:
         pred = f"k % {m} = {r % m}"

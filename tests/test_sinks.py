@@ -291,6 +291,41 @@ def test_partition_spec_evolution(spark, tmp_path):
     assert all("day" in p.split("]", 1)[0] for p in parts)
 
 
+def test_concurrent_evolving_writers_keep_every_spec(tmp_path, monkeypatch):
+    """Writers racing to register different specs each get their own
+    id in ``_spec.json``: a lost entry would make
+    read_partitioned_evolving skip that writer's ``spec=N`` subtree.
+    Spark-free: only the spec registration runs."""
+    import json
+    import threading
+
+    monkeypatch.setattr(sinks, "write_partitioned", lambda *a, **k: None)
+    path = str(tmp_path / "t")
+    n = 16
+    barrier = threading.Barrier(n)
+    ids: dict[int, int] = {}
+    errors: list[BaseException] = []
+
+    def _writer(i: int) -> None:
+        try:
+            barrier.wait()
+            ids[i] = sinks.write_partitioned_evolving(None, path, [f"c{i}"])
+        except BaseException as exc:  # noqa: BLE001 — surfaced below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=_writer, args=(i,)) for i in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert errors == []
+    with open(tmp_path / "t" / "_spec.json") as fh:
+        specs = json.load(fh)
+    assert len(specs) == n
+    assert sorted(ids.values()) == list(range(n))
+    assert all(specs[ids[i]] == [f"c{i}"] for i in range(n))
+
+
 def test_fixed_width_round_trip(spark, tmp_path):
     """COBOL-layout fixed-width sink + source round-trip: numerics
     right-aligned, strings left-aligned, NULLs as all-spaces."""

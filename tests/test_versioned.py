@@ -178,7 +178,7 @@ def test_cow_merge_shares_untouched_files(spark, tmp_path):
     byte-identically, and stat-prune non-intersecting files without
     scanning them."""
     path = str(tmp_path / "tbl")
-    versioned.write_version(_mk_ranged(spark, 800, 8), path, stats_col="k")
+    versioned.write_version(_mk_ranged(spark, 800, 8), path)
     ch = spark.createDataFrame(
         [(5, "upd5", False), (7, None, True), (9, "upd9", False)],
         "k INT, v STRING, is_delete BOOLEAN",
@@ -208,7 +208,7 @@ def test_cow_read_plans_shared_plus_new_files(spark, tmp_path):
     d_1 rewrites — proof the manifest, not a dir copy, drives the
     read."""
     path = str(tmp_path / "tbl")
-    versioned.write_version(_mk_ranged(spark, 400, 4), path, stats_col="k")
+    versioned.write_version(_mk_ranged(spark, 400, 4), path)
     ch = spark.createDataFrame([(1, "x", False)],
                                "k INT, v STRING, is_delete BOOLEAN")
     versioned.merge_version_cow(spark, path, ch, "k")
@@ -224,7 +224,7 @@ def test_cow_vacuum_refcounts_shared_files(spark, tmp_path):
     import os as _os
 
     path = str(tmp_path / "tbl")
-    versioned.write_version(_mk_ranged(spark, 800, 8), path, stats_col="k")
+    versioned.write_version(_mk_ranged(spark, 800, 8), path)
     ch = spark.createDataFrame([(3, "x", False)],
                                "k INT, v STRING, is_delete BOOLEAN")
     stats = versioned.merge_version_cow(spark, path, ch, "k")
@@ -248,7 +248,7 @@ def test_cow_without_stats_still_correct(spark, tmp_path):
     """No stats on the parent → no pruning (all files are candidates)
     but the merge result is identical."""
     path = str(tmp_path / "tbl")
-    versioned.write_version(_mk_ranged(spark, 200, 4), path)  # no stats_col
+    versioned.write_version(_mk_ranged(spark, 200, 4), path)
     ch = spark.createDataFrame([(0, "z", False), (199, None, True)],
                                "k INT, v STRING, is_delete BOOLEAN")
     stats = versioned.merge_version_cow(spark, path, ch, "k")
@@ -261,7 +261,7 @@ def test_cow_insert_only_changes(spark, tmp_path):
     """Changes whose keys miss every parent file (pure inserts) rewrite
     nothing: the child = all parent files + one new file."""
     path = str(tmp_path / "tbl")
-    versioned.write_version(_mk_ranged(spark, 100, 2), path, stats_col="k")
+    versioned.write_version(_mk_ranged(spark, 100, 2), path)
     ch = spark.createDataFrame([(1000, "new", False)],
                                "k INT, v STRING, is_delete BOOLEAN")
     stats = versioned.merge_version_cow(spark, path, ch, "k")
@@ -277,7 +277,7 @@ def test_optimize_version_compacts_preserving_history(spark, tmp_path):
     pre-optimize version still time-travels; vacuum then reclaims the
     fragmented files once that version is retired."""
     path = str(tmp_path / "tbl")
-    versioned.write_version(_mk_ranged(spark, 400, 8), path, stats_col="k")
+    versioned.write_version(_mk_ranged(spark, 400, 8), path)
     # a couple of COW merges fragment the table with small d_N files
     for i, k in enumerate((3, 397)):
         ch = spark.createDataFrame([(k, f"u{k}", False)],
@@ -285,7 +285,7 @@ def test_optimize_version_compacts_preserving_history(spark, tmp_path):
         versioned.merge_version_cow(spark, path, ch, "k")
     frag = versioned._load_manifest(path, 2)
     stats = versioned.optimize_version(spark, path, target_files=2,
-                                       sort_col="k", stats_col="k")
+                                       sort_col="k")
     assert stats["files_before"] == len(frag["files"]) >= 8
     assert stats["files_after"] == 2
     # content identical to pre-optimize latest
@@ -297,7 +297,8 @@ def test_optimize_version_compacts_preserving_history(spark, tmp_path):
     assert got[3][1] == "u3"
     # optimized manifest carries fresh range stats for future pruning
     m = versioned._load_manifest(path, stats["version"])
-    assert m["stats_col"] == "k" and len(m["stats"]) == 2
+    bounds = versioned._bounds_for(m, "k")
+    assert len(bounds) == 2 and all(b is not None for b in bounds.values())
     # retiring every pre-optimize version reclaims the fragments
     versioned.vacuum(path, keep_last=1)
     import os as _os
@@ -309,33 +310,33 @@ def test_optimize_version_compacts_preserving_history(spark, tmp_path):
 
 def test_history_reports_sharing_and_sizes(spark, tmp_path):
     path = str(tmp_path / "tbl")
-    versioned.write_version(_mk_ranged(spark, 400, 4), path, stats_col="k")
+    versioned.write_version(_mk_ranged(spark, 400, 4), path)
     ch = spark.createDataFrame([(1, "x", False)],
                                "k INT, v STRING, is_delete BOOLEAN")
     versioned.merge_version_cow(spark, path, ch, "k")
     versioned.optimize_version(spark, path, target_files=1,
-                               sort_col="k", stats_col="k")
+                               sort_col="k")
     h = {r.version: r for r in versioned.history(spark, path).collect()}
     assert sorted(h) == [0, 1, 2]
     assert h[0].n_files == 4 and h[0].files_shared_with_prev == 0
     assert h[1].files_shared_with_prev == 3  # COW shared 3 of 4
     assert h[2].n_files == 1 and h[2].files_shared_with_prev == 0
     assert all(r.total_bytes > 0 for r in h.values())
-    assert h[0].stats_col == "k"
 
 
 def test_cow_merge_tolerates_all_null_stats_file(spark, tmp_path):
-    """A parent file whose key column is entirely NULL records stats
-    [None, None]; the stat-prune must keep it as a candidate instead
-    of crashing on a None comparison."""
+    """A parent file whose key column is entirely NULL records no
+    bounds; the stat-prune must keep it as a candidate instead of
+    crashing on a None comparison."""
     path = str(tmp_path / "tbl")
     base = spark.createDataFrame(
         [(None, "n1"), (None, "n2"), (5, "a"), (9, "b")],
         "k INT, v STRING",
     ).repartitionByRange(2, "k")  # nulls-first range → one all-null file
-    versioned.write_version(base, path, stats_col="k")
+    versioned.write_version(base, path)
     m0 = versioned._load_manifest(path, 0)
-    assert any(s == [None, None] for s in m0["stats"].values())
+    assert any(b is None
+               for b in versioned._bounds_for(m0, "k").values())
     ch = spark.createDataFrame([(5, "upd", False)],
                                "k INT, v STRING, is_delete BOOLEAN")
     versioned.merge_version_cow(spark, path, ch, "k")
@@ -350,7 +351,7 @@ def test_cow_null_delete_flag_is_upsert(spark, tmp_path):
     """A NULL is_delete must behave as an upsert — never silently drop
     the row (the ~NULL trap)."""
     path = str(tmp_path / "tbl")
-    versioned.write_version(_mk_ranged(spark, 10, 1), path, stats_col="k")
+    versioned.write_version(_mk_ranged(spark, 10, 1), path)
     ch = spark.createDataFrame([(3, "upd", None)],
                                "k INT, v STRING, is_delete BOOLEAN")
     versioned.merge_version_cow(spark, path, ch, "k")
@@ -361,18 +362,18 @@ def test_cow_null_delete_flag_is_upsert(spark, tmp_path):
 def test_stats_col_date_and_decimal_supported_binary_rejected(
         spark, tmp_path):
     """Date stats serialize as ISO strings, decimal stats as the
-    order-preserving fixed-point form — both prune; BINARY stats are
-    rejected BEFORE any data is written."""
-    import pytest as _pytest
-
+    order-preserving fixed-point form — both prune; BINARY columns are
+    kept out of the index (their string form is not order-preserving)
+    and still commit."""
     path = str(tmp_path / "tbl")
     base = spark.createDataFrame(
         [(f"2024-0{m}-01", m) for m in range(1, 9)],
         "d STRING, m INT",
     ).selectExpr("CAST(d AS DATE) AS d", "m").repartitionByRange(4, "d")
-    versioned.write_version(base, path, stats_col="d")
+    versioned.write_version(base, path)
     m0 = versioned._load_manifest(path, 0)
-    assert all(isinstance(s[0], str) for s in m0["stats"].values())
+    assert all(isinstance(b[0], str)
+               for b in versioned._bounds_for(m0, "d").values())
     ch = spark.createDataFrame([("2024-08-01", 99, False)],
                                "d STRING, m INT, is_delete BOOLEAN") \
         .selectExpr("CAST(d AS DATE) AS d", "m", "is_delete")
@@ -386,24 +387,20 @@ def test_stats_col_date_and_decimal_supported_binary_rejected(
     dec = spark.createDataFrame([(i,) for i in range(8)], "k INT") \
         .selectExpr("CAST(k - 4 AS DECIMAL(10,2)) AS k") \
         .repartitionByRange(4, "k")
-    versioned.write_version(dec, dec_path, stats_col="k")
+    versioned.write_version(dec, dec_path)
     dm = versioned._load_manifest(dec_path, 0)
-    spans = sorted(dm["stats"].values())
+    spans = sorted(versioned._bounds_for(dm, "k").values())
     assert all(versioned._is_decimal_stat(s[0]) for s in spans)
     for (alo, ahi), (blo, bhi) in zip(spans, spans[1:]):
         assert ahi < blo  # encoded order == numeric order
-    # binary rejected up front: nothing staged, nothing committed
+    # binary: committed, but never indexed
     bin_path = str(tmp_path / "bin")
     binv = spark.createDataFrame([(1,)], "k INT").selectExpr(
         "CAST(CAST(k AS STRING) AS BINARY) AS k"
     )
-    with _pytest.raises(TypeError, match="not order-preserving"):
-        versioned.write_version(binv, bin_path, stats_col="k")
-    assert versioned.versions(bin_path) == []
-    import os as _os
-    assert not _os.path.exists(bin_path) or not [
-        d for d in _os.listdir(bin_path) if d.startswith(("v_", "_staged_"))
-    ]
+    assert versioned.write_version(binv, bin_path) == 0
+    assert versioned._bounds_for(
+        versioned._load_manifest(bin_path, 0), "k") is None
 
 
 def test_vacuum_preserves_markers_in_live_dirs(spark, tmp_path):
@@ -432,7 +429,7 @@ def test_cow_merge_nan_stats_never_prune(spark, tmp_path):
         [(5.0, "a"), (float("nan"), "n"), (9.0, "b"), (1.0, "c")],
         "k DOUBLE, v STRING",
     ).repartitionByRange(2, "k")
-    versioned.write_version(base, path, stats_col="k")
+    versioned.write_version(base, path)
     ch = spark.createDataFrame([(5.0, "upd", False)],
                                "k DOUBLE, v STRING, is_delete BOOLEAN")
     versioned.merge_version_cow(spark, path, ch, "k")
@@ -449,7 +446,7 @@ def test_cow_merge_decimal_key_prunes_and_merges(spark, tmp_path):
     base = spark.range(100).selectExpr(
         "CAST(id AS DECIMAL(10,2)) AS k", "CONCAT('v', id) AS v"
     ).repartitionByRange(4, "k")
-    versioned.write_version(base, path)  # no stats_col: col_stats only
+    versioned.write_version(base, path)
     ch = spark.createDataFrame([(2, "upd", False)],
                                "k INT, v STRING, is_delete BOOLEAN") \
         .selectExpr("CAST(k AS DECIMAL(10,2)) AS k", "v", "is_delete")
@@ -535,7 +532,7 @@ def test_versioned_python_datasource_time_travels(spark, tmp_path):
 
     spark.dataSource.register(VersionedDataSource)
     path = str(tmp_path / "tbl")
-    versioned.write_version(_mk_ranged(spark, 100, 4), path, stats_col="k")
+    versioned.write_version(_mk_ranged(spark, 100, 4), path)
     ch = spark.createDataFrame([(3, "upd", False)],
                                "k INT, v STRING, is_delete BOOLEAN")
     versioned.merge_version_cow(spark, path, ch, "k")
@@ -712,7 +709,7 @@ def test_purge_then_vacuum_physically_erases(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, f"user{i}@example.test") for i in range(100)], "k INT, pii STRING"
     ).repartitionByRange(4, "k")
-    versioned.write_version(df, path, stats_col="k")
+    versioned.write_version(df, path)
     ch = spark.createDataFrame([(42, None, True)],
                                "k INT, pii STRING, is_delete BOOLEAN")
     versioned.merge_version_cow(spark, path, ch, "k")
@@ -842,14 +839,13 @@ def test_ds_fresh_table_race_collides_instead_of_dropping_v0(spark, tmp_path,
 
 
 def test_ds_append_carries_stats_forward(spark, tmp_path):
-    """ADVICE r4 (low): a DS append on a table written with stats_col
-    must carry the parent's per-file stats forward (files are
-    immutable) and give its own part files footer-derived stats — so a
-    subsequent merge_version_cow still data-skips instead of scanning
-    every candidate file."""
+    """ADVICE r4 (low): a DS append must carry the parent's per-file
+    stats forward (files are immutable) and give its own part files
+    footer-derived stats — so a subsequent merge_version_cow still
+    data-skips instead of scanning every candidate file."""
     _register_ds(spark)
     path = str(tmp_path / "tbl")
-    versioned.write_version(_mk_ranged(spark, 800, 8), path, stats_col="k")
+    versioned.write_version(_mk_ranged(spark, 800, 8), path)
     m0 = versioned._load_manifest(path, 0)
 
     extra = spark.range(900, 905).selectExpr(
@@ -857,15 +853,16 @@ def test_ds_append_carries_stats_forward(spark, tmp_path):
     extra.write.format("versioned").mode("append").option("path", path).save()
 
     m1 = versioned._load_manifest(path, 1)
-    assert m1["stats_col"] == "k"
+    b0 = versioned._bounds_for(m0, "k")
+    b1 = versioned._bounds_for(m1, "k")
     # parent entries verbatim
     for f in m0["files"]:
-        assert m1["stats"][f] == m0["stats"][f]
+        assert b1[f] == b0[f]
     # the appended file got exact footer stats
     new = [f for f in m1["files"] if f not in set(m0["files"])]
     assert new
     for f in new:
-        assert m1["stats"][f] == [900, 904]
+        assert b1[f] == [900, 904]
     # and the pruning still works end-to-end after the DS append
     ch = spark.createDataFrame([(3, "upd", False)],
                                "k INT, v STRING, is_delete BOOLEAN")
@@ -875,24 +872,23 @@ def test_ds_append_carries_stats_forward(spark, tmp_path):
 
 def test_ds_overwrite_keeps_stats_col_with_footer_stats(spark, tmp_path):
     """Overwrite replaces content, so no parent entries carry over —
-    but the table's stats_col discipline survives via footer stats on
-    the new files."""
+    the new files get footer stats."""
     _register_ds(spark)
     path = str(tmp_path / "tbl")
-    versioned.write_version(_mk_ranged(spark, 100, 2), path, stats_col="k")
+    versioned.write_version(_mk_ranged(spark, 100, 2), path)
     fresh = spark.createDataFrame([(i, "w") for i in range(50, 60)],
                                   "k INT, v STRING").coalesce(1)
     fresh.write.format("versioned").mode("overwrite").option("path", path).save()
     m1 = versioned._load_manifest(path, 1)
-    assert m1["stats_col"] == "k"
-    assert set(m1["stats"]) == set(m1["files"])
-    assert all(s == [50, 59] for s in m1["stats"].values())
+    bounds = versioned._bounds_for(m1, "k")
+    assert set(bounds) == set(m1["files"])
+    assert all(b == [50, 59] for b in bounds.values())
 
 
 def test_file_stats_keyed_by_relpath_not_basename(spark, tmp_path):
-    """VERDICT r4 item 5: _file_stats must key by table-relative path.
-    Two files in different version dirs sharing a basename must keep
-    DISTINCT stats — a basename-keyed map silently merged them
+    """VERDICT r4 item 5: _collect_col_stats must key by table-relative
+    path. Two files in different version dirs sharing a basename must
+    keep DISTINCT stats — a basename-keyed map silently merged them
     (pruning-pessimal)."""
     import shutil
 
@@ -910,9 +906,10 @@ def test_file_stats_keyed_by_relpath_not_basename(spark, tmp_path):
         shutil.move(os.path.join(path, d, src),
                     os.path.join(path, d, "part-same.parquet"))
     rel = ["dir_a/part-same.parquet", "dir_b/part-same.parquet"]
-    stats = versioned._file_stats(spark, path, rel, "k")
-    assert stats["dir_a/part-same.parquet"] == [0, 9]
-    assert stats["dir_b/part-same.parquet"] == [1000, 1009]
+    schema = spark.createDataFrame([], "k INT, v STRING").schema
+    stats = versioned._collect_col_stats(path, rel, schema)
+    assert stats["dir_a/part-same.parquet"]["k"] == [0, 9]
+    assert stats["dir_b/part-same.parquet"]["k"] == [1000, 1009]
 
 
 def test_merge_rejects_non_next_explicit_version(spark, tmp_path):
@@ -921,7 +918,7 @@ def test_merge_rejects_non_next_explicit_version(spark, tmp_path):
     commit at avail[-1]+1 — explicit merge versions must be exactly
     the next slot."""
     path = str(tmp_path / "tbl")
-    versioned.write_version(_mk_ranged(spark, 100, 2), path, stats_col="k")
+    versioned.write_version(_mk_ranged(spark, 100, 2), path)
     ch = spark.createDataFrame([(1, "x", False)],
                                "k INT, v STRING, is_delete BOOLEAN")
     with pytest.raises(ValueError, match="next version"):
@@ -985,23 +982,27 @@ def test_table_changes_cdf_identical_versions_empty(spark, tmp_path):
 
 def test_files_metadata_table(spark, tmp_path):
     """versioned.files: one row per data file with size + manifest
-    [min,max] stats — the Iceberg table.files analog."""
+    col_stats bounds as lower/upper_bounds maps — the Iceberg
+    table.files analog."""
     path = str(tmp_path / "tbl")
-    versioned.write_version(_mk_ranged(spark, 100, 4), path, stats_col="k")
+    versioned.write_version(_mk_ranged(spark, 100, 4), path)
     meta = versioned.files(spark, path)
     rows = meta.collect()
     assert len(rows) == 4
     assert all(r["size_bytes"] > 0 for r in rows)
-    assert all(r["stats_col"] == "k" for r in rows)
+    assert all(set(r["lower_bounds"]) == {"k", "v"} for r in rows)
     assert all(r["version"] == 0 for r in rows)
-    los = sorted(int(r["stats_min"]) for r in rows)
-    his = sorted(int(r["stats_max"]) for r in rows)
+    los = sorted(int(r["lower_bounds"]["k"]) for r in rows)
+    his = sorted(int(r["upper_bounds"]["k"]) for r in rows)
     assert los[0] == 0 and his[-1] == 99
-    # a version without stats still lists files, stats NULL
-    versioned.write_version(_mk_ranged(spark, 10, 1), path, 1)
-    meta1 = versioned.files(spark, path, 1)
-    r1 = meta1.collect()
-    assert len(r1) == 1 and r1[0]["stats_min"] is None
+    # a version whose files were never indexed still lists them, with
+    # NULL bound maps
+    m = dict(versioned._load_manifest(path, 0))
+    m.pop("col_stats")
+    m["version"] = 1
+    versioned._publish(path, m)
+    r1 = versioned.files(spark, path, 1).collect()
+    assert len(r1) == 4 and all(r["lower_bounds"] is None for r in r1)
     with pytest.raises(ValueError):
         versioned.files(spark, path, 9)
 
@@ -1097,22 +1098,38 @@ def test_table_changes_feed_reconstructs_target(spark, tmp_path):
 
 
 def test_backfill_stats_enables_pruning(spark, tmp_path):
-    """A table written WITHOUT stats_col gains data skipping after a
-    metadata-only footer backfill: same files, new version, and the
+    """A table whose manifest lacks col_stats gains data skipping after
+    a metadata-only footer backfill: same files, new version, and the
     next COW merge prunes non-intersecting files just like a table
-    born with stats. Footer stats must equal the scanning path's."""
+    born with stats. Footer stats must equal a scan's min/max."""
+    from pyspark.sql import functions as F
+
     path = str(tmp_path / "tbl")
-    versioned.write_version(_mk_ranged(spark, 800, 8), path)  # no stats
-    v1 = versioned.backfill_stats(path, "k")
-    assert v1 == 1
-    m0 = versioned._load_manifest(path, 0)
+    versioned.write_version(_mk_ranged(spark, 800, 8), path)
+    # simulate a manifest committed before col_stats existed
+    m = dict(versioned._load_manifest(path, 0))
+    m.pop("col_stats")
+    m.pop("row_counts")
+    m["version"] = 1
+    versioned._publish(path, m)
+    v2 = versioned.backfill_stats(path)
+    assert v2 == 2
     m1 = versioned._load_manifest(path, 1)
-    assert m0.get("stats_col") is None
-    assert m1["stats_col"] == "k"
-    assert m1["files"] == m0["files"]          # no data rewritten
-    assert m1["backfilled_from"] == 0
-    # footer stats == what a full scan would have recorded
-    assert m1["stats"] == versioned._file_stats(spark, path, m1["files"], "k")
+    m2 = versioned._load_manifest(path, 2)
+    assert versioned._bounds_for(m1, "k") is None
+    assert m2["files"] == m1["files"]          # no data rewritten
+    assert m2["backfilled_from"] == 1
+    assert set(m2["row_counts"]) == set(m2["files"])  # rebuilt too
+    # footer stats == what a full scan computes per file
+    scan = {
+        os.path.normpath(versioned._uri_to_path(r["f"])): [r["lo"], r["hi"]]
+        for r in versioned.read_version(spark, path)
+        .groupBy(F.input_file_name().alias("f"))
+        .agg(F.min("k").alias("lo"), F.max("k").alias("hi")).collect()
+    }
+    bounds = versioned._bounds_for(m2, "k")
+    assert bounds == {f: scan[versioned._abs_file(path, f)]
+                      for f in m2["files"]}
     ch = spark.createDataFrame(
         [(5, "upd5", False)], "k INT, v STRING, is_delete BOOLEAN"
     )
@@ -1122,21 +1139,13 @@ def test_backfill_stats_enables_pruning(spark, tmp_path):
     assert got[5] == "upd5" and len(got) == 800
 
 
-def test_backfill_stats_rejects_missing_column(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    versioned.write_version(_mk_ranged(spark, 20, 2), path)
-    import pytest as _pytest
-    with _pytest.raises(KeyError):
-        versioned.backfill_stats(path, "nope")
-
-
 def test_restore_version_rolls_back_without_losing_history(spark, tmp_path):
     """RESTORE publishes a metadata-only copy of an old state as the
     new latest: no data rewritten (same file set), the bad version
     stays time-travelable, and a subsequent merge builds on the
     restored state."""
     path = str(tmp_path / "tbl")
-    versioned.write_version(_mk_ranged(spark, 100, 2), path, stats_col="k")
+    versioned.write_version(_mk_ranged(spark, 100, 2), path)
     bad = spark.createDataFrame(
         [(k, "oops", False) for k in range(50)],
         "k INT, v STRING, is_delete BOOLEAN",
@@ -1148,7 +1157,7 @@ def test_restore_version_rolls_back_without_losing_history(spark, tmp_path):
     m2 = versioned._load_manifest(path, 2)
     assert m2["files"] == m0["files"]           # zero-copy rollback
     assert m2["restored_from"] == 0
-    assert m2.get("stats_col") == "k"           # stats survive restore
+    assert m2["col_stats"] == m0["col_stats"]   # stats survive restore
     # latest == v0 state; the bad v1 still queryable for post-mortem
     got = {r.k: r.v for r in versioned.read_version(spark, path).collect()}
     assert got[5] == "v5"
@@ -1174,30 +1183,30 @@ def test_restore_rejects_vacuumed_version(spark, tmp_path):
         versioned.restore_version(path, 0)
 
 
-def test_backfill_stats_legacy_dir_manifest(spark, tmp_path):
-    """A legacy {version, dir} manifest (no files/schema keys) gains
-    stats without changing shape: reads still resolve through the dir
-    branch and the next merge consumes the stats via its legacy file
-    listing."""
-    path = str(tmp_path / "tbl")
-    versioned.write_version(_mk_ranged(spark, 200, 4), path)
-    m0 = versioned._load_manifest(path, 0)
+def test_load_manifest_refuses_dir_level_manifest(spark, tmp_path):
+    """A {version, dir} manifest (no files/schema keys) is refused on
+    load with an error naming the table and the version — every reader
+    and commit path relies on the file-level shape."""
     import json as _json
-    import os as _os
-    legacy = {"version": 0, "dir": m0["dir"]}
-    with open(_os.path.join(versioned._manifest_path(path), "0.json"),
+
+    path = str(tmp_path / "tbl")
+    versioned.write_version(_mk_ranged(spark, 20, 2), path)
+    m0 = versioned._load_manifest(path, 0)
+    with open(os.path.join(versioned._manifest_path(path), "0.json"),
               "w") as fh:
-        _json.dump(legacy, fh)
-    v1 = versioned.backfill_stats(path, "k")
-    m1 = versioned._load_manifest(path, v1)
-    assert "files" not in m1 and m1["dir"] == m0["dir"]
-    assert m1["stats_col"] == "k" and len(m1["stats"]) == 4
-    assert versioned.read_version(spark, path).count() == 200
-    ch = spark.createDataFrame(
-        [(3, "u", False)], "k INT, v STRING, is_delete BOOLEAN"
-    )
-    stats = versioned.merge_version_cow(spark, path, ch, "k")
-    assert stats["files_pruned_by_stats"] >= 2
+        _json.dump({"version": 0, "dir": m0["dir"]}, fh)
+    with pytest.raises(ValueError, match=r"version 0 of .*tbl"):
+        versioned._load_manifest(path, 0)
+    with pytest.raises(ValueError, match="lacks"):
+        versioned.read_version(spark, path)
+    # manifests that still carry the old single-column index keys load
+    # unchanged; readers ignore them
+    old = dict(m0, stats_col="k", stats={f: [0, 1] for f in m0["files"]})
+    with open(os.path.join(versioned._manifest_path(path), "0.json"),
+              "w") as fh:
+        _json.dump(old, fh)
+    assert versioned._load_manifest(path, 0) == old
+    assert versioned.read_version(spark, path).count() == 20
 
 
 def test_backfill_timestamp_stats_prune_is_tz_safe(spark, tmp_path):
@@ -1216,10 +1225,10 @@ def test_backfill_timestamp_stats_prune_is_tz_safe(spark, tmp_path):
             "CONCAT('v', id) AS v",
         ).repartitionByRange(4, "ts")
         versioned.write_version(df, path)
-        versioned.backfill_stats(path, "ts")
+        versioned.backfill_stats(path)
         m1 = versioned._load_manifest(path, 1)
         # canonical: naive isoformat, no UTC offset suffix
-        for lohi in m1["stats"].values():
+        for lohi in versioned._bounds_for(m1, "ts").values():
             assert lohi is not None and "+" not in lohi[0]
         ch = spark.range(1).selectExpr(
             "timestamp_seconds(5 * 3600) AS ts",
@@ -1247,7 +1256,7 @@ def test_shallow_clone_zero_copy_and_independent(spark, tmp_path):
     df = spark.range(400).selectExpr(
         "CAST(id AS INT) AS k", "CONCAT('v', id) AS v"
     ).repartitionByRange(4, "k")
-    versioned.write_version(df, src, stats_col="k")
+    versioned.write_version(df, src)
 
     v = versioned.clone_table(src, dst)
     assert v == 0
@@ -1258,9 +1267,8 @@ def test_shallow_clone_zero_copy_and_independent(spark, tmp_path):
     assert got.count() == 400
     # stats carried under the absolute keys -> merges can still prune
     m = versioned._load_manifest(dst, 0)
-    assert m["stats_col"] == "k"
     assert all(k.startswith("/") and s is not None
-               for k, s in m["stats"].items())
+               for k, s in versioned._bounds_for(m, "k").items())
 
     # DML on the clone: the fully-matched shared file DROPS from the
     # clone's manifest metadata-only (nothing rewritten, nothing local)
@@ -1367,7 +1375,7 @@ def test_clone_of_restored_snapshot(spark, tmp_path):
     explicitly still works for post-mortems — the two commits expose
     different file sets of the same source table."""
     src = str(tmp_path / "src")
-    versioned.write_version(_mk_ranged(spark, 40, 2), src, stats_col="k")
+    versioned.write_version(_mk_ranged(spark, 40, 2), src)
     bad = spark.createDataFrame(
         [(k, "oops", False) for k in range(40)],
         "k INT, v STRING, is_delete BOOLEAN",
@@ -1489,7 +1497,7 @@ def test_check_constraints_lifecycle(spark, tmp_path):
     every library write path's NEW files; carried forward by the DS
     writer; droppable."""
     path = str(tmp_path / "tbl")
-    versioned.write_version(_mk_ranged(spark, 30, 2), path, stats_col="k")
+    versioned.write_version(_mk_ranged(spark, 30, 2), path)
     v = versioned.add_constraint(spark, path, "k_nonneg", "k >= 0")
     assert v == 1
     # declaring a constraint existing data violates must fail
@@ -1618,14 +1626,14 @@ def test_snapshots_metadata_table_records_operations(spark, tmp_path):
     path = str(tmp_path / "t")
     df = spark.range(200).selectExpr("CAST(id AS INT) AS k",
                                      "CONCAT('v', id) AS v")
-    versioned.write_version(df.repartition(4), path, stats_col="k")
+    versioned.write_version(df.repartition(4), path)
     versioned.set_table_property(path, "dv.enabled", "true")
     versioned.delete_where(spark, path, "k < 10")          # DV delete
     versioned.update_where(spark, path, {"v": "'u'"}, "k = 50")
     ch = spark.createDataFrame([(300, "new", False)],
                                "k INT, v STRING, is_delete BOOLEAN")
     versioned.merge_version_cow(spark, path, ch, "k")
-    versioned.optimize_version(spark, path, target_files=1, stats_col="k")
+    versioned.optimize_version(spark, path, target_files=1)
     versioned.restore_version(path, 4)
 
     snaps = {r.version: r for r in
@@ -1651,7 +1659,7 @@ def test_optimize_incremental_compacts_only_debt(spark, tmp_path):
     # one big healthy file + a trail of tiny appends
     big = spark.range(50_000).selectExpr("CAST(id AS BIGINT) AS k",
                                          "CONCAT('v', id) AS v")
-    versioned.write_version(big.coalesce(1), path, stats_col="k")
+    versioned.write_version(big.coalesce(1), path)
     for i in range(3):
         extra = spark.range(100_000 + i, 100_001 + i).selectExpr(
             "CAST(id AS BIGINT) AS k", "CONCAT('v', id) AS v")
@@ -1729,7 +1737,7 @@ def test_stream_source_fails_on_changes_unless_opted_in(spark, tmp_path):
 
     path = str(tmp_path / "t")
     df = spark.range(100).selectExpr("CAST(id AS INT) AS k")
-    versioned.write_version(df.repartition(4), path, stats_col="k")
+    versioned.write_version(df.repartition(4), path)
     versioned.delete_where(spark, path, "k = 5")        # v1: COW delete
     versioned.optimize_version(spark, path, target_files=1)  # v2
     schema = versioned.read_version(spark, path).schema
@@ -1898,7 +1906,7 @@ def test_concurrent_disjoint_dml_both_commit(spark, tmp_path,
     df = spark.range(600).selectExpr(
         "CAST(id AS INT) AS k", "CONCAT('v', id) AS v"
     ).repartitionByRange(6, "k")
-    versioned.write_version(df, path, stats_col="k")
+    versioned.write_version(df, path)
 
     real = versioned._publish
     bar = threading.Barrier(2, timeout=120)
@@ -1948,7 +1956,7 @@ def test_concurrent_overlapping_dml_conflicts(spark, tmp_path,
     df = spark.range(600).selectExpr(
         "CAST(id AS INT) AS k", "CONCAT('v', id) AS v"
     ).repartitionByRange(6, "k")
-    versioned.write_version(df, path, stats_col="k")
+    versioned.write_version(df, path)
 
     real = versioned._publish
     bar = threading.Barrier(2, timeout=120)
@@ -1997,7 +2005,7 @@ def test_concurrent_disjoint_mor_dml_both_commit(spark, tmp_path,
     df = spark.range(600).selectExpr(
         "CAST(id AS INT) AS k", "CONCAT('v', id) AS v"
     ).repartitionByRange(6, "k")
-    versioned.write_version(df, path, stats_col="k")
+    versioned.write_version(df, path)
     versioned.set_table_property(path, "dv.enabled", "true")
 
     real = versioned._publish
@@ -2052,7 +2060,7 @@ def test_concurrent_overlapping_mor_dml_conflicts(spark, tmp_path,
     df = spark.range(600).selectExpr(
         "CAST(id AS INT) AS k", "CONCAT('v', id) AS v"
     ).repartitionByRange(6, "k")
-    versioned.write_version(df, path, stats_col="k")
+    versioned.write_version(df, path)
     versioned.set_table_property(path, "dv.enabled", "true")
 
     real = versioned._publish
@@ -2103,7 +2111,7 @@ def test_racing_property_flip_conflicts_dml(spark, tmp_path,
     df = spark.range(600).selectExpr(
         "CAST(id AS INT) AS k", "CONCAT('v', id) AS v"
     ).repartitionByRange(6, "k")
-    versioned.write_version(df, path, stats_col="k")
+    versioned.write_version(df, path)
 
     real = versioned._publish
     state = {"armed": True}
@@ -2136,7 +2144,7 @@ def test_string_lookalike_stats_not_decimal_decoded(spark, tmp_path):
           " REPEAT('0', 38))")
     df = spark.range(20).selectExpr(
         "CAST(id AS INT) AS k", f"{mk} AS s")
-    versioned.write_version(df, path, stats_col="s")
+    versioned.write_version(df, path)
     lo, hi = versioned.min_max(spark, path, "s")
     assert isinstance(lo, str) and isinstance(hi, str)
     assert lo.startswith("1") and "." in lo
@@ -2145,7 +2153,7 @@ def test_string_lookalike_stats_not_decimal_decoded(spark, tmp_path):
     df2 = spark.range(20).selectExpr(
         "CAST(id AS INT) AS k",
         "CAST(id AS DECIMAL(10,2)) AS d")
-    versioned.write_version(df2, path2, stats_col="d")
+    versioned.write_version(df2, path2)
     import decimal
     lo2, hi2 = versioned.min_max(spark, path2, "d")
     assert isinstance(lo2, decimal.Decimal) and lo2 == 0
@@ -2228,7 +2236,7 @@ def test_replace_where_partial_files_and_cdf(spark, tmp_path):
     df = spark.range(200).selectExpr(
         "CAST(id AS INT) AS k", "CONCAT('v', id) AS v"
     ).repartitionByRange(4, "k")
-    versioned.write_version(df, path, stats_col="k")
+    versioned.write_version(df, path)
     versioned.set_table_property(path, "cdf.enabled", "true")
     repl = spark.createDataFrame(
         [(k, f"r{k}") for k in range(40, 60)], "k INT, v STRING")

@@ -147,7 +147,7 @@ def test_optimize_version_hilbert_curve(spark, tmp_path):
     versioned.write_version(df.repartition(8), path)
     stats = versioned.optimize_version(
         spark, path, target_files=8, zorder_cols=("x", "y"),
-        zorder_bits=6, curve="hilbert", stats_col="x",
+        zorder_bits=6, curve="hilbert",
     )
     assert stats["files_after"] <= 8
     got = sorted(r.payload for r in
@@ -155,6 +155,7 @@ def test_optimize_version_hilbert_curve(spark, tmp_path):
     assert got == list(range(4096))
     # clustered layout: per-file x-span must be far below the full
     # domain (an unclustered rewrite's span is ~64 per file)
-    f = versioned.files(spark, path).filter("stats_min IS NOT NULL")
-    spans = [int(r.stats_max) - int(r.stats_min) for r in f.collect()]
+    f = versioned.files(spark, path).filter("lower_bounds['x'] IS NOT NULL")
+    spans = [int(r.upper_bounds["x"]) - int(r.lower_bounds["x"])
+             for r in f.collect()]
     assert spans and sum(spans) / len(spans) < 40

@@ -26,6 +26,7 @@ asserts the gate flags it; exits nonzero if the seed escapes.
 from __future__ import annotations
 
 import itertools
+import os
 import re
 import sys
 from collections import Counter
@@ -112,7 +113,7 @@ def _self_test(oracles: dict[str, str]) -> int:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry
 
     oracles = entry.oracle_sql()

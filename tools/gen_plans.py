@@ -8,10 +8,12 @@ Run: python tools/gen_plans.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
@@ -39,7 +41,7 @@ def main() -> None:
                 plan) else "-",
         ))
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write(
             "# Physical-plan audit (generated by tools/gen_plans.py)\n\n"
             f"Audited at `{sf_dir}` on the executed (AQE-final) plan of every\n"

@@ -128,10 +128,11 @@ Run: ``python tools/lint_formulations.py`` (exit 1 on any finding).
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BANNED_FNS = re.compile(
     r"\b(ntile|percent_rank|cume_dist|nth_value|corr|stddev|stddev_samp|"

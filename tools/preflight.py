@@ -48,7 +48,7 @@ import subprocess
 import sys
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> int:

@@ -11,9 +11,11 @@ Run: python tools/recall_report.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def _topk_sets(rows) -> dict:
@@ -236,7 +238,7 @@ def main() -> None:
     ]
 
     out = "\n".join(lines) + "\n"
-    open("/root/repo/RECALL.md", "w").write(out)
+    open(os.path.join(REPO, "RECALL.md"), "w").write(out)
     print(out)
 
 
