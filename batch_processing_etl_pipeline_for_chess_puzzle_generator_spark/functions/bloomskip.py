@@ -81,11 +81,7 @@ def backfill_bloom(spark: SparkSession, table_path: str, col: str,
     the distinct positions (≤ n_bits ints) reach the driver."""
     from pyspark.sql import functions as F
 
-    avail = versioned.versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    base = avail[-1]
-    parent = versioned._load_manifest(table_path, base)
+    head, parent = versioned._latest(table_path)
     rel_files = parent["files"]
     # Enforce the indexable-type whitelist at BUILD time: an index on a
     # type whose str()/CAST renderings diverge would pass silently here
@@ -127,16 +123,12 @@ def backfill_bloom(spark: SparkSession, table_path: str, col: str,
         for r in pos:
             bits |= 1 << int(r.p)
         filters[rel] = format(bits, "x")
-    manifest = dict(parent)
-    for stamp in versioned._PER_COMMIT_KEYS:
-        manifest.pop(stamp, None)
-    manifest["version"] = base + 1
+    manifest = versioned._child(parent, head + 1, "BACKFILL BLOOM")
     manifest["files"] = list(rel_files)
     manifest["bloom"] = {
         "col": col, "bits": n_bits, "k": n_hashes, "filters": filters,
     }
-    manifest["bloom_backfilled_from"] = base
-    manifest["operation"] = "BACKFILL BLOOM"
+    manifest["bloom_backfilled_from"] = head
     return versioned._publish(table_path, manifest)
 
 
@@ -154,9 +146,7 @@ def prune_files(table_path: str, value,
     built from another column's values would prune files that do hold
     matching rows. Omitting ``col`` asserts the caller already knows
     the indexed column."""
-    avail = versioned.versions(table_path)
-    v = avail[-1] if version is None else version
-    m = versioned._load_manifest(table_path, v)
+    m = versioned._latest(table_path, version)[1]
     rel_files = m["files"]
     bloom = m.get("bloom")
     if not bloom or (col is not None and bloom.get("col") != col):
@@ -184,10 +174,8 @@ def read_point_lookup(spark: SparkSession, table_path: str, col: str,
     from pyspark.sql import functions as F
 
     _check_probe_value(value)
-    kept, _ = prune_files(table_path, value, version, col=col)
-    avail = versioned.versions(table_path)
-    v = avail[-1] if version is None else version
-    m = versioned._load_manifest(table_path, v)
+    v, m = versioned._latest(table_path, version)
+    kept, _ = prune_files(table_path, value, v, col=col)
     schema = StructType.fromJson(json.loads(m["schema"]))
     if not kept:
         return spark.createDataFrame([], schema)

@@ -238,13 +238,11 @@ def merge_into(spark: SparkSession, statement: str,
         # neither land in the table nor trip the evolve_schema check.
         # Source columns the condition does NOT reference still follow
         # evolve_schema rules (new data columns must be explicit).
-        avail = versioned.versions(m.group("path"))
-        if avail:
+        parent = versioned._head_manifest(m.group("path"))
+        if parent is not None:
             import json as _json
 
-            parent_schema = _json.loads(
-                versioned._load_manifest(m.group("path"), avail[-1])["schema"]
-            )
+            parent_schema = _json.loads(parent["schema"])
             data_cols = {f["name"] for f in parent_schema["fields"]}
             consumed = [
                 c for c in changes.columns

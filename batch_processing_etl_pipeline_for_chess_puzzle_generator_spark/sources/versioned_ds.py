@@ -536,18 +536,14 @@ class VersionedCdfReader(DataSourceReader):
         from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
 
         self.target = schema
-        avail = versioned.versions(table_path)
-        if not avail:
-            raise FileNotFoundError(
-                f"no committed versions at {table_path}")
         # plan eagerly on the driver (manifest metadata only) by
         # borrowing the stream reader's classification
-        self.name_map = versioned._column_mapping(
-            versioned._load_manifest(table_path, avail[-1]))
+        head, m = versioned._latest(table_path)
+        self.name_map = versioned._column_mapping(m)
         helper = VersionedStreamReader(table_path, schema, None,
                                        change_feed=True)
         self.parts = helper._change_partitions(
-            lo, avail[-1] if hi is None else hi)
+            lo, head if hi is None else hi)
 
     def partitions(self):
         return self.parts if self.parts else [_CdfPartition(None, None, -1)]
@@ -755,11 +751,6 @@ class VersionedDataSource(DataSource):
             table_path = self.options.get("path")
             if not table_path:
                 raise ValueError("option 'path' is required")
-            avail = versioned.versions(table_path)
-            if not avail:
-                raise FileNotFoundError(
-                    f"no committed versions at {table_path}"
-                )
             v = self.options.get("version")
             ts = self.options.get("timestampasof",
                                   self.options.get("timestampAsOf"))
@@ -768,12 +759,9 @@ class VersionedDataSource(DataSource):
                     "pass option 'version' OR 'timestampAsOf', not both"
                 )
             if ts is not None:
-                version = versioned.resolve_timestamp(table_path, ts)
-            else:
-                version = avail[-1] if v is None else int(v)
-            if version not in avail:
-                raise ValueError(f"version {version} not in {avail}")
-            m = versioned._load_manifest(table_path, version)
+                v = versioned.resolve_timestamp(table_path, ts)
+            m = versioned._latest(
+                table_path, None if v is None else int(v))[1]
             files = m["files"]
             dv_rel = versioned._dv_map(m)
             # every planned path goes through _abs_file (absolutized +
@@ -873,11 +861,8 @@ class VersionedDataSource(DataSource):
         ).lower() == "true"
         from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
 
-        nm = {}
-        avail = versioned.versions(table_path)
-        if avail:
-            nm = versioned._column_mapping(
-                versioned._load_manifest(table_path, avail[-1]))
+        nm = versioned._column_mapping(
+            versioned._head_manifest(table_path) or {})
         return VersionedStreamReader(
             table_path, schema, None if sv is None else int(sv), ic,
             change_feed=self._change_feed(), name_map=nm,
@@ -1138,12 +1123,8 @@ class VersionedWriter(DataSourceArrowWriter):
         if not overwrite:
             from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
 
-            avail = versioned.versions(table_path)
-            ident = {}
-            parent_m = None
-            if avail:
-                parent_m = versioned._load_manifest(table_path, avail[-1])
-                ident = parent_m.get("identity") or {}
+            parent_m = versioned._head_manifest(table_path)
+            ident = (parent_m or {}).get("identity") or {}
             if ident:
                 supplied = sorted(set(ident) & set(schema.fieldNames()))
                 if supplied:
@@ -1193,10 +1174,9 @@ class VersionedWriter(DataSourceArrowWriter):
         # last-writer-wins is acceptable is the caller's call.
         for attempt in range(self._APPEND_RETRIES + 1):
             parent_files: list[str] = []
-            parent = None
-            avail = versioned.versions(self.table_path)
-            if avail:
-                parent = versioned._load_manifest(self.table_path, avail[-1])
+            head, parent = (versioned._latest(self.table_path)
+                            if versioned.versions(self.table_path)
+                            else (-1, None))
             # Delta's idempotent-write CONTRACT, not just the stamp: a
             # write whose txnVersion is <= the table's recorded stamp
             # for that appId is a no-op — the staged files are swept
@@ -1252,7 +1232,7 @@ class VersionedWriter(DataSourceArrowWriter):
                         "use merge_version_cow(evolve_schema=True) to evolve"
                     )
                 parent_files = parent["files"]
-            # The version number derives from the SAME versions() snapshot
+            # The version number derives from the SAME head resolution
             # the parent file list came from — in BOTH branches. Reading
             # state again (e.g. via _next_version) would re-open the race
             # it exists to close: a concurrent writer committing v0 to a
@@ -1261,7 +1241,7 @@ class VersionedWriter(DataSourceArrowWriter):
             # from latest. Deriving 0 from the same empty snapshot means
             # the manifest CAS on 0.json turns that interleave into a
             # CommitConflict instead.
-            version = avail[-1] + 1 if avail else 0
+            version = head + 1
             os.makedirs(versioned._manifest_path(self.table_path),
                         exist_ok=True)
             if final is None:
@@ -1400,11 +1380,8 @@ class VersionedStreamWriter(DataSourceStreamArrowWriter):
         runner — each side reads the manifest it can see."""
         from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
 
-        avail = versioned.versions(self.table_path)
-        if not avail:
-            return {}
-        parent = versioned._load_manifest(self.table_path, avail[-1])
-        defaults = parent.get("defaults") or {}
+        parent = versioned._head_manifest(self.table_path)
+        defaults = (parent or {}).get("defaults") or {}
         missing = {c: spec for c, spec in defaults.items()
                    if c not in self.schema.fieldNames()}
         if not missing:

@@ -1396,7 +1396,7 @@ def bootstrap_dedup_corpus(spark, src_path: str, curated_path: str,
     )
 
     ensure_registered(spark)
-    head = versioned.versions(src_path)[-1]
+    head = versioned._latest(src_path)[0]
     if not versioned.versions(index_path):
         versioned.write_version(
             spark.createDataFrame([], "doc_id LONG, h LONG"), index_path)
@@ -1454,7 +1454,7 @@ def bootstrap_vector_index(spark, src_path: str, cent_path: str,
     )
 
     ensure_registered(spark)
-    head = versioned.versions(src_path)[-1]
+    head = versioned._latest(src_path)[0]
     snap = versioned.read_version(spark, src_path, stats_hint=False) \
         .select("c_id", "ca", "cn")
     seen = versioned.read_version(spark, asg_path, stats_hint=False) \

@@ -65,6 +65,26 @@ def versions(table_path: str) -> list[int]:
     return sorted(out)
 
 
+def _latest(table_path: str, version: int | None = None) -> tuple[int, dict]:
+    """``(version, manifest)`` of the table head, or of ``version`` when
+    the caller pins one. The one place a table with no commits raises
+    ``FileNotFoundError`` and a pinned version that is not live raises
+    ``ValueError``."""
+    avail = versions(table_path)
+    if not avail:
+        raise FileNotFoundError(f"no committed versions at {table_path}")
+    if version is None:
+        version = avail[-1]
+    elif version not in avail:
+        raise ValueError(f"version {version} not in {avail} at {table_path}")
+    return version, _load_manifest(table_path, version)
+
+
+def _head_manifest(table_path: str) -> dict | None:
+    """The latest manifest, or None for a table with no commits."""
+    return _latest(table_path)[1] if versions(table_path) else None
+
+
 _HIGH_WATER = ".high_water"
 
 
@@ -450,10 +470,7 @@ def add_column(table_path: str, name: str, type_sql: str) -> int:
     not equal a RETIRED physical name (old files still hold those
     bytes) nor a live column's physical name (one scan would alias
     two columns)."""
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    parent = _load_manifest(table_path, avail[-1])
+    head, parent = _latest(table_path)
     from pyspark.sql import types as T
 
     schema = T.StructType.fromJson(json.loads(parent["schema"]))
@@ -480,14 +497,10 @@ def add_column(table_path: str, name: str, type_sql: str) -> int:
     except Exception as exc:
         raise ValueError(
             f"cannot parse column type {type_sql!r}: {exc}") from exc
-    manifest = dict(parent)
-    for stamp in _PER_COMMIT_KEYS:
-        manifest.pop(stamp, None)
-    manifest["version"] = avail[-1] + 1
+    manifest = _child(parent, head + 1, "ADD COLUMNS")
     manifest["schema"] = T.StructType(
         schema.fields + [T.StructField(name, dt, True)]
     ).json()
-    manifest["operation"] = "ADD COLUMNS"
     return _publish(table_path, manifest)
 
 
@@ -505,10 +518,7 @@ def rename_column(table_path: str, old: str, new: str) -> int:
     would alias two live columns in one scan — the freed name equals
     another column's physical name, or the new name shadows one —
     raise; swap two columns through a temporary third name."""
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    parent = _load_manifest(table_path, avail[-1])
+    head, parent = _latest(table_path)
     from pyspark.sql import types as T
 
     schema = T.StructType.fromJson(json.loads(parent["schema"]))
@@ -533,10 +543,7 @@ def rename_column(table_path: str, old: str, new: str) -> int:
         if f.name == old else f
         for f in schema.fields
     ]
-    manifest = dict(parent)
-    for stamp in _PER_COMMIT_KEYS:
-        manifest.pop(stamp, None)
-    manifest["version"] = avail[-1] + 1
+    manifest = _child(parent, head + 1, "RENAME COLUMN")
     manifest["schema"] = T.StructType(new_fields).json()
     if mapping:
         manifest["column_mapping"] = mapping
@@ -552,7 +559,6 @@ def rename_column(table_path: str, old: str, new: str) -> int:
         }
     if (manifest.get("bloom") or {}).get("col") == old:
         manifest["bloom"] = dict(manifest["bloom"], col=new)
-    manifest["operation"] = "RENAME COLUMN"
     return _publish(table_path, manifest)
 
 
@@ -563,10 +569,7 @@ def drop_column(table_path: str, name: str) -> int:
     vacuumed), and its physical name is RETIRED in the manifest so a
     later schema evolution cannot re-add a column that would resurrect
     the dropped bytes from old files."""
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    parent = _load_manifest(table_path, avail[-1])
+    head, parent = _latest(table_path)
     from pyspark.sql import types as T
 
     schema = T.StructType.fromJson(json.loads(parent["schema"]))
@@ -579,10 +582,7 @@ def drop_column(table_path: str, name: str) -> int:
     physical = mapping.pop(name, name)
     retired = list(dict.fromkeys(
         (parent.get("retired_physical") or []) + [physical]))
-    manifest = dict(parent)
-    for stamp in _PER_COMMIT_KEYS:
-        manifest.pop(stamp, None)
-    manifest["version"] = avail[-1] + 1
+    manifest = _child(parent, head + 1, "DROP COLUMN")
     manifest["schema"] = T.StructType(
         [f for f in schema.fields if f.name != name]).json()
     if mapping:
@@ -598,7 +598,6 @@ def drop_column(table_path: str, name: str) -> int:
         }
     if (manifest.get("bloom") or {}).get("col") == name:
         manifest.pop("bloom", None)
-    manifest["operation"] = "DROP COLUMN"
     return _publish(table_path, manifest)
 
 
@@ -682,10 +681,7 @@ def _read_files_dv(spark: SparkSession, table_path: str, manifest: dict,
 
 def table_properties(table_path: str) -> dict:
     """{key: value} table properties on the latest manifest."""
-    avail = versions(table_path)
-    if not avail:
-        return {}
-    return _load_manifest(table_path, avail[-1]).get("properties") or {}
+    return (_head_manifest(table_path) or {}).get("properties") or {}
 
 
 #: Manifest keys that describe ONE specific commit (provenance stamps,
@@ -696,27 +692,29 @@ _PER_COMMIT_KEYS = ("restored_from", "stream_batch_id",
                     "copy_sources")
 
 
+def _child(parent: dict, version: int, operation: str) -> dict:
+    """A metadata commit's manifest: a copy of ``parent`` (same files,
+    schema and table metadata) numbered ``version`` and stamped with
+    its own ``operation``. The parent's per-commit keys are dropped —
+    a SET TBLPROPERTIES is not a stream batch or a backfill, and
+    snapshots() would misreport it as one."""
+    manifest = {k: v for k, v in parent.items()
+                if k not in _PER_COMMIT_KEYS}
+    manifest["version"] = version
+    manifest["operation"] = operation
+    return manifest
+
+
 def set_table_property(table_path: str, key: str, value: str) -> int:
     """Record a table property as a metadata-only commit (Delta's
     ``ALTER TABLE SET TBLPROPERTIES``). Properties ride every
     subsequent manifest. The property this engine interprets:
     ``dv.enabled = 'true'`` routes predicate DELETE/UPDATE through the
     merge-on-read deletion-vector path instead of copy-on-write."""
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    parent = _load_manifest(table_path, avail[-1])
-    props = dict(parent.get("properties") or {})
-    props[str(key)] = str(value)
-    manifest = dict(parent)
-    # Per-commit provenance stamps must not ride into a metadata-only
-    # commit: a SET TBLPROPERTIES is not a stream batch or a backfill,
-    # and snapshots() would misreport it as one.
-    for stamp in _PER_COMMIT_KEYS:
-        manifest.pop(stamp, None)
-    manifest["version"] = avail[-1] + 1
-    manifest["properties"] = props
-    manifest["operation"] = "SET TBLPROPERTIES"
+    head, parent = _latest(table_path)
+    manifest = _child(parent, head + 1, "SET TBLPROPERTIES")
+    manifest["properties"] = {**(parent.get("properties") or {}),
+                              str(key): str(value)}
     return _publish(table_path, manifest)
 
 
@@ -825,10 +823,7 @@ def set_column_default(spark: SparkSession, table_path: str,
     ONCE here and the resulting literal rides the manifest, so a
     non-constant default (e.g. ``current_timestamp()``) is refused —
     two engines or two tasks evaluating it would disagree."""
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    parent = _load_manifest(table_path, avail[-1])
+    head, parent = _latest(table_path)
     import json as _json
 
     from pyspark.sql import types as T
@@ -889,14 +884,9 @@ def set_column_default(spark: SparkSession, table_path: str,
             "DECIMAL can ride the manifest and be injected by the "
             "Arrow writer"
         )
-    defaults = dict(parent.get("defaults") or {})
-    defaults[col] = {"sql": expr_sql, "value": value}
-    manifest = dict(parent)
-    for stamp in _PER_COMMIT_KEYS:
-        manifest.pop(stamp, None)
-    manifest["version"] = avail[-1] + 1
-    manifest["defaults"] = defaults
-    manifest["operation"] = "SET DEFAULT"
+    manifest = _child(parent, head + 1, "SET DEFAULT")
+    manifest["defaults"] = {**(parent.get("defaults") or {}),
+                            col: {"sql": expr_sql, "value": value}}
     return _publish(table_path, manifest)
 
 
@@ -904,31 +894,21 @@ def drop_column_default(table_path: str, col: str) -> int:
     """``ALTER TABLE … ALTER COLUMN c DROP DEFAULT`` — metadata-only
     commit removing the default; writes that omit the column go back
     to NULL-fill (or schema mismatch on the strict DS path)."""
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    parent = _load_manifest(table_path, avail[-1])
+    head, parent = _latest(table_path)
     defaults = dict(parent.get("defaults") or {})
     if col not in defaults:
         raise KeyError(f"column {col!r} has no default")
     del defaults[col]
-    manifest = dict(parent)
-    for stamp in _PER_COMMIT_KEYS:
-        manifest.pop(stamp, None)
-    manifest["version"] = avail[-1] + 1
+    manifest = _child(parent, head + 1, "DROP DEFAULT")
     if defaults:
         manifest["defaults"] = defaults
     else:
         manifest.pop("defaults", None)
-    manifest["operation"] = "DROP DEFAULT"
     return _publish(table_path, manifest)
 
 
 def _table_defaults(table_path: str) -> dict:
-    avail = versions(table_path)
-    if not avail:
-        return {}
-    return _load_manifest(table_path, avail[-1]).get("defaults") or {}
+    return (_head_manifest(table_path) or {}).get("defaults") or {}
 
 
 def _apply_defaults(df: DataFrame, defaults: dict, schema=None):
@@ -961,10 +941,7 @@ class ConstraintViolation(Exception):
 
 def _table_constraints(table_path: str) -> dict:
     """{name: sql_expr} recorded on the latest manifest ({} if none)."""
-    avail = versions(table_path)
-    if not avail:
-        return {}
-    return _load_manifest(table_path, avail[-1]).get("constraints") or {}
+    return (_head_manifest(table_path) or {}).get("constraints") or {}
 
 
 def _gen_checks(manifest: dict) -> dict:
@@ -991,14 +968,6 @@ def _apply_generated(df: DataFrame, generated: dict, schema=None):
             col = col.cast(schema[c].dataType)
         df = df.withColumn(c, col)
     return df
-
-
-def _table_generated(table_path: str) -> dict:
-    """{col: sql_expr} generated-column spec on the latest manifest."""
-    avail = versions(table_path)
-    if not avail:
-        return {}
-    return _load_manifest(table_path, avail[-1]).get("generated") or {}
 
 
 def _validate_identity_spec(identity: dict) -> dict:
@@ -1114,10 +1083,9 @@ def reserve_identity_block(spark: SparkSession | None,
     consecutive, and a reservation whose write aborts burns its block
     (a gap, never a collision)."""
     for _ in range(6):
-        avail = versions(table_path)
-        if not avail:
+        if not versions(table_path):
             return {}
-        parent = _load_manifest(table_path, avail[-1])
+        head, parent = _latest(table_path)
         ident = parent.get("identity") or {}
         if not ident:
             return {}
@@ -1131,12 +1099,8 @@ def reserve_identity_block(spark: SparkSession | None,
             block = ((IDENTITY_RESERVE_PARTITIONS + 1) << 33) * sp["step"]
             alloc[c] = {"base": base, "step": sp["step"]}
             props[f"identity.reserve.{c}"] = str(base + block - sp["step"])
-        manifest = dict(parent)
-        for stamp in _PER_COMMIT_KEYS:
-            manifest.pop(stamp, None)
-        manifest["version"] = avail[-1] + 1
+        manifest = _child(parent, head + 1, "IDENTITY RESERVE")
         manifest["properties"] = props
-        manifest["operation"] = "IDENTITY RESERVE"
         try:
             _publish(table_path, manifest)
             return alloc
@@ -1227,11 +1191,7 @@ def add_constraint(spark: SparkSession, table_path: str, name: str,
     commit enforces it on the rows it adds; the Data Source writer
     carries it forward in the manifest but leaves enforcement to the
     library paths (documented there)."""
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    base = avail[-1]
-    parent = _load_manifest(table_path, base)
+    head, parent = _latest(table_path)
     cons = dict(parent.get("constraints") or {})
     if name in cons:
         raise ValueError(f"constraint '{name}' already exists")
@@ -1247,31 +1207,20 @@ def add_constraint(spark: SparkSession, table_path: str, name: str,
             f"cannot add '{name}': {n_bad} existing rows violate {expr!r}"
         )
     cons[name] = expr
-    manifest = dict(parent)
-    for stamp in _PER_COMMIT_KEYS:
-        manifest.pop(stamp, None)
-    manifest["version"] = base + 1
+    manifest = _child(parent, head + 1, "ADD CONSTRAINT")
     manifest["constraints"] = cons
     return _publish(table_path, manifest)
 
 
 def drop_constraint(table_path: str, name: str) -> int:
     """Remove a CHECK constraint (metadata-only commit)."""
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    base = avail[-1]
-    parent = _load_manifest(table_path, base)
+    head, parent = _latest(table_path)
     cons = dict(parent.get("constraints") or {})
     if name not in cons:
         raise KeyError(f"no constraint '{name}' on {table_path}")
     del cons[name]
-    manifest = dict(parent)
-    for stamp in _PER_COMMIT_KEYS:
-        manifest.pop(stamp, None)
-    manifest["version"] = base + 1
+    manifest = _child(parent, head + 1, "DROP CONSTRAINT")
     manifest["constraints"] = cons
-    manifest["operation"] = "DROP CONSTRAINT"
     return _publish(table_path, manifest)
 
 
@@ -1363,6 +1312,76 @@ def _publish(table_path: str, manifest: dict) -> int:
         fh.write(str(version))
     os.rename(hw_tmp, os.path.join(mdir, _HIGH_WATER))
     return version
+
+
+#: Manifest keys that make up a table's logical shape. A commit that
+#: shares its parent's files carries them forward verbatim
+#: (``_shape_of``), and a racing commit that changed any of them cannot
+#: be rebased onto (``_rebasable``): a racing property flip
+#: (cdf.enabled / dv.enabled) changes what a DML should have produced
+#: just as a schema or constraint change does.
+_SHAPE_KEYS = ("schema", "constraints", "column_mapping",
+               "retired_physical", "partition_by", "generated",
+               "identity", "defaults", "properties")
+
+#: Publish attempts of a rebasing commit: the first, plus up to three
+#: rebuilds against a racing winner.
+_COMMIT_ATTEMPTS = 4
+
+
+def _shape_of(base: dict) -> dict:
+    """The shape keys ``base`` sets, to seed a file-sharing child."""
+    return {k: base[k] for k in _SHAPE_KEYS if base.get(k)}
+
+
+def _rebasable(parent: dict, winner: dict, own: set, attempt: int,
+               shape_keys: tuple = _SHAPE_KEYS) -> bool:
+    """Whether a commit built on ``parent`` that lost the CAS to
+    ``winner`` may be rebuilt on top of it (Delta's WriteSerializable
+    file-level rules). The commit's decision only read its ``own``
+    files, so the race truly conflicts only when the winner removed
+    or re-vectored one of them (publishing would resurrect stale bytes
+    or double-delete) or changed a ``shape_keys`` entry. Anything else
+    (blind appends, DML or compaction on other files) rebases; rows a
+    racing append added are not re-matched against a DML predicate.
+    The last attempt never rebases."""
+    parent_dv, win_dv = _dv_map(parent), _dv_map(winner)
+    return (attempt < _COMMIT_ATTEMPTS - 1
+            and all(winner.get(k) == parent.get(k) for k in shape_keys)
+            and own <= set(winner.get("files") or ())
+            and all(win_dv.get(f) == parent_dv.get(f) for f in own))
+
+
+def _commit(table_path: str, build, parent: dict | None, version: int,
+            *, own: set | None = None, shape_keys: tuple = _SHAPE_KEYS,
+            staged_dirs=()) -> dict:
+    """Publish ``build(parent, version)`` through the manifest CAS and
+    return the published manifest — the publish path of every library
+    commit that writes data (the Data Source's blind append keeps its
+    own retry rules). When the CAS is lost and ``_rebasable``
+    accepts the winner, the manifest is rebuilt as
+    ``build(winner, winner_version + 1)`` and republished, keeping the
+    data already written. Otherwise the commit's ``staged_dirs`` (its
+    data, sidecar and change-feed dirs; None entries are skipped) are
+    removed and the ``CommitConflict`` propagates. ``own=None`` marks a
+    commit that never rebases."""
+    import shutil
+
+    manifest = build(parent, version)
+    for attempt in range(_COMMIT_ATTEMPTS):
+        try:
+            _publish(table_path, manifest)
+            return manifest
+        except CommitConflict:
+            if own is not None:
+                head, winner = _latest(table_path)
+                if _rebasable(parent, winner, own, attempt, shape_keys):
+                    manifest = build(winner, head + 1)
+                    continue
+            for d in staged_dirs:
+                if d is not None:
+                    shutil.rmtree(d, ignore_errors=True)
+            raise
 
 
 #: Write a full manifest snapshot every N commits (Delta's
@@ -1498,7 +1517,6 @@ def write_version(df: DataFrame, table_path: str,
     (``_write_rewrite``), exactly as Delta does, so alignment survives
     arbitrary predicate UPDATE/DELETE/MERGE with no OPTIMIZE needed.
     """
-    import shutil
     import uuid
 
     # INHERIT generated/identity from the latest manifest when the
@@ -1506,26 +1524,20 @@ def write_version(df: DataFrame, table_path: str,
     # overwrite commit must not silently drop it (Delta: column
     # metadata survives INSERT OVERWRITE). Passing a spec explicitly
     # re-declares it; passing {} explicitly drops it.
+    head_m = _head_manifest(table_path)
     if generated is None:
-        generated = _table_generated(table_path) or None
+        generated = (head_m or {}).get("generated") or None
     if identity is None:
-        _avail = versions(table_path)
-        if _avail:
-            identity = (_load_manifest(table_path, _avail[-1])
-                        .get("identity")) or None
+        identity = (head_m or {}).get("identity") or None
     # column DEFAULTs ride the manifest like generated/identity: a
     # commit omitting a defaulted column gets the stored literal
     # (present columns — including supplied NULLs — are untouched)
-    defaults = _table_defaults(table_path)
+    defaults = (head_m or {}).get("defaults") or {}
     if defaults:
-        _prev = versions(table_path)
-        _pschema = None
-        if _prev:
-            from pyspark.sql import types as T
+        from pyspark.sql import types as T
 
-            _pm = _load_manifest(table_path, _prev[-1])
-            _pschema = T.StructType.fromJson(json.loads(_pm["schema"]))
-        df = _apply_defaults(df, defaults, _pschema)
+        df = _apply_defaults(
+            df, defaults, T.StructType.fromJson(json.loads(head_m["schema"])))
     if generated:
         missing = [c for c, e in generated.items() if c not in df.columns]
         df = _apply_generated(
@@ -1538,11 +1550,8 @@ def write_version(df: DataFrame, table_path: str,
                 f"columns {supplied} are GENERATED ALWAYS AS IDENTITY "
                 "and cannot be supplied — drop them from the DataFrame"
             )
-        prev = versions(table_path)
-        parent_m = (_load_manifest(table_path, prev[-1])
-                    if prev else None)
         df = _apply_identity(df.sparkSession, table_path, df,
-                             identity, parent_m)
+                             identity, head_m)
     version = _next_version(table_path, version)
     os.makedirs(_manifest_path(table_path), exist_ok=True)
     # PER-WRITER unique staged AND final dirs (like _publish's tmp
@@ -1592,11 +1601,63 @@ def write_version(df: DataFrame, table_path: str,
     if props:
         manifest["properties"] = props
     _set_col_stats(manifest, None, table_path, [], files)
-    try:
-        return _publish(table_path, manifest)
-    except CommitConflict:
-        shutil.rmtree(final, ignore_errors=True)
-        raise
+    return _commit(table_path, lambda _base, _v: manifest, None, version,
+                   staged_dirs=[final])["version"]
+
+
+def _merge_slot(table_path: str, version: int | None) -> tuple[int, dict]:
+    """``(version, parent)`` of a MERGE: the parent is the head and the
+    version is the slot right after it. Auto-numbering derives from the
+    SAME snapshot the parent comes from, NOT from a later high-water
+    read: a commit interleaving between the two reads must collide on
+    the version number (CommitConflict at publish) rather than let this
+    merge publish one number higher with the stale parent's file list,
+    which would silently drop the interleaved version's rows. For the
+    same reason an explicit number must be exactly that slot: a gap
+    would let a concurrent commit land in the skipped slot without
+    conflict, and this merge would publish over it."""
+    head, parent = _latest(table_path)
+    if version is not None and version != head + 1:
+        raise ValueError(
+            f"merge version must be the next version ({head + 1}), got "
+            f"{version} — explicit gaps would let a concurrent commit "
+            "interleave without CommitConflict"
+        )
+    return head + 1, parent
+
+
+def _unpruneable(v) -> bool:
+    """Missing, NULL, or NaN bounds give interval tests that are False
+    for EVERY comparison — treating them as "prunes" would silently
+    skip a file that holds change keys and duplicate those keys after
+    the merge."""
+    return v is None or (isinstance(v, float) and v != v)
+
+
+def _key_span_candidates(parent: dict, key_col: str,
+                         changes: DataFrame) -> list[str]:
+    """Parent files whose ``col_stats`` [min, max] on ``key_col`` can
+    intersect the change keys' span (Delta's data-skipping step: one
+    two-scalar aggregate, planning metadata rather than row data).
+    Every file is a candidate when the key has no bounds."""
+    from pyspark.sql import functions as F
+
+    pfiles = parent["files"]
+    bounds = _bounds_for(parent, key_col)
+    if bounds is None or not pfiles:
+        return list(pfiles)
+    lo, hi = changes.agg(F.min(key_col), F.max(key_col)).first()
+    if _unpruneable(lo) or _unpruneable(hi):
+        return list(pfiles)
+    # encode only on the pruning path: a non-whitelisted key type (no
+    # stats recorded for it anyway) must still merge, just unpruned
+    lo, hi = _stat_encode(lo), _stat_encode(hi)
+    return [
+        f for f in pfiles
+        if bounds.get(f) is None
+        or _unpruneable(bounds[f][0]) or _unpruneable(bounds[f][1])
+        or (bounds[f][0] <= hi and lo <= bounds[f][1])
+    ]
 
 
 def merge_version_cow(spark: SparkSession, table_path: str,
@@ -1640,29 +1701,7 @@ def merge_version_cow(spark: SparkSession, table_path: str,
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    # Auto-numbering derives from the SAME snapshot the parent comes
-    # from (avail[-1] + 1), NOT from a later high-water read: a commit
-    # interleaving between the two reads must collide on the version
-    # number (CommitConflict at publish) rather than let this merge
-    # publish one number higher with the stale parent's file list —
-    # which would silently drop the interleaved version's rows.
-    if version is None:
-        version = avail[-1] + 1
-    elif version != avail[-1] + 1:
-        # An explicit number above avail[-1]+1 would skip the CAS slot a
-        # concurrent commit is racing for: that commit lands at
-        # avail[-1]+1 without conflict, and this merge — built from the
-        # now-stale parent — publishes over it, vanishing its rows.
-        # Every merge must contend for exactly the next slot.
-        raise ValueError(
-            f"merge version must be the next version "
-            f"({avail[-1] + 1}), got {version} — explicit gaps would "
-            "let a concurrent commit interleave without CommitConflict"
-        )
-    parent = _load_manifest(table_path, avail[-1])
+    version, parent = _merge_slot(table_path, version)
     # dv.enabled routes MERGE through the merge-on-read path (no file
     # rewrites) — except schema evolution, whose rewrite is what
     # materializes the widened schema
@@ -1708,8 +1747,6 @@ def merge_version_cow(spark: SparkSession, table_path: str,
     )
     out_cols = [f.name for f in out_struct.fields]
     pfiles = parent["files"]
-    # prune on the key's col_stats bounds (any indexed column)
-    pstats = _bounds_for(parent, key_col)
 
     # The change source is evaluated by several independent jobs below
     # (bounds agg, touched-file scan, anti-join, upsert write): pin it
@@ -1718,30 +1755,8 @@ def merge_version_cow(spark: SparkSession, table_path: str,
     # exactly this reason).
     changes = changes.localCheckpoint(eager=True)
 
-    # 1. stat-prune candidates against the change-key span (the one
-    # driver-side scalar pair — planning metadata, not row data)
-    lo, hi = changes.agg(F.min(key_col), F.max(key_col)).first()
-
-    def _unpruneable(v) -> bool:
-        # missing, NULL, or NaN bounds give interval tests that are
-        # False for EVERY comparison — treating them as "prunes" would
-        # silently skip a file that holds change keys and duplicate
-        # those keys after the merge
-        return v is None or (isinstance(v, float) and v != v)
-
-    if pstats is not None and not _unpruneable(lo) and not _unpruneable(hi):
-        # encode only on the pruning path: a non-whitelisted key type
-        # (no stats recorded for it anyway) must still merge, just
-        # without pruning
-        lo, hi = _stat_encode(lo), _stat_encode(hi)
-        candidates = [
-            f for f in pfiles
-            if pstats.get(f) is None
-            or _unpruneable(pstats[f][0]) or _unpruneable(pstats[f][1])
-            or (pstats[f][0] <= hi and lo <= pstats[f][1])
-        ]
-    else:
-        candidates = list(pfiles)
+    # 1. stat-prune candidates against the change-key span
+    candidates = _key_span_candidates(parent, key_col, changes)
 
     # 2. exact touched set over candidates only. Keyed by full
     # table-relative path, NOT basename: parent files span multiple
@@ -1884,29 +1899,12 @@ def merge_version_cow(spark: SparkSession, table_path: str,
     manifest = {
         "version": version,
         "files": untouched + new_files,
+        **_shape_of(parent),
         # out_struct == parent schema when no columns were added
         "schema": out_struct.json(),
         "operation": "MERGE",
         **(extra_manifest or {}),
     }
-    if cons:
-        manifest["constraints"] = cons
-    if parent.get("properties"):
-        manifest["properties"] = parent["properties"]
-    # column mapping + retired physical names ride every commit that
-    # shares parent files (their physical layout is unchanged)
-    if parent.get("column_mapping"):
-        manifest["column_mapping"] = parent["column_mapping"]
-    if parent.get("retired_physical"):
-        manifest["retired_physical"] = parent["retired_physical"]
-    if parent.get("partition_by"):
-        manifest["partition_by"] = parent["partition_by"]
-    if parent.get("generated"):
-        manifest["generated"] = parent["generated"]
-    if parent.get("identity"):
-        manifest["identity"] = parent["identity"]
-    if parent.get("defaults"):
-        manifest["defaults"] = parent["defaults"]
     # untouched files keep their deletion vectors; rewritten files got
     # their DVs materialized into the rewrite and drop the mapping
     parent_dv = _dv_map(parent)
@@ -1916,15 +1914,8 @@ def merge_version_cow(spark: SparkSession, table_path: str,
     _set_col_stats(manifest, parent, table_path, untouched, new_files)
     if final_cdf is not None:
         manifest["cdf"] = cdf_files
-    try:
-        _publish(table_path, manifest)
-    except CommitConflict:
-        import shutil
-
-        shutil.rmtree(final, ignore_errors=True)
-        if final_cdf is not None:
-            shutil.rmtree(final_cdf, ignore_errors=True)
-        raise
+    _commit(table_path, lambda _base, _v: manifest, parent, version,
+            staged_dirs=[final, final_cdf])
     return {
         "version": version,
         "files_total": len(untouched) + len(new_files),
@@ -1955,14 +1946,14 @@ def _predicate_cow(spark: SparkSession, table_path: str,
        ``drop_fully_matched`` (DELETE), a file whose every live row
        matched skips the rewrite entirely and is DROPPED from the
        manifest — the metadata-only whole-file fast path.
-    3. Publish through the manifest CAS. A racing commit confined to
+    3. Publish through :func:`_commit`. A racing commit confined to
        OTHER files (blind append, disjoint DML, compaction elsewhere)
        REBASES onto the new head and republishes — Delta's
        WriteSerializable file-level conflict rules — while one that
-       removed/re-vectored this DML's own files, or changed schema /
-       constraints / column mapping / partition spec, raises
-       ``CommitConflict``. Untouched files keep their ``col_stats``
-       verbatim; new files get one footer read each.
+       removed/re-vectored this DML's own files, or changed the
+       table's shape (``_SHAPE_KEYS``), raises ``CommitConflict``.
+       Untouched files keep their ``col_stats`` verbatim; new files
+       get one footer read each.
 
     ``rewrite(df, schema)`` receives the SAME snapshot schema this
     function resolved (and ``validate(schema)``, when given, runs
@@ -1973,19 +1964,15 @@ def _predicate_cow(spark: SparkSession, table_path: str,
     A predicate matching no rows returns ``{"version": None, ...}``
     without committing — an empty rewrite would only fragment history.
     """
-    import shutil
     import uuid
 
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
     # Same-snapshot version derivation as merge_version_cow: an
     # interleaved commit must collide on the CAS, never be skipped.
-    version = avail[-1] + 1
-    parent = _load_manifest(table_path, avail[-1])
+    head, parent = _latest(table_path)
+    version = head + 1
     schema = T.StructType.fromJson(json.loads(parent["schema"]))
     pfiles = parent["files"]
     if validate is not None:
@@ -2116,10 +2103,9 @@ def _predicate_cow(spark: SparkSession, table_path: str,
                              {**cons, **_gen_checks(parent)}, final,
                              schema=schema)
 
-    parent_dv = _dv_map(parent)
     own = set(touched) | set(dropped)
 
-    def _build(base: dict, v: int):
+    def _build(base: dict, v: int) -> dict:
         """Child manifest against ``base``: the DML's rewrite/drop set
         is fixed (it was computed against the parent snapshot); every
         OTHER base file is shared verbatim."""
@@ -2127,28 +2113,10 @@ def _predicate_cow(spark: SparkSession, table_path: str,
         m = {
             "version": v,
             "files": unt + new_files,
-            "schema": schema.json(),
+            **_shape_of(base),
             "operation": operation,
             **(extra_manifest or {}),
         }
-        if cons:
-            m["constraints"] = cons
-        if base.get("properties"):
-            m["properties"] = base["properties"]
-        # column mapping + retired physical names ride every commit
-        # that shares parent files (their physical layout is unchanged)
-        if base.get("column_mapping"):
-            m["column_mapping"] = base["column_mapping"]
-        if base.get("retired_physical"):
-            m["retired_physical"] = base["retired_physical"]
-        if base.get("partition_by"):
-            m["partition_by"] = base["partition_by"]
-        if base.get("generated"):
-            m["generated"] = base["generated"]
-        if base.get("identity"):
-            m["identity"] = base["identity"]
-        if base.get("defaults"):
-            m["defaults"] = base["defaults"]
         base_dv = _dv_map(base)
         child_dv = {f: base_dv[f] for f in unt if f in base_dv}
         if child_dv:
@@ -2156,62 +2124,15 @@ def _predicate_cow(spark: SparkSession, table_path: str,
         _set_col_stats(m, base, table_path, unt, new_files)
         if final_cdf is not None:
             m["cdf"] = cdf_files
-        return m, unt
+        return m
 
-    # DML conflict resolution (Delta's WriteSerializable file-level
-    # rules): the rewrite/drop decision only read the files in `own`,
-    # so a racing commit truly conflicts only when it removed or
-    # re-vectored one of THOSE files (publishing would resurrect stale
-    # bytes or double-delete), or changed the table's logical shape
-    # (schema / constraints / column mapping / partition spec).
-    # Anything else — blind appends, DML or compaction confined to
-    # OTHER files — REBASES: rebuild the child manifest against the
-    # new head and republish, keeping the already-written rewrite
-    # files. Rows a racing append added are NOT re-matched against the
-    # predicate (WriteSerializable, Delta's default isolation).
-    manifest, untouched = _build(parent, version)
-    for attempt in range(4):
-        try:
-            version = _publish(table_path, manifest)
-            break
-        except CommitConflict:
-            avail2 = versions(table_path)
-            winner = _load_manifest(table_path, avail2[-1])
-            win_dv = _dv_map(winner)
-            rebasable = (
-                attempt < 3
-                and winner.get("schema") == schema.json()
-                and winner.get("constraints") == parent.get("constraints")
-                and (winner.get("column_mapping")
-                     == parent.get("column_mapping"))
-                and (winner.get("retired_physical")
-                     == parent.get("retired_physical"))
-                and (winner.get("partition_by")
-                     == parent.get("partition_by"))
-                and winner.get("generated") == parent.get("generated")
-                and winner.get("identity") == parent.get("identity")
-                and winner.get("defaults") == parent.get("defaults")
-                # a racing property flip (cdf.enabled / dv.enabled)
-                # changes what this DML should have produced (feed
-                # entries, DV routing) — conflict loudly like any
-                # other logical-shape change instead of rebasing a
-                # commit computed under pre-race properties
-                and (winner.get("properties")
-                     == parent.get("properties"))
-                and own <= set(winner.get("files") or ())
-                and all(win_dv.get(f) == parent_dv.get(f) for f in own)
-            )
-            if not rebasable:
-                if final is not None:
-                    shutil.rmtree(final, ignore_errors=True)
-                if final_cdf is not None:
-                    shutil.rmtree(final_cdf, ignore_errors=True)
-                raise
-            manifest, untouched = _build(winner, avail2[-1] + 1)
+    manifest = _commit(table_path, _build, parent, version, own=own,
+                       staged_dirs=[final, final_cdf])
+    n_shared = len(manifest["files"]) - len(new_files)
     return {
-        "version": version,
-        "files_total": len(untouched) + len(new_files),
-        "files_shared": len(untouched),
+        "version": manifest["version"],
+        "files_total": len(manifest["files"]),
+        "files_shared": n_shared,
         "files_rewritten": len(touched),
         "files_dropped": len(dropped),
     }
@@ -2233,8 +2154,7 @@ def delete_where(spark: SparkSession, table_path: str,
     ∝ deleted rows."""
     from pyspark.sql import functions as F
 
-    avail = versions(table_path)
-    if avail and _dv_enabled(_load_manifest(table_path, avail[-1])):
+    if _dv_enabled(_head_manifest(table_path) or {}):
         return delete_where_mor(spark, table_path, predicate_sql)
     return _predicate_cow(
         spark, table_path, predicate_sql,
@@ -2430,8 +2350,7 @@ def update_where(spark: SparkSession, table_path: str,
     through the merge-on-read path (:func:`update_where_mor`)."""
     from pyspark.sql import functions as F
 
-    avail = versions(table_path)
-    if avail and _dv_enabled(_load_manifest(table_path, avail[-1])):
+    if _dv_enabled(_head_manifest(table_path) or {}):
         return update_where_mor(spark, table_path, assignments,
                                 predicate_sql)
     _refuse_generated_assignment(table_path, assignments)
@@ -2467,11 +2386,8 @@ def _refuse_generated_assignment(table_path: str,
     assigned directly (Delta refuses the same): update their SOURCE
     columns and the engine recomputes expression columns; identity
     values never change after allocation."""
-    avail = versions(table_path)
-    spec: set = set()
-    if avail:
-        m = _load_manifest(table_path, avail[-1])
-        spec = set(m.get("generated") or {}) | set(m.get("identity") or {})
+    m = _head_manifest(table_path) or {}
+    spec = set(m.get("generated") or {}) | set(m.get("identity") or {})
     bad = sorted(set(assignments) & spec)
     if bad:
         raise ValueError(
@@ -2670,17 +2586,13 @@ def _mor_dml(spark: SparkSession, table_path: str, predicate_sql: str,
     ones (its rewrite reads through the DVs); vacuum refcounts
     sidecars like data files.
     """
-    import shutil
     import uuid
 
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    version = avail[-1] + 1
-    parent = _load_manifest(table_path, avail[-1])
+    head, parent = _latest(table_path)
+    version = head + 1
     schema = T.StructType.fromJson(json.loads(parent["schema"]))
     pfiles = parent["files"]
     if validate is not None:
@@ -2768,40 +2680,21 @@ def _mor_dml(spark: SparkSession, table_path: str, predicate_sql: str,
         cdf_files, final_cdf = _write_cdf(table_path, version, token, feed)
 
     own = set(touched) | set(dropped)
+    dropped_set = set(dropped)
 
-    def _build(base: dict, v: int):
+    def _build(base: dict, v: int) -> dict:
         """Child manifest against ``base``: the DML's drop/vector set
         is fixed (computed against the parent snapshot); every other
         base file and its vector are shared verbatim."""
-        surv = [f for f in base["files"]
-                if f not in set(dropped)]
+        surv = [f for f in base["files"] if f not in dropped_set]
         m = {
             "version": v,
             "files": surv + new_files,
-            "schema": base["schema"],
+            **_shape_of(base),
             "operation": ("UPDATE (DV)" if make_rows is not None
                           else "DELETE (DV)"),
         }
-        if cons:
-            m["constraints"] = cons
-        if base.get("properties"):
-            m["properties"] = base["properties"]
-        # column mapping + retired physical names ride every commit
-        # that shares parent files (their physical layout is unchanged)
-        if base.get("column_mapping"):
-            m["column_mapping"] = base["column_mapping"]
-        if base.get("retired_physical"):
-            m["retired_physical"] = base["retired_physical"]
-        if base.get("partition_by"):
-            m["partition_by"] = base["partition_by"]
-        if base.get("generated"):
-            m["generated"] = base["generated"]
-        if base.get("identity"):
-            m["identity"] = base["identity"]
-        if base.get("defaults"):
-            m["defaults"] = base["defaults"]
-        dv = {f: s for f, s in _dv_map(base).items()
-              if f not in set(touched)}
+        dv = {f: s for f, s in _dv_map(base).items() if f not in own}
         for f in dv_touched:
             dv[f] = sidecar_files
         if dv:
@@ -2809,59 +2702,19 @@ def _mor_dml(spark: SparkSession, table_path: str, predicate_sql: str,
         _set_col_stats(m, base, table_path, surv, new_files)
         if final_cdf is not None:
             m["cdf"] = cdf_files
-        return m, surv
+        return m
 
     # Same WriteSerializable file-level conflict rules as the COW
-    # path: a racing commit confined to OTHER files rebases; one that
-    # removed or RE-VECTORED this DML's own files (our new sidecar
-    # replaced the PARENT vector whole — publishing over a changed one
-    # would lose the winner's deletes), or changed the table's logical
-    # shape, still raises.
-    manifest, surviving = _build(parent, version)
-    for attempt in range(4):
-        try:
-            version = _publish(table_path, manifest)
-            break
-        except CommitConflict:
-            avail2 = versions(table_path)
-            winner = _load_manifest(table_path, avail2[-1])
-            win_dv = _dv_map(winner)
-            rebasable = (
-                attempt < 3
-                and winner.get("schema") == parent["schema"]
-                and winner.get("constraints") == parent.get("constraints")
-                and (winner.get("column_mapping")
-                     == parent.get("column_mapping"))
-                and (winner.get("retired_physical")
-                     == parent.get("retired_physical"))
-                and (winner.get("partition_by")
-                     == parent.get("partition_by"))
-                and winner.get("generated") == parent.get("generated")
-                and winner.get("identity") == parent.get("identity")
-                and winner.get("defaults") == parent.get("defaults")
-                # a racing property flip (cdf.enabled / dv.enabled)
-                # changes what this DML should have produced (feed
-                # entries, DV routing) — conflict loudly like any
-                # other logical-shape change instead of rebasing a
-                # commit computed under pre-race properties
-                and (winner.get("properties")
-                     == parent.get("properties"))
-                and own <= set(winner.get("files") or ())
-                and all(win_dv.get(f) == parent_dv.get(f) for f in own)
-            )
-            if not rebasable:
-                if final_dv is not None:
-                    shutil.rmtree(final_dv, ignore_errors=True)
-                if final_data is not None:
-                    shutil.rmtree(final_data, ignore_errors=True)
-                if final_cdf is not None:
-                    shutil.rmtree(final_cdf, ignore_errors=True)
-                raise
-            manifest, surviving = _build(winner, avail2[-1] + 1)
+    # path; our new sidecar replaced the PARENT vector whole, so
+    # publishing over a re-vectored own file would lose the winner's
+    # deletes.
+    manifest = _commit(table_path, _build, parent, version, own=own,
+                       staged_dirs=[final_dv, final_data, final_cdf])
+    n_shared = len(manifest["files"]) - len(new_files)
     return {
-        "version": version,
-        "files_total": len(surviving) + len(new_files),
-        "files_shared": len(surviving),
+        "version": manifest["version"],
+        "files_total": len(manifest["files"]),
+        "files_shared": n_shared,
         "files_rewritten": 0,
         "files_dv": len(dv_touched),
         "files_dropped": len(dropped),
@@ -2943,19 +2796,7 @@ def merge_version_mor(spark: SparkSession, table_path: str,
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    # same next-slot contention rule as merge_version_cow
-    if version is None:
-        version = avail[-1] + 1
-    elif version != avail[-1] + 1:
-        raise ValueError(
-            f"merge version must be the next version ({avail[-1] + 1}), "
-            f"got {version} — explicit gaps would let a concurrent "
-            "commit interleave without CommitConflict"
-        )
-    parent = _load_manifest(table_path, avail[-1])
+    version, parent = _merge_slot(table_path, version)
     schema = T.StructType.fromJson(json.loads(parent["schema"]))
     data_cols = [f.name for f in schema.fields]
     extra = [c for c in changes.columns
@@ -2976,22 +2817,7 @@ def merge_version_mor(spark: SparkSession, table_path: str,
     # files whose [min,max] can't intersect the change-key span never
     # get scanned (on a 10k-file range-clustered table a narrow CDC
     # batch scans a handful of files, not the table)
-    pstats = _bounds_for(parent, key_col)
-    candidates = list(pfiles)
-    if pstats is not None and pfiles:
-        lo, hi = changes.agg(F.min(key_col), F.max(key_col)).first()
-
-        def _unpruneable(v) -> bool:
-            return v is None or (isinstance(v, float) and v != v)
-
-        if not _unpruneable(lo) and not _unpruneable(hi):
-            lo, hi = _stat_encode(lo), _stat_encode(hi)
-            candidates = [
-                f for f in pfiles
-                if pstats.get(f) is None
-                or _unpruneable(pstats[f][0]) or _unpruneable(pstats[f][1])
-                or (pstats[f][0] <= hi and lo <= pstats[f][1])
-            ]
+    candidates = _key_span_candidates(parent, key_col, changes)
 
     token = uuid.uuid4().hex[:12]
     touched: list[str] = []
@@ -3122,27 +2948,9 @@ def merge_version_mor(spark: SparkSession, table_path: str,
     manifest = {
         "version": version,
         "files": surviving + new_files,
-        "schema": parent["schema"],
+        **_shape_of(parent),
         "operation": "MERGE (DV)",
     }
-    if cons:
-        manifest["constraints"] = cons
-    if parent.get("properties"):
-        manifest["properties"] = parent["properties"]
-    # column mapping + retired physical names ride every commit that
-    # shares parent files (their physical layout is unchanged)
-    if parent.get("column_mapping"):
-        manifest["column_mapping"] = parent["column_mapping"]
-    if parent.get("retired_physical"):
-        manifest["retired_physical"] = parent["retired_physical"]
-    if parent.get("partition_by"):
-        manifest["partition_by"] = parent["partition_by"]
-    if parent.get("generated"):
-        manifest["generated"] = parent["generated"]
-    if parent.get("identity"):
-        manifest["identity"] = parent["identity"]
-    if parent.get("defaults"):
-        manifest["defaults"] = parent["defaults"]
     dv = {f: s for f, s in parent_dv.items() if f not in set(touched)}
     for f in dv_touched:
         dv[f] = sidecar_files
@@ -3151,16 +2959,8 @@ def merge_version_mor(spark: SparkSession, table_path: str,
     _set_col_stats(manifest, parent, table_path, surviving, new_files)
     if final_cdf is not None:
         manifest["cdf"] = cdf_files
-    try:
-        _publish(table_path, manifest)
-    except CommitConflict:
-        if final_dv is not None:
-            shutil.rmtree(final_dv, ignore_errors=True)
-        if final_data is not None:
-            shutil.rmtree(final_data, ignore_errors=True)
-        if final_cdf is not None:
-            shutil.rmtree(final_cdf, ignore_errors=True)
-        raise
+    _commit(table_path, lambda _base, _v: manifest, parent, version,
+            staged_dirs=[final_dv, final_data, final_cdf])
     return {
         "version": version,
         "files_total": len(surviving) + len(new_files),
@@ -3223,10 +3023,7 @@ def fsck_repair(spark: SparkSession, table_path: str,
     affected files from a good snapshot). Row loss from dropped data
     refs is the point of the repair and is irreversible; hence the
     default is report-only."""
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    parent = _load_manifest(table_path, avail[-1])
+    head, parent = _latest(table_path)
     missing = [f for f in parent["files"]
                if not os.path.exists(_abs_file(table_path, f))]
     dv = _dv_map(parent)
@@ -3239,10 +3036,7 @@ def fsck_repair(spark: SparkSession, table_path: str,
     if dry_run or not missing:
         return out
     surviving = [f for f in parent["files"] if f not in set(missing)]
-    manifest = dict(parent)
-    for stamp in _PER_COMMIT_KEYS:
-        manifest.pop(stamp, None)
-    manifest["version"] = avail[-1] + 1
+    manifest = _child(parent, head + 1, "FSCK REPAIR")
     manifest["files"] = surviving
     if dv:
         kept_dv = {f: s for f, s in dv.items() if f in set(surviving)}
@@ -3256,7 +3050,6 @@ def fsck_repair(spark: SparkSession, table_path: str,
     if manifest.get("row_counts") is not None:
         manifest["row_counts"] = {f: manifest["row_counts"].get(f)
                                   for f in surviving}
-    manifest["operation"] = "FSCK REPAIR"
     out["version"] = _publish(table_path, manifest)
     return out
 
@@ -3579,11 +3372,13 @@ def resolve_timestamp(table_path: str, ts) -> int:
     if isinstance(ts, datetime.datetime):
         ts = ts.timestamp()
     ts = float(ts)
+    # commit times are monotone with version numbers
+    head, m = _latest(table_path)
+    if _commit_ts(table_path, head, m) <= ts:
+        return head
     avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
     best = None
-    for v in avail:  # commit times are monotone with version numbers
+    for v in avail:
         if _commit_ts(table_path, v) <= ts:
             best = v
         else:
@@ -3710,11 +3505,7 @@ def register_snapshot_table(spark: SparkSession, table_path: str,
 
     from pyspark.sql import types as T
 
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    v = avail[-1] if version is None else version
-    m = _load_manifest(table_path, v)
+    v, m = _latest(table_path, version)
     blockers = []
     if _dv_map(m):
         blockers.append("deletion vectors")
@@ -3844,10 +3635,7 @@ def txn_version(table_path: str, app_id: str) -> int | None:
     never a backward scan over the history (a long-lived maintained
     view accumulates thousands of commits; per-micro-batch reads must
     not walk them)."""
-    avail = versions(table_path)
-    if not avail:
-        return None
-    got = (_load_manifest(table_path, avail[-1]).get("txn") or {}).get(app_id)
+    got = ((_head_manifest(table_path) or {}).get("txn") or {}).get(app_id)
     return None if got is None else int(got)
 
 
@@ -3874,13 +3662,15 @@ def table_statistics(table_path: str,
     relation planners as Long.MaxValue bytes and never broadcasts).
     Until that hook exists, :func:`read_version` serves these numbers
     to the planner itself — see its ``stats_hint``."""
+    return _manifest_statistics(table_path, _latest(table_path, version)[1],
+                                include_rows)
+
+
+def _manifest_statistics(table_path: str, m: dict,
+                         include_rows: bool = True) -> dict:
+    """:func:`table_statistics` of one loaded manifest."""
     import pyarrow.parquet as pq
 
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    v = avail[-1] if version is None else version
-    m = _load_manifest(table_path, v)
     files = m["files"]
     fb = m.get("file_bytes") or {}
     size = 0
@@ -3961,11 +3751,8 @@ def count_rows(spark: SparkSession, table_path: str,
     sidecar, so stale positions for since-rewritten files never
     undercount. Falls back to a real count for manifests predating the
     index (or clones of them)."""
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    v = avail[-1] if version is None else version
-    rows = table_statistics(table_path, v)["row_count"]
+    v, m = _latest(table_path, version)
+    rows = _manifest_statistics(table_path, m)["row_count"]
     if rows is not None:
         return rows
     return read_version(spark, table_path, v).count()
@@ -3985,11 +3772,7 @@ def min_max(spark: SparkSession, table_path: str, col: str,
     (stats never index NULLs)."""
     from pyspark.sql import functions as F
 
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    v = avail[-1] if version is None else version
-    m = _load_manifest(table_path, v)
+    v, m = _latest(table_path, version)
     files = m["files"]
     bounds = _bounds_for(m, col)
     if (files and bounds is not None and not _dv_map(m)
@@ -4018,11 +3801,7 @@ def describe_detail(spark: SparkSession, table_path: str) -> DataFrame:
     alone."""
     import datetime
 
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    v = avail[-1]
-    m = _load_manifest(table_path, v)
+    v, m = _latest(table_path)
     files = m["files"]
     fb = m.get("file_bytes") or {}
     size = 0
@@ -4053,7 +3832,7 @@ def describe_detail(spark: SparkSession, table_path: str) -> DataFrame:
         sorted((m.get("constraints") or {}).keys()),
         dict((m.get("properties") or {})),
         _checkpoint_interval(m),
-        len(avail),
+        len(versions(table_path)),
     )
     return spark.createDataFrame(
         [row],
@@ -4078,11 +3857,7 @@ def partitions(spark: SparkSession, table_path: str,
     values. ``rows`` sums the per-file row counts; ``has_dv`` marks
     partitions whose counts are upper bounds (deletion vectors
     present). Raises on tables without a partition spec."""
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    v = avail[-1] if version is None else version
-    m = _load_manifest(table_path, v)
+    m = _latest(table_path, version)[1]
     pb = m.get("partition_by")
     if not pb:
         raise ValueError(
@@ -4147,14 +3922,7 @@ def read_version(spark: SparkSession, table_path: str,
         if version is not None:
             raise ValueError("pass version OR timestamp, not both")
         version = resolve_timestamp(table_path, timestamp)
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    if version is None:
-        version = avail[-1]
-    if version not in avail:
-        raise ValueError(f"version {version} not in {avail} at {table_path}")
-    manifest = _load_manifest(table_path, version)
+    version, manifest = _latest(table_path, version)
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(manifest["schema"]))
@@ -4206,10 +3974,8 @@ def optimize_version(spark: SparkSession, table_path: str,
     """
     from pyspark.sql import functions as F
 
-    latest = versions(table_path)
-    if not latest:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    df = read_version(spark, table_path, latest[-1])
+    head, parent = _latest(table_path)
+    df = read_version(spark, table_path, head)
     if zorder_cols is not None:
         from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.functions.hilbert import with_hilbert_key
         from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.functions.zorder import morton_sql
@@ -4254,11 +4020,10 @@ def optimize_version(spark: SparkSession, table_path: str,
         df = df.repartitionByRange(target_files, sort_col)
     else:
         df = df.coalesce(target_files)
-    before = len(_load_manifest(table_path, latest[-1])["files"])
     v = write_version(df, table_path, _operation="OPTIMIZE")
     return {
         "version": v,
-        "files_before": before,
+        "files_before": len(parent["files"]),
         "files_after": len(_load_manifest(table_path, v)["files"]),
     }
 
@@ -4282,14 +4047,10 @@ def optimize_incremental(spark: SparkSession, table_path: str,
     plain, so the commit also retires their sidecars. Healthy files
     keep their col_stats verbatim. No-op (no commit) when nothing
     qualifies. Returns commit stats."""
-    import shutil
     import uuid
 
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    version = avail[-1] + 1
-    parent = _load_manifest(table_path, avail[-1])
+    head, parent = _latest(table_path)
+    version = head + 1
     from pyspark.sql import types as T
 
     schema = T.StructType.fromJson(json.loads(parent["schema"]))
@@ -4303,7 +4064,6 @@ def optimize_incremental(spark: SparkSession, table_path: str,
             sz = 0
         if sz < min_file_bytes or f in dv:
             small.append(f)
-    kept = [f for f in pfiles if f not in set(small)]
     if len(small) <= 1 and not any(f in dv for f in small):
         # one small DV-free file compacts to itself: nothing to gain
         return {"version": None, "files_total": len(pfiles),
@@ -4329,75 +4089,38 @@ def optimize_incremental(spark: SparkSession, table_path: str,
 
     small_set = set(small)
 
-    def _build(base: dict, v: int):
+    def _build(base: dict, v: int) -> dict:
         kept = [f for f in base["files"] if f not in small_set]
         m = {
             "version": v,
             "files": kept + new_files,
-            "schema": base["schema"],
+            # content-identical rewrite: constraints can't be newly
+            # violated, so they carry forward unchecked (same reasoning
+            # as COW sharing)
+            **_shape_of(base),
             "operation": "OPTIMIZE (INCREMENTAL)",
         }
-        # content-identical rewrite: constraints can't be newly
-        # violated, so they carry forward unchecked (same reasoning as
-        # COW sharing)
-        if base.get("constraints"):
-            m["constraints"] = base["constraints"]
-        if base.get("properties"):
-            m["properties"] = base["properties"]
-        # column mapping + retired physical names ride every commit
-        # that shares parent files (physical layout is unchanged)
-        if base.get("column_mapping"):
-            m["column_mapping"] = base["column_mapping"]
-        if base.get("retired_physical"):
-            m["retired_physical"] = base["retired_physical"]
-        if base.get("partition_by"):
-            m["partition_by"] = base["partition_by"]
-        if base.get("generated"):
-            m["generated"] = base["generated"]
-        if base.get("identity"):
-            m["identity"] = base["identity"]
-        if base.get("defaults"):
-            m["defaults"] = base["defaults"]
-        kept_dv = {f: s for f, s in _dv_map(base).items()
-                   if f in set(kept)}
+        kept_set = set(kept)
+        kept_dv = {f: s for f, s in _dv_map(base).items() if f in kept_set}
         if kept_dv:
             m["dv"] = kept_dv
         _set_col_stats(m, base, table_path, kept, new_files)
-        return m, kept
+        return m
 
     # OPTIMIZE conflict resolution (Delta's): compaction is
-    # data-neutral over its INPUT files, so a racing commit only truly
-    # conflicts when it touched those inputs (removed or re-vectored
-    # them — publishing would resurrect stale bytes) or changed the
-    # schema. Anything else — appends, DML on other files — REBASEs:
-    # rebuild the child manifest against the new parent and republish,
-    # keeping the compacted files already written. This is what lets a
-    # background compactor run continuously under streaming appends
-    # without caller-side retry loops.
-    manifest, kept = _build(parent, version)
-    for attempt in range(4):
-        try:
-            version = _publish(table_path, manifest)
-            break
-        except CommitConflict:
-            avail = versions(table_path)
-            winner = _load_manifest(table_path, avail[-1])
-            rebasable = (
-                attempt < 3
-                and winner.get("schema") == parent["schema"]
-                and small_set <= set(winner.get("files") or ())
-                and all(_dv_map(winner).get(f) == dv.get(f)
-                        for f in small)
-            )
-            if not rebasable:
-                shutil.rmtree(final, ignore_errors=True)
-                raise
-            manifest, kept = _build(winner, avail[-1] + 1)
+    # data-neutral over its INPUT files, so a racing commit conflicts
+    # only when it touched those inputs or changed the schema — the
+    # one shape key a compaction's output depends on. Anything else
+    # rebases, which lets a background compactor run continuously
+    # under streaming appends without caller-side retry loops.
+    manifest = _commit(table_path, _build, parent, version, own=small_set,
+                       shape_keys=("schema",), staged_dirs=[final])
+    n_shared = len(manifest["files"]) - len(new_files)
     return {
-        "version": version,
-        "files_total": len(kept) + len(new_files),
+        "version": manifest["version"],
+        "files_total": len(manifest["files"]),
         "files_compacted": len(small),
-        "files_shared": len(kept),
+        "files_shared": n_shared,
         "dv_files_retired": sum(1 for f in small if f in dv),
     }
 
@@ -4414,17 +4137,12 @@ def reorg_purge(spark: SparkSession, table_path: str) -> dict:
     small files), keeping one output file per vectored input so the
     purge never degrades the layout into one giant file. No-op (no
     commit) when the table has no DVs."""
-    parent = _load_manifest(table_path, versions(table_path)[-1]) \
-        if versions(table_path) else None
-    if parent is None:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    n_dv = len(_dv_map(parent))
+    n_dv = len(_dv_map(_latest(table_path)[1]))
     if n_dv == 0:
         return {"version": None, "files_compacted": 0,
                 "dv_files_retired": 0}
-    out = optimize_incremental(spark, table_path, min_file_bytes=0,
-                               target_files=n_dv)
-    return out
+    return optimize_incremental(spark, table_path, min_file_bytes=0,
+                                target_files=n_dv)
 
 
 def generate_symlink_manifest(table_path: str,
@@ -4449,14 +4167,7 @@ def generate_symlink_manifest(table_path: str,
     bytes read. Returns ``{"version", "manifests", "files"}``."""
     import shutil
 
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    if version is None:
-        version = avail[-1]
-    if version not in avail:
-        raise ValueError(f"version {version} not in {avail}")
-    m = _load_manifest(table_path, version)
+    version, m = _latest(table_path, version)
     if _dv_map(m):
         raise ValueError(
             "snapshot carries deletion vectors — a symlink manifest "
@@ -4780,14 +4491,7 @@ def files(spark: SparkSession, table_path: str,
     manifest + os.stat metadata; no data file is opened, O(#files)."""
     from pyspark.sql import functions as F
 
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    if version is None:
-        version = avail[-1]
-    if version not in avail:
-        raise ValueError(f"version {version} not in {avail} at {table_path}")
-    m = _load_manifest(table_path, version)
+    version, m = _latest(table_path, version)
     col_stats = m.get("col_stats") or {}
     dv = _dv_map(m)
     rows = []
@@ -4823,18 +4527,10 @@ def backfill_stats(table_path: str) -> int:
     use ``restore_version`` when a rollback is the intent). The commit
     goes through the normal manifest CAS, so it serializes against
     concurrent writers like any other commit."""
-    avail = versions(table_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {table_path}")
-    base = avail[-1]
-    parent = _load_manifest(table_path, base)
-    manifest = dict(parent)
-    for stamp in _PER_COMMIT_KEYS:
-        manifest.pop(stamp, None)  # provenance/changes are per-commit
-    manifest["version"] = base + 1
+    head, parent = _latest(table_path)
+    manifest = _child(parent, head + 1, "BACKFILL STATS")
     _set_col_stats(manifest, None, table_path, [], parent["files"])
-    manifest["backfilled_from"] = base
-    manifest["operation"] = "BACKFILL STATS"
+    manifest["backfilled_from"] = head
     return _publish(table_path, manifest)
 
 
@@ -4854,15 +4550,11 @@ def restore_version(table_path: str, to_version: int) -> int:
             f"version {to_version} is not live at {table_path} "
             f"(live: {avail}) — vacuumed states cannot be restored"
         )
-    src = _load_manifest(table_path, to_version)
-    manifest = dict(src)
     # the source's per-commit stamps (incl. its change-feed files)
     # describe ITS commit, not this restore
-    for stamp in _PER_COMMIT_KEYS:
-        manifest.pop(stamp, None)
-    manifest["version"] = avail[-1] + 1
+    manifest = _child(_load_manifest(table_path, to_version),
+                      avail[-1] + 1, "RESTORE")
     manifest["restored_from"] = to_version
-    manifest["operation"] = "RESTORE"
     return _publish(table_path, manifest)
 
 
@@ -4898,21 +4590,12 @@ def clone_table(src_path: str, dst_path: str,
     ``version`` picks the source snapshot (default: latest). The
     destination must be fresh — clone never clobbers history.
     """
-    avail = versions(src_path)
-    if not avail:
-        raise FileNotFoundError(f"no committed versions at {src_path}")
-    if version is None:
-        version = avail[-1]
-    if version not in avail:
-        raise ValueError(
-            f"version {version} not in {avail} at {src_path}"
-        )
+    version, src = _latest(src_path, version)
     if versions(dst_path):
         raise ValueError(
             f"table already exists at {dst_path} — clone never clobbers "
             "history"
         )
-    src = _load_manifest(src_path, version)
     if deep:
         if spark is None:
             raise ValueError(
@@ -4922,10 +4605,13 @@ def clone_table(src_path: str, dst_path: str,
         return _deep_clone(spark, src_path, dst_path, version, src)
     entries = src["files"]
     abs_files = [_abs_file(src_path, f) for f in entries]
+    # column mapping, partition spec, properties and CHECK constraints
+    # are name-based table metadata (no file keys): they ride verbatim,
+    # and constraints resume enforcing on the clone's own future writes
     manifest = {
         "version": 0,
         "files": abs_files,
-        "schema": src["schema"],
+        **_shape_of(src),
         "cloned_from": {
             "table": os.path.abspath(src_path),
             "version": version,
@@ -4942,20 +4628,6 @@ def clone_table(src_path: str, dst_path: str,
         manifest["row_counts"] = {
             a: src["row_counts"].get(e) for a, e in zip(abs_files, entries)
         }
-    # column mapping / partition spec are name-based (no file keys):
-    # copy verbatim
-    if src.get("column_mapping"):
-        manifest["column_mapping"] = src["column_mapping"]
-    if src.get("retired_physical"):
-        manifest["retired_physical"] = src["retired_physical"]
-    if src.get("partition_by"):
-        manifest["partition_by"] = src["partition_by"]
-    if src.get("generated"):
-        manifest["generated"] = src["generated"]
-    if src.get("identity"):
-        manifest["identity"] = src["identity"]
-    if src.get("defaults"):
-        manifest["defaults"] = src["defaults"]
     # deletion vectors ride the clone by ABSOLUTE reference like the
     # data files (sidecar rows key on the source files' URIs, which
     # the clone's scans render identically)
@@ -4965,13 +4637,6 @@ def clone_table(src_path: str, dst_path: str,
             a: [_abs_file(src_path, s) for s in src_dv[e]]
             for a, e in zip(abs_files, entries) if e in src_dv
         }
-    if src.get("properties"):
-        manifest["properties"] = src["properties"]
-    # CHECK constraints are table metadata, not file state — Delta's
-    # CLONE carries them, so must ours (they resume enforcing on the
-    # clone's own future writes)
-    if src.get("constraints"):
-        manifest["constraints"] = src["constraints"]
     os.makedirs(_manifest_path(dst_path), exist_ok=True)
     return _publish(dst_path, manifest)
 
@@ -4988,7 +4653,6 @@ def _deep_clone(spark: SparkSession, src_path: str, dst_path: str,
     """DEEP CLONE physical plan (see :func:`clone_table`): distributed
     byte-copy of DV-free files + DV-materializing rewrite of vectored
     files, then one version-0 manifest publish at ``dst_path``."""
-    import shutil
     import uuid
 
     from pyspark.sql import types as T
@@ -5038,17 +4702,19 @@ def _deep_clone(spark: SparkSession, src_path: str, dst_path: str,
             pairs, width
         ).foreachPartition(_copy_shard)
     new_files: list[str] = []
+    materialized = None
     if vectored:
         repl = _read_files_dv(spark, src_path, src, vectored, schema)
         staged = os.path.join(dst_path, f"_staged_0_{token}")
         final_dir = f"d_0m_{token}"
+        materialized = os.path.join(dst_path, final_dir)
         _write_rewrite(repl, staged, src, max(1, len(vectored)))
-        os.rename(staged, os.path.join(dst_path, final_dir))
+        os.rename(staged, materialized)
         new_files = _list_data_files(dst_path, final_dir)
     manifest = {
         "version": 0,
         "files": copied_rel + new_files,
-        "schema": schema.json(),
+        **_shape_of(src),
         "cloned_from": {
             "table": os.path.abspath(src_path),
             "version": version,
@@ -5056,11 +4722,6 @@ def _deep_clone(spark: SparkSession, src_path: str, dst_path: str,
         },
         "operation": "CLONE (DEEP)",
     }
-    for key in ("column_mapping", "retired_physical", "partition_by",
-                "generated", "identity", "defaults", "properties",
-                "constraints"):
-        if src.get(key):
-            manifest[key] = src[key]
     # copied bytes are identical → the source's per-file skipping stats
     # transfer verbatim (re-keyed); materialized files get one footer
     # read each through the shared helper
@@ -5075,15 +4736,12 @@ def _deep_clone(spark: SparkSession, src_path: str, dst_path: str,
     _set_col_stats(manifest, pseudo_parent, dst_path, copied_rel,
                    new_files)
     os.makedirs(_manifest_path(dst_path), exist_ok=True)
-    try:
-        return _publish(dst_path, manifest)
-    except CommitConflict:
-        # a racing writer created the table first — a fresh deep clone
-        # never clobbers; surface it and leave the loser's bytes for
-        # the orphan sweep
-        shutil.rmtree(os.path.join(dst_path, copy_dir),
-                      ignore_errors=True)
-        raise
+    # a racing writer that created the table first wins: a fresh deep
+    # clone never clobbers, so the conflict surfaces after the clone's
+    # own bytes are removed
+    return _commit(dst_path, lambda _base, _v: manifest, None, 0,
+                   staged_dirs=[os.path.join(dst_path, copy_dir),
+                                materialized])["version"]
 
 
 def convert_to_versioned(table_path: str,

@@ -949,6 +949,20 @@ def test_bootstrap_vector_index_reseeds_after_vacuum(spark, tmp_path):
     assert versioned.read_version(spark, asg).count() == 4
 
 
+def test_bootstrap_of_missing_source_raises_missing_table(spark, tmp_path):
+    """Both snapshot re-seeds over a source with no commits fail with
+    the versioned layer's missing-table error, not an IndexError."""
+    import pytest
+
+    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.streaming import jobs
+
+    src, a, b = (str(tmp_path / n) for n in ("src", "a", "b"))
+    with pytest.raises(FileNotFoundError, match="no committed versions"):
+        jobs.bootstrap_dedup_corpus(spark, src, a, b)
+    with pytest.raises(FileNotFoundError, match="no committed versions"):
+        jobs.bootstrap_vector_index(spark, src, a, b)
+
+
 def test_streaming_scd2_dimension_loop(spark, tmp_path):
     """Streaming twin #22 — SCD2 dimension history maintained from a
     CDF feed: every source change closes the key's open interval at

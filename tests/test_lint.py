@@ -273,3 +273,110 @@ def test_operators_make_no_inferring_parquet_reads():
     found = [f"{name}:{fn}:{line}" for name, fn, line in hits
              if (name, fn) != allowed]
     assert found == [], found
+
+
+#: The loops that keep their own ``except CommitConflict`` besides
+#: ``versioned._commit``: their retry rules differ from the
+#: publish-or-rebase loop's.
+COMMIT_CONFLICT_ALLOWLIST = {
+    ("versioned.py", "_commit"),
+    ("versioned.py", "reserve_identity_block"),   # identity reservation
+    ("versioned_ds.py", "VersionedWriter.commit"),  # DS blind append
+}
+
+
+def _commit_protocol_copies(name: str, source: str,
+                            allow=COMMIT_CONFLICT_ALLOWLIST) -> list[tuple]:
+    """(file, def, line, what) of each hand-rolled copy of a commit
+    protocol helper: a ``_load_manifest(..., avail[-1])`` head lookup
+    (``_latest`` resolves the head), a loop over ``_PER_COMMIT_KEYS``
+    (``_child`` strips them), and an ``except CommitConflict`` outside
+    the allowlisted loops (``_commit`` publishes or rebases). ``def``
+    is the enclosing top-level function or ``Class.method``."""
+    import ast
+
+    def called(node, fn):
+        f = node.func
+        return (getattr(f, "id", None) == fn
+                or getattr(f, "attr", None) == fn)
+
+    def names(node):
+        return {getattr(n, "id", None) or getattr(n, "attr", None)
+                for n in ast.walk(node)}
+
+    def last_item(node):
+        return (isinstance(node, ast.Subscript)
+                and isinstance(node.slice, ast.UnaryOp)
+                and isinstance(node.slice.op, ast.USub)
+                and getattr(node.slice.operand, "value", None) == 1)
+
+    found = []
+
+    def visit(node, where, in_class):
+        for child in ast.iter_child_nodes(node):
+            inner, cls = where, in_class
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                  ast.ClassDef)):
+                if where == "<module>":
+                    inner, cls = child.name, isinstance(child, ast.ClassDef)
+                elif in_class:
+                    inner, cls = f"{where}.{child.name}", False
+            what = None
+            if (isinstance(child, ast.Call)
+                    and called(child, "_load_manifest")
+                    and any(last_item(a) for a in child.args)):
+                what = "head lookup"
+            elif (isinstance(child, (ast.For, ast.comprehension))
+                  and "_PER_COMMIT_KEYS" in names(child.iter)):
+                what = "per-commit strip loop"
+            elif (isinstance(child, ast.ExceptHandler)
+                  and child.type is not None
+                  and "CommitConflict" in names(child.type)
+                  and (name, inner) not in allow):
+                what = "except CommitConflict"
+            if what:
+                found.append((name, inner, child.lineno, what))
+            visit(child, inner, cls)
+
+    visit(ast.parse(source), "<module>", False)
+    return found
+
+
+def test_versioned_commits_use_the_commit_protocol_helpers():
+    """Every versioned commit resolves the head through
+    ``versioned._latest``, copies a parent into a metadata commit
+    through ``versioned._child`` and publishes data through
+    ``versioned._commit``; no module keeps a hand-rolled copy."""
+    from tests.conftest import REPO
+
+    seeded = (
+        "def add(p):\n"
+        "    avail = versioned.versions(p)\n"
+        "    parent = versioned._load_manifest(p, avail[-1])\n"
+        "    for k in versioned._PER_COMMIT_KEYS:\n"
+        "        parent.pop(k, None)\n"
+        "class W:\n"
+        "    def commit(self):\n"
+        "        def attempt():\n"
+        "            try:\n"
+        "                publish()\n"
+        "            except (OSError, versioned.CommitConflict):\n"
+        "                raise\n")
+    assert _commit_protocol_copies("x.py", seeded) == [
+        ("x.py", "add", 3, "head lookup"),
+        ("x.py", "add", 4, "per-commit strip loop"),
+        ("x.py", "W.commit", 11, "except CommitConflict"),
+    ]
+    pkg = REPO / "batch_processing_etl_pipeline_for_chess_puzzle_generator_spark"
+    paths = [pkg / "versioned.py", pkg / "merge_sql.py",
+             *sorted((pkg / "sources").glob("*.py")),
+             *sorted((pkg / "functions").glob("*.py")),
+             *sorted((pkg / "streaming").glob("*.py"))]
+    found = [hit for path in paths
+             for hit in _commit_protocol_copies(path.name, path.read_text())]
+    assert found == [], found
+    # every allowlisted loop still exists (the list can't rot)
+    loops = {hit[:2] for path in paths
+             for hit in _commit_protocol_copies(path.name, path.read_text(),
+                                                allow=set())}
+    assert loops == COMMIT_CONFLICT_ALLOWLIST, loops

@@ -1635,13 +1635,20 @@ def test_snapshots_metadata_table_records_operations(spark, tmp_path):
     versioned.merge_version_cow(spark, path, ch, "k")
     versioned.optimize_version(spark, path, target_files=1)
     versioned.restore_version(path, 4)
+    # metadata-only commits stamp their own operation, never their
+    # parent's (here a RESTORE)
+    versioned.add_constraint(spark, path, "k_nonneg", "k >= 0")
+    versioned.drop_constraint(path, "k_nonneg")
+    versioned.add_column(path, "tag", "STRING")
+    versioned.set_column_default(spark, path, "tag", "'t'")
 
     snaps = {r.version: r for r in
              versioned.snapshots(spark, path).collect()}
     assert [snaps[v].operation for v in sorted(snaps)] == [
         "WRITE", "SET TBLPROPERTIES", "DELETE (DV)", "UPDATE (DV)",
         "MERGE (DV)",  # dv.enabled routes MERGE merge-on-read too
-        "OPTIMIZE", "RESTORE",
+        "OPTIMIZE", "RESTORE", "ADD CONSTRAINT", "DROP CONSTRAINT",
+        "ADD COLUMNS", "SET DEFAULT",
     ]
     # DV bookkeeping visible where vectors live; commit times monotone
     assert snaps[2].n_dv_files >= 1
@@ -2130,6 +2137,72 @@ def test_racing_property_flip_conflicts_dml(spark, tmp_path,
     # the property commit survived; the DML did not publish
     assert versioned.table_properties(path) == {"cdf.enabled": "true"}
     assert versioned.read_version(spark, path).count() == 600
+
+
+_REBASE_PARENT = {
+    "version": 3,
+    "files": ["d/a.parquet", "d/b.parquet", "d/c.parquet"],
+    "dv": {"d/a.parquet": ["s/1.parquet"]},
+    "schema": '{"type":"struct","fields":[]}',
+    "constraints": {"pos": "k > 0"},
+    "column_mapping": {"k": "col-1"},
+    "retired_physical": ["old"],
+    "partition_by": ["p"],
+    "generated": {"g": "k + 1"},
+    "identity": {"i": {"start": 1, "step": 1}},
+    "defaults": {"v": {"sql": "'x'", "value": "x"}},
+    "properties": {"cdf.enabled": "true"},
+}
+
+
+def _rebase_winner(**change):
+    """The parent plus one disjoint appended file, then ``change``."""
+    winner = dict(_REBASE_PARENT, version=4,
+                  files=_REBASE_PARENT["files"] + ["d/new.parquet"])
+    winner.update(change)
+    return winner
+
+
+_REBASE_CASES = [
+    *[(f"changed {k}", _rebase_winner(**{k: f"other {k}"}), 0,
+       versioned._SHAPE_KEYS, False) for k in versioned._SHAPE_KEYS],
+    ("own file removed",
+     _rebase_winner(files=["d/b.parquet", "d/c.parquet"]), 0,
+     versioned._SHAPE_KEYS, False),
+    ("own file re-vectored",
+     _rebase_winner(dv={"d/a.parquet": ["s/2.parquet"]}), 0,
+     versioned._SHAPE_KEYS, False),
+    ("own file newly vectored",
+     _rebase_winner(dv={**_REBASE_PARENT["dv"],
+                        "d/b.parquet": ["s/2.parquet"]}), 0,
+     versioned._SHAPE_KEYS, False),
+    ("disjoint append", _rebase_winner(), 0, versioned._SHAPE_KEYS, True),
+    ("other file re-vectored",
+     _rebase_winner(dv={**_REBASE_PARENT["dv"],
+                        "d/c.parquet": ["s/2.parquet"]}), 0,
+     versioned._SHAPE_KEYS, True),
+    ("third rebuild", _rebase_winner(), 2, versioned._SHAPE_KEYS, True),
+    ("fourth attempt", _rebase_winner(), 3, versioned._SHAPE_KEYS, False),
+    ("compaction: constraints changed",
+     _rebase_winner(constraints={}), 0, ("schema",), True),
+    ("compaction: properties changed",
+     _rebase_winner(properties={}), 0, ("schema",), True),
+    ("compaction: schema changed",
+     _rebase_winner(schema="other"), 0, ("schema",), False),
+]
+
+
+@pytest.mark.parametrize("winner, attempt, shape_keys, rebasable", [
+    pytest.param(*case[1:], id=case[0]) for case in _REBASE_CASES])
+def test_rebase_predicate(winner, attempt, shape_keys, rebasable):
+    """The one rebase rule every rebasing commit shares: a racing
+    winner is rebased onto only when it left the commit's own files
+    (``a``, ``b``) and their deletion vectors alone, kept every shape
+    key the commit depends on, and attempts remain. Compaction
+    depends on the schema alone."""
+    own = {"d/a.parquet", "d/b.parquet"}
+    assert versioned._rebasable(_REBASE_PARENT, winner, own, attempt,
+                                shape_keys) is rebasable
 
 
 def test_string_lookalike_stats_not_decimal_decoded(spark, tmp_path):

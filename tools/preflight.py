@@ -30,10 +30,16 @@ caught) every historical driver-red:
    Scale-only failures must die here, not there. (Skippable with
    ``--quick`` when iterating on a formulation already covered by
    stages 1-3; the full gate runs before any commit.)
+5. ``commit-protocol`` — the versioned layer's concurrency tests:
+   racing commits that must rebase (disjoint DML, compaction under
+   appends) or conflict loudly (overlapping DML, shape changes,
+   clobbering writers), the manifest CAS itself, and the Spark-free
+   rebase-predicate table. Every commit shares one publish-or-rebase
+   loop (``versioned._commit``), so these gate each change to it.
 
 Run before committing any new or changed ``queries()`` formulation:
 
-    python tools/preflight.py            # all four stages
+    python tools/preflight.py            # all stages
     python tools/preflight.py --quick    # skip the sf0.1 execution
     python tools/preflight.py /root/testdata/sf0.01   # heavier parity
 
@@ -72,6 +78,13 @@ def main() -> int:
     if not quick:
         stages.append(
             ("sf0.1-exec", [sys.executable, f"{REPO}/bench.py", "--check"]))
+    stages.append(("commit-protocol", [
+        sys.executable, "-m", "pytest", "-q",
+        "tests/test_versioned.py", "tests/test_manifest_log.py",
+        "tests/test_defaults.py::"
+        "test_default_declared_after_plan_conflicts_loudly",
+        "-k", "concurrent or conflict or racing or clobber or cas or rebase",
+    ]))
     for name, cmd in stages:
         if name == "sf0.1-exec":
             os.environ["SPARK_GRAFT_SF_DIR"] = "/root/testdata/sf0.1"
