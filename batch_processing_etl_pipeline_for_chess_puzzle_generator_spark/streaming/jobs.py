@@ -935,20 +935,10 @@ def mv_applied_source_version(mv_path: str) -> int | None:
     Served by the versioned layer's ``txn`` ledger, which every commit
     carries forward — ONE manifest load (the latest), O(1) per
     micro-batch regardless of how many commits the MV has accumulated.
-    Falls back to a backward manifest scan only for MVs stamped by the
-    pre-ledger format. None for a fresh MV."""
+    None for a fresh MV."""
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
 
-    got = versioned.txn_version(mv_path, _MV_TXN_APP)
-    if got is not None:
-        return got
-    # legacy stamp (pre-txn-ledger manifests): backward scan
-    for v in reversed(versioned.versions(mv_path)):
-        old = versioned._load_manifest(mv_path, v).get(
-            "mv_applied_src_version")
-        if old is not None:
-            return int(old)
-    return None
+    return versioned.txn_version(mv_path, _MV_TXN_APP)
 
 
 def maintain_monthly_rollup(spark, src_path: str, mv_path: str,
@@ -968,8 +958,9 @@ def maintain_monthly_rollup(spark, src_path: str, mv_path: str,
     of the current rollup, and merged COW: untouched months share
     their files byte-identically, a month whose count reaches 0 is
     deleted (it leaves the view). Exactly-once comes from stamping the
-    highest consumed source version on the SAME merge commit
-    (``mv_applied_src_version``, Delta's txn stamp): every batch is
+    highest consumed source version on the SAME merge commit (the
+    ``txn`` ledger entry for ``_MV_TXN_APP``, Delta's txn stamp; read
+    back by :func:`mv_applied_source_version`): every batch is
     first filtered PER-ROW to ``_commit_version > stamp`` before any
     aggregation, so idempotency is per-version, not per-batch. A
     fresh-checkpoint restart after the source has advanced delivers

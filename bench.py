@@ -60,71 +60,29 @@ def _run_one() -> int:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     import __spark_entry__ as entrymod
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import get_spark
+    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import fixtures
+    from tools import harness
 
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Warm up the JVM/executors and the parquet footer cache so the first
-    # timed query doesn't pay session spin-up.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    # ... and the PYTHON worker pool: the first Arrow task on each of
-    # the N cores forks a worker that imports pandas/pyarrow (~0.5 s
-    # each, contending) — without this the first multimodal query of
-    # the TIMED pass pays ~3-4 s of simultaneous cold imports instead
-    # of decode work (r13; the sf0.001 warm pass below no longer warms
-    # them since tiny inputs skip the spread fan-out).
-    n_cores = spark.sparkContext.defaultParallelism
-
-    def _noop(batches):
-        import pandas  # noqa: F401 — the import IS the warmup
-        yield from batches
-
-    (spark.range(n_cores * 4, numPartitions=n_cores)
-     .mapInPandas(_noop, schema="id long").count())
-
+    spark = harness.session("bench", sf_dir)
     qs = entrymod.queries()
-
-    # Steady-state measurement (standard TPC-style warmup run): execute
-    # the registry once at the smallest SF so whole-stage-codegen classes
-    # are compiled and JIT'd before the timed pass — ALSO when the bench
-    # SF is sf0.001 itself, so every SF's timed pass measures the same
-    # steady state (a cold sf0.001 pass is ~2× its warm wall, all of it
-    # one-time codegen compilation). The timed pass below still runs
-    # every plan end-to-end (scan → shuffle → collect) at the bench SF.
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir):
-        for fn in qs.values():
-            try:
-                fn(spark, warm_dir).collect()
-            except Exception:  # noqa: BLE001 — warmup must never fail the bench
-                pass
+    harness.warm_registry(spark, qs)
     # Fixture-cost attribution: session-cached fixture builds (the
     # snapshot_* versioned tables with DML histories) land inside
-    # whichever entry runs first. The warmup above built the sf0.001
-    # copies; reset so the timed pass records exactly the sf_dir
-    # builds, and per-entry fixture_s separates one-time build cost
-    # from operator cost for round-over-round comparisons.
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import fixtures
-
-    fixtures.reset()
+    # whichever entry runs first; per-entry fixture_s separates
+    # one-time build cost from operator cost for round-over-round
+    # comparisons.
     timings: dict[str, float] = {}
     fixture_s: dict[str, float] = {}
     errors: dict[str, str] = {}
     t_all = time.perf_counter()
     for name, fn in qs.items():
-        fx0 = fixtures.total()
-        t0 = time.perf_counter()
-        try:
-            fn(spark, sf_dir).collect()
-            timings[name] = round(time.perf_counter() - t0, 3)
-        except Exception as exc:  # noqa: BLE001 — one bad query must not
-            # lose the whole benchmark record; surface it in the JSON.
-            errors[name] = f"{type(exc).__name__}: {exc}"[:200]
-        fx = fixtures.total() - fx0
-        if fx >= 0.001:
-            fixture_s[name] = round(fx, 3)
+        run = harness.run_entry(spark, sf_dir, fn)
+        if run.error is None:
+            timings[name] = run.seconds
+        else:
+            errors[name] = run.error[:200]
+        if run.fixture_s >= 0.001:
+            fixture_s[name] = round(run.fixture_s, 3)
     total = round(time.perf_counter() - t_all, 3)
 
     out = {
@@ -183,7 +141,7 @@ def _run_streams(n_streams: int) -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     import __spark_entry__ as entrymod
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import get_spark
+    from tools import harness
 
     # FAIR mode must be set before the context starts; without an
     # allocation file every job lands in one fair-shared default pool,
@@ -196,9 +154,7 @@ def _run_streams(n_streams: int) -> None:
         os.environ["SPARK_GRAFT_EXTRA_CONF"] = (
             (extra + "," if extra else "") + "spark.scheduler.mode=FAIR"
         )
-    spark = get_spark("bench-streams")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    spark = harness.session("bench-streams", sf_dir)
 
     # Fixture PREBUILD (r12 verdict item 3): under N streams a cold
     # session fixture builds inside whichever stream reaches it first
@@ -216,7 +172,7 @@ def _run_streams(n_streams: int) -> None:
             memo(spark, sf_dir)
     prebuild_s = round(time.perf_counter() - t_fix, 3)
 
-    def stream(i: int) -> tuple[float, int]:
+    def stream(i: int) -> tuple[float, dict[str, str]]:
         # per-stream rotation: stream i starts at query i·|Q|/N, so the
         # streams hit different plans at any instant (the TPC-H
         # throughput-test shuffle) while every stream still runs ALL
@@ -234,12 +190,9 @@ def _run_streams(n_streams: int) -> None:
         t0 = time.perf_counter()
         errs: dict[str, str] = {}
         for name, fn in order:
-            try:
-                fn(spark, sf_dir).collect()
-            except Exception as exc:  # noqa: BLE001 — same contract as
-                # _run_one: one bad query must not lose the whole
-                # throughput record; the NAME must not be lost either
-                errs[name] = f"{type(exc).__name__}: {exc}"[:160]
+            run = harness.run_entry(spark, sf_dir, fn)
+            if run.error is not None:
+                errs[name] = run.error[:200]
         return round(time.perf_counter() - t0, 3), errs
 
     t_all = time.perf_counter()

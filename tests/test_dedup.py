@@ -103,9 +103,7 @@ def test_ngram_df_cap_keeps_true_pairs_and_matches_oracle(spark, tmp_path):
     """On the stuffed corpus the operator still finds the genuine
     near-dup pair, emits no boilerplate-driven pairs, and matches the
     df-cap-mirrored DuckDB oracle row-for-row."""
-    import duckdb
-
-    from tools.check_parity import normalize
+    from tools.harness import compare, oracle_db
 
     d = _hot_shingle_dir(spark, tmp_path)
     sdf = D.doc_ngram_jaccard(spark, d)
@@ -113,15 +111,10 @@ def test_ngram_df_cap_keeps_true_pairs_and_matches_oracle(spark, tmp_path):
     assert (1000, 1001) in {(a, b) for a, b, _ in srows}
     assert all(a >= 1000 for a, _, _ in srows)  # no boilerplate pairs
 
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet/*.parquet'"
-    )
-    res = con.execute(D.ORACLES["doc_ngram_jaccard"])
-    ocols = [c[0] for c in res.description]
-    orows = res.fetchall()
-    assert len(srows) == len(orows)
-    assert normalize(srows, sdf.columns) == normalize(orows, ocols)
+    with oracle_db(d, ("documents",)) as con:
+        why = compare(con, "doc_ngram_jaccard", D.ORACLES["doc_ngram_jaccard"],
+                      sdf.columns, srows)
+    assert why is None, why
 
 
 def test_incr_dedup_recurring_cost_is_corpus_free(spark):

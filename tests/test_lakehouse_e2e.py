@@ -340,7 +340,7 @@ def test_streaming_mv_maintenance_equals_batch_rebuild(spark, tmp_path):
     versioned monthly rollup, asserted EQUAL to the batch rebuild at
     every source commit, incremental (merge touches only affected
     months) and exactly-once (a fresh-checkpoint replay is skipped by
-    the mv_applied_src_version stamp)."""
+    the MV's txn-ledger stamp)."""
     from pyspark.sql import functions as F
 
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.sources.versioned_ds import (
@@ -415,7 +415,7 @@ def test_streaming_mv_maintenance_equals_batch_rebuild(spark, tmp_path):
     assert mv_rows() == rebuild()
 
     # exactly-once: a FRESH checkpoint replays the whole feed, but the
-    # mv_applied_src_version stamp says it's applied — no new MV commit
+    # MV's txn-ledger stamp says it's applied — no new MV commit
     n_versions = len(versioned.versions(mv))
     stamp = mv_applied_source_version(mv)
     drain("ck_fresh")

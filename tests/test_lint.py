@@ -380,3 +380,102 @@ def test_versioned_commits_use_the_commit_protocol_helpers():
              for hit in _commit_protocol_copies(path.name, path.read_text(),
                                                 allow=set())}
     assert loops == COMMIT_CONFLICT_ALLOWLIST, loops
+
+
+#: The only place that spells out the harness's warm-ups and view loop.
+HARNESS_ALLOWLIST = {
+    ("harness.py", "session", "JVM warm-up"),
+    ("harness.py", "session", "worker warm-up"),
+    ("harness.py", "oracle_db", "looped CREATE VIEW"),
+}
+
+
+def _harness_copies(name: str, source: str) -> list[tuple]:
+    """(file, def, line, what) of each hand-rolled copy of a
+    ``tools/harness.py`` step: an action over ``<x>.range(...)`` whose
+    result is discarded (a ``JVM warm-up``, or a ``worker warm-up`` when
+    the chain runs ``mapInPandas``) and a DuckDB ``CREATE VIEW`` executed
+    inside a loop. ``def`` is the enclosing top-level function or
+    ``Class.method``."""
+    import ast
+
+    loops = (ast.For, ast.AsyncFor, ast.While, ast.ListComp, ast.SetComp,
+             ast.DictComp, ast.GeneratorExp)
+
+    def chain(node):
+        # method names along a call chain, outermost first
+        while isinstance(node, (ast.Call, ast.Attribute)):
+            if isinstance(node, ast.Attribute):
+                yield node.attr
+            node = node.func if isinstance(node, ast.Call) else node.value
+
+    def creates_view(node):
+        return (isinstance(node, ast.Call)
+                and getattr(node.func, "attr", None) == "execute"
+                and any(isinstance(s, ast.Constant) and isinstance(s.value, str)
+                        and "CREATE VIEW" in s.value.upper()
+                        for a in node.args for s in ast.walk(a)))
+
+    found = []
+
+    def visit(node, where, in_class, in_loop):
+        for child in ast.iter_child_nodes(node):
+            inner, cls, loop = where, in_class, in_loop
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                  ast.ClassDef)):
+                loop = False
+                if where == "<module>":
+                    inner, cls = child.name, isinstance(child, ast.ClassDef)
+                elif in_class:
+                    inner, cls = f"{where}.{child.name}", False
+            elif isinstance(child, loops):
+                loop = True
+            what = None
+            if isinstance(child, ast.Expr):
+                names = list(chain(child.value))
+                if names[:1] in (["collect"], ["count"]) and "range" in names:
+                    what = ("worker warm-up" if "mapInPandas" in names
+                            else "JVM warm-up")
+            elif in_loop and creates_view(child):
+                what = "looped CREATE VIEW"
+            if what:
+                found.append((name, inner, child.lineno, what))
+            visit(child, inner, cls, loop)
+
+    visit(ast.parse(source), "<module>", False, False)
+    return found
+
+
+def test_registry_runs_use_the_harness():
+    """bench.py, tools/ and the tests warm a session and open DuckDB
+    oracle views only through ``tools/harness.py``; no file keeps a
+    hand-rolled copy of its warm-ups or its view loop. (``perfbench/``
+    is the frozen benchmark and is not scanned.)"""
+    from tests.conftest import REPO
+
+    seeded = (
+        "spark.range(100).selectExpr('sum(id)').collect()\n"
+        "class B:\n"
+        "    def warm(self, spark):\n"
+        "        (spark.range(8, numPartitions=2)\n"
+        "         .mapInPandas(f, schema='id long').count())\n"
+        "def views(con, d):\n"
+        "    n = spark.range(3).count()\n"
+        "    con.execute('CREATE VIEW one AS SELECT 1')\n"
+        "    for t in TABLES:\n"
+        "        con.execute(f\"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}'\")\n"
+        "    [con.execute(f'create view {t} as select 1') for t in TABLES]\n")
+    assert _harness_copies("x.py", seeded) == [
+        ("x.py", "<module>", 1, "JVM warm-up"),
+        ("x.py", "B.warm", 4, "worker warm-up"),
+        ("x.py", "views", 10, "looped CREATE VIEW"),
+        ("x.py", "views", 11, "looped CREATE VIEW"),
+    ]
+    paths = [REPO / "bench.py", *sorted((REPO / "tools").glob("*.py")),
+             *sorted((REPO / "tests").glob("*.py"))]
+    hits = [hit for path in paths
+            for hit in _harness_copies(path.name, path.read_text())]
+    found = [hit for hit in hits if hit[0] != "harness.py"]
+    assert found == [], found
+    # every allowlisted step still exists (the list can't rot)
+    assert {(f, d, what) for f, d, _, what in hits} == HARNESS_ALLOWLIST

@@ -4,42 +4,30 @@ This is a local replica of the driver's t2 correctness gate."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
 from tests.conftest import SF_SMALL
-from tools.check_parity import normalize
+from tools.harness import compare, normalize, oracle_db
 
 QUERY_NAMES = sorted(entrymod.queries())
 
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in ("region nation customer supplier part orders lineitem events "
-              "documents embeddings").split():
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMALL}/{t}.parquet'")
-    return con
+    return oracle_db(SF_SMALL)
 
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_matches_oracle(spark, duck, name):
-    fn = entrymod.queries()[name]
-    sdf = fn(spark, SF_SMALL)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
+    sdf = entrymod.queries()[name](spark, SF_SMALL)
+    rows = sdf.collect()
 
     oracles = entrymod.oracle_sql()
     if name not in oracles:
         pytest.skip("rows-only query (no SQL oracle)")
-    res = duck.execute(oracles[name])
-    ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
-
-    assert sorted(scols) == sorted(ocols), f"column mismatch for {name}"
-    assert len(srows) == len(orows), f"row count mismatch for {name}"
-    assert normalize(srows, scols) == normalize(orows, ocols), f"value mismatch for {name}"
+    why = compare(duck, name, oracles[name], sdf.columns, rows)
+    assert why is None, why
 
 
 def test_normalize_canonicalizes_decimal_rendering():

@@ -142,32 +142,14 @@ def test_aqe_splits_skewed_join(spark):
 # re-ran the window lineage would show extra scans).
 
 
-def _oracle_rows(sql: str, view_dir: str):
-    import duckdb
-
-    con = duckdb.connect()
-    for t in ("region nation customer supplier part orders lineitem events "
-              "documents embeddings").split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{view_dir}/{t}.parquet'"
-        )
-    res = con.execute(sql)
-    return [d[0] for d in res.description], res.fetchall()
-
-
 def _assert_matches_oracle(sdf, key: str, view_dir: str):
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
-    from tools.check_parity import normalize
+    from tools.harness import compare, oracle_db
 
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    ocols, orows = _oracle_rows(entrymod.oracle_sql()[key], view_dir)
-    assert sorted(scols) == sorted(ocols)
-    assert len(srows) == len(orows)
-    assert normalize(srows, scols) == normalize(orows, ocols)
+    with oracle_db(view_dir) as con:
+        why = compare(con, key, entrymod.oracle_sql()[key], sdf.columns,
+                      sdf.collect())
+    assert why is None, why
 
 
 def _scan_count(sdf, fragment: str) -> int:

@@ -18,16 +18,17 @@ sys.path.insert(0, REPO)
 
 def main() -> None:
     import __spark_entry__ as entrymod
-    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import get_spark
+    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.plans import (
+        physical_plan,
+    )
+    from tools.harness import session
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark("plan-audit")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("plan-audit", sf_dir)
 
     rows = []
     for name, fn in entrymod.queries().items():
-        df = fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        plan = physical_plan(fn(spark, sf_dir))
         rows.append((
             name,
             len(re.findall(r"Exchange hashpartitioning", plan)),
