@@ -15,7 +15,13 @@ parser accepts the sink's tag layout ([Game N] header, quoted tag
 pairs, blank line, one moves line) and is tolerant of missing tags
 (PGN's '?' placeholder decodes back to NULL, making
 write_pgn → read.format("pgn") lossless — asserted in
-tests/test_chess.py)."""
+tests/test_chess.py).
+
+A read makes three Python worker calls (create the source, plan the
+partitions, read). Each used to pay ~0.1-0.17 s re-reading pyspark.zip's
+directory in ``importlib.invalidate_caches()``; the zip-import gate in
+``session.py`` (installed when a worker unpickles this class) removed
+that, so a warm read of a 1-file output is ~0.12 s, not ~0.6 s."""
 
 from __future__ import annotations
 

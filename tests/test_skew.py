@@ -105,6 +105,10 @@ def test_aqe_splits_skewed_join(spark):
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32KB",
+        # skewed means over 2x the median partition; with 2 shuffle
+        # partitions (a 2-core session) the median is their mean, and
+        # neither partition can be twice that
+        "spark.sql.shuffle.partitions": "8",
     }
     old = {k: spark.conf.get(k, None) for k in confs}
     try:

@@ -43,11 +43,16 @@ def session(app: str, sf_dir: str):
     # each, contending) — without this the first multimodal entry of a
     # timed pass pays ~3-4 s of simultaneous cold imports instead of
     # decode work (the sf0.001 warm pass does not warm them, since tiny
-    # inputs skip the spread fan-out).
+    # inputs skip the spread fan-out). ``_noop`` is pickled by value, so
+    # it also imports the package: that installs session.py's zip-import
+    # gate in each warmed worker before the first timed task.
     n_cores = spark.sparkContext.defaultParallelism
 
     def _noop(batches):
-        import pandas  # noqa: F401 — the import IS the warmup
+        # the imports ARE the warmup
+        import pandas  # noqa: F401
+
+        import batch_processing_etl_pipeline_for_chess_puzzle_generator_spark  # noqa: F401
         yield from batches
 
     (spark.range(n_cores * 4, numPartitions=n_cores)
