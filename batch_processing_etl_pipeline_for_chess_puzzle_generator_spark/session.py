@@ -119,6 +119,17 @@ _DEFAULTS = {
         "SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"
     ),
     "spark.sql.files.openCostInBytes": "1m",
+    # Spark's generated-class cache is an LRU of 100 entries by
+    # default. A lakehouse pass visits ~175 classes and a registry pass
+    # ~3.7k, each in the same cycle every time, so at 100 each class
+    # was evicted before its next use and every pass compiled almost
+    # all of them again. Measured with an unbounded cache over bench.py's
+    # flow on 4 cores (the sf0.001 warm pass, then the sf0.1 timed
+    # pass): 3963 distinct classes. 8192 is the next power of two with
+    # 2x headroom over that and keeps the cache bounded. A static
+    # conf: it takes effect only if set before the JVM's first query
+    # compiles, so a session that already exists keeps its cache.
+    "spark.sql.codegen.cache.maxEntries": "8192",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
 

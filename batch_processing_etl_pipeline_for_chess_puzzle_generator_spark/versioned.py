@@ -2194,10 +2194,11 @@ def replace_where(spark: SparkSession, table_path: str, df: DataFrame,
     overlapping ones conflict)."""
     from pyspark.sql import functions as F
 
-    bad = df.filter(
+    # isEmpty, not limit(1).count(): a limit's generated code names a
+    # process-wide counter, so that form compiles anew on every call
+    if not df.filter(
         ~F.coalesce(F.expr(predicate_sql), F.lit(False))
-    ).limit(1).count()
-    if bad:
+    ).isEmpty():
         raise ValueError(
             "REPLACE WHERE: the replacement data contains rows NOT "
             f"matching the predicate {predicate_sql!r} — every "

@@ -73,6 +73,7 @@ def _run_one() -> int:
     # comparisons.
     timings: dict[str, float] = {}
     fixture_s: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     errors: dict[str, str] = {}
     t_all = time.perf_counter()
     for name, fn in qs.items():
@@ -83,6 +84,8 @@ def _run_one() -> int:
             errors[name] = run.error[:200]
         if run.fixture_s >= 0.001:
             fixture_s[name] = round(run.fixture_s, 3)
+        if run.compiles:
+            compiles[name] = run.compiles
     total = round(time.perf_counter() - t_all, 3)
 
     out = {
@@ -95,6 +98,9 @@ def _run_one() -> int:
         # from queries[name] for the operator's own cost), plus the
         # per-fixture breakdown and session total
         "fixture_s": fixture_s,
+        # per-entry codegen classes compiled in the timed pass: an
+        # entry the warm pass fully warmed compiles none and is absent
+        "compiles": compiles,
         "fixtures": {k: round(v, 3)
                      for k, v in fixtures.snapshot().items()},
         "fixture_total_s": round(fixtures.total(), 3),
@@ -120,7 +126,8 @@ def _run_one() -> int:
     compact["n_queries"] = len(timings)
     compact["n_errors"] = len(errors)
     compact.pop("errors", None)
-    compact.pop("fixture_s", None)  # full record keeps the per-entry map
+    compact.pop("fixture_s", None)  # full record keeps the per-entry maps
+    compact.pop("compiles", None)
     line = json.dumps(compact)
     for keep in range(len(slowest), -1, -5):
         compact["queries"] = dict(list(slowest.items())[:keep])

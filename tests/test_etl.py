@@ -134,3 +134,48 @@ def test_concurrent_fixture_callers_build_once(spark, tmp_path, monkeypatch):
     assert len(set(paths)) == 1, paths
     assert len(merges) == 1
     assert fixtures.snapshot()["cow_orders"] - built0 <= wall
+
+
+def test_repeated_lakehouse_pass_compiles_nothing(spark, tmp_path):
+    """A steady-state lakehouse pass (the three etl fixture builds on a
+    new input alias, then the seven entries that read them) compiles no
+    codegen class: Spark's codegen cache holds the pass's working set,
+    and no step generates source that never repeats.
+
+    The passes run without the codegen stage id in class names. That id
+    follows the order in which AQE finishes query stages, which varies
+    with timing, and a class that differs only in it compiles again once
+    per order seen (``abc_parts_revenue`` under a loaded suite)."""
+    import __spark_entry__ as entrymod
+
+    from tools.harness import compiled
+
+    qs = entrymod.queries()
+    builds = ("_versioned_orders_path", "_cow_orders_path",
+              "_replace_where_path")
+    entries = ("snapshot_read_version", "snapshot_diff_orders",
+               "snapshot_merge_cow", "snapshot_replace_where",
+               "agg_incremental_rollup", "cdc_merge_orders",
+               "abc_parts_revenue")
+
+    def one_pass(i: int) -> dict[str, int]:
+        alias = str(tmp_path / f"sf{i}")
+        os.symlink(SF, alias)  # new input path: every fixture builds again
+        steps = [(b, lambda b=b: getattr(etl, b)(spark, alias)) for b in builds]
+        steps += [(e, lambda e=e: qs[e](spark, alias).collect())
+                  for e in entries]
+        compiles = {}
+        for name, step in steps:
+            c0 = compiled(spark)
+            step()
+            compiles[name] = compiled(spark) - c0
+        return compiles
+
+    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
+    try:
+        one_pass(0)
+        one_pass(1)
+        third = one_pass(2)
+    finally:
+        spark.conf.unset("spark.sql.codegen.useIdInClassName")
+    assert {k: n for k, n in third.items() if n} == {}

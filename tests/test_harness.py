@@ -55,15 +55,19 @@ def test_check_parity_reexports_normalize():
 def test_run_entry_records_error_and_fixture_seconds(monkeypatch):
     """bench.py's per-entry record: a raising entry comes back as its
     error string, and a session-memo build inside an entry lands in
-    that entry's fixture_s (a memo hit adds nothing)."""
+    that entry's fixture_s and its codegen compiles in its compiles (a
+    memo hit adds nothing to either)."""
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import fixtures
 
     monkeypatch.setattr(fixtures, "MEMOS", {})
     fixtures.reset()
+    jvm = SimpleNamespace(compiled=100)
+    monkeypatch.setattr(harness, "compiled", lambda spark: jvm.compiled)
 
     @fixtures.session_memo("demo")
     def demo(spark, sf_dir):
         time.sleep(0.01)
+        jvm.compiled += 3
         return sf_dir
 
     class Frame:
@@ -87,12 +91,15 @@ def test_run_entry_records_error_and_fixture_seconds(monkeypatch):
     assert built.columns == ["v"]
     assert built.fixture_s == fixtures.snapshot()["demo"] >= 0.01
     assert built.seconds >= 0.01
+    assert built.compiles == 3
     hit = harness.run_entry(spark, "a", entry)
     assert hit.fixture_s == 0.0 and hit.rows == [("a",)]
+    assert hit.compiles == 0
 
     failed = harness.run_entry(spark, "a", broken)
     assert failed.error == "ValueError: boom"
     assert failed.seconds is None and failed.rows is None
+    assert failed.compiles == 0
 
     # the warm pass swallows entry errors and resets the build record
     harness.warm_registry(spark, {"broken": broken, "entry": entry})

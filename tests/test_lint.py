@@ -479,3 +479,61 @@ def test_registry_runs_use_the_harness():
     assert found == [], found
     # every allowlisted step still exists (the list can't rot)
     assert {(f, d, what) for f, d, _, what in hits} == HARNESS_ALLOWLIST
+
+
+def _limit_counts(name: str, source: str) -> list[tuple]:
+    """(file, def, line) of each ``<x>.limit(...).count()`` call. A
+    limit's generated code names a process-wide counter, so its source
+    never repeats and every call compiles fresh classes; ``isEmpty()``
+    and ``take(n)`` hit the codegen cache. ``def`` is the enclosing
+    top-level function or ``Class.method``."""
+    import ast
+
+    def is_call(node, attr):
+        return (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == attr)
+
+    found = []
+
+    def visit(node, where, in_class):
+        for child in ast.iter_child_nodes(node):
+            inner, cls = where, in_class
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                  ast.ClassDef)):
+                if where == "<module>":
+                    inner, cls = child.name, isinstance(child, ast.ClassDef)
+                elif in_class:
+                    inner, cls = f"{where}.{child.name}", False
+            if is_call(child, "count") and is_call(child.func.value, "limit"):
+                found.append((name, inner, child.lineno))
+            visit(child, inner, cls)
+
+    visit(ast.parse(source), "<module>", False)
+    return found
+
+
+def test_package_runs_no_limit_count():
+    """No ``.limit(n).count()`` under the package: it compiles new
+    codegen classes on every call (use ``isEmpty()`` or ``take(n)``)."""
+    from tests.conftest import REPO
+
+    seeded = (
+        "n = df.limit(5).count()\n"
+        "ok = df.limit(5).collect()\n"
+        "class T:\n"
+        "    def has(self, df):\n"
+        "        return (df.filter('x > 0')\n"
+        "                .limit(1)\n"
+        "                .count()) > 0\n"
+        "def f(df):\n"
+        "    return df.count() + len(df.take(1))\n")
+    assert _limit_counts("x.py", seeded) == [
+        ("x.py", "<module>", 1),
+        ("x.py", "T.has", 5),
+    ]
+    pkg = REPO / "batch_processing_etl_pipeline_for_chess_puzzle_generator_spark"
+    found = [hit for path in sorted(pkg.rglob("*.py"))
+             for hit in _limit_counts(str(path.relative_to(pkg)),
+                                      path.read_text())]
+    assert found == [], found

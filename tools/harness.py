@@ -8,7 +8,7 @@ oracle tests all go through these helpers:
   parquet footer cache and the Python worker pool;
 - :func:`warm_registry` compiles every entry's codegen once at sf0.001;
 - :func:`run_entry` runs one entry: its seconds, its fixture-build
-  seconds, its rows or its error;
+  seconds, the codegen classes it compiled, its rows or its error;
 - :func:`oracle_db` opens DuckDB views over an sf-dir's tables;
 - :func:`compare` is the oracle verdict: column set, row count and
   order-insensitive values (:func:`normalize`).
@@ -67,6 +67,13 @@ def warm_registry(spark, qs: dict) -> None:
     itself, so every SF measures the same steady state (a cold sf0.001
     pass is ~2× its warm wall, all of it one-time compilation).
 
+    It warms only while the registry's generated classes all fit in
+    Spark's codegen cache (``spark.sql.codegen.cache.maxEntries`` in
+    ``session._DEFAULTS``). The cache is an LRU and the passes visit
+    the classes in the same cycle, so with a working set larger than
+    the cache every class is evicted before the timed pass reuses it.
+    ``run_entry``'s ``compiles`` shows whether it did.
+
     Then reset the fixture-build record: the pass built the sf0.001
     copies of the session fixtures, and the timed pass must record
     exactly its own builds."""
@@ -81,13 +88,23 @@ def warm_registry(spark, qs: dict) -> None:
     fixtures.reset()
 
 
+def compiled(spark) -> int:
+    """Generated classes this JVM has compiled so far. A lookup that
+    hits Spark's codegen cache compiles nothing, so the delta over a
+    repeated workload counts its cache misses."""
+    return (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount())
+
+
 class Run(NamedTuple):
     """One entry's run: ``seconds`` (None on error) covers building,
     planning, executing and collecting the DataFrame; ``fixture_s`` is
-    the part of it spent inside session-fixture builds."""
+    the part of it spent inside session-fixture builds; ``compiles``
+    counts the codegen classes compiled meanwhile."""
 
     seconds: float | None
     fixture_s: float
+    compiles: int
     df: Any
     rows: list | None
     error: str | None
@@ -102,7 +119,7 @@ def run_entry(spark, sf_dir: str, fn) -> Run:
     returned as ``"Type: message"`` so one bad entry cannot lose a
     whole registry record."""
     df = rows = error = seconds = None
-    fx0 = fixtures.total()
+    fx0, cc0 = fixtures.total(), compiled(spark)
     t0 = time.perf_counter()
     try:
         df = fn(spark, sf_dir)
@@ -110,7 +127,8 @@ def run_entry(spark, sf_dir: str, fn) -> Run:
         seconds = round(time.perf_counter() - t0, 3)
     except Exception as exc:  # noqa: BLE001 — recorded, not raised
         error = f"{type(exc).__name__}: {exc}"
-    return Run(seconds, fixtures.total() - fx0, df, rows, error)
+    return Run(seconds, fixtures.total() - fx0, compiled(spark) - cc0,
+               df, rows, error)
 
 
 def oracle_db(sf_dir: str, tables=catalog.TABLES):
