@@ -504,7 +504,8 @@ def write_quarantine(df: DataFrame, rules: dict[str, str], path: str,
     streaming twin needs.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.observation import Observation
+
+    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.telemetry import observed
 
     if epoch is not None and mode != "overwrite":
         # the epoch path hardcodes dynamic-partition overwrite (that IS
@@ -528,24 +529,18 @@ def write_quarantine(df: DataFrame, rules: dict[str, str], path: str,
         .otherwise(F.lit(None))
         for name, expr in rules.items()
     ]))
-    obs = Observation("quarantine")
-    flagged = (
+    flagged, obs = observed(
         df.withColumn("_violations", violated)
-        .withColumn("_ok", F.size("_violations") == 0)
-        .observe(
-            obs,
-            F.sum(F.expr("CASE WHEN _ok THEN 1 ELSE 0 END")).alias("n_good"),
-            F.sum(F.expr("CASE WHEN _ok THEN 0 ELSE 1 END")).alias("n_bad"),
-        )
-        .withColumn(
-            "_violations",
-            F.expr("CASE WHEN _ok THEN NULL "
-                   "ELSE concat_ws(',', _violations) END"),
-        )
+        .withColumn("_ok", F.size("_violations") == 0),
+        "quarantine",
+        n_good=F.sum(F.expr("CASE WHEN _ok THEN 1 ELSE 0 END")),
+        n_bad=F.sum(F.expr("CASE WHEN _ok THEN 0 ELSE 1 END")),
     )
-    routed = flagged.withColumn(
-        "_bucket", F.expr("CASE WHEN _ok THEN 'good' ELSE 'bad' END")
-    ).drop("_ok")
+    routed = flagged.withColumns({
+        "_violations": F.expr("CASE WHEN _ok THEN NULL "
+                              "ELSE concat_ws(',', _violations) END"),
+        "_bucket": F.expr("CASE WHEN _ok THEN 'good' ELSE 'bad' END"),
+    }).drop("_ok")
     if epoch is not None:
         (
             routed.withColumn("_epoch", F.lit(int(epoch)))

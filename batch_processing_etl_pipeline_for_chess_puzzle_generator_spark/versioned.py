@@ -944,15 +944,16 @@ def _table_constraints(table_path: str) -> dict:
     return (_head_manifest(table_path) or {}).get("constraints") or {}
 
 
-def _gen_checks(manifest: dict) -> dict:
-    """GENERATED ALWAYS AS write invariants as CHECK expressions. Delta
-    enforces generated columns exactly this way: a writer MAY supply
-    the column, but every supplied value must equal the generation
-    expression (NULL-safe, so a NULL source generating NULL passes).
-    Merged into the commit-time check set, never stored as table
-    constraints."""
-    return {f"generated:{c}": f"{c} <=> ({e})"
-            for c, e in (manifest.get("generated") or {}).items()}
+def _checks(manifest: dict) -> dict:
+    """The commit-time check set of a table: its CHECK constraints plus
+    its GENERATED ALWAYS AS write invariants as CHECK expressions.
+    Delta enforces generated columns exactly this way: a writer MAY
+    supply the column, but every supplied value must equal the
+    generation expression (NULL-safe, so a NULL source generating NULL
+    passes). The invariants are never stored as table constraints."""
+    return {**(manifest.get("constraints") or {}),
+            **{f"generated:{c}": f"{c} <=> ({e})"
+               for c, e in (manifest.get("generated") or {}).items()}}
 
 
 def _apply_generated(df: DataFrame, generated: dict, schema=None):
@@ -1140,46 +1141,62 @@ def _apply_identity(spark: SparkSession, table_path: str, df: DataFrame,
     return df
 
 
-def _enforce_constraints(spark: SparkSession, table_path: str,
-                         new_files: list[str], constraints: dict,
-                         cleanup_dir: str | None, schema=None) -> None:
-    """CHECK-constraint gate on a commit's NEW files only (untouched
-    parent files were validated by the commit that wrote them): one
-    combined aggregate pass counts, per constraint, the rows where the
-    expression is not TRUE (NULL counts as a violation — SQL CHECK's
-    accept-on-UNKNOWN leniency silently admits NULL garbage, so this
-    engine is strict; write an explicit `x IS NULL OR ...` to opt in).
-    On any violation the staged data dir is removed and nothing
-    publishes."""
-    if not constraints or not new_files:
-        return
+def _stage(table_path: str, final_dir: str, df: DataFrame, write,
+           checks: dict | None = None) -> list[str]:
+    """A commit's data-dir step: ``write(df, staged)`` under
+    ``_staged_<final_dir>`` (vacuum's orphan sweep clears that prefix
+    after a crash), rename to ``final_dir`` and return its data files.
+
+    ``checks`` ({name: sql_expr}) are CHECK constraints and generated-
+    column invariants. Their per-name violation sums,
+    ``SUM(CAST(NOT expr <=> TRUE AS LONG))``, ride the write job as
+    observed metrics, so a checked commit runs no extra Spark job and
+    never reads back its own files. NULL counts as a violation: SQL
+    CHECK's accept-on-UNKNOWN leniency silently admits NULL garbage,
+    so this engine is strict; write an explicit ``x IS NULL OR ...``
+    to opt in. A non-zero sum raises ``ConstraintViolation`` before
+    the rename, and any exception from the write or the checks
+    (including one that fails analysis, before anything is written)
+    removes the staged dir, so nothing is left to publish.
+
+    The gate is sound because it only tests ``> 0``:
+    ``CollectMetrics`` sums are exact for the write shapes in use (a
+    plain write, ``coalesce`` and ``_write_partitioned``'s hash
+    repartition); a plan that recomputes its input can only over-count
+    (a ``repartitionByRange`` sampling job doubles both sums), never
+    under-count; failed task attempts' updates are dropped. A
+    zero-row write reports ``None`` sums, read as 0. With no checks
+    the write plan is untouched."""
     import shutil
 
     from pyspark.sql import functions as F
 
-    # every commit path writes files schema-aligned (an explicit select
-    # of the snapshot's fields), so passing that schema through skips a
-    # per-commit footer-inference pass over the new files (for a
-    # partition-aligned table that is one footer read per partition dir)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    df = reader.parquet(*[_abs_file(table_path, f) for f in new_files])
-    names = sorted(constraints)
-    aggs = [
-        F.sum((~F.expr(constraints[n]).eqNullSafe(True)).cast("long"))
-        .alias(f"c{i}")
-        for i, n in enumerate(names)
-    ]
-    row = df.agg(*aggs).collect()[0]
-    bad = {n: int(row[f"c{i}"]) for i, n in enumerate(names)
-           if row[f"c{i}"]}
-    if bad:
-        if cleanup_dir:
-            shutil.rmtree(cleanup_dir, ignore_errors=True)
-        raise ConstraintViolation(
-            "constraint violations (rows not satisfying CHECK): "
-            + ", ".join(f"{n} ({constraints[n]!r}): {c}"
-                        for n, c in sorted(bad.items()))
-        )
+    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.telemetry import observed
+
+    staged = os.path.join(table_path, f"_staged_{final_dir}")
+    names = sorted(checks or {})
+    try:
+        obs = None
+        if names:
+            df, obs = observed(df, f"checks_{final_dir}", **{
+                f"c{i}": F.sum((~F.expr(checks[n]).eqNullSafe(True))
+                               .cast("long"))
+                for i, n in enumerate(names)})
+        write(df, staged)
+        sums = obs.get if obs is not None else {}
+        bad = {n: sums[f"c{i}"] for i, n in enumerate(names)
+               if sums[f"c{i}"]}
+        if bad:
+            raise ConstraintViolation(
+                "constraint violations (rows not satisfying CHECK): "
+                + ", ".join(f"{n} ({checks[n]!r}): {c}"
+                            for n, c in sorted(bad.items()))
+            )
+    except BaseException:
+        shutil.rmtree(staged, ignore_errors=True)
+        raise
+    os.rename(staged, os.path.join(table_path, final_dir))
+    return _list_data_files(table_path, final_dir)
 
 
 def add_constraint(spark: SparkSession, table_path: str, name: str,
@@ -1188,7 +1205,8 @@ def add_constraint(spark: SparkSession, table_path: str, name: str,
     proving the CURRENT data satisfies it (a constraint the existing
     table already violates would make every future write fail). Every
     subsequent write_version / merge_version_cow / predicate-DML
-    commit enforces it on the rows it adds; the Data Source writer
+    commit enforces it on the rows it adds, inside that commit's
+    write job (see ``_stage``); the Data Source writer
     carries it forward in the manifest but leaves enforcement to the
     library paths (documented there)."""
     head, parent = _latest(table_path)
@@ -1444,7 +1462,8 @@ def _write_rewrite(df: DataFrame, staged: str, parent: dict,
     into one file and break the whole-file metadata-only path for later
     partition deletes until an OPTIMIZE re-clustered. Unpartitioned
     tables coalesce to the touched-file count so a DML touching k files
-    emits ~k files, not one per shuffle partition."""
+    emits ~k files, not one per shuffle partition. Both shapes keep
+    ``_stage``'s observed CHECK sums exact."""
     spec = parent.get("partition_by")
     if spec and all(c in df.columns for c in spec):
         _write_partitioned(df, staged, spec)
@@ -1465,8 +1484,9 @@ def write_version(df: DataFrame, table_path: str,
     ``generated`` declares GENERATED ALWAYS AS columns ({col: sql_expr},
     Delta's analog): a column absent from ``df`` is COMPUTED from its
     expression before the write; one the caller supplies is enforced
-    value-by-value against the expression at commit time (NULL-safe
-    equality — the same CHECK machinery as table constraints). The spec
+    value-by-value against the expression inside the write job
+    (NULL-safe equality — the same CHECK machinery as table
+    constraints, see ``_stage``). The spec
     rides the manifest: every subsequent library commit (MERGE,
     DELETE/UPDATE both physics) enforces it on the rows it adds, and
     predicate UPDATE RECOMPUTES generated columns after applying its
@@ -1489,8 +1509,9 @@ def write_version(df: DataFrame, table_path: str,
     appends on identity tables are refused (the Arrow-side writer
     cannot allocate), use the library paths.
 
-    Commit protocol: distributed write into ``_staged_N`` → atomic
-    rename to ``v_N`` → manifest JSON written tmp-then-rename. Readers
+    Commit protocol: distributed write into ``_staged_v_N`` (CHECK
+    sums riding that one job) → atomic rename to ``v_N`` → manifest
+    JSON written tmp-then-rename. Readers
     only discover the version at the final rename, so every
     intermediate failure leaves the table exactly as it was. Version
     numbers are append-only for the table's lifetime: committing a
@@ -1561,25 +1582,17 @@ def write_version(df: DataFrame, table_path: str,
     # removed on conflict below, or by vacuum's orphan sweep after a
     # crash. A shared final name would let the loser delete/replace
     # the winner's already-committed data.
-    token = uuid.uuid4().hex[:12]
-    data_dir = f"v_{version}_{token}"
-    staged = os.path.join(table_path, f"_staged_{version}_{token}")
+    data_dir = f"v_{version}_{uuid.uuid4().hex[:12]}"
     final = os.path.join(table_path, data_dir)
-    if partition_by:
-        _write_partitioned(df, staged, partition_by)
-    else:
-        df.write.mode("overwrite").parquet(staged)
-    os.rename(staged, final)
-    files = _list_data_files(table_path, data_dir)
-    # CHECK constraints: enforced on the written files (one combined
-    # aggregate scan — the df itself is never recomputed), carried
-    # forward in the manifest so every future write keeps enforcing
+    # CHECK constraints: enforced inside the write job, carried forward
+    # in the manifest so every future write keeps enforcing
     cons = _table_constraints(table_path)
-    checks = dict(cons)
-    if generated:
-        checks.update(_gen_checks({"generated": generated}))
-    _enforce_constraints(df.sparkSession, table_path, files, checks,
-                         final, schema=df.schema)
+    files = _stage(
+        table_path, data_dir, df,
+        (lambda d, p: _write_partitioned(d, p, partition_by))
+        if partition_by else
+        (lambda d, p: d.write.mode("overwrite").parquet(p)),
+        _checks({"constraints": cons, "generated": generated}))
     manifest = {
         "version": version,
         "dir": data_dir,
@@ -1789,7 +1802,6 @@ def merge_version_cow(spark: SparkSession, table_path: str,
     import uuid
 
     token = uuid.uuid4().hex[:12]
-    staged = os.path.join(table_path, f"_staged_{version}_{token}")
     final_dir = f"d_{version}_{token}"
     final = os.path.join(table_path, final_dir)
     # NULL delete flags count as upserts — without the coalesce, ~NULL
@@ -1859,18 +1871,14 @@ def merge_version_cow(spark: SparkSession, table_path: str,
     else:
         merged = upserts
     # Rewrite granularity == touched-file count (aligned tables keep
-    # their hive layout instead — see _write_rewrite).
-    _write_rewrite(merged, staged, parent, len(touched))
-    os.rename(staged, final)
-    new_files = _list_data_files(table_path, final_dir)
-
-    # CHECK constraints gate only the NEW files (untouched parent files
-    # were validated by the commits that wrote them); generated-column
+    # their hive layout instead — see _write_rewrite). CHECK
+    # constraints gate only the NEW rows (untouched parent files were
+    # validated by the commits that wrote them); generated-column
     # invariants ride along (supplied values must equal the expression)
-    cons = parent.get("constraints") or {}
-    _enforce_constraints(spark, table_path, new_files,
-                         {**cons, **_gen_checks(parent)}, final,
-                         schema=out_struct)
+    new_files = _stage(
+        table_path, final_dir, merged,
+        lambda d, p: _write_rewrite(d, p, parent, len(touched)),
+        _checks(parent))
 
     # persisted CDF: classify the MERGE's row-level changes from
     # BOUNDED sides — matched parent rows (confined to the touched
@@ -2067,6 +2075,21 @@ def _predicate_cow(spark: SparkSession, table_path: str,
                        else replacement.unionByName(ins))
 
     token = uuid.uuid4().hex[:12]
+    new_files: list[str] = []
+    final = None
+    if replacement is not None:
+        final_dir = f"d_{version}_{token}"
+        final = os.path.join(table_path, final_dir)
+        # Rewrite granularity == touched-file count; aligned tables
+        # keep their hive layout (see _write_rewrite). CHECK
+        # constraints gate the rewritten rows (an UPDATE ... SET can
+        # introduce violations into previously-valid rows);
+        # generated-column invariants ride along. The checked write
+        # runs first, so a rejected commit has staged nothing else.
+        new_files = _stage(
+            table_path, final_dir, replacement,
+            lambda d, p: _write_rewrite(d, p, parent, max(1, len(touched))),
+            _checks(parent))
     # persisted Change Data Feed (cdf.enabled): the matched rows are
     # already confined to the touched + dropped files — one more
     # bounded scan builds the row-level feed CDF consumers read back
@@ -2083,25 +2106,6 @@ def _predicate_cow(spark: SparkSession, table_path: str,
                 F.lit("insert").alias("_change_type"),
                 *[f.name for f in schema.fields]))
         cdf_files, final_cdf = _write_cdf(table_path, version, token, feed)
-    new_files: list[str] = []
-    final = None
-    cons = parent.get("constraints") or {}
-    if replacement is not None:
-        staged = os.path.join(table_path, f"_staged_{version}_{token}")
-        final_dir = f"d_{version}_{token}"
-        final = os.path.join(table_path, final_dir)
-        # Rewrite granularity == touched-file count; aligned tables
-        # keep their hive layout (see _write_rewrite).
-        _write_rewrite(replacement, staged, parent, max(1, len(touched)))
-        os.rename(staged, final)
-        new_files = _list_data_files(table_path, final_dir)
-
-        # CHECK constraints gate the rewritten files (an UPDATE ... SET
-        # can introduce violations into previously-valid rows);
-        # generated-column invariants ride along
-        _enforce_constraints(spark, table_path, new_files,
-                             {**cons, **_gen_checks(parent)}, final,
-                             schema=schema)
 
     own = set(touched) | set(dropped)
 
@@ -2237,7 +2241,7 @@ def copy_into(spark: SparkSession, table_path: str, source_dir: str,
     The insert path is the REPLACE WHERE machinery with the
     literally-false predicate (pure insert, discovery scan skipped):
     generated columns computed, identity allocated, CHECK constraints
-    enforced on the new files, ``cdf.enabled`` records inserts, and
+    enforced on the inserted rows, ``cdf.enabled`` records inserts, and
     conflict handling follows the blind-append rebase rules. Source
     rows are cast to the table schema; extra/missing columns raise.
     """
@@ -2474,8 +2478,6 @@ def _write_dv_sidecar(spark: SparkSession, table_path: str, version: int,
         out = new_rows.repartitionByRange(parts, "file", "pos")
     out = out.sortWithinPartitions("file", "pos")
     dv_dir = f"s_{version}_{token}"
-    staged_dv = os.path.join(table_path, f"_staged_{version}_dv_{token}")
-    final_dv = os.path.join(table_path, dv_dir)
     # parquet v2 page encoding: sorted positions delta-bit-pack to a
     # few bits per row (the poor man's roaring bitmap) instead of
     # 8-byte plains. Dictionary is disabled for pos specifically —
@@ -2483,15 +2485,15 @@ def _write_dv_sidecar(spark: SparkSession, table_path: str, version: int,
     # mid-write fallback is PLAIN, not delta (measured 78 KB vs 214 B
     # for the same 16k positions); the file-URI column keeps its
     # dictionary (8 distinct values).
-    out.write.mode("overwrite") \
-        .option("parquet.writer.version", "v2") \
-        .option("parquet.enable.dictionary#pos", "false") \
-        .parquet(staged_dv)
-    os.rename(staged_dv, final_dv)
-    sidecar_files = _list_data_files(table_path, dv_dir)
+    sidecar_files = _stage(
+        table_path, dv_dir, out,
+        lambda d, p: d.write.mode("overwrite")
+        .option("parquet.writer.version", "v2")
+        .option("parquet.enable.dictionary#pos", "false")
+        .parquet(p))
     dv_bytes = sum(os.path.getsize(_abs_file(table_path, f))
                    for f in sidecar_files)
-    return sidecar_files, dv_bytes, final_dv
+    return sidecar_files, dv_bytes, os.path.join(table_path, dv_dir)
 
 
 def _split_fully_matched(spark: SparkSession, table_path: str,
@@ -2641,22 +2643,13 @@ def _mor_dml(spark: SparkSession, table_path: str, predicate_sql: str,
         spark, table_path, mcounts, touched, touched_uris, parent_dv)
 
     token = uuid.uuid4().hex[:12]
-    sidecar_files: list[str] = []
-    dv_bytes, final_dv = 0, None
-    if dv_touched:
-        sidecar_files, dv_bytes, final_dv = _write_dv_sidecar(
-            spark, table_path, version, token,
-            matched.filter(F.col("__f").isin(dv_uris)), dv_touched,
-            dv_uris, parent_dv, n_rows=n_dv_rows,
-        )
-
-    # UPDATE: append the post-update row images as new data files
+    # UPDATE: append the post-update row images as new data files. The
+    # checked write runs first, so a rejected commit has staged nothing
+    # else.
     new_files: list[str] = []
-    cons = parent.get("constraints") or {}
     final_data = None
     if make_rows is not None:
         data_dir = f"d_{version}_{token}"
-        staged = os.path.join(table_path, f"_staged_{version}_{token}")
         final_data = os.path.join(table_path, data_dir)
         updated = make_rows(matched, schema)
         # GENERATED ALWAYS AS columns recompute on the post-update
@@ -2665,12 +2658,19 @@ def _mor_dml(spark: SparkSession, table_path: str, predicate_sql: str,
             updated = _apply_generated(
                 updated, parent["generated"], schema)
         updated = updated.select(*[f.name for f in schema.fields])
-        _write_rewrite(updated, staged, parent, len(touched))
-        os.rename(staged, final_data)
-        new_files = _list_data_files(table_path, data_dir)
-        _enforce_constraints(spark, table_path, new_files,
-                             {**cons, **_gen_checks(parent)}, final_data,
-                             schema=schema)
+        new_files = _stage(
+            table_path, data_dir, updated,
+            lambda d, p: _write_rewrite(d, p, parent, len(touched)),
+            _checks(parent))
+
+    sidecar_files: list[str] = []
+    dv_bytes, final_dv = 0, None
+    if dv_touched:
+        sidecar_files, dv_bytes, final_dv = _write_dv_sidecar(
+            spark, table_path, version, token,
+            matched.filter(F.col("__f").isin(dv_uris)), dv_touched,
+            dv_uris, parent_dv, n_rows=n_dv_rows,
+        )
 
     # persisted CDF: the pinned matched rows already hold the full
     # preimages — the feed costs one bounded pass, no re-scan
@@ -2791,7 +2791,6 @@ def merge_version_mor(spark: SparkSession, table_path: str,
     column). ``merge_version_cow`` routes here automatically when the
     table property ``dv.enabled = 'true'`` is set (and evolve_schema
     is off)."""
-    import shutil
     import uuid
 
     from pyspark.sql import functions as F
@@ -2825,10 +2824,9 @@ def merge_version_mor(spark: SparkSession, table_path: str,
     touched_uris: list[str] = []
     dropped: list[str] = []
     dv_touched: list[str] = []
-    sidecar_files: list[str] = []
-    dv_bytes = 0
+    dv_uris: list[str] = []
+    n_dv_rows = 0
     n_deleted = 0
-    final_dv = None
     want_cdf = _cdf_enabled(parent)
     matched = None
     if candidates:
@@ -2859,12 +2857,6 @@ def merge_version_mor(spark: SparkSession, table_path: str,
             dropped, dv_touched, dv_uris, n_dv_rows = _split_fully_matched(
                 spark, table_path, mcounts, touched, touched_uris,
                 parent_dv)
-            if dv_touched:
-                sidecar_files, dv_bytes, final_dv = _write_dv_sidecar(
-                    spark, table_path, version, token,
-                    matched.filter(F.col("__f").isin(dv_uris)),
-                    dv_touched, dv_uris, parent_dv, n_rows=n_dv_rows,
-                )
 
     upserts = changes.filter(
         ~F.coalesce(F.col(delete_col), F.lit(False))
@@ -2913,25 +2905,29 @@ def merge_version_mor(spark: SparkSession, table_path: str,
     upserts = upserts.select(*data_cols)
     n_upserts = upserts.count()
     new_files: list[str] = []
-    cons = parent.get("constraints") or {}
     final_data = None
     if n_upserts:
+        # the checked write runs first, so a rejected commit has staged
+        # nothing else
         data_dir = f"d_{version}_{token}"
-        staged = os.path.join(table_path, f"_staged_{version}_{token}")
         final_data = os.path.join(table_path, data_dir)
-        _write_rewrite(upserts, staged, parent, len(touched))
-        os.rename(staged, final_data)
-        new_files = _list_data_files(table_path, data_dir)
-        _enforce_constraints(spark, table_path, new_files,
-                             {**cons, **_gen_checks(parent)}, final_data,
-                             schema=schema)
+        new_files = _stage(
+            table_path, data_dir, upserts,
+            lambda d, p: _write_rewrite(d, p, parent, len(touched)),
+            _checks(parent))
     if not touched and not new_files:
-        if final_dv is not None:
-            shutil.rmtree(final_dv, ignore_errors=True)
         return {"version": None, "files_total": len(pfiles),
                 "files_shared": len(pfiles), "files_rewritten": 0,
                 "files_dv": 0, "rows_deleted": 0, "new_files": 0,
                 "dv_bytes": 0}
+    sidecar_files: list[str] = []
+    dv_bytes, final_dv = 0, None
+    if dv_touched:
+        sidecar_files, dv_bytes, final_dv = _write_dv_sidecar(
+            spark, table_path, version, token,
+            matched.filter(F.col("__f").isin(dv_uris)),
+            dv_touched, dv_uris, parent_dv, n_rows=n_dv_rows,
+        )
 
     # persisted CDF from bounded sides (same shape as the COW twin):
     # pinned matched preimages vs the change images
@@ -4075,18 +4071,15 @@ def optimize_incremental(spark: SparkSession, table_path: str,
         compacted = compacted.repartitionByRange(target_files, sort_col)
     else:
         compacted = compacted.coalesce(target_files)
-    token = uuid.uuid4().hex[:12]
-    staged = os.path.join(table_path, f"_staged_{version}_{token}")
-    final_dir = f"d_{version}_{token}"
+    final_dir = f"d_{version}_{uuid.uuid4().hex[:12]}"
     final = os.path.join(table_path, final_dir)
-    if parent.get("partition_by"):
-        # re-compacted files keep the table's partition alignment, so
-        # whole-partition deletes stay metadata-only after OPTIMIZE
-        _write_partitioned(compacted, staged, parent["partition_by"])
-    else:
-        compacted.write.mode("overwrite").parquet(staged)
-    os.rename(staged, final)
-    new_files = _list_data_files(table_path, final_dir)
+    # re-compacted files keep the table's partition alignment, so
+    # whole-partition deletes stay metadata-only after OPTIMIZE
+    spec = parent.get("partition_by")
+    new_files = _stage(
+        table_path, final_dir, compacted,
+        (lambda d, p: _write_partitioned(d, p, spec)) if spec else
+        (lambda d, p: d.write.mode("overwrite").parquet(p)))
 
     small_set = set(small)
 
@@ -4372,14 +4365,13 @@ def _write_cdf(table_path: str, version: int, token: str,
     ``readChangeFeed`` source — never join two snapshots at read time.
     Returns (rel files, final dir) for the manifest's ``cdf`` key and
     conflict cleanup; vacuum refcounts these like data files."""
-    staged = os.path.join(table_path, f"_staged_{version}_cdf_{token}")
     cdf_dir = f"c_{version}_{token}"
-    final = os.path.join(table_path, cdf_dir)
     # change volume is O(changed rows); a handful of files suffices
     # and keeps tiny CDC commits from spraying shuffle-width parts
-    feed.coalesce(4).write.mode("overwrite").parquet(staged)
-    os.rename(staged, final)
-    return _list_data_files(table_path, cdf_dir), final
+    return (_stage(table_path, cdf_dir, feed,
+                   lambda d, p: d.coalesce(4).write.mode("overwrite")
+                   .parquet(p)),
+            os.path.join(table_path, cdf_dir))
 
 
 def _change_entries(table_path: str, version: int, manifest: dict,
@@ -4705,13 +4697,12 @@ def _deep_clone(spark: SparkSession, src_path: str, dst_path: str,
     new_files: list[str] = []
     materialized = None
     if vectored:
-        repl = _read_files_dv(spark, src_path, src, vectored, schema)
-        staged = os.path.join(dst_path, f"_staged_0_{token}")
         final_dir = f"d_0m_{token}"
         materialized = os.path.join(dst_path, final_dir)
-        _write_rewrite(repl, staged, src, max(1, len(vectored)))
-        os.rename(staged, materialized)
-        new_files = _list_data_files(dst_path, final_dir)
+        new_files = _stage(
+            dst_path, final_dir,
+            _read_files_dv(spark, src_path, src, vectored, schema),
+            lambda d, p: _write_rewrite(d, p, src, max(1, len(vectored))))
     manifest = {
         "version": 0,
         "files": copied_rel + new_files,

@@ -275,24 +275,40 @@ def test_operators_make_no_inferring_parquet_reads():
     assert found == [], found
 
 
-#: The loops that keep their own ``except CommitConflict`` besides
-#: ``versioned._commit``: their retry rules differ from the
-#: publish-or-rebase loop's.
-COMMIT_CONFLICT_ALLOWLIST = {
-    ("versioned.py", "_commit"),
-    ("versioned.py", "reserve_identity_block"),   # identity reservation
-    ("versioned_ds.py", "VersionedWriter.commit"),  # DS blind append
+#: The defs that keep their own copy of a commit-protocol step: the
+#: loops with an ``except CommitConflict`` besides ``versioned._commit``
+#: (their retry rules differ from the publish-or-rebase loop's) and the
+#: staged renames besides ``versioned._stage``.
+COMMIT_PROTOCOL_ALLOWLIST = {
+    ("versioned.py", "_commit", "except CommitConflict"),
+    # identity reservation
+    ("versioned.py", "reserve_identity_block", "except CommitConflict"),
+    # DS blind append
+    ("versioned_ds.py", "VersionedWriter.commit", "except CommitConflict"),
+    ("versioned.py", "_stage", "staged rename"),
+    # the DS writer moves only the part files its task commit messages
+    # name, leaving failed attempts' parts behind in the staged dir
+    ("versioned_ds.py", "VersionedWriter.commit", "staged rename"),
 }
+
+#: Calls that return a commit's own new files.
+_OWN_OUTPUT = {"_stage", "_list_data_files", "_write_cdf", "_write_dv_sidecar"}
 
 
 def _commit_protocol_copies(name: str, source: str,
-                            allow=COMMIT_CONFLICT_ALLOWLIST) -> list[tuple]:
+                            allow=COMMIT_PROTOCOL_ALLOWLIST) -> list[tuple]:
     """(file, def, line, what) of each hand-rolled copy of a commit
     protocol helper: a ``_load_manifest(..., avail[-1])`` head lookup
     (``_latest`` resolves the head), a loop over ``_PER_COMMIT_KEYS``
-    (``_child`` strips them), and an ``except CommitConflict`` outside
-    the allowlisted loops (``_commit`` publishes or rebases). ``def``
-    is the enclosing top-level function or ``Class.method``."""
+    (``_child`` strips them), an ``except CommitConflict`` (``_commit``
+    publishes or rebases), an ``os.rename`` of a staged dir (``_stage``
+    stages, checks and renames), and an ``own-output read``: a Spark
+    read (``<x>.read...`` or ``_read_files_dv``) of names bound from
+    an ``_OWN_OUTPUT`` call in the same def, i.e. a commit scanning
+    what it just wrote (CHECK sums ride the write job instead).
+    Footer reads for stats are not Spark reads. Hits in ``allow`` are
+    skipped. ``def`` is the enclosing top-level function or
+    ``Class.method``."""
     import ast
 
     def called(node, fn):
@@ -310,7 +326,13 @@ def _commit_protocol_copies(name: str, source: str,
                 and isinstance(node.slice.op, ast.USub)
                 and getattr(node.slice.operand, "value", None) == 1)
 
+    def staged(node):
+        return any("staged" in (n or "") for n in names(node)) or any(
+            isinstance(c, ast.Constant) and "_staged_" in str(c.value)
+            for c in ast.walk(node))
+
     found = []
+    own: dict[str, set] = {}  # def -> names bound from _OWN_OUTPUT calls
 
     def visit(node, where, in_class):
         for child in ast.iter_child_nodes(node):
@@ -321,6 +343,12 @@ def _commit_protocol_copies(name: str, source: str,
                     inner, cls = child.name, isinstance(child, ast.ClassDef)
                 elif in_class:
                     inner, cls = f"{where}.{child.name}", False
+            if (isinstance(child, ast.Assign)
+                    and isinstance(child.value, ast.Call)
+                    and any(called(child.value, fn) for fn in _OWN_OUTPUT)):
+                own.setdefault(inner, set()).update(
+                    n.id for t in child.targets for n in ast.walk(t)
+                    if isinstance(n, ast.Name))
             what = None
             if (isinstance(child, ast.Call)
                     and called(child, "_load_manifest")
@@ -331,10 +359,18 @@ def _commit_protocol_copies(name: str, source: str,
                 what = "per-commit strip loop"
             elif (isinstance(child, ast.ExceptHandler)
                   and child.type is not None
-                  and "CommitConflict" in names(child.type)
-                  and (name, inner) not in allow):
+                  and "CommitConflict" in names(child.type)):
                 what = "except CommitConflict"
-            if what:
+            elif (isinstance(child, ast.Call) and called(child, "rename")
+                  and child.args and staged(child.args[0])):
+                what = "staged rename"
+            elif (isinstance(child, ast.Call)
+                  and ({"read", "readStream"} & names(child.func)
+                       or called(child, "_read_files_dv"))
+                  and own.get(inner, set()) & set().union(
+                      *map(names, [*child.args, *child.keywords]))):
+                what = "own-output read"
+            if what and (name, inner, what) not in allow:
                 found.append((name, inner, child.lineno, what))
             visit(child, inner, cls)
 
@@ -345,8 +381,10 @@ def _commit_protocol_copies(name: str, source: str,
 def test_versioned_commits_use_the_commit_protocol_helpers():
     """Every versioned commit resolves the head through
     ``versioned._latest``, copies a parent into a metadata commit
-    through ``versioned._child`` and publishes data through
-    ``versioned._commit``; no module keeps a hand-rolled copy."""
+    through ``versioned._child``, stages, checks and renames its data
+    dirs through ``versioned._stage`` without reading them back, and
+    publishes through ``versioned._commit``; no module keeps a
+    hand-rolled copy."""
     from tests.conftest import REPO
 
     seeded = (
@@ -361,11 +399,21 @@ def test_versioned_commits_use_the_commit_protocol_helpers():
         "            try:\n"
         "                publish()\n"
         "            except (OSError, versioned.CommitConflict):\n"
-        "                raise\n")
+        "                raise\n"
+        "def merge(spark, p, df, version, token):\n"
+        "    staged = os.path.join(p, f'_staged_{version}_{token}')\n"
+        "    df.write.parquet(staged)\n"
+        "    os.rename(staged, os.path.join(p, f'd_{version}'))\n"
+        "    files = versioned._list_data_files(p, f'd_{version}')\n"
+        "    spark.read.parquet(*[os.path.join(p, f) for f in files])\n"
+        "    os.rename(os.path.join(p, f'_staged_{version}_cdf'), p)\n")
     assert _commit_protocol_copies("x.py", seeded) == [
         ("x.py", "add", 3, "head lookup"),
         ("x.py", "add", 4, "per-commit strip loop"),
         ("x.py", "W.commit", 11, "except CommitConflict"),
+        ("x.py", "merge", 16, "staged rename"),
+        ("x.py", "merge", 18, "own-output read"),
+        ("x.py", "merge", 19, "staged rename"),
     ]
     pkg = REPO / "batch_processing_etl_pipeline_for_chess_puzzle_generator_spark"
     paths = [pkg / "versioned.py", pkg / "merge_sql.py",
@@ -375,11 +423,11 @@ def test_versioned_commits_use_the_commit_protocol_helpers():
     found = [hit for path in paths
              for hit in _commit_protocol_copies(path.name, path.read_text())]
     assert found == [], found
-    # every allowlisted loop still exists (the list can't rot)
-    loops = {hit[:2] for path in paths
-             for hit in _commit_protocol_copies(path.name, path.read_text(),
-                                                allow=set())}
-    assert loops == COMMIT_CONFLICT_ALLOWLIST, loops
+    # every allowlisted step still exists (the list can't rot)
+    steps = {(f, d, what) for path in paths
+             for f, d, _, what in _commit_protocol_copies(
+                 path.name, path.read_text(), allow=set())}
+    assert steps == COMMIT_PROTOCOL_ALLOWLIST, steps
 
 
 #: The only place that spells out the harness's warm-ups and view loop.

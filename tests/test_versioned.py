@@ -1553,6 +1553,69 @@ def test_check_constraints_lifecycle(spark, tmp_path):
         versioned.drop_constraint(path, "nope")
 
 
+def _commit_jobs(spark, commit) -> int:
+    """Spark jobs ``commit()`` runs, counted under its own job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"commit-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "commit jobs")
+    try:
+        commit()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_constraints_cost_no_spark_jobs(spark, tmp_path):
+    """CHECK sums ride the commit's own write job: a constrained
+    write_version, merge_version_cow and update_where each run as many
+    Spark jobs as the same commit on an unconstrained twin."""
+    plain, checked = str(tmp_path / "plain"), str(tmp_path / "checked")
+    for p in (plain, checked):
+        versioned.write_version(_mk_ranged(spark, 2000, 4), p)
+    versioned.add_constraint(spark, checked, "k_nonneg", "k >= 0")
+    changes = spark.createDataFrame(
+        [(5, "m", False), (1500, "n", False), (9000, "new", False)],
+        "k INT, v STRING, is_delete BOOLEAN")
+    commits = {
+        "write_version": lambda p: versioned.write_version(
+            _mk_ranged(spark, 2000, 4), p),
+        "merge_version_cow": lambda p: versioned.merge_version_cow(
+            spark, p, changes, "k"),
+        "update_where": lambda p: versioned.update_where(
+            spark, p, {"v": "'u'"}, "k = 7"),
+    }
+    jobs = {op: (_commit_jobs(spark, lambda: run(checked)),
+                 _commit_jobs(spark, lambda: run(plain)))
+            for op, run in commits.items()}
+    assert all(c == p for c, p in jobs.values()), jobs
+    assert versioned._table_constraints(checked) == {"k_nonneg": "k >= 0"}
+
+
+@pytest.mark.parametrize("physics", ["cow", "mor"])
+def test_rejected_constraint_update_leaves_no_dir(spark, tmp_path, physics):
+    """An UPDATE or MERGE a CHECK constraint rejects removes every dir
+    it staged (data, deletion-vector sidecar, change feed): the table
+    dir holds exactly what it held before."""
+    path = str(tmp_path / "tbl")
+    versioned.write_version(_mk_ranged(spark, 30, 2), path)
+    versioned.set_table_property(path, "cdf.enabled", "true")
+    if physics == "mor":
+        versioned.set_table_property(path, "dv.enabled", "true")
+    versioned.add_constraint(spark, path, "k_nonneg", "k >= 0")
+    before = sorted(os.listdir(path))
+    with pytest.raises(versioned.ConstraintViolation, match="k_nonneg"):
+        versioned.update_where(spark, path, {"k": "-5"}, "k = 3")
+    assert sorted(os.listdir(path)) == before
+    bad = spark.createDataFrame([(4, "x", False), (-1, "y", False)],
+                                "k INT, v STRING, is_delete BOOLEAN")
+    with pytest.raises(versioned.ConstraintViolation, match="k_nonneg"):
+        versioned.merge_version_cow(spark, path, bad, "k")
+    assert sorted(os.listdir(path)) == before
+
+
 def test_timestamp_as_of_time_travel(spark, tmp_path):
     """TIMESTAMP AS OF: library read, Data Source option, and SQL
     route all resolve to the latest version committed at or before the

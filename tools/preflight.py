@@ -34,8 +34,10 @@ caught) every historical driver-red:
    racing commits that must rebase (disjoint DML, compaction under
    appends) or conflict loudly (overlapping DML, shape changes,
    clobbering writers), the manifest CAS itself, and the Spark-free
-   rebase-predicate table. Every commit shares one publish-or-rebase
-   loop (``versioned._commit``), so these gate each change to it.
+   rebase-predicate table, and the CHECK-constraint tests. Every
+   commit shares one publish-or-rebase loop (``versioned._commit``)
+   and one staged-write step (``versioned._stage``), so these gate
+   each change to them.
 
 Run before committing any new or changed ``queries()`` formulation:
 
@@ -83,7 +85,8 @@ def main() -> int:
         "tests/test_versioned.py", "tests/test_manifest_log.py",
         "tests/test_defaults.py::"
         "test_default_declared_after_plan_conflicts_loudly",
-        "-k", "concurrent or conflict or racing or clobber or cas or rebase",
+        "-k", "concurrent or conflict or racing or clobber or cas or rebase "
+        "or constraint",
     ]))
     for name, cmd in stages:
         if name == "sf0.1-exec":
