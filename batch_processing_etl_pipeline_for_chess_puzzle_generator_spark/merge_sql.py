@@ -758,20 +758,23 @@ _CTAS_RE = re.compile(
 )
 
 
-def insert_into(spark: SparkSession, statement: str) -> None:
+def insert_into(spark: SparkSession, statement: str) -> dict:
     """``INSERT INTO versioned.`/p` <select>`` — appends the SELECT's
-    rows as a new version via the versioned Data Source fast-append
-    (requires ``spark.dataSource.register(VersionedDataSource)``;
-    nothing is rewritten, the manifest CAS serializes writers). The
-    SELECT's schema must match the table's (schema evolution goes
-    through MERGE)."""
+    rows to an existing table as ONE commit through the library insert
+    path (the one :func:`versioned.copy_into` takes): omitted defaulted
+    and generated columns are filled, identity values allocated, CHECK
+    constraints and supplied generated columns enforced inside the
+    write job, and ``cdf.enabled`` records the inserts. Nothing is
+    rewritten; a racing commit on other files rebases. The SELECT's
+    schema must match the table's, leaving out the columns the commit
+    fills (schema evolution goes through MERGE)."""
+    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
+
     rw = _REPLACE_WHERE_RE.match(statement)
     if rw:
         # INSERT INTO t REPLACE WHERE pred <select> — Delta's atomic
         # region replacement (dynamic partition overwrite when pred is
         # a partition filter); one commit, library physics
-        from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
-
         body = _rewrite_versioned_refs(spark, rw["q"])
         return versioned.replace_where(
             spark, rw["path"], spark.sql(body), rw["pred"])
@@ -781,9 +784,17 @@ def insert_into(spark: SparkSession, statement: str) -> None:
             "expected INSERT INTO versioned.`/path` [REPLACE WHERE "
             f"<pred>] <select...>; got: {statement!r}"
         )
-    body = _rewrite_versioned_refs(spark, m["q"])
-    (spark.sql(body).write.format("versioned").mode("append")
-     .option("path", m["path"]).save())
+    rows = spark.sql(_rewrite_versioned_refs(spark, m["q"]))
+    head = versioned._latest(m["path"])[1]
+    omitted = {c for c in (*(head.get("defaults") or {}),
+                           *(head.get("generated") or {}))
+               if c not in rows.columns}
+    versioned._check_append_schema(
+        head, rows.schema, omitted | set(head.get("identity") or {}))
+    return versioned._predicate_cow(
+        spark, m["path"], "false", lambda kept, _schema: kept,
+        operation="APPEND", make_feed=versioned._delete_feed,
+        insert_rows=rows)
 
 
 _DELETE_FROM_RE = re.compile(

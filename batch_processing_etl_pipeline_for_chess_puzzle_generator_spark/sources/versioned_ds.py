@@ -521,6 +521,26 @@ class VersionedReader(DataSourceReader):
             yield batch
 
 
+def _cdf_partitions(table_path: str, lo: int, hi: int,
+                    fresh: bool = False) -> list:
+    """CDF planning: one partition per change-carrying file of each
+    version in (lo, hi] — persisted cdf files as-is (their
+    ``_change_type`` is in-file), append-only commits' added files
+    tagged ``insert``, data-neutral commits nothing. A destructive
+    commit without change files raises (versioned._change_entries'
+    guidance names both cdf.enabled and table_changes); a vacuumed
+    version raises from ``versioned._iter_changes``."""
+    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
+
+    parts: list[_CdfPartition] = []
+    for v, m, prev in versioned._iter_changes(table_path, lo, hi, fresh):
+        kind, entries = versioned._change_entries(table_path, v, m, prev)
+        ct = None if kind == "cdf" else "insert"
+        parts.extend(_CdfPartition(versioned._abs_file(table_path, e), ct, v)
+                     for e in entries)
+    return parts
+
+
 class VersionedCdfReader(DataSourceReader):
     """Batch Change Data Feed read —
     ``spark.read.format("versioned").option("readChangeFeed", "true")``
@@ -536,14 +556,11 @@ class VersionedCdfReader(DataSourceReader):
         from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
 
         self.target = schema
-        # plan eagerly on the driver (manifest metadata only) by
-        # borrowing the stream reader's classification
+        # plan eagerly on the driver (manifest metadata only)
         head, m = versioned._latest(table_path)
         self.name_map = versioned._column_mapping(m)
-        helper = VersionedStreamReader(table_path, schema, None,
-                                       change_feed=True)
-        self.parts = helper._change_partitions(
-            lo, head if hi is None else hi)
+        self.parts = _cdf_partitions(table_path, lo,
+                                     head if hi is None else hi)
 
     def partitions(self):
         return self.parts if self.parts else [_CdfPartition(None, None, -1)]
@@ -570,6 +587,14 @@ class VersionedStreamReader(DataSourceStreamReader):
     (default 0 = full history; for an append-only table that equals
     the current snapshot). Offsets are checkpointable dicts, so a
     restarted query resumes from the last committed version.
+
+    Every batch walks its range through ``versioned._iter_changes``.
+    A batch resuming from offset ``lo`` needs version ``lo`` live (its
+    successor's changes are a diff against it): after VACUUM dropped
+    it, the batch raises with the re-bootstrap guidance instead of
+    re-emitting rows the query already consumed. Only a fresh query's
+    first batch may start behind a vacuumed version; it then reads its
+    first live version whole.
 
     Change semantics (Delta parity): a commit that REMOVES files or
     touches deletion vectors (COW MERGE/DML, MOR DML, overwrite,
@@ -609,102 +634,46 @@ class VersionedStreamReader(DataSourceStreamReader):
         avail = versioned.versions(self.table_path)
         return {"version": avail[-1] if avail else self.starting - 1}
 
-    def _require_range_live(self, versioned, lo: int, hi: int) -> None:
-        """Fail LOUDLY when the unconsumed range (lo, hi] includes
-        versions VACUUM already dropped — iterating ``versions()``
-        alone would silently skip them, and a curation consumer would
-        permanently miss their rows (the batch ``read_changes`` raises
-        on exactly this; the stream must too). Recovery is documented
-        at the raise site: re-seed from the current snapshot (e.g.
-        ``streaming.jobs.bootstrap_dedup_corpus`` — txn stamps make
-        the re-seed append-idempotent), then restart with a FRESH
-        checkpoint and ``startingVersion`` at the earliest retained
-        version."""
-        avail = versioned.versions(self.table_path)
-        missing = sorted(set(range(max(lo + 1, 0), hi + 1)) - set(avail))
-        if missing:
-            earliest = avail[0] if avail else None
-            raise ValueError(
-                f"versions {missing} of {self.table_path} in this "
-                "stream's unconsumed range were vacuumed — their change "
-                "history is gone and silently skipping them would lose "
-                "rows. Re-seed consumers from the current snapshot "
-                "(streaming.jobs.bootstrap_dedup_corpus / "
-                "bootstrap_vector_index re-triage it against the "
-                "committed state; per-version txn stamps keep the "
-                "re-seed append-idempotent), then restart with a fresh "
-                f"checkpoint and .option('startingVersion', {earliest})"
-            )
-
     def _added_files(self, lo: int, hi: int) -> list[str]:
         from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
 
-        self._require_range_live(versioned, lo, hi)
         added: list[str] = []
-        prev: set[str] = set()
-        prev_dv: dict = {}
-        for v in versioned.versions(self.table_path):
-            if v > hi:
-                break
-            m = versioned._load_manifest(self.table_path, v)
+        for v, m, prev in versioned._iter_changes(
+                self.table_path, lo, hi, fresh=lo == self.starting - 1):
             files = m["files"]
-            dv = versioned._dv_map(m)
-            if lo < v <= hi:
-                op = (m.get("operation") or "").upper()
-                if op.startswith("OPTIMIZE"):
-                    # data-neutral compaction (Delta dataChange=false):
-                    # rewritten content was already emitted — skip
-                    prev, prev_dv = set(files), dv
-                    continue
-                removed = prev - set(files)
-                dv_changed = any(
-                    dv.get(f) != prev_dv.get(f)
-                    for f in files if f in prev
+            if prev is None:
+                added.extend(files)
+                continue
+            op = (m.get("operation") or "").upper()
+            if op.startswith("OPTIMIZE"):
+                # data-neutral compaction (Delta dataChange=false):
+                # rewritten content was already emitted — skip
+                continue
+            pfiles = set(prev["files"])
+            dv, prev_dv = versioned._dv_map(m), versioned._dv_map(prev)
+            removed = pfiles - set(files)
+            dv_changed = any(dv.get(f) != prev_dv.get(f)
+                             for f in files if f in pfiles)
+            if (removed or dv_changed) and not self.ignore_changes:
+                raise ValueError(
+                    f"version {v} of {self.table_path} "
+                    f"({m.get('operation') or 'unknown op'}) removed "
+                    "or deletion-vectored rows — an append stream "
+                    "cannot represent that. Stream row-level "
+                    "changes with .option('readChangeFeed', 'true') "
+                    "(table property cdf.enabled='true' persists "
+                    "change files for DML commits), read them in "
+                    "batch via versioned.table_changes, or set "
+                    ".option('ignoreChanges', 'true') to stream "
+                    "added files only (rewritten files re-emit "
+                    "their surviving rows)"
                 )
-                if (removed or dv_changed) and not self.ignore_changes:
-                    raise ValueError(
-                        f"version {v} of {self.table_path} "
-                        f"({m.get('operation') or 'unknown op'}) removed "
-                        "or deletion-vectored rows — an append stream "
-                        "cannot represent that. Stream row-level "
-                        "changes with .option('readChangeFeed', 'true') "
-                        "(table property cdf.enabled='true' persists "
-                        "change files for DML commits), read them in "
-                        "batch via versioned.table_changes, or set "
-                        ".option('ignoreChanges', 'true') to stream "
-                        "added files only (rewritten files re-emit "
-                        "their surviving rows)"
-                    )
-                added.extend(f for f in files if f not in prev)
-            prev, prev_dv = set(files), dv
+            added.extend(f for f in files if f not in pfiles)
         return added
 
     def _change_partitions(self, lo: int, hi: int) -> list:
-        """CDF-mode planning: one partition per change-carrying file of
-        each version in (lo, hi] — persisted cdf files as-is (their
-        ``_change_type`` is in-file), append-only commits' added files
-        tagged ``insert``, data-neutral commits nothing. A destructive
-        commit without change files raises (versioned._change_entries'
-        guidance names both cdf.enabled and table_changes)."""
-        from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
-
-        self._require_range_live(versioned, lo, hi)
-        parts: list[_CdfPartition] = []
-        prev = None
-        for v in versioned.versions(self.table_path):
-            if v > hi:
-                break
-            m = versioned._load_manifest(self.table_path, v)
-            if lo < v <= hi:
-                kind, entries = versioned._change_entries(
-                    self.table_path, v, m, prev)
-                ct = None if kind == "cdf" else "insert"
-                parts.extend(
-                    _CdfPartition(
-                        versioned._abs_file(self.table_path, e), ct, v)
-                    for e in entries)
-            prev = m
-        return parts
+        return _cdf_partitions(self.table_path, lo, hi,
+                               fresh=lo == self.starting - 1)
 
     def partitions(self, start: dict, end: dict):
         from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
@@ -877,7 +846,7 @@ class VersionedDataSource(DataSource):
         # stamp rides the SAME commit via the txn ledger, AND the
         # write itself becomes a no-op when txnVersion is <= the
         # table's recorded stamp for the app (checked at commit time,
-        # see VersionedWriter.commit) — matching Delta's contract so
+        # see VersionedWriter._build) — matching Delta's contract so
         # foreachBatch re-deliveries are safe on the option alone.
         # Both or neither.
         app = self.options.get("txnappid")
@@ -1054,24 +1023,9 @@ class _WrotePart(WriterCommitMessage):
     n_rows: int
 
 
-def _append_compatible(table_schema: dict, append_schema: dict) -> bool:
-    """Append-time schema check: names, order, and types must match
-    exactly; nullability may only NARROW (non-nullable data into a
-    nullable table column is always safe — e.g. appending a range()
-    projection into a CONVERTed table whose inferred schema is
-    all-nullable). A nullable append into a non-nullable column stays
-    a mismatch."""
-    tf, af = table_schema.get("fields", []), append_schema.get("fields", [])
-    if len(tf) != len(af):
-        return False
-    for t, a in zip(tf, af):
-        if (t.get("name") != a.get("name")
-                or t.get("type") != a.get("type")
-                or t.get("metadata") != a.get("metadata")):
-            return False
-        if a.get("nullable", True) and not t.get("nullable", True):
-            return False
-    return True
+class _Superseded(Exception):
+    """The table already records this write's (txnAppId, txnVersion)
+    stamp: the write is a no-op."""
 
 
 class VersionedWriter(DataSourceArrowWriter):
@@ -1088,10 +1042,18 @@ class VersionedWriter(DataSourceArrowWriter):
     Executors stream Arrow batches straight into parquet part files
     under a per-writer-unique ``_staged_w_<token>`` dir (invisible to
     readers — manifests are visibility; a crashed job's dir is swept
-    by vacuum). The driver-side commit renames the staged dir to
-    ``v_N_<token>`` and publishes the manifest; a losing concurrent
-    commit cleans up its own dir and raises CommitConflict, never
-    touching the winner's data (same contract as write_version).
+    by vacuum). The driver-side commit moves the part files named by
+    task commit messages into ``v_N_<token>`` and publishes through
+    ``versioned._commit``, the library's publish-or-rebase loop. An
+    append read nothing, so a lost CAS rebuilds it on the winner (up
+    to ``_COMMIT_ATTEMPTS`` attempts); each build re-checks the txn
+    stamp, the identity race and the schema against its base. An
+    overwrite raises CommitConflict on the first loss. A commit that
+    does not publish removes its own dir, never touching the winner's
+    data (same contract as write_version). CHECK constraints and
+    generated columns ride the manifest but are not enforced here (no
+    SparkSession at commit time): enforcement lives on the library
+    write paths, SQL ``INSERT INTO`` included.
     """
 
     def __init__(self, table_path: str, schema, overwrite: bool):
@@ -1154,181 +1116,99 @@ class VersionedWriter(DataSourceArrowWriter):
             iterator = _with_defaults(iterator, self.default_inject)
         return _write_arrow_part(self.staged, iterator)
 
-    #: bounded auto-retry for blind appends racing the manifest CAS
-    _APPEND_RETRIES = 5
-
     def commit(self, messages):
         import shutil
 
         from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
 
-        final = None
-        data_dir = None
-        new_files: list[str] = []
-        # Blind-append conflict protocol (Delta's): an APPEND adds
-        # files and removes nothing, so it cannot conflict with ANY
-        # concurrent commit on content — a CAS loss only means the
-        # version number is stale. Re-resolve the new parent and
-        # re-publish (bounded retries); the staged data never moves
-        # again. OVERWRITEs still raise on the first conflict: whether
-        # last-writer-wins is acceptable is the caller's call.
-        for attempt in range(self._APPEND_RETRIES + 1):
-            parent_files: list[str] = []
-            head, parent = (versioned._latest(self.table_path)
-                            if versioned.versions(self.table_path)
-                            else (-1, None))
-            # Delta's idempotent-write CONTRACT, not just the stamp: a
-            # write whose txnVersion is <= the table's recorded stamp
-            # for that appId is a no-op — the staged files are swept
-            # and no version publishes. Checked inside the retry loop
-            # against the freshly-loaded parent, so a concurrent
-            # commit advancing the stamp mid-retry is also honored
-            # (stamps only grow, so a stale verdict can never flip
-            # back to live).
-            txn = self.extra_manifest.get("txn")
-            if txn and parent is not None:
-                ledger = parent.get("txn") or {}
-                if all(ledger.get(a) is not None and int(v) <= ledger[a]
-                       for a, v in txn.items()):
-                    shutil.rmtree(self.staged, ignore_errors=True)
-                    if final is not None:
-                        shutil.rmtree(final, ignore_errors=True)
-                    return
-            if parent is not None and not self.overwrite:
-                ident = parent.get("identity") or {}
-                if ident and not self.identity_alloc:
-                    # the identity spec landed AFTER this writer
-                    # planned: the staged files lack the column and
-                    # hold no reservation — a true conflict
-                    shutil.rmtree(self.staged, ignore_errors=True)
-                    if final is not None:
-                        shutil.rmtree(final, ignore_errors=True)
-                    raise ValueError(
-                        "GENERATED ALWAYS AS IDENTITY columns "
-                        f"{sorted(ident)} were declared concurrently "
-                        "with this append — retry the save"
-                    )
-                table_schema = json.loads(parent["schema"])
-                injected = set(self.identity_alloc) | set(
-                    self.default_inject)
-                if injected:
-                    # written files carry the injected identity /
-                    # defaulted columns; compare the caller's schema
-                    # against the table schema MINUS those columns
-                    table_schema = dict(
-                        table_schema,
-                        fields=[f for f in table_schema.get("fields", [])
-                                if f.get("name") not in injected],
-                    )
-                if not _append_compatible(table_schema,
-                                          self.schema.jsonValue()):
-                    # a true conflict even mid-retry: the winner may
-                    # have evolved the schema under us
-                    shutil.rmtree(self.staged, ignore_errors=True)
-                    if final is not None:
-                        shutil.rmtree(final, ignore_errors=True)
-                    raise ValueError(
-                        "append schema does not match the table schema — "
-                        "use merge_version_cow(evolve_schema=True) to evolve"
-                    )
-                parent_files = parent["files"]
-            # The version number derives from the SAME head resolution
-            # the parent file list came from — in BOTH branches. Reading
-            # state again (e.g. via _next_version) would re-open the race
-            # it exists to close: a concurrent writer committing v0 to a
-            # fresh table between the two reads would make this append
-            # publish v1 with parent_files=[], silently dropping v0's rows
-            # from latest. Deriving 0 from the same empty snapshot means
-            # the manifest CAS on 0.json turns that interleave into a
-            # CommitConflict instead.
-            version = head + 1
-            os.makedirs(versioned._manifest_path(self.table_path),
-                        exist_ok=True)
-            if final is None:
-                # first attempt: move the committed part files into
-                # place ONCE (the dir name keeps the first-attempt
-                # version — manifests reference files by path, so a
-                # retried commit publishing a later version through
-                # the same dir is fine)
-                data_dir = f"v_{version}_{self.token}"
-                final = os.path.join(self.table_path, data_dir)
-                # Only the files named by task COMMIT MESSAGES enter the
-                # version: the staged dir may also hold half-written
-                # parts from failed or speculative attempts (no footer,
-                # or duplicate rows) that must never be manifested.
-                names = sorted({m.filename for m in messages
-                                if m is not None and m.filename})
-                if names:
-                    os.makedirs(final)
-                    for n in names:
-                        os.rename(os.path.join(self.staged, n),
-                                  os.path.join(final, n))
-                    new_files = [f"{data_dir}/{n}" for n in names]
-                shutil.rmtree(self.staged, ignore_errors=True)
-            manifest = self._build_manifest(versioned, version, parent,
-                                            parent_files, new_files)
-            try:
-                versioned._publish(self.table_path, manifest)
-                return
-            except versioned.CommitConflict:
-                if self.overwrite or attempt == self._APPEND_RETRIES:
-                    shutil.rmtree(final, ignore_errors=True)
-                    raise
+        # The version number derives from the SAME head resolution as
+        # the parent: a writer committing v0 to a fresh table between
+        # two reads would otherwise let this append publish v1 without
+        # v0's files. From one empty snapshot, the CAS on 0.json turns
+        # that interleave into a conflict that rebases onto v0.
+        head, parent = (versioned._latest(self.table_path)
+                        if versioned.versions(self.table_path)
+                        else (-1, None))
+        os.makedirs(versioned._manifest_path(self.table_path),
+                    exist_ok=True)
+        # Only the files named by task COMMIT MESSAGES enter the
+        # version: the staged dir may also hold half-written parts from
+        # failed or speculative attempts (no footer, or duplicate rows)
+        # that must never be manifested. The dir keeps the first
+        # attempt's version number; a rebased commit references the
+        # same files by path.
+        data_dir = f"v_{head + 1}_{self.token}"
+        final = os.path.join(self.table_path, data_dir)
+        names = sorted({m.filename for m in messages
+                        if m is not None and m.filename})
+        if names:
+            os.makedirs(final)
+            for n in names:
+                os.rename(os.path.join(self.staged, n),
+                          os.path.join(final, n))
+        shutil.rmtree(self.staged, ignore_errors=True)
+        new_files = [f"{data_dir}/{n}" for n in names]
+        try:
+            versioned._commit(
+                self.table_path,
+                lambda base, v: self._build(versioned, base, v, new_files),
+                parent, head + 1,
+                own=None if self.overwrite else set(), shape_keys=(),
+                staged_dirs=[final])
+        except _Superseded:
+            pass
 
-    def _build_manifest(self, versioned, version: int, parent,
-                        parent_files: list[str],
-                        new_files: list[str]) -> dict:
-        manifest = {
-            "version": version,
-            "files": list(parent_files) + new_files,
-            # identity / defaulted appends write the caller's columns
-            # PLUS the injected columns — the table schema (which
-            # already includes them) is the recorded truth
-            "schema": (parent["schema"]
-                       if ((self.identity_alloc or self.default_inject)
-                           and parent is not None
-                           and not self.overwrite)
-                       else self.schema.json()),
-            "operation": "OVERWRITE" if self.overwrite else "APPEND",
-            **self.extra_manifest,
-        }
-        # CHECK constraints carry forward in the manifest; the DS
-        # writer does not ENFORCE them (no SparkSession at commit
-        # time) — enforcement lives on the library write paths
-        # (write_version / merge_version_cow / predicate DML), and
-        # add_constraint re-validates the whole table when declared
-        if parent is not None and parent.get("constraints"):
-            manifest["constraints"] = parent["constraints"]
-        if parent is not None and parent.get("properties"):
-            manifest["properties"] = parent["properties"]
-        # an APPEND shares the parent's files, so the column mapping
-        # and retired names must ride; an overwrite starts fresh with
-        # logical-named files
-        if parent is not None and not self.overwrite:
-            if parent.get("column_mapping"):
-                manifest["column_mapping"] = parent["column_mapping"]
-            if parent.get("retired_physical"):
-                manifest["retired_physical"] = parent["retired_physical"]
-            if parent.get("partition_by"):
-                manifest["partition_by"] = parent["partition_by"]
-            if parent.get("generated"):
-                manifest["generated"] = parent["generated"]
-            if parent.get("identity"):
-                manifest["identity"] = parent["identity"]
-            if parent.get("defaults"):
-                manifest["defaults"] = parent["defaults"]
-        # an APPEND shares the parent's data files, so their deletion
-        # vectors must ride along or deleted rows would resurrect;
-        # an overwrite starts from fresh files with no DVs
-        if (parent is not None and not self.overwrite
-                and versioned._dv_map(parent)):
-            manifest["dv"] = versioned._dv_map(parent)
-        # data-skipping index: shared parent entries copied verbatim
-        # (the files are immutable), one footer read per new part file
-        # (same shape as write_version) — a DS save never costs later
-        # merges their file pruning
-        versioned._set_col_stats(manifest, parent, self.table_path,
-                                 list(parent_files), new_files)
+    def _build(self, versioned, base: dict | None, version: int,
+               new_files: list[str]) -> dict:
+        """This write's manifest on ``base`` (None for a fresh table).
+        Raises ``_Superseded`` when ``base`` already records the txn
+        stamp (Delta's idempotent-write contract: checked against every
+        base, so a racing commit that advanced the stamp is honored),
+        and ValueError when an append no longer fits ``base``."""
+        txn = self.extra_manifest.get("txn")
+        if txn and base is not None:
+            ledger = base.get("txn") or {}
+            if all(ledger.get(a) is not None and int(v) <= ledger[a]
+                   for a, v in txn.items()):
+                raise _Superseded
+        if base is not None and not self.overwrite:
+            ident = base.get("identity") or {}
+            if ident and not self.identity_alloc:
+                # the identity spec landed AFTER this writer planned:
+                # the staged files lack the column and hold no
+                # reservation
+                raise ValueError(
+                    "GENERATED ALWAYS AS IDENTITY columns "
+                    f"{sorted(ident)} were declared concurrently "
+                    "with this append — retry the save"
+                )
+            # written files carry the injected identity / defaulted
+            # columns; the table schema (which already has them) stays
+            # the recorded truth
+            versioned._check_append_schema(
+                base, self.schema,
+                set(self.identity_alloc) | set(self.default_inject))
+            # an APPEND shares the base's files, so its shape (column
+            # mapping, specs, properties) and deletion vectors ride
+            shared = base["files"]
+            manifest = {**versioned._shape_of(base),
+                        "files": shared + new_files}
+            if versioned._dv_map(base):
+                manifest["dv"] = versioned._dv_map(base)
+        else:
+            # an overwrite (or a fresh table) starts from this job's
+            # logical-named files; constraints and properties carry
+            shared = []
+            manifest = {"files": new_files, "schema": self.schema.json(),
+                        **{k: base[k] for k in ("constraints", "properties")
+                           if (base or {}).get(k)}}
+        manifest.update(version=version,
+                        operation="OVERWRITE" if self.overwrite else "APPEND")
+        manifest.update(self.extra_manifest)
+        # data-skipping index: shared entries copied verbatim, one
+        # footer read per new part file
+        versioned._set_col_stats(manifest, base, self.table_path, shared,
+                                 new_files)
         return manifest
 
     def abort(self, messages):

@@ -1354,7 +1354,7 @@ def maintain_semdedup_corpus(spark, src_path: str, cent_path: str,
 #
 # When a curation consumer's unconsumed CDF range has been VACUUMED,
 # the change history is unrecoverable and the stream fails loudly
-# (sources/versioned_ds.py::_require_range_live). Recovery is a batch
+# (versioned._iter_changes). Recovery is a batch
 # re-seed from the CURRENT SNAPSHOT: re-triage every live row against
 # the committed state — rows the loop already processed are excluded
 # by the committed index itself, so the re-seed never double-appends,

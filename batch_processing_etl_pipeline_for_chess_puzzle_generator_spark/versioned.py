@@ -939,11 +939,6 @@ class ConstraintViolation(Exception):
     removed; nothing was published."""
 
 
-def _table_constraints(table_path: str) -> dict:
-    """{name: sql_expr} recorded on the latest manifest ({} if none)."""
-    return (_head_manifest(table_path) or {}).get("constraints") or {}
-
-
 def _checks(manifest: dict) -> dict:
     """The commit-time check set of a table: its CHECK constraints plus
     its GENERATED ALWAYS AS write invariants as CHECK expressions.
@@ -1076,41 +1071,40 @@ def reserve_identity_block(spark: SparkSession | None,
     commit records ``identity.reserve.<col>`` (the block's inclusive
     high-water) in the table properties, which ride every subsequent
     manifest — so racing reservers get DISJOINT blocks (the CAS loser
-    re-reads and reserves past the winner) and every later allocator,
-    library or DS, starts past the reservation via
+    rebuilds past the winner through ``_commit``) and every later
+    allocator, library or DS, starts past the reservation via
     :func:`_identity_high_water`. Returns {col: {"base", "step"}}
     ({} when the table has no identity spec). Delta's documented
     identity semantics apply: ids are unique and increasing, NOT
     consecutive, and a reservation whose write aborts burns its block
     (a gap, never a collision)."""
-    for _ in range(6):
-        if not versions(table_path):
-            return {}
-        head, parent = _latest(table_path)
-        ident = parent.get("identity") or {}
-        if not ident:
-            return {}
-        alloc: dict = {}
-        props = dict(parent.get("properties") or {})
-        for c, sp in _validate_identity_spec(ident).items():
-            hw = _identity_high_water(spark, table_path, parent, c)
-            base = sp["start"] if hw is None else hw + sp["step"]
-            _identity_check_headroom(c, base, sp["step"],
+    if not versions(table_path):
+        return {}
+    head, parent = _latest(table_path)
+    if not parent.get("identity"):
+        return {}
+    alloc: dict = {}
+
+    def build(base: dict, version: int) -> dict:
+        # a rebuild on a racing winner reserves past the winner's block
+        alloc.clear()
+        props = dict(base.get("properties") or {})
+        for c, sp in _validate_identity_spec(base["identity"]).items():
+            hw = _identity_high_water(spark, table_path, base, c)
+            start = sp["start"] if hw is None else hw + sp["step"]
+            _identity_check_headroom(c, start, sp["step"],
                                      IDENTITY_RESERVE_PARTITIONS)
             block = ((IDENTITY_RESERVE_PARTITIONS + 1) << 33) * sp["step"]
-            alloc[c] = {"base": base, "step": sp["step"]}
-            props[f"identity.reserve.{c}"] = str(base + block - sp["step"])
-        manifest = _child(parent, head + 1, "IDENTITY RESERVE")
+            alloc[c] = {"base": start, "step": sp["step"]}
+            props[f"identity.reserve.{c}"] = str(start + block - sp["step"])
+        manifest = _child(base, version, "IDENTITY RESERVE")
         manifest["properties"] = props
-        try:
-            _publish(table_path, manifest)
-            return alloc
-        except CommitConflict:
-            continue  # re-read the new latest and reserve past it
-    raise CommitConflict(
-        f"could not reserve an identity block at {table_path} after "
-        "6 attempts — retry the append"
-    )
+        return manifest
+
+    # rebases onto any winner that kept the identity spec
+    _commit(table_path, build, parent, head + 1, own=set(),
+            shape_keys=("identity",))
+    return alloc
 
 
 def _apply_identity(spark: SparkSession, table_path: str, df: DataFrame,
@@ -1324,11 +1318,18 @@ def _publish(table_path: str, manifest: dict) -> int:
             f"version {version} at {table_path} was committed by a "
             "concurrent writer — re-read the table and retry"
         ) from None
-    os.remove(tmp)
-    hw_tmp = os.path.join(mdir, f"{_HIGH_WATER}.{token}.tmp")
-    with open(hw_tmp, "w") as fh:
-        fh.write(str(version))
-    os.rename(hw_tmp, os.path.join(mdir, _HIGH_WATER))
+    # Published. The bookkeeping below must not raise: a caller would
+    # take committed data for a failed commit. A stale marker
+    # self-heals (``_high_water`` takes the max with the live head) and
+    # vacuum sweeps leftover ``.tmp`` files.
+    try:
+        os.remove(tmp)
+        hw_tmp = os.path.join(mdir, f"{_HIGH_WATER}.{token}.tmp")
+        with open(hw_tmp, "w") as fh:
+            fh.write(str(version))
+        os.rename(hw_tmp, os.path.join(mdir, _HIGH_WATER))
+    except OSError:
+        pass
     return version
 
 
@@ -1352,7 +1353,29 @@ def _shape_of(base: dict) -> dict:
     return {k: base[k] for k in _SHAPE_KEYS if base.get(k)}
 
 
-def _rebasable(parent: dict, winner: dict, own: set, attempt: int,
+def _check_append_schema(table: dict, schema, filled=()) -> None:
+    """Refuse an append whose rows (``schema``, a StructType) do not
+    fit ``table``'s schema as they are, leaving out the ``filled``
+    columns the commit fills in itself (identity, omitted defaults).
+    Names, order, types and metadata must match exactly; nullability
+    may only NARROW (non-nullable rows into a nullable column, e.g. a
+    ``range()`` projection into a CONVERTed all-nullable table).
+    Schema evolution goes through ``merge_version_cow``."""
+    tf = [f for f in json.loads(table["schema"]).get("fields", [])
+          if f.get("name") not in filled]
+    af = schema.jsonValue().get("fields", [])
+    if len(tf) != len(af) or any(
+            (t.get("name"), t.get("type"), t.get("metadata"))
+            != (a.get("name"), a.get("type"), a.get("metadata"))
+            or (a.get("nullable", True) and not t.get("nullable", True))
+            for t, a in zip(tf, af)):
+        raise ValueError(
+            "append schema does not match the table schema — "
+            "use merge_version_cow(evolve_schema=True) to evolve"
+        )
+
+
+def _rebasable(parent: dict | None, winner: dict, own: set, attempt: int,
                shape_keys: tuple = _SHAPE_KEYS) -> bool:
     """Whether a commit built on ``parent`` that lost the CAS to
     ``winner`` may be rebuilt on top of it (Delta's WriteSerializable
@@ -1362,7 +1385,9 @@ def _rebasable(parent: dict, winner: dict, own: set, attempt: int,
     or double-delete) or changed a ``shape_keys`` entry. Anything else
     (blind appends, DML or compaction on other files) rebases; rows a
     racing append added are not re-matched against a DML predicate.
-    The last attempt never rebases."""
+    ``parent=None`` is a commit planned on a table with no commits
+    (the winner published v0). The last attempt never rebases."""
+    parent = parent or {}
     parent_dv, win_dv = _dv_map(parent), _dv_map(winner)
     return (attempt < _COMMIT_ATTEMPTS - 1
             and all(winner.get(k) == parent.get(k) for k in shape_keys)
@@ -1374,32 +1399,37 @@ def _commit(table_path: str, build, parent: dict | None, version: int,
             *, own: set | None = None, shape_keys: tuple = _SHAPE_KEYS,
             staged_dirs=()) -> dict:
     """Publish ``build(parent, version)`` through the manifest CAS and
-    return the published manifest — the publish path of every library
-    commit that writes data (the Data Source's blind append keeps its
-    own retry rules). When the CAS is lost and ``_rebasable``
-    accepts the winner, the manifest is rebuilt as
-    ``build(winner, winner_version + 1)`` and republished, keeping the
-    data already written. Otherwise the commit's ``staged_dirs`` (its
-    data, sidecar and change-feed dirs; None entries are skipped) are
-    removed and the ``CommitConflict`` propagates. ``own=None`` marks a
-    commit that never rebases."""
+    return the published manifest — the publish path of every commit
+    that writes data, the Data Source writer's included. When the CAS
+    is lost and ``_rebasable`` accepts the winner, the manifest is
+    rebuilt as ``build(winner, winner_version + 1)`` and republished,
+    keeping the data already written; ``build`` may raise to refuse a
+    base. Whenever the commit does not publish (an unrebasable
+    conflict, or an exception from ``build``), its ``staged_dirs``
+    (data, sidecar and change-feed dirs; None entries are skipped)
+    are removed and the exception propagates. Once ``_publish`` has
+    linked the manifest they are committed data and stay.
+    ``own=None`` marks a commit that never rebases."""
     import shutil
 
-    manifest = build(parent, version)
-    for attempt in range(_COMMIT_ATTEMPTS):
-        try:
-            _publish(table_path, manifest)
-            return manifest
-        except CommitConflict:
-            if own is not None:
+    try:
+        manifest = build(parent, version)
+        for attempt in range(_COMMIT_ATTEMPTS):
+            try:
+                _publish(table_path, manifest)
+                return manifest
+            except CommitConflict:
+                if own is None:
+                    raise
                 head, winner = _latest(table_path)
-                if _rebasable(parent, winner, own, attempt, shape_keys):
-                    manifest = build(winner, head + 1)
-                    continue
-            for d in staged_dirs:
-                if d is not None:
-                    shutil.rmtree(d, ignore_errors=True)
-            raise
+                if not _rebasable(parent, winner, own, attempt, shape_keys):
+                    raise
+                manifest = build(winner, head + 1)
+    except Exception:  # not BaseException: an interrupt may follow the link
+        for d in staged_dirs:
+            if d is not None:
+                shutil.rmtree(d, ignore_errors=True)
+        raise
 
 
 #: Write a full manifest snapshot every N commits (Delta's
@@ -1494,8 +1524,9 @@ def write_version(df: DataFrame, table_path: str,
     ``partition_by`` on a generated column for hidden partitioning
     with metadata-only retention: ``{"day": "CAST(ts AS DATE)"}`` +
     ``partition_by=["day"]`` makes ``DELETE WHERE day = d`` free.
-    The DS writer carries the spec but, as with constraints,
-    enforcement happens on the library paths.
+    The DS writer carries the spec but, as with constraints, does not
+    enforce it; SQL ``INSERT INTO`` takes the library insert path and
+    does.
 
     ``identity`` declares GENERATED ALWAYS AS IDENTITY columns
     ({col: {"start": s, "step": p}}, Delta's analog): the column must
@@ -1505,18 +1536,21 @@ def write_version(df: DataFrame, table_path: str,
     state rides the manifest and RESTORE/CLONE can never resurrect a
     stale counter). Values are NOT consecutive — Delta's documented
     identity contract (per-task allocation, no global ordering pass).
-    MERGE generates identity values for its upserts the same way; DS
-    appends on identity tables are refused (the Arrow-side writer
-    cannot allocate), use the library paths.
+    MERGE generates identity values for its upserts the same way; a
+    DS append allocates inside a block it reserves at plan time
+    (:func:`reserve_identity_block`).
+
+    Generated, identity, defaults, constraints and properties are all
+    inherited from ONE read of the head manifest.
 
     Commit protocol: distributed write into ``_staged_v_N`` (CHECK
     sums riding that one job) → atomic rename to ``v_N`` → manifest
-    JSON written tmp-then-rename. Readers
-    only discover the version at the final rename, so every
-    intermediate failure leaves the table exactly as it was. Version
-    numbers are append-only for the table's lifetime: committing a
-    number at or below the high-water mark raises, even if vacuum has
-    since dropped that version's manifest.
+    published by ``_commit`` (tmp file, then a link that fails if the
+    version exists). Readers only discover the version at the link,
+    so every intermediate failure leaves the table exactly as it was.
+    Version numbers are append-only for the table's lifetime:
+    committing a number at or below the high-water mark raises, even
+    if vacuum has since dropped that version's manifest.
 
     The manifest records the version's parquet FILES, its schema, and
     per-file [min, max] ``col_stats`` of the first 32 columns whose
@@ -1545,15 +1579,15 @@ def write_version(df: DataFrame, table_path: str,
     # overwrite commit must not silently drop it (Delta: column
     # metadata survives INSERT OVERWRITE). Passing a spec explicitly
     # re-declares it; passing {} explicitly drops it.
-    head_m = _head_manifest(table_path)
+    head_m = _head_manifest(table_path) or {}
     if generated is None:
-        generated = (head_m or {}).get("generated") or None
+        generated = head_m.get("generated") or None
     if identity is None:
-        identity = (head_m or {}).get("identity") or None
+        identity = head_m.get("identity") or None
     # column DEFAULTs ride the manifest like generated/identity: a
     # commit omitting a defaulted column gets the stored literal
     # (present columns — including supplied NULLs — are untouched)
-    defaults = (head_m or {}).get("defaults") or {}
+    defaults = head_m.get("defaults") or {}
     if defaults:
         from pyspark.sql import types as T
 
@@ -1572,7 +1606,7 @@ def write_version(df: DataFrame, table_path: str,
                 "and cannot be supplied — drop them from the DataFrame"
             )
         df = _apply_identity(df.sparkSession, table_path, df,
-                             identity, head_m)
+                             identity, head_m or None)
     version = _next_version(table_path, version)
     os.makedirs(_manifest_path(table_path), exist_ok=True)
     # PER-WRITER unique staged AND final dirs (like _publish's tmp
@@ -1586,7 +1620,7 @@ def write_version(df: DataFrame, table_path: str,
     final = os.path.join(table_path, data_dir)
     # CHECK constraints: enforced inside the write job, carried forward
     # in the manifest so every future write keeps enforcing
-    cons = _table_constraints(table_path)
+    cons = head_m.get("constraints") or {}
     files = _stage(
         table_path, data_dir, df,
         (lambda d, p: _write_partitioned(d, p, partition_by))
@@ -1610,9 +1644,8 @@ def write_version(df: DataFrame, table_path: str,
         manifest["identity"] = identity
     if defaults:
         manifest["defaults"] = defaults
-    props = table_properties(table_path)
-    if props:
-        manifest["properties"] = props
+    if head_m.get("properties"):
+        manifest["properties"] = head_m["properties"]
     _set_col_stats(manifest, None, table_path, [], files)
     return _commit(table_path, lambda _base, _v: manifest, None, version,
                    staged_dirs=[final])["version"]
@@ -2253,11 +2286,8 @@ def copy_into(spark: SparkSession, table_path: str, source_dir: str,
             f"no committed versions at {table_path} — COPY INTO "
             "requires an existing table (CREATE TABLE ... AS first)"
         )
-    seen: set[tuple] = set()
-    for v in avail:
-        for ent in (_load_manifest(table_path, v).get("copy_sources")
-                    or []):
-            seen.add(tuple(ent))
+    seen = {tuple(ent) for _v, m in _iter_manifests(table_path, avail)
+            for ent in m.get("copy_sources") or ()}
     cand = sorted(
         _glob.glob(os.path.join(source_dir, pattern))
     )
@@ -2791,8 +2821,10 @@ def merge_version_mor(spark: SparkSession, table_path: str,
     column). ``merge_version_cow`` routes here automatically when the
     table property ``dv.enabled = 'true'`` is set (and evolve_schema
     is off)."""
+    import shutil
     import uuid
 
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -2898,23 +2930,25 @@ def merge_version_mor(spark: SparkSession, table_path: str,
                      * F.lit(sp["step"])).cast("long"),
                 ),
             )
-        # pin the nondeterministic id assignment once: count(),
-        # the rewrite write, and the CDF classification below are
-        # three separate jobs over this plan (see the COW twin)
+        # pin the nondeterministic id assignment once: the rewrite
+        # write and the CDF classification below are two separate
+        # jobs over this plan (see the COW twin)
         upserts = upserts.localCheckpoint(eager=True)
     upserts = upserts.select(*data_cols)
-    n_upserts = upserts.count()
-    new_files: list[str] = []
-    final_data = None
-    if n_upserts:
-        # the checked write runs first, so a rejected commit has staged
-        # nothing else
-        data_dir = f"d_{version}_{token}"
-        final_data = os.path.join(table_path, data_dir)
-        new_files = _stage(
-            table_path, data_dir, upserts,
-            lambda d, p: _write_rewrite(d, p, parent, len(touched)),
-            _checks(parent))
+    # the checked write runs first, so a rejected commit has staged
+    # nothing else. Whether there were upserts at all is read from the
+    # written files' footers, not from a count job: a delete-only
+    # MERGE's empty write is removed and adds no file
+    data_dir = f"d_{version}_{token}"
+    final_data = os.path.join(table_path, data_dir)
+    new_files = _stage(
+        table_path, data_dir, upserts,
+        lambda d, p: _write_rewrite(d, p, parent, len(touched)),
+        _checks(parent))
+    if not sum(pq.ParquetFile(_abs_file(table_path, f)).metadata.num_rows
+               for f in new_files):
+        shutil.rmtree(final_data, ignore_errors=True)
+        new_files, final_data = [], None
     if not touched and not new_files:
         return {"version": None, "files_total": len(pfiles),
                 "files_shared": len(pfiles), "files_rewritten": 0,
@@ -3330,6 +3364,41 @@ def _iter_manifests(table_path: str, version_list: list[int] | None = None):
             m = _load_manifest(table_path, v)
         yield v, m
         prev_v, prev_m = v, m
+
+
+def _iter_changes(table_path: str, lo: int, hi: int, fresh: bool = False):
+    """Yield ``(version, manifest, prev)`` for every version in
+    ``(lo, hi]`` ascending, ``prev`` being the manifest of the version
+    before it (None before the first commit): the one change walk of
+    ``read_changes``, the CDF Data Source and the streaming source, in
+    O(hi - lo) manifest-file reads (``_iter_manifests``).
+
+    A version's changes are its diff against the version before, so
+    ``lo`` (when >= 0) must be live as well as every version in the
+    range; otherwise one ``FileNotFoundError`` names the vacuumed
+    versions and the recovery. ``fresh`` marks a new stream's first
+    batch: a vacuumed ``lo`` then makes the first version read whole,
+    which is the documented re-bootstrap (a fresh checkpoint with
+    ``startingVersion`` at the earliest retained version)."""
+    live = versions(table_path)
+    first = lo if lo >= 0 and (lo in live or not fresh) else max(lo + 1, 0)
+    missing = sorted(set(range(first, hi + 1)) - set(live))
+    if missing:
+        raise FileNotFoundError(
+            f"versions {missing} of {table_path} are not live (vacuumed) "
+            "— their change history is gone and skipping them would "
+            "lose rows. Re-seed consumers from the current snapshot "
+            "(streaming.jobs.bootstrap_dedup_corpus / "
+            "bootstrap_vector_index re-triage it against the committed "
+            "state; per-version txn stamps keep the re-seed "
+            "append-idempotent), then restart with a fresh checkpoint "
+            f"and .option('startingVersion', {live[0] if live else None})"
+        )
+    prev = None
+    for v, m in _iter_manifests(table_path, list(range(first, hi + 1))):
+        if v > lo:
+            yield v, m, prev
+        prev = m
 
 
 def _commit_ts(table_path: str, version: int,
@@ -4426,26 +4495,16 @@ def read_changes(spark: SparkSession, table_path: str, v_from: int,
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    avail = versions(table_path)
     if v_to is None:
-        v_to = avail[-1]
+        v_to = _latest(table_path)[0]
+    # v_from = -1 streams history from the very first commit
+    changes = [(v, *_change_entries(table_path, v, m, prev))
+               for v, m, prev in _iter_changes(table_path, v_from, v_to)]
     latest = _load_manifest(table_path, v_to)
     schema = T.StructType.fromJson(json.loads(latest["schema"]))
     out_cols = [f.name for f in schema.fields]
-    # v_from = -1 streams history from the very first commit
-    missing = [v for v in range(max(v_from, 0), v_to + 1)
-               if v not in avail]
-    if missing:
-        raise FileNotFoundError(
-            f"versions {missing} of {table_path} are not live "
-            "(vacuumed?) — their changes cannot be reconstructed"
-        )
     parts = []
-    prev = _load_manifest(table_path, v_from) if v_from >= 0 else None
-    for v, m in _iter_manifests(table_path,
-                                list(range(v_from + 1, v_to + 1))):
-        kind, entries = _change_entries(table_path, v, m, prev)
-        prev = m
+    for v, kind, entries in changes:
         if not entries:
             continue
         paths = [_abs_file(table_path, f) for f in entries]

@@ -275,20 +275,23 @@ def test_operators_make_no_inferring_parquet_reads():
     assert found == [], found
 
 
-#: The defs that keep their own copy of a commit-protocol step: the
-#: loops with an ``except CommitConflict`` besides ``versioned._commit``
-#: (their retry rules differ from the publish-or-rebase loop's) and the
-#: staged renames besides ``versioned._stage``.
+#: The defs that keep their own copy of a commit-protocol step:
+#: ``versioned._commit``'s publish-or-rebase loop, the staged renames
+#: besides ``versioned._stage`` and the manifest walks besides
+#: ``versioned._iter_manifests`` / ``versioned._iter_changes``.
 COMMIT_PROTOCOL_ALLOWLIST = {
     ("versioned.py", "_commit", "except CommitConflict"),
-    # identity reservation
-    ("versioned.py", "reserve_identity_block", "except CommitConflict"),
-    # DS blind append
-    ("versioned_ds.py", "VersionedWriter.commit", "except CommitConflict"),
     ("versioned.py", "_stage", "staged rename"),
     # the DS writer moves only the part files its task commit messages
     # name, leaving failed attempts' parts behind in the staged dir
     ("versioned_ds.py", "VersionedWriter.commit", "staged rename"),
+    # vacuum rewrites only the surviving delta records whose parent it
+    # is about to drop, reading each one's full chain before any removal
+    ("versioned.py", "vacuum", "versions walk"),
+    # the stream sink's replay guard scans newest-first and stops at
+    # the first streaming commit, usually the head
+    ("versioned_ds.py", "VersionedStreamWriter._last_stream_batch",
+     "versions walk"),
 }
 
 #: Calls that return a commit's own new files.
@@ -306,7 +309,12 @@ def _commit_protocol_copies(name: str, source: str,
     read (``<x>.read...`` or ``_read_files_dv``) of names bound from
     an ``_OWN_OUTPUT`` call in the same def, i.e. a commit scanning
     what it just wrote (CHECK sums ride the write job instead).
-    Footer reads for stats are not Spark reads. Hits in ``allow`` are
+    Footer reads for stats are not Spark reads. A ``versions walk`` is
+    a loop or comprehension over ``versions(...)`` (or a name bound
+    from it in the same def) that calls ``_load_manifest``: each such
+    load replays a delta chain, where ``_iter_manifests`` and
+    ``_iter_changes`` apply each record to the manifest before it and
+    raise on vacuumed versions. Hits in ``allow`` are
     skipped. ``def`` is the enclosing top-level function or
     ``Class.method``."""
     import ast
@@ -331,8 +339,13 @@ def _commit_protocol_copies(name: str, source: str,
             isinstance(c, ast.Constant) and "_staged_" in str(c.value)
             for c in ast.walk(node))
 
+    def calls(nodes, fn):
+        return any(isinstance(n, ast.Call) and called(n, fn)
+                   for node in nodes for n in ast.walk(node))
+
     found = []
     own: dict[str, set] = {}  # def -> names bound from _OWN_OUTPUT calls
+    avail: dict[str, set] = {}  # def -> names bound from versions(...)
 
     def visit(node, where, in_class):
         for child in ast.iter_child_nodes(node):
@@ -349,6 +362,18 @@ def _commit_protocol_copies(name: str, source: str,
                 own.setdefault(inner, set()).update(
                     n.id for t in child.targets for n in ast.walk(t)
                     if isinstance(n, ast.Name))
+            if (isinstance(child, ast.Assign)
+                    and isinstance(child.value, ast.Call)
+                    and called(child.value, "versions")):
+                avail.setdefault(inner, set()).update(
+                    n.id for t in child.targets for n in ast.walk(t)
+                    if isinstance(n, ast.Name))
+            iters, body = (
+                ([child.iter], child.body) if isinstance(child, ast.For)
+                else ([g.iter for g in child.generators], [child])
+                if isinstance(child, (ast.ListComp, ast.SetComp,
+                                      ast.GeneratorExp, ast.DictComp))
+                else ([], []))
             what = None
             if (isinstance(child, ast.Call)
                     and called(child, "_load_manifest")
@@ -370,6 +395,11 @@ def _commit_protocol_copies(name: str, source: str,
                   and own.get(inner, set()) & set().union(
                       *map(names, [*child.args, *child.keywords]))):
                 what = "own-output read"
+            elif ((calls(iters, "versions")
+                   or avail.get(inner, set()) & set().union(
+                       *map(names, iters)))
+                  and calls(body, "_load_manifest")):
+                what = "versions walk"
             if what and (name, inner, what) not in allow:
                 found.append((name, inner, child.lineno, what))
             visit(child, inner, cls)
@@ -383,8 +413,9 @@ def test_versioned_commits_use_the_commit_protocol_helpers():
     ``versioned._latest``, copies a parent into a metadata commit
     through ``versioned._child``, stages, checks and renames its data
     dirs through ``versioned._stage`` without reading them back, and
-    publishes through ``versioned._commit``; no module keeps a
-    hand-rolled copy."""
+    publishes through ``versioned._commit``; every history walk goes
+    through ``versioned._iter_manifests`` / ``versioned._iter_changes``.
+    No module keeps a hand-rolled copy."""
     from tests.conftest import REPO
 
     seeded = (
@@ -406,7 +437,12 @@ def test_versioned_commits_use_the_commit_protocol_helpers():
         "    os.rename(staged, os.path.join(p, f'd_{version}'))\n"
         "    files = versioned._list_data_files(p, f'd_{version}')\n"
         "    spark.read.parquet(*[os.path.join(p, f) for f in files])\n"
-        "    os.rename(os.path.join(p, f'_staged_{version}_cdf'), p)\n")
+        "    os.rename(os.path.join(p, f'_staged_{version}_cdf'), p)\n"
+        "def walk(p):\n"
+        "    for v in versioned.versions(p):\n"
+        "        versioned._load_manifest(p, v)\n"
+        "    avail = versioned.versions(p)\n"
+        "    return [versioned._load_manifest(p, v) for v in avail]\n")
     assert _commit_protocol_copies("x.py", seeded) == [
         ("x.py", "add", 3, "head lookup"),
         ("x.py", "add", 4, "per-commit strip loop"),
@@ -414,6 +450,8 @@ def test_versioned_commits_use_the_commit_protocol_helpers():
         ("x.py", "merge", 16, "staged rename"),
         ("x.py", "merge", 18, "own-output read"),
         ("x.py", "merge", 19, "staged rename"),
+        ("x.py", "walk", 21, "versions walk"),
+        ("x.py", "walk", 24, "versions walk"),
     ]
     pkg = REPO / "batch_processing_etl_pipeline_for_chess_puzzle_generator_spark"
     paths = [pkg / "versioned.py", pkg / "merge_sql.py",

@@ -801,3 +801,32 @@ def test_show_tblproperties_and_restore_timestamp(spark, tmp_path):
     vsql(spark, f"RESTORE TABLE versioned.`{path}` "
                 f"TO TIMESTAMP AS OF '{ts}'")
     assert versioned.read_version(spark, path).count() == 5
+
+
+def test_insert_into_enforces_check_constraints(spark, tmp_path):
+    """SQL INSERT INTO takes the library insert path: a CHECK
+    constraint rejects a violating row and nothing commits, a valid
+    row appends, and a SELECT whose schema does not fit the table
+    fails with the Data Source writer's message."""
+    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.merge_sql import sql
+    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.sources.versioned_ds import (
+        ensure_registered,
+    )
+
+    ensure_registered(spark)
+    path = str(tmp_path / "t")
+    versioned.write_version(
+        spark.range(3).selectExpr("CAST(id AS INT) AS k"), path)
+    versioned.add_constraint(spark, path, "k_pos", "k >= 0")
+    with pytest.raises(versioned.ConstraintViolation, match="k_pos"):
+        versioned.write_version(
+            spark.range(1).selectExpr("CAST(-5 AS INT) AS k"), path)
+    n = len(versioned.versions(path))
+    with pytest.raises(versioned.ConstraintViolation, match="k_pos"):
+        sql(spark, f"INSERT INTO versioned.`{path}` SELECT -7 AS k")
+    assert len(versioned.versions(path)) == n
+    sql(spark, f"INSERT INTO versioned.`{path}` SELECT 7 AS k")
+    assert sorted(r.k for r in versioned.read_version(spark, path)
+                  .collect()) == [0, 1, 2, 7]
+    with pytest.raises(ValueError, match="append schema does not match"):
+        sql(spark, f"INSERT INTO versioned.`{path}` SELECT 'x' AS k")

@@ -1591,7 +1591,58 @@ def test_constraints_cost_no_spark_jobs(spark, tmp_path):
                  _commit_jobs(spark, lambda: run(plain)))
             for op, run in commits.items()}
     assert all(c == p for c, p in jobs.values()), jobs
-    assert versioned._table_constraints(checked) == {"k_nonneg": "k >= 0"}
+    assert versioned._latest(checked)[1]["constraints"] == {
+        "k_nonneg": "k >= 0"}
+
+
+def test_write_version_reads_the_head_once(spark, tmp_path, monkeypatch):
+    """write_version inherits every spec (generated, identity,
+    defaults, constraints, properties) from ONE head-manifest read, so
+    a racing commit cannot mix two heads' specs."""
+    path = str(tmp_path / "tbl")
+    versioned.write_version(_mk(spark, [(1, "a")]), path)
+    versioned.add_constraint(spark, path, "k_pos", "k >= 0")
+    versioned.set_table_property(path, "owner", "etl")
+    real, calls = versioned._head_manifest, []
+
+    def counted(tp):
+        calls.append(tp)
+        return real(tp)
+
+    monkeypatch.setattr(versioned, "_head_manifest", counted)
+    versioned.write_version(_mk(spark, [(2, "b")]), path)
+    assert len(calls) == 1, calls
+    head = versioned._latest(path)[1]
+    assert head["constraints"] == {"k_pos": "k >= 0"}
+    assert head["properties"] == {"owner": "etl"}
+
+
+def test_dv_merge_upsert_decision_costs_no_job(spark, tmp_path):
+    """A DV MERGE learns whether it wrote upserts from the staged
+    files' footers, not from a count job: a MERGE with upserts runs as
+    many Spark jobs as a delete-only MERGE of the same keys, and the
+    delete-only one adds no data file."""
+    paths = {kind: str(tmp_path / kind) for kind in ("upsert", "delete")}
+    for p in paths.values():
+        versioned.write_version(_mk_ranged(spark, 400, 4), p)
+        versioned.set_table_property(p, "dv.enabled", "true")
+
+    def merge(kind):
+        changes = spark.createDataFrame(
+            [(5, "x", kind == "delete"), (250, "y", kind == "delete")],
+            "k INT, v STRING, is_delete BOOLEAN")
+        return lambda: versioned.merge_version_mor(
+            spark, paths[kind], changes, "k")
+
+    jobs = {kind: _commit_jobs(spark, merge(kind)) for kind in paths}
+    assert jobs["upsert"] == jobs["delete"], jobs
+    base = versioned._load_manifest(paths["delete"], 1)
+    head = versioned._latest(paths["delete"])[1]
+    assert set(head["files"]) <= set(base["files"])
+    got = versioned.read_version(spark, paths["upsert"])
+    assert got.count() == 400
+    assert {r.v for r in got.filter("k IN (5, 250)").collect()} == {"x", "y"}
+    assert versioned.read_version(spark, paths["delete"]).count() == 398
 
 
 @pytest.mark.parametrize("physics", ["cow", "mor"])
@@ -1892,6 +1943,58 @@ def test_stream_reader_partitions_are_absolute(spark, tmp_path):
         assert got == list(range(6))
     finally:
         _os.chdir(old_cwd)
+
+
+@pytest.mark.parametrize("mode", ["append_stream", "cdf_stream",
+                                  "batch_cdf"])
+def test_stream_resume_behind_vacuum_raises(spark, tmp_path, mode):
+    """A change read that resumes from a version VACUUM dropped raises
+    instead of re-reading the next live version whole: a restarted
+    stream would re-emit rows it already consumed, and the batch CDF
+    read at that startingVersion raises like read_changes. A FRESH
+    query at the earliest retained version still re-bootstraps."""
+    _register_ds(spark)
+    path = str(tmp_path / "tbl")
+    versioned.write_version(spark.range(5).selectExpr("id AS k"), path)
+    got: list[int] = []
+
+    def drain(ck, starting=None):
+        r = spark.readStream.format("versioned").option("path", path)
+        if mode == "cdf_stream":
+            r = r.option("readChangeFeed", "true")
+        if starting is not None:
+            r = r.option("startingVersion", starting)
+        q = (r.load().writeStream
+             .foreachBatch(lambda df, _id: got.extend(
+                 row.k for row in df.collect()))
+             .option("checkpointLocation", str(tmp_path / ck))
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+        if q.exception() is not None:
+            raise Exception(str(q.exception()))
+
+    if mode != "batch_cdf":
+        drain("ck")
+        assert sorted(got) == [0, 1, 2, 3, 4]
+    for lo in (5, 7):
+        (spark.range(lo, lo + 2).selectExpr("id AS k").coalesce(1)
+         .write.format("versioned").mode("append")
+         .option("path", path).save())
+    assert versioned.vacuum(path, keep_last=2) == [0]
+    if mode == "batch_cdf":
+        with pytest.raises(FileNotFoundError, match="vacuumed"):
+            versioned.read_changes(spark, path, 0)
+        with pytest.raises(Exception, match="vacuumed"):
+            (spark.read.format("versioned").option("path", path)
+             .option("readChangeFeed", "true")
+             .option("startingVersion", 1).load().collect())
+        return
+    got.clear()
+    with pytest.raises(Exception, match="vacuumed"):
+        drain("ck")
+    assert got == []
+    drain("ck_fresh", starting=1)
+    assert sorted(got) == list(range(9))
 
 
 def test_concurrent_blind_appends_both_commit(spark, tmp_path):

@@ -34,10 +34,12 @@ caught) every historical driver-red:
    racing commits that must rebase (disjoint DML, compaction under
    appends) or conflict loudly (overlapping DML, shape changes,
    clobbering writers), the manifest CAS itself, and the Spark-free
-   rebase-predicate table, and the CHECK-constraint tests. Every
-   commit shares one publish-or-rebase loop (``versioned._commit``)
-   and one staged-write step (``versioned._stage``), so these gate
-   each change to them.
+   rebase-predicate table, the CHECK-constraint tests (SQL ``INSERT
+   INTO`` included), the Data Source's identity race and the streams
+   resuming behind a vacuum. Every commit shares one publish-or-rebase
+   loop (``versioned._commit``) and one staged-write step
+   (``versioned._stage``), and every change walk one helper
+   (``versioned._iter_changes``), so these gate each change to them.
 
 Run before committing any new or changed ``queries()`` formulation:
 
@@ -85,8 +87,12 @@ def main() -> int:
         "tests/test_versioned.py", "tests/test_manifest_log.py",
         "tests/test_defaults.py::"
         "test_default_declared_after_plan_conflicts_loudly",
+        "tests/test_generated.py::"
+        "test_identity_ds_racing_appends_get_disjoint_blocks",
+        "tests/test_merge_sql.py::"
+        "test_insert_into_enforces_check_constraints",
         "-k", "concurrent or conflict or racing or clobber or cas or rebase "
-        "or constraint",
+        "or constraint or behind_vacuum",
     ]))
     for name, cmd in stages:
         if name == "sf0.1-exec":
