@@ -792,9 +792,8 @@ def insert_into(spark: SparkSession, statement: str) -> dict:
     versioned._check_append_schema(
         head, rows.schema, omitted | set(head.get("identity") or {}))
     return versioned._predicate_cow(
-        spark, m["path"], "false", lambda kept, _schema: kept,
-        operation="APPEND", make_feed=versioned._delete_feed,
-        insert_rows=rows)
+        spark, m["path"], "false", operation="APPEND",
+        make_feed=versioned._delete_feed, insert_rows=rows)
 
 
 _DELETE_FROM_RE = re.compile(

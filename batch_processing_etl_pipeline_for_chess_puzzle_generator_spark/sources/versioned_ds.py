@@ -57,13 +57,15 @@ class _FilePartition(InputPartition):
 class _CdfPartition(InputPartition):
     """One change-feed file: ``change_type`` None means the file is a
     persisted cdf file whose ``_change_type`` column is in-file;
-    otherwise every row gets the constant (append-only 'insert')."""
+    otherwise every row gets the constant (append-only 'insert') and
+    ``dv_sidecars`` name the version's deletion vectors for the file."""
 
     def __init__(self, path: str | None, change_type: str | None,
-                 commit_version: int):
+                 commit_version: int, dv_sidecars: list[str] | None = None):
         self.path = path
         self.change_type = change_type
         self.commit_version = commit_version
+        self.dv_sidecars = dv_sidecars
 
 
 def _iter_cdf_batches(partition: _CdfPartition, target: StructType,
@@ -78,6 +80,7 @@ def _iter_cdf_batches(partition: _CdfPartition, target: StructType,
     ct_idx = names.index("_change_type")
     cv_idx = names.index("_commit_version")
     for batch in _iter_file_batches(partition.path, target,
+                                    _skip_positions(partition),
                                     name_map=name_map):
         n = batch.num_rows
         arrays = list(batch.columns)
@@ -108,6 +111,30 @@ def _deleted_positions(sidecar_paths: list[str], data_path: str) -> set:
             if os.path.normpath(versioned._uri_to_path(f)) == want:
                 pos.add(p)
     return pos
+
+
+def _skip_positions(partition) -> set | None:
+    """The deleted positions of a partition's file, or None when it
+    carries no deletion vectors."""
+    sidecars = getattr(partition, "dv_sidecars", None)
+    return _deleted_positions(sidecars, partition.path) if sidecars else None
+
+
+def _with_sidecars(table_path: str, manifest: dict, rel_files: list[str]):
+    """``(absolute file, absolute sidecars or None)`` for files of one
+    version: the deletion vectors that version applies to each file.
+    Every planned path goes through ``_abs_file`` (absolutized and
+    normalized): sidecar rows key on ABSOLUTE file URIs, so a relative
+    ``.option("path", ...)`` must not leak relative paths into a
+    partition plan — matching would silently miss and deleted rows
+    would resurrect."""
+    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
+
+    dv = versioned._dv_map(manifest)
+    return [(versioned._abs_file(table_path, f),
+             [versioned._abs_file(table_path, s) for s in dv[f]]
+             if f in dv else None)
+            for f in rel_files]
 
 
 def _iter_file_batches(path: str, target: StructType,
@@ -512,9 +539,8 @@ class VersionedReader(DataSourceReader):
     def read(self, partition: _FilePartition):
         if partition is None or partition.path is None:
             return
-        skip = (_deleted_positions(partition.dv_sidecars, partition.path)
-                if getattr(partition, "dv_sidecars", None) else None)
-        for batch in _iter_file_batches(partition.path, self.target, skip,
+        for batch in _iter_file_batches(partition.path, self.target,
+                                        _skip_positions(partition),
                                         self.name_map):
             if self.row_filter:
                 batch = _apply_row_filter(batch, self.row_filter)
@@ -526,18 +552,24 @@ def _cdf_partitions(table_path: str, lo: int, hi: int,
     """CDF planning: one partition per change-carrying file of each
     version in (lo, hi] — persisted cdf files as-is (their
     ``_change_type`` is in-file), append-only commits' added files
-    tagged ``insert``, data-neutral commits nothing. A destructive
-    commit without change files raises (versioned._change_entries'
-    guidance names both cdf.enabled and table_changes); a vacuumed
-    version raises from ``versioned._iter_changes``."""
+    tagged ``insert`` and read through that version's deletion vectors
+    (a fresh stream's first live version is read whole), data-neutral
+    commits nothing. A destructive commit without change files raises
+    (versioned._change_entries' guidance names both cdf.enabled and
+    table_changes); a vacuumed version raises from
+    ``versioned._iter_changes``."""
     from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
 
     parts: list[_CdfPartition] = []
     for v, m, prev in versioned._iter_changes(table_path, lo, hi, fresh):
         kind, entries = versioned._change_entries(table_path, v, m, prev)
-        ct = None if kind == "cdf" else "insert"
-        parts.extend(_CdfPartition(versioned._abs_file(table_path, e), ct, v)
-                     for e in entries)
+        if kind == "cdf":
+            parts.extend(_CdfPartition(versioned._abs_file(table_path, e),
+                                       None, v) for e in entries)
+        else:
+            parts.extend(_CdfPartition(path, "insert", v, dv)
+                         for path, dv in _with_sidecars(table_path, m,
+                                                        entries))
     return parts
 
 
@@ -594,7 +626,10 @@ class VersionedStreamReader(DataSourceStreamReader):
     it, the batch raises with the re-bootstrap guidance instead of
     re-emitting rows the query already consumed. Only a fresh query's
     first batch may start behind a vacuumed version; it then reads its
-    first live version whole.
+    first live version whole, through that version's deletion vectors
+    like the batch reader, so rows a DV already deleted never stream.
+    Every streamed file carries the sidecars of the version that added
+    it (``_with_sidecars``), in append and ``readChangeFeed`` mode.
 
     Change semantics (Delta parity): a commit that REMOVES files or
     touches deletion vectors (COW MERGE/DML, MOR DML, overwrite,
@@ -634,15 +669,18 @@ class VersionedStreamReader(DataSourceStreamReader):
         avail = versioned.versions(self.table_path)
         return {"version": avail[-1] if avail else self.starting - 1}
 
-    def _added_files(self, lo: int, hi: int) -> list[str]:
+    def _added_files(self, lo: int, hi: int) -> list[tuple]:
+        """``(absolute file, sidecars)`` of every file the versions in
+        (lo, hi] added, each read through its version's deletion
+        vectors (``_with_sidecars``)."""
         from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
 
-        added: list[str] = []
+        added: list[tuple] = []
         for v, m, prev in versioned._iter_changes(
                 self.table_path, lo, hi, fresh=lo == self.starting - 1):
             files = m["files"]
             if prev is None:
-                added.extend(files)
+                added.extend(_with_sidecars(self.table_path, m, files))
                 continue
             op = (m.get("operation") or "").upper()
             if op.startswith("OPTIMIZE"):
@@ -668,7 +706,8 @@ class VersionedStreamReader(DataSourceStreamReader):
                     "added files only (rewritten files re-emit "
                     "their surviving rows)"
                 )
-            added.extend(f for f in files if f not in pfiles)
+            added.extend(_with_sidecars(
+                self.table_path, m, [f for f in files if f not in pfiles]))
         return added
 
     def _change_partitions(self, lo: int, hi: int) -> list:
@@ -676,8 +715,6 @@ class VersionedStreamReader(DataSourceStreamReader):
                                fresh=lo == self.starting - 1)
 
     def partitions(self, start: dict, end: dict):
-        from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark import versioned
-
         if self.change_feed:
             parts = self._change_partitions(start["version"],
                                             end["version"])
@@ -685,17 +722,15 @@ class VersionedStreamReader(DataSourceStreamReader):
         files = self._added_files(start["version"], end["version"])
         if not files:
             return [_FilePartition(None)]
-        # Absolutize like the batch reader: a relative .option("path", ...)
-        # must not leak relative paths into executor-side partition reads.
-        return [_FilePartition(versioned._abs_file(self.table_path, f))
-                for f in files]
+        return [_FilePartition(path, dv) for path, dv in files]
 
     def read(self, partition):
         if partition is None or partition.path is None:
             return
         if not self.change_feed:
             yield from _iter_file_batches(partition.path, self.target,
-                                          name_map=self.name_map)
+                                          _skip_positions(partition),
+                                          self.name_map)
             return
         yield from _iter_cdf_batches(partition, self.target, self.name_map)
 
@@ -732,18 +767,7 @@ class VersionedDataSource(DataSource):
             m = versioned._latest(
                 table_path, None if v is None else int(v))[1]
             files = m["files"]
-            dv_rel = versioned._dv_map(m)
-            # every planned path goes through _abs_file (absolutized +
-            # normalized): deletion-vector sidecar rows key on ABSOLUTE
-            # file URIs, so a relative .option("path", ...) must not
-            # leak relative paths into the partition plan — matching
-            # would silently miss and DV'd rows would resurrect
-            dv = {
-                versioned._abs_file(table_path, f):
-                    [versioned._abs_file(table_path, s)
-                     for s in dv_rel[f]]
-                for f in files if f in dv_rel
-            }
+            planned = _with_sidecars(table_path, m, files)
             # skipping metadata for pushFilters, re-keyed by the same
             # paths the partition plan uses; dec_cols is the SCHEMA
             # verdict on which columns' bounds are fixed-point decimal
@@ -773,8 +797,8 @@ class VersionedDataSource(DataSource):
                 }
             self._resolved = (
                 schema_struct,
-                [versioned._abs_file(table_path, f) for f in files],
-                dv,
+                [path for path, _ in planned],
+                {path: dv for path, dv in planned if dv},
                 skip_meta,
                 versioned._column_mapping(m),
             )

@@ -26,11 +26,17 @@ Manifests are FILE-level: each records the parquet files making up the
 version, its schema, and per-file min/max ``col_stats`` on the leading
 columns read from the parquet footers (the Delta data-skipping shape,
 one stats record per file), so a version can SHARE unchanged files
-with its parent instead of rewriting the table. ``merge_version_cow``
-exploits that for copy-on-write MERGE: stat-prune parent files whose
-[min,max] can't contain a change key, scan only the candidates to find
-the files actually touched, rewrite just those merged with the
-changes, and publish a manifest = untouched parent files + new files.
+with its parent instead of rewriting the table. Every DML exploits
+that through one of two engines, each taking a match (a SQL predicate
+or a MERGE's change keys): ``_predicate_cow`` (copy-on-write DELETE,
+UPDATE, REPLACE WHERE, COPY INTO, INSERT INTO and MERGE) finds the
+files holding a matched row (for change keys, only among files whose
+[min,max] can contain a key), rewrites just those together with the
+rows the commit adds, and publishes a manifest = untouched parent
+files + new files; ``_mor_dml`` (merge-on-read DELETE, UPDATE and
+MERGE) writes deletion vectors for the matched rows instead and
+appends the new rows. ``_fill_new_rows`` completes every commit's
+added rows (defaults, generated columns, identity values).
 The only driver-side state is the file LIST (O(#files), the same
 planning metadata Delta's driver holds), never row data. ``vacuum``
 is reference-counting-aware: a data file survives as long as ANY live
@@ -42,6 +48,7 @@ from __future__ import annotations
 
 import json
 import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -911,22 +918,6 @@ def _table_defaults(table_path: str) -> dict:
     return (_head_manifest(table_path) or {}).get("defaults") or {}
 
 
-def _apply_defaults(df: DataFrame, defaults: dict, schema=None):
-    """Fill columns the DataFrame OMITS with their stored default
-    literal (present columns are untouched — a supplied NULL stays
-    NULL, Delta's semantics)."""
-    from pyspark.sql import functions as F
-
-    for c, spec in (defaults or {}).items():
-        if c in df.columns:
-            continue
-        col = F.lit(spec["value"])
-        if schema is not None and c in schema.fieldNames():
-            col = col.cast(schema[c].dataType)
-        df = df.withColumn(c, col)
-    return df
-
-
 class CommitConflict(Exception):
     """Another writer committed this version number first. The loser's
     staged data is orphaned-but-invisible (the next vacuum sweeps it);
@@ -1107,32 +1098,73 @@ def reserve_identity_block(spark: SparkSession | None,
     return alloc
 
 
-def _apply_identity(spark: SparkSession, table_path: str, df: DataFrame,
-                    identity: dict, parent: dict | None) -> DataFrame:
-    """Assign GENERATED ALWAYS AS IDENTITY values to rows that lack
-    them: value = base + monotonically_increasing_id() · step, where
-    base continues past the snapshot's high-water mark (derived from
-    col_stats — no allocator state in the manifest, so restores and
-    clones can never resurrect a stale counter). Values are unique and
-    increasing across commits but NOT consecutive — the same contract
-    Delta documents for identity columns (per-task allocation without
-    a global ordering pass; a global row_number would be a full sort).
-    Supplying the column is refused by the callers (GENERATED ALWAYS)."""
-    from pyspark.sql import functions as F
+def _fill_new_rows(rows: DataFrame, table_path: str, table: dict,
+                   operation: str, schema=None,
+                   keep: tuple | None = None) -> DataFrame:
+    """The rows a commit adds, completed the one way every writer
+    completes them from ``table`` (the parent manifest, or the spec a
+    write declares; a fresh table has no ``files``):
 
-    for c, sp in identity.items():
-        hw = (None if parent is None
-              else _identity_high_water(spark, table_path, parent, c))
+    - a column the rows OMIT gets its stored DEFAULT literal, cast to
+      the column's type (present columns are untouched — a supplied
+      NULL stays NULL, Delta's semantics);
+    - a missing GENERATED ALWAYS AS column is computed from its
+      expression (a supplied one is checked in the write job);
+    - GENERATED ALWAYS AS IDENTITY columns may not be supplied
+      (raises). Each row gets base + monotonically_increasing_id() ·
+      step, where base continues past the table's high-water mark
+      (derived from col_stats — no allocator state in the manifest, so
+      restores and clones can never resurrect a stale counter). Values
+      are unique and increasing across commits but NOT consecutive —
+      the contract Delta documents for identity columns (per-task
+      allocation without a global ordering pass; a global row_number
+      would be a full sort). ``keep`` = (key column, matched
+      pre-images) is MERGE's rule: a row whose key matches a pre-image
+      keeps that pre-image's value (an update must not renumber); only
+      new keys get fresh ones.
+
+    With ``schema`` (the DML engines) the result is exactly the
+    schema's columns, each cast to its declared type."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    defaults = table.get("defaults") or {}
+    if defaults:
+        declared = T.StructType.fromJson(json.loads(table["schema"]))
+        for c, spec in defaults.items():
+            if c not in rows.columns:
+                col = F.lit(spec["value"])
+                if c in declared.fieldNames():
+                    col = col.cast(declared[c].dataType)
+                rows = rows.withColumn(c, col)
+    rows = _apply_generated(rows, {
+        c: e for c, e in (table.get("generated") or {}).items()
+        if c not in rows.columns})
+    ident = _validate_identity_spec(table.get("identity"))
+    supplied = sorted(set(ident) & set(rows.columns))
+    if supplied:
+        raise ValueError(
+            f"columns {supplied} are GENERATED ALWAYS AS IDENTITY and "
+            f"cannot be supplied to {operation} — drop them from the rows"
+        )
+    if ident and keep is not None:
+        key, pre = keep
+        rows = rows.join(pre.select(key, *ident), key, "left")
+    for c, sp in ident.items():
+        hw = (_identity_high_water(rows.sparkSession, table_path, table, c)
+              if "files" in table else None)
         base = sp["start"] if hw is None else hw + sp["step"]
         _identity_check_headroom(c, base, sp["step"],
-                                 df.rdd.getNumPartitions())
-        df = df.withColumn(
-            c,
-            (F.lit(base)
-             + F.monotonically_increasing_id() * F.lit(sp["step"])
-             ).cast("long"),
-        )
-    return df
+                                 rows.rdd.getNumPartitions())
+        new = (F.lit(base)
+               + F.monotonically_increasing_id() * F.lit(sp["step"])
+               ).cast("long")
+        rows = rows.withColumn(
+            c, F.coalesce(F.col(c), new) if c in rows.columns else new)
+    if schema is not None:
+        rows = rows.select(*[F.col(f.name).cast(f.dataType).alias(f.name)
+                             for f in schema.fields])
+    return rows
 
 
 def _stage(table_path: str, final_dir: str, df: DataFrame, write,
@@ -1492,13 +1524,15 @@ def _write_rewrite(df: DataFrame, staged: str, parent: dict,
     into one file and break the whole-file metadata-only path for later
     partition deletes until an OPTIMIZE re-clustered. Unpartitioned
     tables coalesce to the touched-file count so a DML touching k files
-    emits ~k files, not one per shuffle partition. Both shapes keep
-    ``_stage``'s observed CHECK sums exact."""
+    emits ~k files, not one per shuffle partition; rows that touch no
+    file (a pure insert) keep their own partitioning, as
+    ``write_version`` does, instead of funnelling through one task.
+    Every shape keeps ``_stage``'s observed CHECK sums exact."""
     spec = parent.get("partition_by")
     if spec and all(c in df.columns for c in spec):
         _write_partitioned(df, staged, spec)
     else:
-        df.coalesce(max(1, n_touched)).write.mode(
+        (df.coalesce(n_touched) if n_touched else df).write.mode(
             "overwrite"
         ).parquet(staged)
 
@@ -1584,29 +1618,13 @@ def write_version(df: DataFrame, table_path: str,
         generated = head_m.get("generated") or None
     if identity is None:
         identity = head_m.get("identity") or None
-    # column DEFAULTs ride the manifest like generated/identity: a
-    # commit omitting a defaulted column gets the stored literal
-    # (present columns — including supplied NULLs — are untouched)
-    defaults = head_m.get("defaults") or {}
-    if defaults:
-        from pyspark.sql import types as T
-
-        df = _apply_defaults(
-            df, defaults, T.StructType.fromJson(json.loads(head_m["schema"])))
-    if generated:
-        missing = [c for c, e in generated.items() if c not in df.columns]
-        df = _apply_generated(
-            df, {c: generated[c] for c in missing})
     if identity:
         identity = _validate_identity_spec(identity)
-        supplied = sorted(set(identity) & set(df.columns))
-        if supplied:
-            raise ValueError(
-                f"columns {supplied} are GENERATED ALWAYS AS IDENTITY "
-                "and cannot be supplied — drop them from the DataFrame"
-            )
-        df = _apply_identity(df.sparkSession, table_path, df,
-                             identity, head_m or None)
+    # column DEFAULTs ride the manifest like generated/identity: a
+    # commit omitting a defaulted column gets the stored literal
+    defaults = head_m.get("defaults") or {}
+    df = _fill_new_rows(df, table_path, {**head_m, "generated": generated,
+                                         "identity": identity}, _operation)
     version = _next_version(table_path, version)
     os.makedirs(_manifest_path(table_path), exist_ok=True)
     # PER-WRITER unique staged AND final dirs (like _publish's tmp
@@ -1652,16 +1670,17 @@ def write_version(df: DataFrame, table_path: str,
 
 
 def _merge_slot(table_path: str, version: int | None) -> tuple[int, dict]:
-    """``(version, parent)`` of a MERGE: the parent is the head and the
-    version is the slot right after it. Auto-numbering derives from the
-    SAME snapshot the parent comes from, NOT from a later high-water
-    read: a commit interleaving between the two reads must collide on
-    the version number (CommitConflict at publish) rather than let this
-    merge publish one number higher with the stale parent's file list,
-    which would silently drop the interleaved version's rows. For the
-    same reason an explicit number must be exactly that slot: a gap
-    would let a concurrent commit land in the skipped slot without
-    conflict, and this merge would publish over it."""
+    """``(version, parent)`` of a DML commit: the parent is the head and
+    the version is the slot right after it. Auto-numbering derives from
+    the SAME snapshot the parent comes from, NOT from a later
+    high-water read: a commit interleaving between the two reads must
+    collide on the version number (CommitConflict at publish) rather
+    than let this commit publish one number higher with the stale
+    parent's file list, which would silently drop the interleaved
+    version's rows. For the same reason a MERGE's explicit number must
+    be exactly that slot: a gap would let a concurrent commit land in
+    the skipped slot without conflict, and the merge would publish over
+    it."""
     head, parent = _latest(table_path)
     if version is not None and version != head + 1:
         raise ValueError(
@@ -1706,6 +1725,60 @@ def _key_span_candidates(parent: dict, key_col: str,
     ]
 
 
+class _Keys(NamedTuple):
+    """A MERGE's match: the target rows whose ``key`` equals a key of
+    the pinned change frame ``changes``. NULL keys match nothing."""
+
+    key: str
+    changes: DataFrame
+
+    def keys(self, *extra) -> DataFrame:
+        """The distinct change keys (plus ``extra`` columns), broadcast:
+        a change batch is the small side of every join on it."""
+        from pyspark.sql import functions as F
+
+        return F.broadcast(
+            self.changes.select(self.key, *extra).distinct())
+
+
+def _match_files(parent: dict, match) -> list[str]:
+    """The parent files a DML scans for ``match``: for change keys only
+    the files whose key span can hold one (``_key_span_candidates``);
+    none for the literal predicate ``false`` (a pure insert: COPY INTO,
+    INSERT INTO); otherwise every file."""
+    if isinstance(match, _Keys):
+        return _key_span_candidates(parent, match.key, match.changes)
+    return [] if match.strip().lower() == "false" else list(parent["files"])
+
+
+def _match_rows(df: DataFrame, match, matched: bool = True) -> DataFrame:
+    """The rows of ``df`` that ``match`` selects, or with
+    ``matched=False`` every other row. A SQL predicate selects the rows
+    where it is TRUE (a NULL result selects nothing, SQL WHERE
+    semantics); change keys select by a semi-join on the key."""
+    from pyspark.sql import functions as F
+
+    if isinstance(match, _Keys):
+        return df.join(match.keys(), match.key,
+                       "left_semi" if matched else "left_anti")
+    hit = F.coalesce(F.expr(match), F.lit(False))
+    return df.filter(hit if matched else ~hit)
+
+
+def _read_matched(spark: SparkSession, table_path: str, manifest: dict,
+                  rel_files: list[str], schema, match,
+                  **meta_cols) -> DataFrame:
+    """The live rows of ``rel_files`` that ``match`` selects, read
+    with deletion vectors applied (``meta_cols``: ``_read_files_dv``'s
+    ``file_col`` / ``pos_col``). No files give an empty frame of
+    ``schema`` the planner folds away."""
+    if not rel_files:
+        return spark.createDataFrame([], schema)
+    return _match_rows(_read_files_dv(spark, table_path, manifest,
+                                      rel_files, schema, **meta_cols),
+                       match)
+
+
 def merge_version_cow(spark: SparkSession, table_path: str,
                       changes: DataFrame, key_col: str,
                       delete_col: str = "is_delete",
@@ -1714,26 +1787,26 @@ def merge_version_cow(spark: SparkSession, table_path: str,
                       extra_manifest: dict | None = None) -> dict:
     """Copy-on-write MERGE: commit a new version that REWRITES ONLY the
     parent files containing a change key and SHARES every other file
-    with the parent (Delta's MERGE physical plan).
+    with the parent (Delta's MERGE physical plan: find the touched
+    files, rewrite them, commit).
 
-    Steps, each scan bounded by the pruning before it:
-
-    1. Stat-prune: if the parent manifest's ``col_stats`` carry
-       [min, max] bounds on ``key_col``, drop files whose range can't
-       intersect the change keys' [min, max] (two-scalar agg — Delta's
-       data-skipping step).
-    2. Find-touched: scan ONLY candidate files with
-       ``input_file_name()``, semi-join the (broadcast) change keys,
-       and collect the distinct file names — O(#files) driver
-       metadata, the same planning list Delta's driver holds.
-    3. Rewrite: rows of touched files anti-joined on the change keys,
-       unioned with the non-deleted changes, written to ``d_N/``.
-    4. Publish: manifest = untouched parent entries (``col_stats``
-       carried over unchanged — the files are immutable) + new files.
-
-    ``changes`` must have the parent's data columns plus a boolean
-    ``delete_col`` (a NULL flag is treated as an upsert). Returns
-    commit stats: files shared vs rewritten.
+    The plan is :func:`_predicate_cow`'s with the change keys as its
+    match: stat-prune the files whose ``col_stats`` span cannot hold a
+    change key, scan only the candidates for the files actually
+    touched, rewrite those without their matched rows plus the
+    non-deleted changes, and publish untouched parent files (stats
+    carried verbatim) + new files. ``changes`` must have the parent's
+    data columns plus a boolean ``delete_col`` (a NULL flag is treated
+    as an upsert); omitted defaulted and generated columns are filled,
+    and identity values of matched keys are kept
+    (:func:`_fill_new_rows`). The change source is pinned once, so every
+    job of the commit sees the same key set. A MERGE commits at exactly
+    the slot after the head it read (``_merge_slot``) and never
+    rebases. ``extra_manifest`` stamps keys on the same commit (an
+    idempotency stamp, Delta's txnAppId/txnVersion). Returns commit
+    stats: files shared vs rewritten and files pruned by stats. With
+    ``dv.enabled`` and no schema evolution the merge routes to
+    :func:`merge_version_mor`.
 
     Schema evolution (``evolve_schema=True``): columns in ``changes``
     beyond the parent schema are ADDED to the table (Delta's
@@ -1791,230 +1864,86 @@ def merge_version_cow(spark: SparkSession, table_path: str,
         parent_struct.fields
         + [T.StructField(f.name, f.dataType, True) for f in extra]
     )
-    out_cols = [f.name for f in out_struct.fields]
-    pfiles = parent["files"]
-
-    # The change source is evaluated by several independent jobs below
-    # (bounds agg, touched-file scan, anti-join, upsert write): pin it
-    # once so a non-deterministic or re-read source can't give each
-    # job a different key set (Delta materializes the MERGE source for
-    # exactly this reason).
+    # the bounds agg, the touched-file scan, the rewrite and the feed
+    # each evaluate the change source: pin it once so a
+    # non-deterministic or re-read source gives all of them one key set
+    # (Delta materializes the MERGE source for exactly this reason)
     changes = changes.localCheckpoint(eager=True)
-
-    # 1. stat-prune candidates against the change-key span
-    candidates = _key_span_candidates(parent, key_col, changes)
-
-    # 2. exact touched set over candidates only. Keyed by full
-    # table-relative path, NOT basename: parent files span multiple
-    # version dirs, and a basename collision across dirs would
-    # silently drop an untouched file from the child manifest.
-    keys = F.broadcast(changes.select(key_col).distinct())
-    touched_abs: set = set()
-    if candidates:
-        # DV-aware discovery: a row already deleted by a deletion
-        # vector must not mark its file touched (and must never
-        # resurrect through the rewrite below)
-        cand_df = _read_files_dv(
-            spark, table_path, parent, candidates, parent_struct,
-            file_col="__cow_f",
-        )
-        rows = (
-            cand_df.select(key_col, F.col("__cow_f").alias("f"))
-            .join(keys, key_col, "left_semi")
-            .select("f").distinct().collect()
-        )
-        touched_abs = {os.path.normpath(_uri_to_path(r["f"])) for r in rows}
-    touched = [f for f in candidates
-               if _abs_file(table_path, f) in touched_abs]
-    untouched = [f for f in pfiles
-                 if _abs_file(table_path, f) not in touched_abs]
-
-    # 3. rewrite only the touched files, merged with the changes.
-    # Per-writer unique dirs — see write_version: a losing concurrent
-    # merge must never be able to delete the winner's committed data.
-    import uuid
-
-    token = uuid.uuid4().hex[:12]
-    final_dir = f"d_{version}_{token}"
-    final = os.path.join(table_path, final_dir)
-    # NULL delete flags count as upserts — without the coalesce, ~NULL
-    # is NULL and the row would silently vanish (key anti-joined away
-    # but never re-inserted).
-    upserts = changes.filter(
-        ~F.coalesce(F.col(delete_col), F.lit(False))
-    )
-    # GENERATED ALWAYS AS IDENTITY: change rows never carry the column
-    # (refused above by the supplied-check in ident handling) — matched
-    # keys RECOVER their existing value from the touched files'
-    # pre-images (an UPDATE must not renumber), genuinely new keys get
-    # fresh values past the snapshot's high-water mark.
-    ident = parent.get("identity") or {}
-    if ident:
-        supplied = sorted(set(ident) & set(changes.columns))
-        if supplied:
-            raise ValueError(
-                f"columns {supplied} are GENERATED ALWAYS AS IDENTITY "
-                "and cannot be supplied in MERGE changes"
-            )
-        if touched:
-            preim = (
-                _read_files_dv(spark, table_path, parent, touched,
-                               parent_struct)
-                .join(keys, key_col, "left_semi")
-                .select(key_col, *ident.keys())
-            )
-            upserts = upserts.join(preim, key_col, "left")
-        else:
-            for c in ident:
-                upserts = upserts.withColumn(
-                    c, F.lit(None).cast("long"))
-        for c, sp in _validate_identity_spec(ident).items():
-            hw = _identity_high_water(spark, table_path, parent, c)
-            base = sp["start"] if hw is None else hw + sp["step"]
-            _identity_check_headroom(c, base, sp["step"],
-                                     upserts.rdd.getNumPartitions())
-            upserts = upserts.withColumn(
-                c,
-                F.coalesce(
-                    F.col(c),
-                    (F.lit(base)
-                     + F.monotonically_increasing_id()
-                     * F.lit(sp["step"])).cast("long"),
-                ),
-            )
-        # monotonically_increasing_id() is NONDETERMINISTIC across
-        # re-evaluations: the rewrite write and the CDF classification
-        # below each run their own job over this plan (with different
-        # downstream coalesce/partition layouts), so freshly inserted
-        # rows could persist one id in the data and a DIFFERENT id in
-        # the change feed. Pin the assigned values once — the same
-        # source-stability rule as the `changes` checkpoint above.
-        upserts = upserts.localCheckpoint(eager=True)
-    upserts = upserts.select(*out_cols)
-    if touched:
-        # reading touched files with the (possibly widened) manifest
-        # schema NULL-backfills any evolved columns they predate; the
-        # DV-aware scan keeps already-deleted rows out of the rewrite
-        kept = (
-            _read_files_dv(spark, table_path, parent, touched, out_struct)
-            .join(keys, key_col, "left_anti")
-            .select(*out_cols)
-        )
-        merged = kept.unionByName(upserts)
-    else:
-        merged = upserts
-    # Rewrite granularity == touched-file count (aligned tables keep
-    # their hive layout instead — see _write_rewrite). CHECK
-    # constraints gate only the NEW rows (untouched parent files were
-    # validated by the commits that wrote them); generated-column
-    # invariants ride along (supplied values must equal the expression)
-    new_files = _stage(
-        table_path, final_dir, merged,
-        lambda d, p: _write_rewrite(d, p, parent, len(touched)),
-        _checks(parent))
-
-    # persisted CDF: classify the MERGE's row-level changes from
-    # BOUNDED sides — matched parent rows (confined to the touched
-    # files by construction) vs the change images — with the same
-    # full-outer-key classification table_changes uses, so no-op
-    # upserts are suppressed identically
-    cdf_files: list[str] = []
-    final_cdf = None
-    if _cdf_enabled(parent):
-        if touched:
-            pre_matched = (
-                _read_files_dv(spark, table_path, parent, touched,
-                               out_struct)
-                .join(keys, key_col, "left_semi")
-                .select(*out_cols)
-            )
-        else:
-            pre_matched = spark.createDataFrame([], out_struct)
-        feed = _classify_feed(pre_matched, upserts, [key_col])
-        cdf_files, final_cdf = _write_cdf(table_path, version, token, feed)
-
-    # 4. publish: untouched parent files keep their col_stats verbatim.
-    # extra_manifest lets callers stamp an idempotency key on the SAME
-    # commit that applies the change (Delta's txnAppId/txnVersion):
-    # a re-driven foreachBatch checks the stamp and skips the replay.
-    manifest = {
-        "version": version,
-        "files": untouched + new_files,
-        **_shape_of(parent),
-        # out_struct == parent schema when no columns were added
-        "schema": out_struct.json(),
-        "operation": "MERGE",
-        **(extra_manifest or {}),
-    }
-    # untouched files keep their deletion vectors; rewritten files got
-    # their DVs materialized into the rewrite and drop the mapping
-    parent_dv = _dv_map(parent)
-    child_dv = {f: parent_dv[f] for f in untouched if f in parent_dv}
-    if child_dv:
-        manifest["dv"] = child_dv
-    _set_col_stats(manifest, parent, table_path, untouched, new_files)
-    if final_cdf is not None:
-        manifest["cdf"] = cdf_files
-    _commit(table_path, lambda _base, _v: manifest, parent, version,
-            staged_dirs=[final, final_cdf])
-    return {
-        "version": version,
-        "files_total": len(untouched) + len(new_files),
-        "files_shared": len(untouched),
-        "files_rewritten": len(touched),
-        "files_pruned_by_stats": len(pfiles) - len(candidates),
-    }
+    return _predicate_cow(
+        spark, table_path, _Keys(key_col, changes), operation="MERGE",
+        # a NULL delete flag is an upsert: ~NULL would drop the row
+        insert_rows=changes.filter(
+            ~F.coalesce(F.col(delete_col), F.lit(False))),
+        extra_manifest=extra_manifest, slot=(version, parent),
+        schema=out_struct)
 
 
-def _predicate_cow(spark: SparkSession, table_path: str,
-                   predicate_sql: str, rewrite, validate=None,
+def _predicate_cow(spark: SparkSession, table_path: str, match,
+                   rewrite=None, validate=None,
                    operation: str = "DELETE", make_feed=None,
                    drop_fully_matched: bool = False,
                    insert_rows: DataFrame | None = None,
-                   extra_manifest: dict | None = None) -> dict:
-    """Shared physical plan for predicate-driven DML (DELETE / UPDATE):
-    Delta's COW rewrite shape.
+                   extra_manifest: dict | None = None,
+                   slot: tuple | None = None, schema=None) -> dict:
+    """Shared physical plan of copy-on-write DML — DELETE, UPDATE,
+    REPLACE WHERE, COPY INTO, INSERT INTO and MERGE: Delta's COW
+    rewrite shape. ``match`` selects the rows the DML changes: a SQL
+    predicate, or a MERGE's change keys (:class:`_Keys`).
 
-    1. Discovery scan: read the latest snapshot's files with the
-       predicate PUSHED to parquet (row-group min/max pruning happens
-       in the scan; only the predicate's columns plus
-       ``input_file_name()`` are materialized) and collect the DISTINCT
-       set of files holding at least one matching row — O(#files)
-       driver metadata, the same planning list the MERGE path builds.
-    2. Rewrite: ``rewrite(df_of_touched_files)`` produces the touched
-       files' replacement rows; every other parent file is SHARED
-       byte-identically in the child manifest. With
-       ``drop_fully_matched`` (DELETE), a file whose every live row
-       matched skips the rewrite entirely and is DROPPED from the
-       manifest — the metadata-only whole-file fast path.
-    3. Publish through :func:`_commit`. A racing commit confined to
+    1. Discovery scan over the files ``_match_files`` keeps (every
+       file for a predicate, the key-span candidates for change keys,
+       none for a pure insert): the DV-aware scan materializes only the
+       match's columns plus ``input_file_name()`` (a predicate is
+       pushed to parquet for row-group pruning) and collects, per file
+       holding a match, its MATCHED and LIVE row counts — O(#files)
+       driver metadata. Untouched files are SHARED byte-identically in
+       the child manifest. With ``drop_fully_matched`` (DELETE, REPLACE
+       WHERE), a file whose every live row matched skips the rewrite
+       and is DROPPED from the manifest — the metadata-only whole-file
+       fast path, exact for ARBITRARY predicates (NULLs never match).
+    2. Rewrite: ``rewrite(df_of_touched_files, schema)`` (default:
+       their unmatched rows) replaces the touched files. The rows the
+       commit adds (``insert_rows``: REPLACE WHERE's replacement, COPY
+       INTO / INSERT INTO, MERGE's upserts) are completed by
+       :func:`_fill_new_rows` and land in the same staged write. CHECK
+       constraints gate the written rows inside that write job.
+    3. Change feed (``cdf.enabled``): ``make_feed(matched_rows,
+       schema)`` plus the added rows as ``insert``; for change keys the
+       matched pre-images and the added rows are classified by key
+       (``_classify_feed``), so no-op upserts drop out exactly as in
+       :func:`table_changes`.
+    4. Publish through :func:`_commit`. A racing commit confined to
        OTHER files (blind append, disjoint DML, compaction elsewhere)
        REBASES onto the new head and republishes — Delta's
        WriteSerializable file-level conflict rules — while one that
        removed/re-vectored this DML's own files, or changed the
        table's shape (``_SHAPE_KEYS``), raises ``CommitConflict``.
-       Untouched files keep their ``col_stats`` verbatim; new files
-       get one footer read each.
+       ``slot`` = (version, parent) is a MERGE's ``_merge_slot``: the
+       commit lands at exactly that version on that parent and never
+       rebases. Untouched files keep their ``col_stats`` verbatim; new
+       files get one footer read each.
 
-    ``rewrite(df, schema)`` receives the SAME snapshot schema this
-    function resolved (and ``validate(schema)``, when given, runs
-    right after that resolution) — so a caller's column checks and
-    casts can never race a concurrent commit into using a different
-    schema than the snapshot being rewritten.
+    ``rewrite(df, schema)`` and ``validate(schema)`` (run right after
+    the snapshot resolves) receive the SAME snapshot schema — so a
+    caller's column checks and casts can never race a concurrent
+    commit into using a different schema than the snapshot being
+    rewritten. ``schema`` overrides it with the commit's schema when a
+    MERGE widens the table.
 
-    A predicate matching no rows returns ``{"version": None, ...}``
-    without committing — an empty rewrite would only fragment history.
+    A DML that matches no rows and adds none returns ``{"version":
+    None, ...}`` without committing — an empty rewrite would only
+    fragment history.
     """
     import uuid
 
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    # Same-snapshot version derivation as merge_version_cow: an
-    # interleaved commit must collide on the CAS, never be skipped.
-    head, parent = _latest(table_path)
-    version = head + 1
-    schema = T.StructType.fromJson(json.loads(parent["schema"]))
+    version, parent = slot or _merge_slot(table_path, None)
+    widened = schema
+    if schema is None:
+        schema = T.StructType.fromJson(json.loads(parent["schema"]))
+    cols = [f.name for f in schema.fields]
     pfiles = parent["files"]
     if validate is not None:
         validate(schema)
@@ -2022,24 +1951,23 @@ def _predicate_cow(spark: SparkSession, table_path: str,
         return {"version": None, "files_total": 0, "files_shared": 0,
                 "files_rewritten": 0}
 
-    # NULL predicate results select nothing (SQL WHERE semantics).
-    # DV-aware on both scans: an already-deleted row must neither mark
-    # its file touched nor resurrect through the rewrite.
-    # Discovery counts MATCHED vs LIVE rows per file so DELETE can take
-    # the metadata-only fast path: a file whose every live row matches
-    # is DROPPED from the child manifest — zero rewrite I/O (Delta's
-    # whole-file delete; "drop yesterday's partition" on a 100 TB
-    # clustered table commits without writing a data byte). Exact for
-    # ARBITRARY predicates (NULLs never match), no stats proof needed.
-    hit = F.coalesce(F.expr(predicate_sql), F.lit(False))
+    keyed = isinstance(match, _Keys)
+    candidates = _match_files(parent, match)
     rows = []
-    # pure-insert commits (COPY INTO spells its predicate literally
-    # 'false') skip the discovery scan — no parent file can match
-    if pfiles and predicate_sql.strip().lower() != "false":
+    if candidates:
+        # DV-aware: an already-deleted row must neither mark its file
+        # touched nor resurrect through the rewrite
+        scan = _read_files_dv(spark, table_path, parent, candidates,
+                              schema, file_col="__f")
+        if keyed:
+            # the keys are distinct, so the left join repeats no row
+            scan = scan.join(match.keys(F.lit(True).alias("__hit")),
+                             match.key, "left")
+            hit = F.coalesce(F.col("__hit"), F.lit(False))
+        else:
+            hit = F.coalesce(F.expr(match), F.lit(False))
         rows = (
-            _read_files_dv(spark, table_path, parent, pfiles, schema,
-                           file_col="__f")
-            .groupBy("__f")
+            scan.groupBy("__f")
             .agg(F.sum(hit.cast("long")).alias("__m"),
                  F.count(F.lit(1)).alias("__n"))
             .filter(F.col("__m") > 0)
@@ -2063,46 +1991,29 @@ def _predicate_cow(spark: SparkSession, table_path: str,
 
     replacement = None
     if touched:
-        replacement = rewrite(
-            _read_files_dv(spark, table_path, parent, touched, schema),
-            schema,
-        )
+        kept = _read_files_dv(spark, table_path, parent, touched, schema)
+        replacement = (_match_rows(kept, match, matched=False)
+                       if rewrite is None else rewrite(kept, schema))
         # GENERATED ALWAYS AS columns recompute after an UPDATE's
         # assignments (Delta's behavior when their sources change);
         # idempotent on the kept rows, so no matched-row split needed
         if operation.startswith("UPDATE") and parent.get("generated"):
             replacement = _apply_generated(
                 replacement, parent["generated"], schema)
-        replacement = replacement.select(
-            *[f.name for f in schema.fields])
+        replacement = replacement.select(*cols)
     ins = None
     if insert_rows is not None:
-        # REPLACE WHERE inserts: fill omitted defaulted columns,
-        # compute missing generated columns, allocate identity values,
-        # then cast to the snapshot schema
-        ins = _apply_defaults(insert_rows, parent.get("defaults"),
-                              schema)
-        gen = parent.get("generated") or {}
-        if gen:
-            missing = {c: e for c, e in gen.items()
-                       if c not in ins.columns}
-            ins = _apply_generated(ins, missing, schema)
-        ident = parent.get("identity") or {}
-        if ident:
-            supplied = sorted(set(ident) & set(insert_rows.columns))
-            if supplied:
-                raise ValueError(
-                    f"columns {supplied} are GENERATED ALWAYS AS "
-                    "IDENTITY and cannot be supplied in REPLACE WHERE"
-                )
-            ins = _apply_identity(spark, table_path, ins,
-                                  _validate_identity_spec(ident), parent)
-        ins = ins.select(*[F.col(f.name).cast(f.dataType).alias(f.name)
-                           for f in schema.fields])
-        # the insert plan is evaluated by the rewrite write AND (with
-        # cdf.enabled) the feed write — pin once so a nondeterministic
-        # source or identity assignment cannot diverge between them
-        if ident or _cdf_enabled(parent):
+        keep = None
+        if keyed and touched and parent.get("identity"):
+            keep = (match.key, _read_matched(
+                spark, table_path, parent, touched, schema, match))
+        ins = _fill_new_rows(insert_rows, table_path, parent, operation,
+                             schema, keep)
+        # the added rows feed the data write AND (cdf.enabled) the feed
+        # write: pin them once so identity ids or a nondeterministic
+        # source cannot diverge between the two (a MERGE's rows come
+        # from its already pinned change source)
+        if parent.get("identity") or (_cdf_enabled(parent) and not keyed):
             ins = ins.localCheckpoint(eager=True)
         replacement = (ins if replacement is None
                        else replacement.unionByName(ins))
@@ -2113,31 +2024,30 @@ def _predicate_cow(spark: SparkSession, table_path: str,
     if replacement is not None:
         final_dir = f"d_{version}_{token}"
         final = os.path.join(table_path, final_dir)
-        # Rewrite granularity == touched-file count; aligned tables
-        # keep their hive layout (see _write_rewrite). CHECK
-        # constraints gate the rewritten rows (an UPDATE ... SET can
-        # introduce violations into previously-valid rows);
-        # generated-column invariants ride along. The checked write
-        # runs first, so a rejected commit has staged nothing else.
+        # Rewrite granularity == touched-file count, and rows that
+        # rewrite no file keep their own partitioning; aligned tables
+        # keep their hive layout (see _write_rewrite). The checked
+        # write runs first, so a rejected commit has staged nothing
+        # else.
         new_files = _stage(
             table_path, final_dir, replacement,
-            lambda d, p: _write_rewrite(d, p, parent, max(1, len(touched))),
+            lambda d, p: _write_rewrite(d, p, parent, len(touched)),
             _checks(parent))
     # persisted Change Data Feed (cdf.enabled): the matched rows are
     # already confined to the touched + dropped files — one more
     # bounded scan builds the row-level feed CDF consumers read back
     cdf_files: list[str] = []
     final_cdf = None
-    if make_feed is not None and _cdf_enabled(parent):
-        feed = make_feed(
-            _read_files_dv(spark, table_path, parent, touched + dropped,
-                           schema).filter(hit),
-            schema,
-        )
-        if ins is not None:
-            feed = feed.unionByName(ins.select(
-                F.lit("insert").alias("_change_type"),
-                *[f.name for f in schema.fields]))
+    if _cdf_enabled(parent) and (keyed or make_feed is not None):
+        pre = _read_matched(spark, table_path, parent, touched + dropped,
+                            schema, match)
+        if keyed:
+            feed = _classify_feed(pre, ins, [match.key])
+        else:
+            feed = make_feed(pre, schema)
+            if ins is not None:
+                feed = feed.unionByName(ins.select(
+                    F.lit("insert").alias("_change_type"), *cols))
         cdf_files, final_cdf = _write_cdf(table_path, version, token, feed)
 
     own = set(touched) | set(dropped)
@@ -2154,6 +2064,8 @@ def _predicate_cow(spark: SparkSession, table_path: str,
             "operation": operation,
             **(extra_manifest or {}),
         }
+        if widened is not None:
+            m["schema"] = widened.json()
         base_dv = _dv_map(base)
         child_dv = {f: base_dv[f] for f in unt if f in base_dv}
         if child_dv:
@@ -2163,7 +2075,8 @@ def _predicate_cow(spark: SparkSession, table_path: str,
             m["cdf"] = cdf_files
         return m
 
-    manifest = _commit(table_path, _build, parent, version, own=own,
+    manifest = _commit(table_path, _build, parent, version,
+                       own=None if slot is not None else own,
                        staged_dirs=[final, final_cdf])
     n_shared = len(manifest["files"]) - len(new_files)
     return {
@@ -2171,7 +2084,9 @@ def _predicate_cow(spark: SparkSession, table_path: str,
         "files_total": len(manifest["files"]),
         "files_shared": n_shared,
         "files_rewritten": len(touched),
-        "files_dropped": len(dropped),
+        # a MERGE never drops whole files; it reports its pruning
+        **({"files_pruned_by_stats": len(pfiles) - len(candidates)}
+           if keyed else {"files_dropped": len(dropped)}),
     }
 
 
@@ -2189,19 +2104,11 @@ def delete_where(spark: SparkSession, table_path: str,
     through the merge-on-read deletion-vector path instead
     (:func:`delete_where_mor`) — same visible result, bytes written
     ∝ deleted rows."""
-    from pyspark.sql import functions as F
-
     if _dv_enabled(_head_manifest(table_path) or {}):
         return delete_where_mor(spark, table_path, predicate_sql)
-    return _predicate_cow(
-        spark, table_path, predicate_sql,
-        lambda df, _schema: df.filter(
-            ~F.coalesce(F.expr(predicate_sql), F.lit(False))
-        ),
-        operation="DELETE",
-        make_feed=_delete_feed,
-        drop_fully_matched=True,
-    )
+    return _predicate_cow(spark, table_path, predicate_sql,
+                          operation="DELETE", make_feed=_delete_feed,
+                          drop_fully_matched=True)
 
 
 def replace_where(spark: SparkSession, table_path: str, df: DataFrame,
@@ -2241,16 +2148,9 @@ def replace_where(spark: SparkSession, table_path: str, df: DataFrame,
             f"matching the predicate {predicate_sql!r} — every "
             "inserted row must satisfy it"
         )
-    return _predicate_cow(
-        spark, table_path, predicate_sql,
-        lambda kept, _schema: kept.filter(
-            ~F.coalesce(F.expr(predicate_sql), F.lit(False))
-        ),
-        operation="REPLACE WHERE",
-        make_feed=_delete_feed,
-        drop_fully_matched=True,
-        insert_rows=df,
-    )
+    return _predicate_cow(spark, table_path, predicate_sql,
+                          operation="REPLACE WHERE", make_feed=_delete_feed,
+                          drop_fully_matched=True, insert_rows=df)
 
 
 def copy_into(spark: SparkSession, table_path: str, source_dir: str,
@@ -2312,7 +2212,6 @@ def copy_into(spark: SparkSession, table_path: str, source_dir: str,
     df = readers[file_format](*[p for p, _, _ in new_sources])
     st = _predicate_cow(
         spark, table_path, "false",
-        lambda kept, _schema: kept,
         operation="COPY INTO",
         make_feed=_delete_feed,
         insert_rows=df,
@@ -2587,76 +2486,87 @@ def _split_fully_matched(spark: SparkSession, table_path: str,
                 for f in dv_touched))
 
 
-def _mor_dml(spark: SparkSession, table_path: str, predicate_sql: str,
-             make_rows=None, validate=None, make_feed=None) -> dict:
-    """Shared physical plan for MERGE-ON-READ DML (Delta 3.x deletion
-    vectors): instead of rewriting every touched file (copy-on-write),
-    commit a tiny positional-delete SIDECAR and leave every data file
-    byte-identical.
+def _mor_dml(spark: SparkSession, table_path: str, match,
+             make_rows=None, validate=None, make_feed=None,
+             operation: str = "DELETE (DV)",
+             insert_rows: DataFrame | None = None,
+             slot: tuple | None = None) -> dict:
+    """Shared physical plan of MERGE-ON-READ DML — DELETE, UPDATE and
+    MERGE with deletion vectors (Delta 3.x): instead of rewriting every
+    touched file (copy-on-write), commit a tiny positional-delete
+    SIDECAR and leave every data file byte-identical. ``match`` is a
+    SQL predicate or a MERGE's change keys (:class:`_Keys`), as in
+    :func:`_predicate_cow`.
 
-    1. Discovery scan: the DV-aware snapshot read keeps each row's
-       source file + in-file position; rows matching the predicate are
-       pinned once (localCheckpoint — the same source-stability rule
-       as MERGE).
-    2. Sidecar write: the matched (file, position) pairs, UNIONED with
+    1. Discovery: the DV-aware read of the files ``_match_files``
+       keeps holds each row's source file + in-file position; the
+       matched rows are pinned once (localCheckpoint — the same
+       source-stability rule as MERGE's change source), with full
+       pre-images only when new rows or the change feed need them. ONE
+       per-file count over them gives the touched files, the
+       deleted-row total and the counts ``_split_fully_matched`` needs
+       to DROP files whose every live row matched.
+    2. New rows: ``make_rows(matched, schema)`` (UPDATE's post-images,
+       generated columns recomputed) and ``insert_rows`` (MERGE's
+       upserts, completed by :func:`_fill_new_rows`) are fast-APPENDED
+       as new data files in one checked write; old positions are DV'd
+       away — Delta's MOR update shape exactly. An empty write adds no
+       file (read from its footers, not a count job).
+    3. Sidecar write: the matched (file, position) pairs, UNIONED with
        the touched files' existing DV rows (a file's vector is always
        replaced whole, so each file maps to exactly ONE current
        sidecar), land in a new ``s_N_<token>`` parquet dir. Bytes
        written ∝ DELETED rows, not touched-file size — the whole point
        at 100 TB: a 1-row delete in a 1 GB file costs ~100 bytes of
        sidecar, not 1 GB of rewrite.
-    3. For UPDATE (``make_rows`` given): the post-update images of the
-       matched rows are fast-APPENDED as new data files (old positions
-       are DV'd away) — Delta's MOR update shape exactly.
-    4. Publish: manifest shares EVERY parent data file verbatim
-       (stats too — [min,max] stay valid upper bounds under deletes),
-       remaps touched files' DV pointers, and goes through the same
-       CAS as every commit.
+    4. Change feed (``cdf.enabled``) from the pinned pre-images:
+       ``make_feed(matched, schema)``, or for change keys the key
+       classification against the added rows (``_classify_feed``).
+    5. Publish: manifest shares EVERY surviving parent data file
+       verbatim (stats too — [min,max] stay valid upper bounds under
+       deletes), remaps touched files' DV pointers, and goes through
+       :func:`_commit` with the same WriteSerializable rules as the COW
+       engine; a MERGE's ``slot`` never rebases.
 
     Readers (read_version, the Data Source, CDF, bloom point lookups,
-    the COW merge's own scans) all apply DVs through
+    the COW engine's own scans) all apply DVs through
     ``_read_files_dv``; OPTIMIZE compacts DV-laden files back to plain
     ones (its rewrite reads through the DVs); vacuum refcounts
     sidecars like data files.
     """
+    import shutil
     import uuid
 
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    head, parent = _latest(table_path)
-    version = head + 1
+    version, parent = slot or _merge_slot(table_path, None)
     schema = T.StructType.fromJson(json.loads(parent["schema"]))
     pfiles = parent["files"]
     if validate is not None:
         validate(schema)
-    if not pfiles:
-        return {"version": None, "files_total": 0, "files_shared": 0,
-                "rows_deleted": 0, "dv_bytes": 0}
+    keyed = isinstance(match, _Keys)
+    want_cdf = _cdf_enabled(parent) and (keyed or make_feed is not None)
 
-    hit = F.coalesce(F.expr(predicate_sql), F.lit(False))
-    matched = (
-        _read_files_dv(spark, table_path, parent, pfiles, schema,
-                       file_col="__f", pos_col="__p")
-        .filter(hit)
-    )
-    # positions suffice for a plain DELETE's sidecar; full preimages
-    # are only pinned when an UPDATE rebuilds rows or the CDF needs
-    # them (same projection rule as merge_version_mor) — a 100-column
-    # table's delete checkpoint shrinks to two longs per matched row
-    if make_rows is None and not (make_feed is not None
-                                  and _cdf_enabled(parent)):
-        matched = matched.select("__f", "__p")
-    matched = matched.localCheckpoint(eager=True)
-    # ONE discovery aggregation feeds everything downstream: touched
-    # files (keys), deleted-row total (sum), and the per-file matched
-    # counts the fully-matched split needs — previously three separate
-    # Spark actions (distinct collect + count + per-file count) over
-    # the same checkpointed rows.
-    fcounts = {r["__f"]: r["count"]
-               for r in matched.groupBy("__f").count().collect()}
+    candidates = _match_files(parent, match)
+    fcounts: dict = {}
+    matched = None
+    if candidates:
+        matched = _read_matched(spark, table_path, parent, candidates,
+                                schema, match, file_col="__f",
+                                pos_col="__p")
+        # positions suffice for the sidecar; full pre-images are only
+        # pinned when new rows or the change feed are built from them —
+        # a 100-column table's delete checkpoint shrinks to two longs
+        # per matched row
+        if make_rows is None and not want_cdf:
+            matched = matched.select("__f", "__p")
+        matched = matched.localCheckpoint(eager=True)
+        fcounts = {r["__f"]: r["count"]
+                   for r in matched.groupBy("__f").count().collect()}
     touched_uris = list(fcounts)
-    if not touched_uris:
+    if not touched_uris and insert_rows is None:
         return {"version": None, "files_total": len(pfiles),
                 "files_shared": len(pfiles), "rows_deleted": 0,
                 "dv_bytes": 0}
@@ -2668,30 +2578,50 @@ def _mor_dml(spark: SparkSession, table_path: str, predicate_sql: str,
     mcounts = {os.path.normpath(_uri_to_path(u)): c
                for u, c in fcounts.items()}
     parent_dv = _dv_map(parent)
-
     dropped, dv_touched, dv_uris, n_dv_rows = _split_fully_matched(
         spark, table_path, mcounts, touched, touched_uris, parent_dv)
 
     token = uuid.uuid4().hex[:12]
-    # UPDATE: append the post-update row images as new data files. The
-    # checked write runs first, so a rejected commit has staged nothing
-    # else.
-    new_files: list[str] = []
-    final_data = None
+    new_rows = ins = None
     if make_rows is not None:
-        data_dir = f"d_{version}_{token}"
-        final_data = os.path.join(table_path, data_dir)
-        updated = make_rows(matched, schema)
+        new_rows = make_rows(matched, schema)
         # GENERATED ALWAYS AS columns recompute on the post-update
         # images, same as the COW rewrite path
         if parent.get("generated"):
-            updated = _apply_generated(
-                updated, parent["generated"], schema)
-        updated = updated.select(*[f.name for f in schema.fields])
+            new_rows = _apply_generated(
+                new_rows, parent["generated"], schema)
+        new_rows = new_rows.select(*[f.name for f in schema.fields])
+    if insert_rows is not None:
+        keep = None
+        if keyed and touched and parent.get("identity"):
+            keep = (match.key, _read_matched(
+                spark, table_path, parent, touched, schema, match))
+        ins = _fill_new_rows(insert_rows, table_path, parent, operation,
+                             schema, keep)
+        # pinned once for the data and feed writes (see _predicate_cow)
+        if parent.get("identity") or (_cdf_enabled(parent) and not keyed):
+            ins = ins.localCheckpoint(eager=True)
+        new_rows = ins if new_rows is None else new_rows.unionByName(ins)
+    # the checked write runs first, so a rejected commit has staged
+    # nothing else
+    new_files: list[str] = []
+    final_data = None
+    if new_rows is not None:
+        data_dir = f"d_{version}_{token}"
+        final_data = os.path.join(table_path, data_dir)
         new_files = _stage(
-            table_path, data_dir, updated,
+            table_path, data_dir, new_rows,
             lambda d, p: _write_rewrite(d, p, parent, len(touched)),
             _checks(parent))
+        if not sum(pq.ParquetFile(_abs_file(table_path, f)).metadata.num_rows
+                   for f in new_files):
+            shutil.rmtree(final_data, ignore_errors=True)
+            new_files, final_data = [], None
+    if not touched and not new_files:
+        return {"version": None, "files_total": len(pfiles),
+                "files_shared": len(pfiles), "files_rewritten": 0,
+                "files_dv": 0, "rows_deleted": 0, "new_files": 0,
+                "dv_bytes": 0}
 
     sidecar_files: list[str] = []
     dv_bytes, final_dv = 0, None
@@ -2703,11 +2633,14 @@ def _mor_dml(spark: SparkSession, table_path: str, predicate_sql: str,
         )
 
     # persisted CDF: the pinned matched rows already hold the full
-    # preimages — the feed costs one bounded pass, no re-scan
+    # pre-images — the feed costs one bounded pass, no re-scan
     cdf_files: list[str] = []
     final_cdf = None
-    if make_feed is not None and _cdf_enabled(parent):
-        feed = make_feed(matched.drop("__f", "__p"), schema)
+    if want_cdf:
+        pre = (matched.drop("__f", "__p") if touched
+               else spark.createDataFrame([], schema))
+        feed = (_classify_feed(pre, ins, [match.key]) if keyed
+                else make_feed(pre, schema))
         cdf_files, final_cdf = _write_cdf(table_path, version, token, feed)
 
     own = set(touched) | set(dropped)
@@ -2722,8 +2655,7 @@ def _mor_dml(spark: SparkSession, table_path: str, predicate_sql: str,
             "version": v,
             "files": surv + new_files,
             **_shape_of(base),
-            "operation": ("UPDATE (DV)" if make_rows is not None
-                          else "DELETE (DV)"),
+            "operation": operation,
         }
         dv = {f: s for f, s in _dv_map(base).items() if f not in own}
         for f in dv_touched:
@@ -2739,7 +2671,8 @@ def _mor_dml(spark: SparkSession, table_path: str, predicate_sql: str,
     # path; our new sidecar replaced the PARENT vector whole, so
     # publishing over a re-vectored own file would lose the winner's
     # deletes.
-    manifest = _commit(table_path, _build, parent, version, own=own,
+    manifest = _commit(table_path, _build, parent, version,
+                       own=None if slot is not None else own,
                        staged_dirs=[final_dv, final_data, final_cdf])
     n_shared = len(manifest["files"]) - len(new_files)
     return {
@@ -2752,6 +2685,8 @@ def _mor_dml(spark: SparkSession, table_path: str, predicate_sql: str,
         "rows_deleted": n_deleted,
         "dv_bytes": dv_bytes,
         "new_files": len(new_files),
+        **({"files_pruned_by_stats": len(pfiles) - len(candidates)}
+           if keyed else {}),
     }
 
 
@@ -2800,7 +2735,7 @@ def update_where_mor(spark: SparkSession, table_path: str,
 
     return _mor_dml(spark, table_path, predicate_sql, make_rows=_apply,
                     make_feed=_update_feed(assignments),
-                    validate=_validate)
+                    validate=_validate, operation="UPDATE (DV)")
 
 
 def merge_version_mor(spark: SparkSession, table_path: str,
@@ -2814,23 +2749,21 @@ def merge_version_mor(spark: SparkSession, table_path: str,
     deletion-vector write-amplification win matters most: a CDC batch
     touching 1k keys spread over 1k × 1 GB files costs ~1 TB of COW
     rewrite but only O(1k positions) of sidecar + the new rows here.
-    Same visible semantics as :func:`merge_version_cow` (upsert =
-    old copies vectored + new image appended; delete = vectored only;
-    NULL delete flags are upserts); schema evolution still goes
-    through the COW path (the rewrite is what materializes the new
-    column). ``merge_version_cow`` routes here automatically when the
-    table property ``dv.enabled = 'true'`` is set (and evolve_schema
-    is off)."""
-    import shutil
-    import uuid
-
-    import pyarrow.parquet as pq
+    The plan is :func:`_mor_dml`'s with the change keys as its match
+    (key-span pruned discovery, fully consumed files dropped, identity
+    values of matched keys kept). Same visible semantics, slot rule
+    and change pinning as :func:`merge_version_cow` (upsert = old
+    copies vectored + new image appended; delete = vectored only; NULL
+    delete flags are upserts); schema evolution still goes through the
+    COW path (the rewrite is what materializes the new column).
+    ``merge_version_cow`` routes here automatically when the table
+    property ``dv.enabled = 'true'`` is set (and evolve_schema is
+    off). A MERGE that deletes no row and adds none commits nothing
+    (``version`` None)."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     version, parent = _merge_slot(table_path, version)
-    schema = T.StructType.fromJson(json.loads(parent["schema"]))
-    data_cols = [f.name for f in schema.fields]
+    data_cols = [f["name"] for f in json.loads(parent["schema"])["fields"]]
     extra = [c for c in changes.columns
              if c not in data_cols and c != delete_col]
     if extra:
@@ -2839,171 +2772,13 @@ def merge_version_mor(spark: SparkSession, table_path: str,
             "schema evolution goes through "
             "merge_version_cow(evolve_schema=True)"
         )
-    pfiles = parent["files"]
-    parent_dv = _dv_map(parent)
     # pin the change source once (same stability rule as COW merge)
     changes = changes.localCheckpoint(eager=True)
-    keys = F.broadcast(changes.select(key_col).distinct())
-
-    # stat-prune the matched-row discovery exactly like the COW path:
-    # files whose [min,max] can't intersect the change-key span never
-    # get scanned (on a 10k-file range-clustered table a narrow CDC
-    # batch scans a handful of files, not the table)
-    candidates = _key_span_candidates(parent, key_col, changes)
-
-    token = uuid.uuid4().hex[:12]
-    touched: list[str] = []
-    touched_uris: list[str] = []
-    dropped: list[str] = []
-    dv_touched: list[str] = []
-    dv_uris: list[str] = []
-    n_dv_rows = 0
-    n_deleted = 0
-    want_cdf = _cdf_enabled(parent)
-    matched = None
-    if candidates:
-        matched = (
-            _read_files_dv(spark, table_path, parent, candidates, schema,
-                           file_col="__f", pos_col="__p")
-            .join(keys, key_col, "left_semi")
-        )
-        if not want_cdf:
-            # positions suffice for the sidecar; full preimages are
-            # only pinned when the CDF needs them
-            matched = matched.select("__f", "__p")
-        matched = matched.localCheckpoint(eager=True)
-        # same single-aggregation discovery as _mor_dml: files, total,
-        # and per-file counts from one action
-        fcounts = {r["__f"]: r["count"]
-                   for r in matched.groupBy("__f").count().collect()}
-        touched_uris = list(fcounts)
-        if touched_uris:
-            by_abs = {_abs_file(table_path, f): f for f in pfiles}
-            touched = sorted(
-                by_abs[os.path.normpath(_uri_to_path(u))]
-                for u in touched_uris
-            )
-            n_deleted = sum(fcounts.values())
-            mcounts = {os.path.normpath(_uri_to_path(u)): c
-                       for u, c in fcounts.items()}
-            dropped, dv_touched, dv_uris, n_dv_rows = _split_fully_matched(
-                spark, table_path, mcounts, touched, touched_uris,
-                parent_dv)
-
-    upserts = changes.filter(
-        ~F.coalesce(F.col(delete_col), F.lit(False))
-    )
-    # identity recovery/generation — same contract as the COW merge:
-    # matched keys keep their value (pre-image scan of touched files),
-    # new keys continue past the high-water mark
-    ident = parent.get("identity") or {}
-    if ident:
-        supplied = sorted(set(ident) & set(changes.columns))
-        if supplied:
-            raise ValueError(
-                f"columns {supplied} are GENERATED ALWAYS AS IDENTITY "
-                "and cannot be supplied in MERGE changes"
-            )
-        if touched:
-            preim = (
-                _read_files_dv(spark, table_path, parent, touched,
-                               schema)
-                .join(keys, key_col, "left_semi")
-                .select(key_col, *ident.keys())
-            )
-            upserts = upserts.join(preim, key_col, "left")
-        else:
-            for c in ident:
-                upserts = upserts.withColumn(
-                    c, F.lit(None).cast("long"))
-        for c, sp in _validate_identity_spec(ident).items():
-            hw = _identity_high_water(spark, table_path, parent, c)
-            base = sp["start"] if hw is None else hw + sp["step"]
-            _identity_check_headroom(c, base, sp["step"],
-                                     upserts.rdd.getNumPartitions())
-            upserts = upserts.withColumn(
-                c,
-                F.coalesce(
-                    F.col(c),
-                    (F.lit(base)
-                     + F.monotonically_increasing_id()
-                     * F.lit(sp["step"])).cast("long"),
-                ),
-            )
-        # pin the nondeterministic id assignment once: the rewrite
-        # write and the CDF classification below are two separate
-        # jobs over this plan (see the COW twin)
-        upserts = upserts.localCheckpoint(eager=True)
-    upserts = upserts.select(*data_cols)
-    # the checked write runs first, so a rejected commit has staged
-    # nothing else. Whether there were upserts at all is read from the
-    # written files' footers, not from a count job: a delete-only
-    # MERGE's empty write is removed and adds no file
-    data_dir = f"d_{version}_{token}"
-    final_data = os.path.join(table_path, data_dir)
-    new_files = _stage(
-        table_path, data_dir, upserts,
-        lambda d, p: _write_rewrite(d, p, parent, len(touched)),
-        _checks(parent))
-    if not sum(pq.ParquetFile(_abs_file(table_path, f)).metadata.num_rows
-               for f in new_files):
-        shutil.rmtree(final_data, ignore_errors=True)
-        new_files, final_data = [], None
-    if not touched and not new_files:
-        return {"version": None, "files_total": len(pfiles),
-                "files_shared": len(pfiles), "files_rewritten": 0,
-                "files_dv": 0, "rows_deleted": 0, "new_files": 0,
-                "dv_bytes": 0}
-    sidecar_files: list[str] = []
-    dv_bytes, final_dv = 0, None
-    if dv_touched:
-        sidecar_files, dv_bytes, final_dv = _write_dv_sidecar(
-            spark, table_path, version, token,
-            matched.filter(F.col("__f").isin(dv_uris)),
-            dv_touched, dv_uris, parent_dv, n_rows=n_dv_rows,
-        )
-
-    # persisted CDF from bounded sides (same shape as the COW twin):
-    # pinned matched preimages vs the change images
-    cdf_files: list[str] = []
-    final_cdf = None
-    if want_cdf:
-        if matched is not None and touched:
-            pre_matched = matched.drop("__f", "__p")
-        else:
-            pre_matched = spark.createDataFrame([], schema)
-        feed = _classify_feed(pre_matched, upserts, [key_col])
-        cdf_files, final_cdf = _write_cdf(table_path, version, token, feed)
-
-    surviving = [f for f in pfiles if f not in set(dropped)]
-    manifest = {
-        "version": version,
-        "files": surviving + new_files,
-        **_shape_of(parent),
-        "operation": "MERGE (DV)",
-    }
-    dv = {f: s for f, s in parent_dv.items() if f not in set(touched)}
-    for f in dv_touched:
-        dv[f] = sidecar_files
-    if dv:
-        manifest["dv"] = dv
-    _set_col_stats(manifest, parent, table_path, surviving, new_files)
-    if final_cdf is not None:
-        manifest["cdf"] = cdf_files
-    _commit(table_path, lambda _base, _v: manifest, parent, version,
-            staged_dirs=[final_dv, final_data, final_cdf])
-    return {
-        "version": version,
-        "files_total": len(surviving) + len(new_files),
-        "files_shared": len(surviving),
-        "files_rewritten": 0,
-        "files_dv": len(dv_touched),
-        "files_dropped": len(dropped),
-        "rows_deleted": n_deleted,
-        "new_files": len(new_files),
-        "dv_bytes": dv_bytes,
-        "files_pruned_by_stats": len(pfiles) - len(candidates),
-    }
+    return _mor_dml(
+        spark, table_path, _Keys(key_col, changes), operation="MERGE (DV)",
+        insert_rows=changes.filter(
+            ~F.coalesce(F.col(delete_col), F.lit(False))),
+        slot=(version, parent))
 
 
 def vacuum_dry_run(table_path: str, keep_last: int = 2,
@@ -4498,31 +4273,32 @@ def read_changes(spark: SparkSession, table_path: str, v_from: int,
     if v_to is None:
         v_to = _latest(table_path)[0]
     # v_from = -1 streams history from the very first commit
-    changes = [(v, *_change_entries(table_path, v, m, prev))
+    changes = [(v, m, *_change_entries(table_path, v, m, prev))
                for v, m, prev in _iter_changes(table_path, v_from, v_to)]
     latest = _load_manifest(table_path, v_to)
     schema = T.StructType.fromJson(json.loads(latest["schema"]))
+    cdf_schema = T.StructType(
+        [T.StructField("_change_type", T.StringType())] + list(schema.fields))
     out_cols = [f.name for f in schema.fields]
     parts = []
-    for v, kind, entries in changes:
+    for v, m, kind, entries in changes:
         if not entries:
             continue
-        paths = [_abs_file(table_path, f) for f in entries]
+        # files written before a RENAME COLUMN hold the physical name:
+        # read through the latest mapping, and inserts through their
+        # version's deletion vectors
+        view = dict(m, column_mapping=latest.get("column_mapping"))
         if kind == "cdf":
-            cdf_schema = T.StructType(
-                [T.StructField("_change_type", T.StringType())]
-                + list(schema.fields))
-            d = spark.read.schema(cdf_schema).parquet(*paths)
+            d = _read_files_dv(spark, table_path, view, entries, cdf_schema)
         else:
-            d = (spark.read.schema(schema).parquet(*paths)
+            d = (_read_files_dv(spark, table_path, view, entries, schema)
                  .withColumn("_change_type", F.lit("insert")))
         parts.append(
             d.select("_change_type", *out_cols)
             .withColumn("_commit_version", F.lit(v).cast("long")))
     if not parts:
         empty = T.StructType(
-            [T.StructField("_change_type", T.StringType())]
-            + list(schema.fields)
+            list(cdf_schema.fields)
             + [T.StructField("_commit_version", T.LongType())])
         return spark.createDataFrame([], empty)
     out = parts[0]

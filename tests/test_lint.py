@@ -292,6 +292,14 @@ COMMIT_PROTOCOL_ALLOWLIST = {
     # the first streaming commit, usually the head
     ("versioned_ds.py", "VersionedStreamWriter._last_stream_batch",
      "versions walk"),
+    # one new-row filler; MOR discovery and the change-feed
+    # classification live in the two DML engines (and the key-based
+    # snapshot diff)
+    ("versioned.py", "_fill_new_rows", "identity allocation"),
+    ("versioned.py", "_mor_dml", "matched-row split"),
+    ("versioned.py", "_predicate_cow", "feed classification"),
+    ("versioned.py", "_mor_dml", "feed classification"),
+    ("versioned.py", "table_changes", "feed classification"),
 }
 
 #: Calls that return a commit's own new files.
@@ -314,9 +322,13 @@ def _commit_protocol_copies(name: str, source: str,
     from it in the same def) that calls ``_load_manifest``: each such
     load replays a delta chain, where ``_iter_manifests`` and
     ``_iter_changes`` apply each record to the manifest before it and
-    raise on vacuumed versions. Hits in ``allow`` are
-    skipped. ``def`` is the enclosing top-level function or
-    ``Class.method``."""
+    raise on vacuumed versions. The DML steps have one home each: an
+    ``identity allocation`` (a ``monotonically_increasing_id()`` call
+    in ``versioned.py``) belongs to the new-row filler, a
+    ``matched-row split`` (``_split_fully_matched``) and a ``feed
+    classification`` (``_classify_feed``) to the DML engines. Hits in
+    ``allow`` are skipped. ``def`` is the enclosing top-level function
+    or ``Class.method``."""
     import ast
 
     def called(node, fn):
@@ -400,6 +412,15 @@ def _commit_protocol_copies(name: str, source: str,
                        *map(names, iters)))
                   and calls(body, "_load_manifest")):
                 what = "versions walk"
+            elif (isinstance(child, ast.Call) and name == "versioned.py"
+                  and called(child, "monotonically_increasing_id")):
+                what = "identity allocation"
+            elif (isinstance(child, ast.Call)
+                  and called(child, "_split_fully_matched")):
+                what = "matched-row split"
+            elif (isinstance(child, ast.Call)
+                  and called(child, "_classify_feed")):
+                what = "feed classification"
             if what and (name, inner, what) not in allow:
                 found.append((name, inner, child.lineno, what))
             visit(child, inner, cls)
@@ -415,7 +436,9 @@ def test_versioned_commits_use_the_commit_protocol_helpers():
     dirs through ``versioned._stage`` without reading them back, and
     publishes through ``versioned._commit``; every history walk goes
     through ``versioned._iter_manifests`` / ``versioned._iter_changes``.
-    No module keeps a hand-rolled copy."""
+    Identity values are allocated only by ``versioned._fill_new_rows``,
+    and only the DML engines split fully matched files or classify a
+    change feed. No module keeps a hand-rolled copy."""
     from tests.conftest import REPO
 
     seeded = (
@@ -452,6 +475,19 @@ def test_versioned_commits_use_the_commit_protocol_helpers():
         ("x.py", "merge", 19, "staged rename"),
         ("x.py", "walk", 21, "versions walk"),
         ("x.py", "walk", 24, "versions walk"),
+    ]
+    dml = ("def merge(spark, p, df, F):\n"
+           "    ids = F.monotonically_increasing_id()\n"
+           "    _split_fully_matched(spark, p, {}, [], [], {})\n"
+           "    return _classify_feed(df, df.withColumn('i', ids), ['k'])\n")
+    assert _commit_protocol_copies("versioned.py", dml) == [
+        ("versioned.py", "merge", 2, "identity allocation"),
+        ("versioned.py", "merge", 3, "matched-row split"),
+        ("versioned.py", "merge", 4, "feed classification"),
+    ]
+    assert _commit_protocol_copies("x.py", dml) == [
+        ("x.py", "merge", 3, "matched-row split"),
+        ("x.py", "merge", 4, "feed classification"),
     ]
     pkg = REPO / "batch_processing_etl_pipeline_for_chess_puzzle_generator_spark"
     paths = [pkg / "versioned.py", pkg / "merge_sql.py",

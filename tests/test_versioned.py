@@ -1810,10 +1810,13 @@ def test_optimize_incremental_compacts_only_debt(spark, tmp_path):
             "CAST(id AS BIGINT) AS k", "CONCAT('v', id) AS v")
         versioned.merge_version_cow(spark, path, extra.selectExpr(
             "k", "v", "CAST(false AS BOOLEAN) AS is_delete"), "k")
+    # each append keeps its source's partitioning (one file per task)
+    appended = set(versioned._latest(path)[1]["files"]) - set(m["files"])
     s2 = versioned.optimize_incremental(
         spark, path, min_file_bytes=64 * 1024, sort_col="k")
     assert s2["files_shared"] >= 1      # the big compacted file shared
-    assert s2["files_compacted"] == 2   # only the tiny appends rewrote
+    # only the tiny appends rewrote
+    assert s2["files_compacted"] == len(appended) >= 2
     m2 = versioned._load_manifest(path, s2["version"])
     prev = versioned._load_manifest(path, s2["version"] - 1)
     shared = set(m2["files"]) & set(prev["files"])
@@ -2577,3 +2580,136 @@ def test_copy_into_idempotent_file_ingestion(spark, tmp_path):
     st5 = merge_sql.sql(
         spark, f"COPY INTO versioned.`{path}` FROM '{src}'")
     assert st5["files_loaded"] == 0 and st5["files_skipped"] == 3
+
+
+#: Spark jobs each DML entry point runs against a 400-row, 4-file
+#: ranged table (``local[2]``), measured when MERGE still had its own
+#: pipelines. Routing a DML through a shared engine may lower a count,
+#: never raise it.
+_DML_JOB_BUDGET = {
+    "merge_version_cow": 10,
+    "merge_version_mor": 10,
+    "delete_where": 3,
+    "update_where": 3,
+    "replace_where": 4,
+    "delete_where_mor": 4,
+    "update_where_mor": 5,
+}
+
+
+@pytest.mark.parametrize("op", sorted(_DML_JOB_BUDGET))
+def test_dml_entry_point_job_budget(spark, tmp_path, op):
+    """Each DML entry point stays within its Spark-job budget on a
+    table whose changes touch one file partially and one file whole."""
+    path = str(tmp_path / "tbl")
+    versioned.write_version(_mk_ranged(spark, 400, 4), path)
+    if op.endswith("_mor"):
+        versioned.set_table_property(path, "dv.enabled", "true")
+    changes = spark.createDataFrame(
+        [(5, "x", False), (250, None, True), (9000, "n", False)],
+        "k INT, v STRING, is_delete BOOLEAN")
+    repl = spark.range(0, 150, 2).selectExpr("CAST(id AS INT) AS k",
+                                             "'r' AS v")
+    run = {
+        "merge_version_cow": lambda: versioned.merge_version_cow(
+            spark, path, changes, "k"),
+        "merge_version_mor": lambda: versioned.merge_version_mor(
+            spark, path, changes, "k"),
+        "delete_where": lambda: versioned.delete_where(
+            spark, path, "k IN (5, 250)"),
+        "update_where": lambda: versioned.update_where(
+            spark, path, {"v": "'u'"}, "k IN (5, 250)"),
+        "replace_where": lambda: versioned.replace_where(
+            spark, path, repl, "k < 150"),
+        "delete_where_mor": lambda: versioned.delete_where_mor(
+            spark, path, "k IN (5, 250)"),
+        "update_where_mor": lambda: versioned.update_where_mor(
+            spark, path, {"v": "'u'"}, "k IN (5, 250)"),
+    }[op]
+    jobs = _commit_jobs(spark, run)
+    assert jobs <= _DML_JOB_BUDGET[op], (op, jobs)
+    # the DML committed one version on top of the setup commits
+    assert versioned._latest(path)[0] == (2 if op.endswith("_mor") else 1)
+
+
+@pytest.mark.parametrize("mode", ["append", "cdf"])
+def test_fresh_stream_applies_first_version_deletion_vectors(spark, tmp_path,
+                                                             mode):
+    """A fresh stream whose first live version carries deletion vectors
+    reads that version through them, in append and change-feed mode:
+    it emits the snapshot, not the deleted rows."""
+    _register_ds(spark)
+    path = str(tmp_path / "tbl")
+    versioned.write_version(
+        spark.range(10).selectExpr("CAST(id AS INT) AS k").repartition(2),
+        path)
+    versioned.set_table_property(path, "dv.enabled", "true")
+    versioned.delete_where(spark, path, "k IN (1, 2, 7)")
+    assert versioned._dv_map(versioned._latest(path)[1])
+    versioned.vacuum(path, keep_last=1)
+    assert versioned.versions(path) == [2]
+    r = (spark.readStream.format("versioned").option("path", path)
+         .option("startingVersion", 2))
+    if mode == "cdf":
+        r = r.option("readChangeFeed", "true")
+    got: list[int] = []
+    q = (r.load().writeStream
+         .foreachBatch(lambda df, _id: got.extend(
+             row.k for row in df.collect()))
+         .option("checkpointLocation", str(tmp_path / "ck"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    assert q.exception() is None
+    want = [0, 3, 4, 5, 6, 8, 9]
+    assert sorted(r.k for r in versioned.read_version(spark, path)
+                  .collect()) == want
+    assert sorted(got) == want
+
+
+def test_read_changes_follows_column_mapping(spark, tmp_path):
+    """read_changes serves a renamed column from the insert files and
+    change files written under its old name, like read_version and the
+    Data Source change feed."""
+    _register_ds(spark)
+    path = str(tmp_path / "tbl")
+    versioned.write_version(_mk(spark, [(1, "a"), (2, "b")]), path)
+    versioned.set_table_property(path, "cdf.enabled", "true")
+    versioned.delete_where(spark, path, "k = 2")
+    versioned.rename_column(path, "v", "w")
+    want = [(1, "a", "insert"), (2, "b", "delete"), (2, "b", "insert")]
+    got = sorted((r.k, r.w, r._change_type) for r in
+                 versioned.read_changes(spark, path, -1).collect())
+    assert got == want
+    ds = sorted((r.k, r.w, r._change_type) for r in
+                spark.read.format("versioned").option("path", path)
+                .option("readChangeFeed", "true").load().collect())
+    assert ds == want
+
+
+def test_inserts_touching_no_file_keep_their_partitioning(spark, tmp_path):
+    """Rows that rewrite no parent file are written with their own
+    partitioning, as write_version writes them, not funnelled through
+    one task: a MERGE of all-new keys and an INSERT INTO from an
+    8-partition source each commit more than one file."""
+    from pyspark.sql import functions as F
+
+    from batch_processing_etl_pipeline_for_chess_puzzle_generator_spark.merge_sql import sql as vsql
+
+    path = str(tmp_path / "tbl")
+    versioned.write_version(_mk_ranged(spark, 400, 2), path)
+
+    def added():
+        (_, prev), head = versioned._latest(
+            path, versioned.versions(path)[-2]), versioned._latest(path)[1]
+        return set(head["files"]) - set(prev["files"])
+
+    new = (spark.range(1000, 3000, numPartitions=8)
+           .selectExpr("CAST(id AS INT) AS k", "CONCAT('n', id) AS v")
+           .withColumn("is_delete", F.lit(False)))
+    st = versioned.merge_version_cow(spark, path, new, "k")
+    assert st["files_rewritten"] == 0 and st["files_shared"] == 2
+    assert len(added()) > 1
+    vsql(spark, f"INSERT INTO versioned.`{path}` SELECT CAST(id AS INT) "
+                "AS k, CONCAT('i', id) AS v FROM range(5000, 7000, 1, 8)")
+    assert len(added()) > 1
+    assert versioned.read_version(spark, path).count() == 4400

@@ -35,11 +35,16 @@ caught) every historical driver-red:
    appends) or conflict loudly (overlapping DML, shape changes,
    clobbering writers), the manifest CAS itself, and the Spark-free
    rebase-predicate table, the CHECK-constraint tests (SQL ``INSERT
-   INTO`` included), the Data Source's identity race and the streams
-   resuming behind a vacuum. Every commit shares one publish-or-rebase
+   INTO`` included), the Data Source's identity race, the streams
+   resuming behind a vacuum, the Spark-job budget of each DML entry
+   point, the change readers' deletion-vector and column-mapping
+   reads, the width of inserts that touch no file, and the
+   commit-protocol lint. Every commit shares one publish-or-rebase
    loop (``versioned._commit``) and one staged-write step
-   (``versioned._stage``), and every change walk one helper
-   (``versioned._iter_changes``), so these gate each change to them.
+   (``versioned._stage``), every DML one of two engines
+   (``versioned._predicate_cow`` / ``versioned._mor_dml``), and every
+   change walk one helper (``versioned._iter_changes``), so these gate
+   each change to them.
 
 Run before committing any new or changed ``queries()`` formulation:
 
@@ -91,8 +96,12 @@ def main() -> int:
         "test_identity_ds_racing_appends_get_disjoint_blocks",
         "tests/test_merge_sql.py::"
         "test_insert_into_enforces_check_constraints",
+        "tests/test_lint.py::"
+        "test_versioned_commits_use_the_commit_protocol_helpers",
         "-k", "concurrent or conflict or racing or clobber or cas or rebase "
-        "or constraint or behind_vacuum",
+        "or constraint or behind_vacuum or job_budget or first_version "
+        "or follows_column_mapping or keep_their_partitioning "
+        "or commit_protocol",
     ]))
     for name, cmd in stages:
         if name == "sf0.1-exec":
